@@ -15,7 +15,6 @@ import dataclasses
 import hashlib
 import json
 import math
-import os
 from dataclasses import dataclass
 
 
@@ -103,12 +102,16 @@ class PipelineConfig:
     # O(affected/cluster_buckets of the corpus), not O(corpus).  Size it
     # so one bucket ~ a few GB at the target scale (10^5+ at 10^12 rows)
     cluster_buckets: int = 64
-    # append-only add: the contracted label graph (O(new edges)) runs
-    # driver-local union-find below this edge count — per-iteration job
-    # latency of distributed CC dwarfs the work at append sizes — and
-    # falls back to distributed star CC above it (a 1M-edge list is
-    # ~100 MB on the driver; bulk-append jobs beyond that are closer to
-    # rebuilds anyway)
+    # driver budget of the mutation paths' CC (pipeline.cc_roots): a
+    # graph of at most this many edges runs driver-local union-find —
+    # per-iteration job latency of distributed CC dwarfs the work at
+    # append sizes — and distributed star CC above it (a 1M-edge list
+    # is ~100 MB on the driver; bulk-append jobs beyond that are closer
+    # to rebuilds anyway).  The add tail has ONE gate on it: the whole
+    # labels -> CC -> affected-set tail runs on the driver iff
+    # 2 x |capped candidate pairs| + |new rows| <= this bound (the
+    # endpoint prefetch's size; verified edges are a subset of the
+    # capped pairs), and as DataFrame jobs otherwise
     add_cc_local_max_edges: int = 1_000_000
     # append-only add: per-new-item candidate cap applied AFTER the phash
     # prefilter (only plausible pairs compete for slots) — bounds the
@@ -202,23 +205,6 @@ class PipelineConfig:
         return hashlib.sha256(
             json.dumps(dataclasses.asdict(self), sort_keys=True).encode()
         ).hexdigest()[:16]
-
-    def dump(self, checkpoint_dir: str) -> str:
-        os.makedirs(checkpoint_dir, exist_ok=True)
-        path = os.path.join(checkpoint_dir, "parameters.json")
-        with open(path, "w") as f:
-            f.write(self.to_json())
-        return path
-
-    @classmethod
-    def reload(cls, checkpoint_dir: str) -> "PipelineConfig":
-        path = os.path.join(checkpoint_dir, "parameters.json")
-        with open(path) as f:
-            return cls.from_json(f.read())
-
-    def assert_matches(self, checkpoint_dir: str) -> None:
-        """Refuse mixed-config resume (gsearch src/bin/gsearch.rs:714-742)."""
-        self._assert_same(PipelineConfig.reload(checkpoint_dir))
 
     def _assert_same(self, stored: "PipelineConfig") -> None:
         if stored.config_hash() != self.config_hash():

@@ -89,10 +89,26 @@ class CheckpointFS:
         return bool(self._fs.exists(self._p(path)))
 
     def mkdirs(self, path: str) -> bool:
+        """Create ``path`` and its parents; True when it is a directory
+        afterwards, False when a non-directory is in the way (the
+        Hadoop local FS raises FileAlreadyExists/ParentNotDirectory
+        there, while the FileSystem contract also lets a store return
+        false — both read as False)."""
         if self._local:
-            os.makedirs(_strip_scheme(path), exist_ok=True)
+            try:
+                os.makedirs(_strip_scheme(path), exist_ok=True)
+            except (FileExistsError, NotADirectoryError):
+                return False
             return True
-        return bool(self._fs.mkdirs(self._p(path)))
+        from py4j.protocol import Py4JJavaError
+        try:
+            return bool(self._fs.mkdirs(self._p(path)))
+        except Py4JJavaError as e:
+            if e.java_exception.getClass().getSimpleName() in (
+                    "FileAlreadyExistsException",
+                    "ParentNotDirectoryException"):
+                return False
+            raise
 
     def delete(self, path: str) -> bool:
         """Recursive delete; True if something was removed."""
@@ -162,10 +178,13 @@ class CheckpointFS:
     def list_children(self, path: str) -> "list[str]":
         """Immediate children (files and dirs) of a directory, as full
         path strings.  Used by the add commit to enumerate staged hive
-        partition dirs (``kb=…`` / ``ib=…``)."""
+        partition dirs (``kb=…`` / ``ib=…``).  Checksum sidecars
+        (``.<name>.crc``) are hidden, as Hadoop's ChecksumFileSystem
+        listing hides them."""
         if self._local:
             p = _strip_scheme(path)
-            return [os.path.join(p, name) for name in sorted(os.listdir(p))]
+            return [os.path.join(p, name) for name in sorted(os.listdir(p))
+                    if not (name.startswith(".") and name.endswith(".crc"))]
         return [str(st.getPath().toString())
                 for st in self._fs.listStatus(self._p(path))]
 

@@ -39,54 +39,6 @@ PHASH_BAND_ID_OFFSET = 2000
 CAPTION_BAND_ID = 3000
 
 
-def explode_minhash_bands(signatures: DataFrame, bands: int,
-                          rows_per_band: int) -> DataFrame:
-    """signatures -> (band_id, band_hash, image_id); JVM-side hashing."""
-    band_hashes = []
-    for b in range(bands):
-        slots = [F.element_at("minhash", b * rows_per_band + j + 1)
-                 for j in range(rows_per_band)]
-        band_hashes.append(F.xxhash64(F.lit(b), *slots))
-    return (signatures
-            .select("image_id",
-                    F.posexplode(F.array(*band_hashes))
-                    .alias("band_id", "band_hash")))
-
-
-def explode_simhash_bands(signatures: DataFrame, simhash_bands: int,
-                          band_id_offset: int = 1000) -> DataFrame:
-    """simhash -> (band_id, band_hash, image_id) by chunk-PAIR equality.
-
-    The 64-bit simhash splits into ``simhash_bands`` chunks; the band key
-    is each unordered PAIR of chunks (C(k,2) bands of 2x16=32 bits for
-    k=4).  Pigeonhole: a pair within Hamming distance <= (k-2) damages at
-    most k-2 chunks, leaving >= 2 intact, so SOME pair-band matches —
-    exact coverage of the Hamming<=2 ball, probabilistic above.  Single
-    16-bit chunks are NOT usable as keys at scale: with n >> 2^16 rows,
-    random chunk collisions alone generate O(n^2 / 2^16) candidate pairs
-    per band (observed: 1.8M junk pairs at 188k rows); 32-bit pair keys
-    push random collisions to O(n^2 / 2^32), i.e. noise.
-
-    band_id is offset so simhash buckets never collide with minhash
-    buckets in the unioned bands table.
-    """
-    width = 64 // simhash_bands
-    mask = (1 << width) - 1
-    chunk = [F.shiftright(F.col("simhash"), b * width).bitwiseAND(
-        F.lit(mask)) for b in range(simhash_bands)]
-    combos = []
-    for i in range(simhash_bands):
-        for j in range(i + 1, simhash_bands):
-            combos.append(F.xxhash64(F.lit(band_id_offset + len(combos)),
-                                     chunk[i], chunk[j]))
-    return (signatures
-            .select("image_id",
-                    F.posexplode(F.array(*combos))
-                    .alias("band_pos", "band_hash"))
-            .select((F.col("band_pos") + F.lit(band_id_offset))
-                    .alias("band_id"), "band_hash", "image_id"))
-
-
 def explode_phash_bands(signatures: DataFrame, phash_chunks: int = 4,
                         phash_combo: int = 2,
                         band_id_offset: int = 2000) -> DataFrame:

@@ -114,58 +114,6 @@ def ensure_centroids(spark: SparkSession, emb_path: str,
 
 # ---------------------------------------------------------------- queries
 
-def _scored_cte(centroids_rel: str) -> str:
-    """Engine-shared CTE chain (Spark dialect): normalize -> centroid
-    similarity -> assign (rank 1) / probe (rank <= N_PROBE) -> inverted-
-    list candidate join -> exact cosine.  ``centroids_rel`` is the
-    registered centroid view name."""
-    return f"""
-      WITH v AS (
-        SELECT vec_id, transform(embedding, x -> cast(x AS double)) AS e
-        FROM embeddings
-      ),
-      norms AS (
-        SELECT vec_id, e,
-               sqrt(aggregate(e, cast(0.0 AS double),
-                              (acc, x) -> acc + x * x)) AS nrm
-        FROM v
-      ),
-      csim AS (
-        SELECT n.vec_id, c.list_id,
-               round(aggregate(zip_with(n.e, c.centroid, (x, y) -> x * y),
-                               cast(0.0 AS double), (acc, x) -> acc + x)
-                     / n.nrm, 4) AS sim
-        FROM norms n CROSS JOIN {centroids_rel} c
-      ),
-      ranked_lists AS (
-        SELECT vec_id, list_id,
-               row_number() OVER (PARTITION BY vec_id
-                                  ORDER BY sim DESC, list_id) AS lrank
-        FROM csim
-      ),
-      assign AS (
-        SELECT vec_id, list_id FROM ranked_lists WHERE lrank = 1
-      ),
-      probe AS (
-        SELECT vec_id, list_id FROM ranked_lists WHERE lrank <= {N_PROBE}
-      ),
-      cands AS (
-        SELECT DISTINCT p.vec_id AS vec_id, a.vec_id AS nbr_id
-        FROM probe p JOIN assign a
-          ON p.list_id = a.list_id AND p.vec_id <> a.vec_id
-      ),
-      scored AS (
-        SELECT c.vec_id, c.nbr_id,
-               round(aggregate(zip_with(a.e, b.e, (x, y) -> x * y),
-                               cast(0.0 AS double), (acc, x) -> acc + x)
-                     / (a.nrm * b.nrm), 4) AS cos_sim
-        FROM cands c
-        JOIN norms a ON a.vec_id = c.vec_id
-        JOIN norms b ON b.vec_id = c.nbr_id
-      )
-    """
-
-
 def default_centroids_path(sf_dir: str) -> str:
     """Canonical checkpoint location for a given sf_dir — shared by the
     Spark query and the DuckDB oracle so both read the same bytes."""

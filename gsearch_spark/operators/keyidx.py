@@ -83,7 +83,12 @@ def read_edge_index(spark: SparkSession, path: str) -> DataFrame:
 INLIST_MAX = 32
 
 
-def _kb(col: str, buckets: int) -> "F.Column":
+def key_bucket(col: str, buckets: int) -> "F.Column":
+    """The one bucket expression of every hive-partitioned layout
+    (``kb``/``ib``/``eb`` here, ``tb`` of the tombstones, ``pbucket`` of
+    the clusters checkpoint): ``xxhash64(col) % buckets``, evaluated by
+    Spark so writers, pruned readers and the mutation paths' bucket
+    collects can never disagree."""
     return F.pmod(F.xxhash64(col), F.lit(buckets)).cast("int")
 
 
@@ -99,7 +104,7 @@ def write_ck_index(groups: DataFrame, path: str,
     tight ck min/max stats for the IN-list probes."""
     (groups.filter(F.col("image_id") == F.col("rep_id"))
      .select("ck", "rep_id")
-     .withColumn("kb", _kb("ck", cfg.key_buckets))
+     .withColumn("kb", key_bucket("ck", cfg.key_buckets))
      .repartition(cfg.key_buckets, F.col("kb"))
      .sortWithinPartitions("ck")
      .write.mode("overwrite").partitionBy("kb").parquet(path))
@@ -117,7 +122,7 @@ def write_id_index(clusters: DataFrame, groups: DataFrame, path: str,
     (clusters.select("image_id", "cluster_id")
      .join(flags, "image_id")
      .withColumn("gen", F.lit(0))
-     .withColumn("ib", _kb("image_id", cfg.key_buckets))
+     .withColumn("ib", key_bucket("image_id", cfg.key_buckets))
      .repartition(cfg.key_buckets, F.col("ib"))
      .sortWithinPartitions("image_id")
      .write.mode("overwrite").partitionBy("ib").parquet(path))
@@ -130,7 +135,7 @@ def stage_ck_append(fresh_groups: DataFrame, staging_dir: str,
     the live table (parquet part names embed a UUID — no collisions)."""
     (fresh_groups.filter(F.col("image_id") == F.col("rep_id"))
      .select("ck", "rep_id")
-     .withColumn("kb", _kb("ck", cfg.key_buckets))
+     .withColumn("kb", key_bucket("ck", cfg.key_buckets))
      .repartition(cfg.key_buckets, F.col("kb"))
      .sortWithinPartitions("ck")
      .write.mode("overwrite").partitionBy("kb")
@@ -146,7 +151,7 @@ def stage_id_append(delta: DataFrame, gen: int, staging_dir: str,
     group nodes are first-appearance-immutable)."""
     (delta.select("image_id", "cluster_id", "is_rep", "rep_id")
      .withColumn("gen", F.lit(gen))
-     .withColumn("ib", _kb("image_id", cfg.key_buckets))
+     .withColumn("ib", key_bucket("image_id", cfg.key_buckets))
      .repartition(cfg.key_buckets, F.col("ib"))
      .sortWithinPartitions("image_id")
      .write.mode("overwrite").partitionBy("ib")
@@ -171,7 +176,7 @@ remove_images`: a delete that kills an entire exact-group can SPLIT a
     keeps reading the flat ``verified_edges`` checkpoint; this is a
     connectivity-only (a, b) projection."""
     (edges.select("a", "b")
-     .withColumn("eb", _kb("a", cfg.key_buckets))
+     .withColumn("eb", key_bucket("a", cfg.key_buckets))
      .repartition(cfg.key_buckets, F.col("eb"))
      .sortWithinPartitions("a")
      .write.mode("overwrite").partitionBy("eb").parquet(path))
@@ -184,7 +189,7 @@ def stage_edge_append(edges: DataFrame, staging_dir: str,
     delta; committed by the same manifest machinery as the other
     partitioned appends."""
     (edges.select("a", "b")
-     .withColumn("eb", _kb("a", cfg.key_buckets))
+     .withColumn("eb", key_bucket("a", cfg.key_buckets))
      .repartition(cfg.key_buckets, F.col("eb"))
      .sortWithinPartitions("a")
      .write.mode("overwrite").partitionBy("eb")
@@ -221,7 +226,7 @@ def _pruned(spark: SparkSession, path: str, part_col: str, key_col: str,
     several lookups against the same table reuse one file-index listing
     (each fresh ``spark.read.parquet`` over the partition dirs costs
     ~2 s of driver-side listing at 64 buckets)."""
-    kb = _kb(key_col, cfg.key_buckets)
+    kb = key_bucket(key_col, cfg.key_buckets)
     pairs = (keys.select(F.col(key_col).alias("k"), kb.alias("pb"))
              .distinct().limit(cfg.add_lookup_max_literals + 1).collect())
     idx = idx_df if idx_df is not None else spark.read.parquet(path)
@@ -349,7 +354,8 @@ def compact_id_index(spark: SparkSession, path: str,
                           F.bool_or("is_rep").alias("is_rep"),
                           F.max("rep_id").alias("rep_id"),
                           F.max("gen").alias("gen"))
-                     .withColumn("ib", _kb("image_id", cfg.key_buckets))
+                     .withColumn("ib", key_bucket("image_id",
+                                                  cfg.key_buckets))
                      .repartition(cfg.key_buckets, F.col("ib"))
                      .sortWithinPartitions("image_id"))
         tmp = f"{path}__compact"

@@ -20,6 +20,7 @@ byte-identical (deterministic signatures + min-based CC).
 
 from __future__ import annotations
 
+import functools
 import json
 import os
 import time
@@ -32,10 +33,10 @@ from gsearch_spark.config import PipelineConfig
 from gsearch_spark.fs import CheckpointFS
 from gsearch_spark.operators.banding import build_bands
 from gsearch_spark.operators.candidates import bucket_stats, emit_bucket_pairs
-from gsearch_spark.operators.cc import (assign_clusters,
-                                        connected_components, union_find)
+from gsearch_spark.operators.cc import connected_components, union_find
 from gsearch_spark.operators.exact import (exact_groups, expand_clusters,
                                            representatives)
+from gsearch_spark.operators.keyidx import key_bucket
 from gsearch_spark.operators.signatures import compute_signatures
 from gsearch_spark.operators.suffix import suffix_candidate_pairs
 from gsearch_spark.operators.verify import verified_edges
@@ -58,18 +59,6 @@ ADD_LOCK = "_add_lock"
 
 class ConcurrentAddError(RuntimeError):
     """Another writer holds the build's mutation lock."""
-
-
-_TRACE_T0 = time.time()
-
-
-def _trace(msg: str) -> None:
-    """Mutation-path step tracing (no-op unless GSEARCH_TRACE_MUTATIONS
-    is set): prints wall-clock offsets of the concurrent add/remove
-    chains so a profiler can attribute time between stage records."""
-    if os.environ.get("GSEARCH_TRACE_MUTATIONS"):
-        print(f"[trace {time.time() - _TRACE_T0:9.2f}] {msg}",
-              flush=True)
 
 
 def _run_parallel(*thunks):
@@ -200,13 +189,36 @@ def add_writer_lock(spark: SparkSession, checkpoint_dir: str):
             release_add_lock(fs, checkpoint_dir)
 
 
-def cluster_pbucket(cfg: PipelineConfig) -> "F.Column":
+def cluster_pbucket(cfg: PipelineConfig,
+                    col: str = "cluster_id") -> "F.Column":
     """Hive-partition key of the clusters checkpoint: which partition a
-    cluster's rows live in.  Pure function of cluster_id so an
-    incremental add can prune reads AND rewrites to touched partitions
-    (the Iceberg bucket-transform analog for the output table)."""
-    return F.pmod(F.xxhash64("cluster_id"),
-                  F.lit(cfg.cluster_buckets)).cast("int")
+    cluster's rows live in (``col`` names the column holding the
+    cluster label).  Pure function of the label so an incremental add
+    can prune reads AND rewrites to touched partitions (the Iceberg
+    bucket-transform analog for the output table)."""
+    return key_bucket(col, cfg.cluster_buckets)
+
+
+def cc_roots(edges: DataFrame, n_edges: int, cfg: PipelineConfig,
+             checkpoint_dir: "str | None" = None) -> DataFrame:
+    """Connected components of ``edges(a, b)``: one (image_id,
+    cluster_id = min member) row per node on an edge.  The one CC gate
+    of the build, the add's distributed tail and the remove: up to
+    ``cfg.add_cc_local_max_edges`` edges (a count the caller already
+    holds from a stage record — no extra job) the O(log^2 n)
+    distributed star rounds are pure per-job latency, so driver
+    union-find computes the identical min-member labels and returns
+    them as a broadcast-hinted local relation.  Past the bound, or when
+    ``checkpoint_dir`` asks for reliable per-iteration checkpoints
+    (surviving executor loss is their point), the distributed star CC
+    runs."""
+    if checkpoint_dir is None and n_edges <= cfg.add_cc_local_max_edges:
+        mapping = union_find([(r["a"], r["b"]) for r in
+                              edges.select("a", "b").collect()])
+        return F.broadcast(edges.sparkSession.createDataFrame(
+            sorted(mapping.items()),
+            schema="image_id string, cluster_id string"))
+    return connected_components(edges, checkpoint_dir=checkpoint_dir)
 
 
 @dataclass
@@ -249,24 +261,43 @@ class NearDupPipeline:
     def _done(self, stage: str) -> bool:
         return self.fs.exists(os.path.join(self._path(stage), "_SUCCESS"))
 
-    def _write_stage(self, stage: str, df: DataFrame) -> DataFrame:
-        path = self._path(stage)
-        df.write.mode("overwrite").parquet(path)
-        return self.spark.read.parquet(path)
+    def _stage(self, name: str, resume: bool, write,
+               after: "str | None" = None,
+               read=None) -> "tuple[DataFrame, int]":
+        """Resume-or-compute one build stage: a completed checkpoint is
+        reused under ``resume``, otherwise ``write(path)`` produces it —
+        either by writing it itself or by returning the DataFrame to
+        persist as plain Parquet.  The checkpoint is read back (``read``,
+        default ``spark.read.parquet``) and recorded; returns it with
+        its row count."""
+        t0 = time.time()
+        path = self._path(name)
+        skipped = resume and self._done(name)
+        if not skipped:
+            out = write(path)
+            if isinstance(out, DataFrame):
+                out.write.mode("overwrite").parquet(path)
+        df = (read or self.spark.read.parquet)(path)
+        return df, self._record(name, df, t0, skipped, after=after)
 
     def _record(self, stage: str, out: DataFrame, t0: float,
-                skipped: bool) -> DataFrame:
+                skipped: bool = False, after: "str | None" = None) -> int:
         """ONE job per stage: the per-partition row counts are collected
         (their sum IS the stage row count — no separate count() job) and
         buffered as pipeline_state rows for a single flush at the end
         (FIXTURES.md §4 contract: stage, part_id, rows_in, rows_out,
         t_start, t_end, config_hash — the processing_state.json analog,
-        per partition; the collect is bounded by the partition count)."""
+        per partition; the collect is bounded by the partition count).
+        ``rows_in`` is the rows_out of ``after``, the stage's logical
+        predecessor (-1 for a source stage) — named by the caller, since
+        concurrent recorders make "the previous record" meaningless.
+        Returns the stage's row count."""
         parts = (out.groupBy(F.spark_partition_id().alias("part_id"))
                  .agg(F.count(F.lit(1)).alias("rows_out")).collect())
         n = sum(p["rows_out"] for p in parts)
         with self._rec_lock:
-            rows_in = self.records[-1].rows_out if self.records else -1
+            rows_in = next((r.rows_out for r in reversed(self.records)
+                            if r.stage == after), -1)
             rec = StageRecord(stage, n, time.time() - t0, skipped,
                               rows_in=rows_in, t_start=t0,
                               t_end=time.time())
@@ -281,7 +312,7 @@ class NearDupPipeline:
                 (stage, int(p["part_id"]), rows_in, int(p["rows_out"]),
                  rec.t_start, rec.t_end, rec.seconds, skipped,
                  self.cfg.config_hash()) for p in parts)
-        return out
+        return n
 
     def _flush_state(self) -> None:
         if not self._state_buf:
@@ -311,17 +342,16 @@ class NearDupPipeline:
             self.cfg.dump_via(self.fs, self.dir)
 
         n_images = images.count()
+        from gsearch_spark.operators.keyidx import (read_edge_index,
+                                                    write_ck_index,
+                                                    write_edge_index,
+                                                    write_id_index)
 
         # -- stage 0: exact-duplicate collapse (identity short-circuit,
         #    gsearch src/bin/bindash.rs:139-153) ---------------------------
-        t0 = time.time()
-        if resume and self._done("exact_groups"):
-            groups = self.spark.read.parquet(self._path("exact_groups"))
-            groups = self._record("exact_groups", groups, t0, skipped=True)
-        else:
-            groups = self._write_stage("exact_groups", exact_groups(images))
-            groups = self._record("exact_groups", groups, t0, skipped=False)
-        if self.records[-1].rows_out != n_images:
+        groups, n_groups = self._stage("exact_groups", resume,
+                                       lambda p: exact_groups(images))
+        if n_groups != n_images:
             raise RuntimeError("exact_groups row count != image count")
         images_rep = representatives(images, groups)
         # rep count from the (keys-only, checkpointed) groups table — the
@@ -345,26 +375,12 @@ class NearDupPipeline:
             sfx_future = _spawn(
                 lambda: suffix_candidate_pairs(images_rep).localCheckpoint())
 
-        from gsearch_spark.operators.keyidx import (read_edge_index,
-                                                    write_ck_index,
-                                                    write_edge_index,
-                                                    write_id_index)
-
         # -- stage 1: signatures (representatives only) --------------------
-        t0 = time.time()
-        if resume and self._done("signatures"):
-            sigs = self.spark.read.parquet(self._path("signatures"))
-            sigs = self._record("signatures", sigs, t0, skipped=True)
-        else:
-            sigs = self._write_stage("signatures",
-                                     compute_signatures(images_rep,
-                                                        self.cfg))
-            sigs = self._record("signatures", sigs, t0, skipped=False)
+        sigs, n_sigs = self._stage(
+            "signatures", resume,
+            lambda p: compute_signatures(images_rep, self.cfg),
+            after="exact_groups")
         # sent == received invariant (gsearch src/dna/dnasketch.rs:458-464)
-        # (by-name lookup: the concurrently-recording ck_index thread may
-        # interleave records, so records[-1] is no longer this stage's)
-        n_sigs = next(r.rows_out for r in reversed(self.records)
-                      if r.stage == "signatures")
         n_reps = nreps_future.result()
         if n_sigs != n_reps:
             raise RuntimeError(
@@ -372,29 +388,21 @@ class NearDupPipeline:
                 f"{n_reps} (sent/received reconciliation failed)")
 
         # -- stage 2: bands ------------------------------------------------
-        t0 = time.time()
-        if resume and self._done("bands"):
-            bands = self.spark.read.parquet(self._path("bands"))
-            bands = self._record("bands", bands, t0, skipped=True)
-        else:
-            bands = self._write_stage("bands", build_bands(sigs, self.cfg))
-            bands = self._record("bands", bands, t0, skipped=False)
+        bands, _ = self._stage("bands", resume,
+                               lambda p: build_bands(sigs, self.cfg),
+                               after="signatures")
 
         # -- stage 3: candidate pairs (LSH buckets ∪ suffix pass) ----------
+        # min(src) dedup => deterministic winner per pair; the suffix
+        # pairs have been computing since stage 1
+        pairs, n_pairs = self._stage(
+            "candidate_pairs", resume,
+            lambda p: (emit_bucket_pairs(bands)
+                       .unionByName(sfx_future.result())
+                       .groupBy("a", "b").agg(F.min("src").alias("src"))),
+            after="bands")
         stats_future = None
-        t0 = time.time()
-        if resume and self._done("candidate_pairs"):
-            pairs = self.spark.read.parquet(self._path("candidate_pairs"))
-            pairs = self._record("candidate_pairs", pairs, t0, skipped=True)
-        else:
-            lsh_pairs = emit_bucket_pairs(bands)
-            sfx_pairs = sfx_future.result()  # overlapped since stage 1
-            # min(src) dedup => deterministic winner per pair
-            pairs = (lsh_pairs.unionByName(sfx_pairs)
-                     .groupBy("a", "b")
-                     .agg(F.min("src").alias("src")))
-            pairs = self._write_stage("candidate_pairs", pairs)
-            pairs = self._record("candidate_pairs", pairs, t0, skipped=False)
+        if sfx_future is not None:
             # no silent caps: surface bucket policy stats in the log.
             # The stats aggregation is observability-only (nothing
             # downstream reads it), so it runs on a side thread under
@@ -408,20 +416,13 @@ class NearDupPipeline:
             stats_future = _spawn(_stats)
 
         # -- stage 4: verified edges --------------------------------------
-        t0 = time.time()
-        if resume and self._done("verified_edges"):
-            edges = self.spark.read.parquet(self._path("verified_edges"))
-            edges = self._record("verified_edges", edges, t0, skipped=True)
-        else:
-            # the candidate_pairs stage record bounds the pair count, so
-            # the attach strategy resolves WITHOUT the auto id-count job
-            n_pairs = next(r.rows_out for r in reversed(self.records)
-                           if r.stage == "candidate_pairs")
-            edges = self._write_stage("verified_edges",
-                                      verified_edges(pairs, images_rep,
-                                                     self.cfg,
-                                                     n_pairs_hint=n_pairs))
-            edges = self._record("verified_edges", edges, t0, skipped=False)
+        # the candidate_pairs stage record bounds the pair count, so the
+        # attach strategy resolves WITHOUT the auto id-count job
+        edges, n_edges = self._stage(
+            "verified_edges", resume,
+            lambda p: verified_edges(pairs, images_rep, self.cfg,
+                                     n_pairs_hint=n_pairs),
+            after="candidate_pairs")
 
         # ck_index depends only on the stage-0 exact_groups checkpoint and
         # edge_index only on the verified_edges checkpoint just written —
@@ -431,70 +432,32 @@ class NearDupPipeline:
         # signatures stage — was measured WORSE per-stage: all 32 task
         # slots are busy there, so the sidecar job just queued and its
         # recorded wall inflated 1.6 s → 3.7 s.)
-        def _w_ck():
-            t0 = time.time()
-            if resume and self._done("ck_index"):
-                df = self.spark.read.parquet(self._path("ck_index"))
-                self._record("ck_index", df, t0, skipped=True)
-            else:
-                write_ck_index(groups, self._path("ck_index"), self.cfg)
-                df = self.spark.read.parquet(self._path("ck_index"))
-                self._record("ck_index", df, t0, skipped=False)
+        ck_future = _spawn(lambda: self._stage(
+            "ck_index", resume,
+            lambda p: write_ck_index(groups, p, self.cfg),
+            after="exact_groups"))
+        edge_future = _spawn(lambda: self._stage(
+            "edge_index", resume,
+            lambda p: write_edge_index(edges, p, self.cfg),
+            after="verified_edges",
+            read=lambda p: read_edge_index(self.spark, p)))
 
-        def _w_edge():
-            t0 = time.time()
-            if resume and self._done("edge_index"):
-                df = read_edge_index(self.spark, self._path("edge_index"))
-                self._record("edge_index", df, t0, skipped=True)
-            else:
-                write_edge_index(edges, self._path("edge_index"), self.cfg)
-                df = read_edge_index(self.spark, self._path("edge_index"))
-                self._record("edge_index", df, t0, skipped=False)
-
-        ck_future = _spawn(_w_ck)
-        edge_future = _spawn(_w_edge)
-
-        # -- stage 5: clusters (small-star / large-star CC over reps,
-        #    then expand exact-group members onto their rep's cluster).
-        #    Written hive-partitioned on pbucket(cluster_id) so the
-        #    append path can prune its partition-level rewrite ---------
-        t0 = time.time()
-        if resume and self._done("clusters"):
-            clusters = self.spark.read.parquet(self._path("clusters"))
-            clusters = self._record("clusters", clusters, t0, skipped=True)
-        else:
-            # small-graph fast path (same contract as the append path's
-            # contraction CC): below cfg.add_cc_local_max_edges the
-            # O(log^2 n) distributed star rounds are pure per-job
-            # latency — driver union-find produces IDENTICAL min-member
-            # labels (pinned by the parity/invariance tests).  The edge
-            # count is already known from the verified_edges record (no
-            # extra job); the reliable-checkpoint mode keeps the
-            # distributed path (its point is surviving executor loss).
-            # By-name lookup: the ck/edge sidecar threads record
-            # concurrently, so records[-1] may not be verified_edges.
-            n_edges = next(r.rows_out for r in reversed(self.records)
-                           if r.stage == "verified_edges")
-            if (not self.cfg.cc_reliable_checkpoints
-                    and n_edges <= self.cfg.add_cc_local_max_edges):
-                mapping = union_find([(r["a"], r["b"]) for r in
-                                      edges.select("a", "b").collect()])
-                comp = self.spark.createDataFrame(
-                    sorted(mapping.items()),
-                    schema="image_id string, cluster_id string")
-                ids = images_rep.select("image_id")
-                rep_clusters = (ids.join(F.broadcast(comp), "image_id",
-                                         "left")
-                                .select("image_id",
-                                        F.coalesce("cluster_id",
-                                                   "image_id")
-                                        .alias("cluster_id")))
-            else:
-                cc_dir = (os.path.join(self.dir, "cc_work")
-                          if self.cfg.cc_reliable_checkpoints else None)
-                rep_clusters = assign_clusters(edges, images_rep,
-                                               checkpoint_dir=cc_dir)
-            path = self._path("clusters")
+        # -- stage 5: clusters (CC over reps, then expand exact-group
+        #    members onto their rep's cluster).  The edge count is already
+        #    known from the verified_edges record (no extra job); the
+        #    reliable-checkpoint mode keeps the distributed path (its
+        #    point is surviving executor loss).  Written hive-partitioned
+        #    on pbucket(cluster_id) so the append path can prune its
+        #    partition-level rewrite --------------------------------------
+        def _w_clusters(path: str) -> None:
+            cc_dir = (os.path.join(self.dir, "cc_work")
+                      if self.cfg.cc_reliable_checkpoints else None)
+            comp = cc_roots(edges, n_edges, self.cfg, checkpoint_dir=cc_dir)
+            rep_clusters = (images_rep.select("image_id")
+                            .join(comp, "image_id", "left")
+                            .select("image_id",
+                                    F.coalesce("cluster_id", "image_id")
+                                    .alias("cluster_id")))
             # repartition ON the partition column first: without it every
             # task writes a file into every pbucket dir (tasks x buckets
             # small files — measured 3x stage cost at 213k rows); with it
@@ -503,8 +466,9 @@ class NearDupPipeline:
              .withColumn("pbucket", cluster_pbucket(self.cfg))
              .repartition(self.cfg.cluster_buckets, F.col("pbucket"))
              .write.mode("overwrite").partitionBy("pbucket").parquet(path))
-            clusters = self.spark.read.parquet(path)
-            clusters = self._record("clusters", clusters, t0, skipped=False)
+
+        clusters, _ = self._stage("clusters", resume, _w_clusters,
+                                  after="verified_edges")
 
         # -- stage 6: key-addressed lookup layouts (operators/keyidx.py).
         #    Sidecar tables whose partitioning + in-file sort make the
@@ -512,21 +476,12 @@ class NearDupPipeline:
         #    O(probed keys) IO instead of scanning corpus-sized key
         #    columns (reference: add addresses its persisted index by
         #    rank, never rescans it — src/dna/dnasketch.rs:106-134).
-        #    ck_index has been writing since stage 0 and edge_index since
-        #    the verify stage (side threads, guide §2.6) — only the
-        #    clusters-dependent id_index remains on the critical path.
-        def _w_id():
-            t0 = time.time()
-            if resume and self._done("id_index"):
-                df = self.spark.read.parquet(self._path("id_index"))
-                self._record("id_index", df, t0, skipped=True)
-            else:
-                write_id_index(clusters, groups, self._path("id_index"),
-                               self.cfg)
-                df = self.spark.read.parquet(self._path("id_index"))
-                self._record("id_index", df, t0, skipped=False)
-
-        _w_id()
+        #    ck_index and edge_index have been writing on side threads
+        #    (guide §2.6) — only the clusters-dependent id_index remains
+        #    on the critical path.
+        self._stage("id_index", resume,
+                    lambda p: write_id_index(clusters, groups, p, self.cfg),
+                    after="clusters")
         ck_future.result()
         edge_future.result()
         if stats_future is not None:
@@ -538,15 +493,131 @@ class NearDupPipeline:
         return clusters.select("image_id", "cluster_id")
 
 
-def run_pipeline(spark: SparkSession, images_path: str, checkpoint_dir: str,
-                 cfg: PipelineConfig | None = None,
-                 resume: bool = True) -> DataFrame:
-    cfg = cfg or PipelineConfig()
-    images = spark.read.parquet(images_path)
-    return NearDupPipeline(spark, cfg, checkpoint_dir).run(images,
-                                                           resume=resume)
+# -------------------------------------------- shared mutation skeleton
+#
+# incremental_add and remove_images are two bodies inside one skeleton:
+# the single-writer lock (_writer_locked), the prologue
+# (mutation_prologue), the touched-bucket clusters rewrite
+# (stage_clusters_rewrite), and the manifest commit — write_manifest at
+# the commit point, then finish_commit, which is also the whole of
+# recover_add_commit, so every mutation runs the recovery code.
+
+def _writer_locked(mutation):
+    """Run a mutation entry point ``mutation(spark, cfg, checkpoint_dir,
+    ...)`` under :func:`add_writer_lock`, taken before any state is
+    read: the manifest commit protocol admits exactly one writer
+    (re-entrant under an enclosing lock; dead same-host holders
+    self-heal)."""
+    @functools.wraps(mutation)
+    def locked(spark, cfg, checkpoint_dir, *args, **kwargs):
+        with add_writer_lock(spark, checkpoint_dir):
+            return mutation(spark, cfg, checkpoint_dir, *args, **kwargs)
+    return locked
 
 
+def mutation_prologue(pipe: NearDupPipeline,
+                      required: "tuple[str, ...]") -> "tuple[str, int]":
+    """Shared start of every mutation, under the writer lock: refuse a
+    build written with another config, roll a torn manifest commit and
+    any torn staged-table swap (id_index compaction, purge) forward,
+    refuse a build without the ``required`` key-addressed sidecars, and
+    wipe pre-commit staging garbage (a staging dir without a manifest
+    is an add or remove that never happened).  Returns the staging dir
+    and the next id_index generation."""
+    from gsearch_spark.operators.remove import recover_all_swaps
+    fs = pipe.fs
+    pipe.cfg.assert_matches_via(fs, pipe.dir)
+    recover_add_commit(pipe.spark, pipe.dir)
+    recover_all_swaps(fs, pipe.dir)
+    if not all(fs.exists(f"{pipe._path(n)}/_SUCCESS") for n in required):
+        raise ValueError(
+            "checkpoint predates key-addressed lookup layouts (no "
+            f"{'/'.join(required)}); rebuild with tohnsw first")
+    staging = pipe._path("_add_staging")
+    fs.delete(staging)
+    gen_file = pipe._path(ID_GEN_FILE)
+    gen = int(fs.read_text(gen_file)) if fs.exists(gen_file) else 0
+    return staging, gen + 1
+
+
+def write_manifest(pipe: NearDupPipeline, staging: str, gen: int,
+                   swap: "dict[str, bool]", append_stages: "list[str]",
+                   partitioned_appends: "list[str]") -> dict:
+    """The commit point of a mutation whose deltas are all staged:
+    persist the manifest naming them (flat ``append_stages``, hive-
+    partitioned ``partitioned_appends``, the clusters bucket ``swap``
+    and the new id_index generation).  Before it a crash leaves
+    pre-commit staging garbage; after it the commit rolls FORWARD."""
+    manifest = {"version": 2, "staging": staging,
+                "append_stages": append_stages,
+                "partitioned_appends": partitioned_appends,
+                "id_index_gen": gen, "clusters_swap": swap}
+    pipe.fs.write_text(pipe._path(ADD_MANIFEST), json.dumps(manifest))
+    return manifest
+
+
+def finish_commit(spark: SparkSession, fs: CheckpointFS, root: str,
+                  manifest: dict, flush=None) -> None:
+    """Finish a written manifest: apply it (idempotent renames), drop
+    it, then run the housekeeping as ONE concurrent wave (guide §2.6) —
+    the staging wipe (recursive FS delete), the lineage ``flush`` (one
+    parquet append job; none on recovery) and the file-status cache
+    refresh of every table the manifest touched (the swap happened via
+    raw FS renames, invisible to Spark's shared cache — the documented
+    plan-cache-over-rewritten-path pitfall, FS-metadata edition)."""
+    _apply_add_commit(fs, root, manifest)
+    fs.delete(f"{root}/{ADD_MANIFEST}")
+
+    def _refresh():
+        for name in (manifest["append_stages"]
+                     + manifest.get("partitioned_appends", [])
+                     + ["clusters"]):
+            spark.catalog.refreshByPath(f"{root}/{name}")
+
+    _run_parallel(lambda: fs.delete(manifest["staging"]),
+                  flush or (lambda: None), _refresh)
+
+
+def stage_clusters_rewrite(pipe: NearDupPipeline, staging: str,
+                           stored: DataFrame, aff: DataFrame,
+                           aff_buckets: "list[int]", delta: DataFrame,
+                           prefix: str) -> "dict[str, bool]":
+    """Stage a mutation's clusters rewrite, touched buckets only (the
+    Iceberg partition-MERGE analog): every pbucket holding an affected
+    cluster (``aff``: its ``cluster_id`` labels, living in
+    ``aff_buckets``) or a ``delta`` row is rewritten as its unaffected
+    rows ∪ the delta rows that now hash there.  Recorded as
+    ``<prefix>_clusters_rewrite``.  Returns the manifest's swap map:
+    touched bucket -> whether rows were staged for it (a touched bucket
+    left empty — all its clusters merged or removed away — is DELETED
+    at commit, not left stale)."""
+    t0 = time.time()
+    pb = cluster_pbucket(pipe.cfg)
+    delta_buckets = {r[0] for r in
+                     delta.select(pb.alias("pb")).distinct().collect()}
+    touched = sorted(set(aff_buckets) | delta_buckets)
+    kept = (stored.filter(F.col("pbucket").isin(touched))
+            .join(F.broadcast(aff.select("cluster_id")), "cluster_id",
+                  "left_anti")
+            .select("image_id", "cluster_id"))
+    (kept.unionByName(delta.select("image_id", "cluster_id"))
+     .withColumn("pbucket", pb)
+     .repartition(max(len(touched), 1), F.col("pbucket"))
+     .write.mode("overwrite").partitionBy("pbucket")
+     .parquet(f"{staging}/clusters"))
+    # explicit schema: a remove that kills every cluster in its touched
+    # buckets stages an EMPTY dir, which inference cannot read
+    staged = (pipe.spark.read
+              .schema("image_id string, cluster_id string, pbucket int")
+              .parquet(f"{staging}/clusters"))
+    pipe._record(f"{prefix}_clusters_rewrite", staged, t0,
+                 after=f"{prefix}_clusters")
+    present = {r[0] for r in
+               staged.select("pbucket").distinct().collect()}
+    return {str(p): bool(p in present) for p in touched}
+
+
+@_writer_locked
 def incremental_add(spark: SparkSession, cfg: PipelineConfig,
                     checkpoint_dir: str, new_images: DataFrame,
                     all_images: DataFrame) -> DataFrame:
@@ -560,7 +631,11 @@ def incremental_add(spark: SparkSession, cfg: PipelineConfig,
     ``:405,427-433``) — old nodes are never rebuilt.  Mirrored here:
 
     * config reloads from the checkpoint and must hash-match (the
-      reference re-sketches new data with the ORIGINAL parameters);
+      reference re-sketches new data with the ORIGINAL parameters) —
+      checked by :func:`mutation_prologue`, the start shared with
+      :func:`~gsearch_spark.operators.remove.remove_images`, which also
+      rolls torn commits and table swaps forward and wipes stale
+      staging;
     * every stored-metadata probe (id-clash refusal, ck membership,
       suffix-group rep-ness, endpoint labels) is a PRUNED point lookup
       into the key-addressed ck_index / id_index layouts
@@ -593,14 +668,18 @@ def incremental_add(spark: SparkSession, cfg: PipelineConfig,
       clusters whose exact-groups received new members; only their
       member rows are re-read (partition-pruned via the clusters
       checkpoint's pbucket hive partitioning), re-labelled and
-      min-member-normalized (``add_clusters`` = that delta);
+      min-member-normalized (``add_clusters`` = that delta).  The tail
+      runs on the driver whenever the endpoint prefetch fits
+      ``cfg.add_cc_local_max_edges`` and as DataFrame jobs past it;
     * commit is manifest-protected: every delta (including the touched
-      clusters partitions) is fully staged first, then a commit manifest
-      is written, then files move/swap by rename.  A crash at ANY point
-      either leaves a pre-manifest staging dir (the add never happened;
-      wiped and re-runnable) or a torn post-manifest commit that
-      :func:`recover_add_commit` — called automatically at the start of
-      the next add — rolls FORWARD to completion.  Appends are file
+      clusters partitions, :func:`stage_clusters_rewrite`) is fully
+      staged first, then :func:`write_manifest` writes the commit
+      manifest, then :func:`finish_commit` moves/swaps files by rename.
+      A crash at ANY point either leaves a pre-manifest staging dir
+      (the add never happened; wiped and re-runnable) or a torn
+      post-manifest commit that :func:`recover_add_commit` — the same
+      :func:`finish_commit`, called automatically at the start of the
+      next mutation — rolls FORWARD to completion.  Appends are file
       renames; clusters swaps only the partitions in the manifest, so
       per-add clusters IO is O(affected), not O(corpus).
 
@@ -611,36 +690,20 @@ def incremental_add(spark: SparkSession, cfg: PipelineConfig,
     with no corpus-sized post-pass (src/dna/dnasketch.rs:106-134) but
     offers no torn-commit recovery.
 
-    Mutation is SINGLE-WRITER: the add takes the build's ``_add_lock``
-    before reading any state and refuses (:class:`ConcurrentAddError`)
-    while another writer holds it — the manifest commit protocol admits
-    one writer by design.  Dead same-host holders self-heal; a stale
-    cross-host lock is broken explicitly with the ``unlock`` subcommand.
-    Re-entrant under an enclosing :func:`add_writer_lock` (how the CLI
-    and the streaming sink hold one lock across payload-append + add).
+    Mutation is SINGLE-WRITER: the add runs under
+    :func:`add_writer_lock`, taken before reading any state, and
+    refuses (:class:`ConcurrentAddError`) while another writer holds
+    it — the manifest commit protocol admits one writer by design.
+    Dead same-host holders self-heal; a stale cross-host lock is broken
+    explicitly with the ``unlock`` subcommand.  Re-entrant under an
+    enclosing :func:`add_writer_lock` (how the CLI and the streaming
+    sink hold one lock across payload-append + add).
 
     ``all_images`` must be old ∪ new (verify needs both sides' payloads;
     at scale, back it with a table whose layout supports id lookups —
     Iceberg bucket pruning — so the payload attach reads only candidate
     row groups).  Returns the new clusters DataFrame.
     """
-    pipe = NearDupPipeline(spark, cfg, checkpoint_dir)
-    # single-writer refusal BEFORE any state is read: the manifest
-    # commit protocol admits exactly one writer (re-entrant under an
-    # enclosing add_writer_lock; dead same-host holders self-heal)
-    lock_owner = acquire_add_lock(pipe.fs, checkpoint_dir)
-    try:
-        return _incremental_add_locked(spark, cfg, checkpoint_dir,
-                                       new_images, all_images, pipe)
-    finally:
-        if lock_owner:
-            release_add_lock(pipe.fs, checkpoint_dir)
-
-
-def _incremental_add_locked(spark: SparkSession, cfg: PipelineConfig,
-                            checkpoint_dir: str, new_images: DataFrame,
-                            all_images: DataFrame,
-                            pipe: NearDupPipeline) -> DataFrame:
     from pyspark.sql import Window
     from gsearch_spark.operators.banding import explode_all_bands
     from gsearch_spark.operators.candidates import (emit_bucket_pairs,
@@ -655,22 +718,11 @@ def _incremental_add_locked(spark: SparkSession, cfg: PipelineConfig,
     from gsearch_spark.operators.verify import (attach_payloads,
                                                 prefilter_pairs, verify_pairs)
 
-    cfg.assert_matches_via(pipe.fs, checkpoint_dir)
-    recover_add_commit(spark, checkpoint_dir)  # finish any torn commit
-    # a torn staged-table swap (offline id_index compaction or a purge
-    # pass killed between its two renames) rolls forward here too,
-    # before the layout checks below
-    from gsearch_spark.operators.remove import recover_all_swaps
-    recover_all_swaps(pipe.fs, checkpoint_dir)
-
+    pipe = NearDupPipeline(spark, cfg, checkpoint_dir)
+    staging, new_gen = mutation_prologue(
+        pipe, ("ck_index", "id_index", "edge_index"))
     ck_path = pipe._path("ck_index")
     id_path = pipe._path("id_index")
-    if not (pipe.fs.exists(f"{ck_path}/_SUCCESS")
-            and pipe.fs.exists(f"{id_path}/_SUCCESS")
-            and pipe.fs.exists(f"{pipe._path('edge_index')}/_SUCCESS")):
-        raise ValueError(
-            "checkpoint predates key-addressed lookup layouts (no "
-            "ck_index/id_index/edge_index); rebuild with tohnsw first")
     from gsearch_spark.operators.remove import (count_tombstones,
                                                 has_removals,
                                                 read_dead_groups,
@@ -737,9 +789,7 @@ def _incremental_add_locked(spark: SparkSession, cfg: PipelineConfig,
         clash = lookup_id_index(spark, id_path,
                                 new_images.select("image_id"), cfg,
                                 idx_df=id_idx_df)
-        pipe._record("add_lookup_idclash", clash, t0, skipped=False)
-        return next(r for r in pipe.records
-                    if r.stage == "add_lookup_idclash").rows_out
+        return pipe._record("add_lookup_idclash", clash, t0)
 
     def _mk_old_keys():
         # content keys of the new slice, then the ck-membership probe —
@@ -756,7 +806,7 @@ def _incremental_add_locked(spark: SparkSession, cfg: PipelineConfig,
             old_keys = old_keys.join(F.broadcast(dead_df), "rep_id",
                                      "left_anti")
         old_keys = old_keys.localCheckpoint()  # O(new) rows
-        pipe._record("add_lookup_ck", old_keys, t0, skipped=False)
+        pipe._record("add_lookup_ck", old_keys, t0)
         return nk, old_keys
 
     def _touched_prefix():
@@ -772,10 +822,8 @@ def _incremental_add_locked(spark: SparkSession, cfg: PipelineConfig,
         # phash-sorted / z-ordered Iceberg table this turns the per-add
         # suffix input read into O(touched groups) IO); bulk appends
         # past the cap fall back to the semi join.
-        _trace("touched: start")
         ph_vals = [r[0] for r in new_images.select("phash").distinct()
                    .limit(10_001).collect()]
-        _trace("touched: ph_vals collected")
         if len(ph_vals) <= 10_000:
             touched_imgs = all_images.filter(F.col("phash").isin(ph_vals))
         else:
@@ -788,7 +836,6 @@ def _incremental_add_locked(spark: SparkSession, cfg: PipelineConfig,
         touched_imgs = (touched_imgs.select("phash", "image_id",
                                             "caption")
                         .localCheckpoint())
-        _trace("touched: touched_imgs cut")
         # rep-ness of the touched slice comes from a pruned id_index
         # point lookup (is_rep flag), not a corpus scan of the stored
         # group keys; new reps aren't in id_index yet and union in
@@ -811,9 +858,7 @@ def _incremental_add_locked(spark: SparkSession, cfg: PipelineConfig,
             old_touched_reps = old_touched_reps.unionByName(promoted) \
                 .distinct()
         old_touched_reps = old_touched_reps.localCheckpoint()
-        pipe._record("add_lookup_touched_reps", old_touched_reps, t0,
-                     skipped=False)
-        _trace("touched: prefix done")
+        pipe._record("add_lookup_touched_reps", old_touched_reps, t0)
         return touched_imgs, old_touched_reps
 
     # the touched-phash chain is the LONGEST of the setup chains (three
@@ -838,15 +883,15 @@ def _incremental_add_locked(spark: SparkSession, cfg: PipelineConfig,
                              "(minus removed rows)")
         raise ValueError("new_images contains ids already in the build")
 
-    staging = pipe._path("_add_staging")
-    pipe.fs.delete(staging)
-
-    def stage(name: str, df: DataFrame) -> DataFrame:
-        """Materialize a delta under staging; record rows/secs as add_*."""
+    def stage(name: str, df: DataFrame,
+              after: "str | None" = None) -> DataFrame:
+        """Materialize a delta under staging; record rows/secs as add_*
+        (``after``: the logical predecessor's unprefixed name)."""
         t0 = time.time()
         df.write.mode("overwrite").parquet(f"{staging}/{name}")
         out = spark.read.parquet(f"{staging}/{name}")
-        pipe._record(f"add_{name}", out, t0, skipped=False)
+        pipe._record(f"add_{name}", out, t0,
+                     after=after and f"add_{after}")
         return out
 
     # -- exact grouping of the new slice (no old bytes touched; the
@@ -875,8 +920,8 @@ def _incremental_add_locked(spark: SparkSession, cfg: PipelineConfig,
     to_sketch = new_images.join(new_rep_ids, "image_id", "left_semi")
 
     # matched reps (old groups gaining members) depend only on the
-    # just-staged exact groups; the fused small-add tail needs them as a
-    # driver list, so the collect runs on a side thread under the whole
+    # just-staged exact groups; the driver tail needs them as a driver
+    # list, so the collect runs on a side thread under the whole
     # sketch/band/verify phase (guide §2.6).
     mr_expr = (new_groups
                .join(new_images.select(F.col("image_id").alias("rep_id")),
@@ -888,10 +933,9 @@ def _incremental_add_locked(spark: SparkSession, cfg: PipelineConfig,
                if removals else {})
         return mr, rmp
 
-    # spawn gate bounds the COLLECT (mr_list <= n_new rows), not the
-    # fused decision itself — if the posterior gate still picks the
-    # distributed tail (edge blow-up), the side collect was bounded and
-    # merely unused
+    # the spawn gate bounds the COLLECT (mr_list <= n_new rows); past
+    # it the endpoint prefetch below returns None, and so does every add
+    # its own bound sends to the distributed tail
     mr_future = _spawn(_mr_collect) \
         if n_new <= cfg.add_cc_local_max_edges else None
 
@@ -911,36 +955,26 @@ def _incremental_add_locked(spark: SparkSession, cfg: PipelineConfig,
     # per-job latency into one wave; the suffix chain does not need the
     # new signatures, so it overlaps the decode+sketch stage too.
     def _br_sig_chain():
-        _trace("sig_chain: start")
-        new_sigs = stage("signatures", compute_signatures(to_sketch, cfg))
-        _trace("sig_chain: signatures staged")
+        new_sigs = stage("signatures", compute_signatures(to_sketch, cfg),
+                         after="exact_groups")
 
         def bands_nn():
-            df = build_bands(new_sigs, cfg)
-            _trace("sig_chain: band salt stats done")
-            nb = stage("bands", df)
-            _trace("sig_chain: bands staged")
-            nn = emit_bucket_pairs(nb).localCheckpoint()
-            _trace("sig_chain: nn_pairs cut")
-            return nb, nn
+            nb = stage("bands", build_bands(new_sigs, cfg),
+                       after="signatures")
+            return nb, emit_bucket_pairs(nb).localCheckpoint()
 
         (nb, nn), no_p = _run_parallel(
             bands_nn, lambda: _probe_old_pairs(new_sigs))
         return nb, nn, no_p
 
     def _br_ck_stage():
-        _trace("ck_stage: start")
         stage_ck_append(new_groups, staging, cfg)
-        _trace("ck_stage: done")
 
     def _probe_old_pairs(new_sigs):
-        _trace("probe: start")
         no_pairs = probe_pairs_vs_stored(explode_all_bands(new_sigs, cfg),
                                          old_bands)
         if not removals:
-            out = no_pairs.localCheckpoint()
-            _trace("probe: no_pairs cut")
-            return out
+            return no_pairs.localCheckpoint()
         # stored bands stay keyed by founding group nodes until
         # compaction: pairs against a DEAD group's node are content
         # that no longer exists (drop), and pairs against a tombstoned
@@ -984,11 +1018,9 @@ def _incremental_add_locked(spark: SparkSession, cfg: PipelineConfig,
         touched_reps = (touched_imgs.join(
             old_touched_reps.unionByName(new_rep_ids), "image_id",
             "left_semi").localCheckpoint())
-        _trace("touched: touched_reps cut")
         # sfx feeds BOTH union arms below — cut it first, or the shared
         # exchange under the two consumers trips the AQE reuse bug
         sfx = suffix_candidate_pairs(touched_reps).localCheckpoint()
-        _trace("touched: sfx cut")
         return (sfx.join(new_rep_ids.withColumnRenamed("image_id", "a"),
                          "a", "left_semi")
                 .unionByName(
@@ -1001,7 +1033,8 @@ def _incremental_add_locked(spark: SparkSession, cfg: PipelineConfig,
         _br_sig_chain, _br_touched, _br_ck_stage)
     new_pairs = stage("candidate_pairs",
                       nn_pairs.unionByName(no_pairs).unionByName(sfx_new)
-                      .groupBy("a", "b").agg(F.min("src").alias("src")))
+                      .groupBy("a", "b").agg(F.min("src").alias("src")),
+                      after="bands")
 
     # -- verify only new-touching pairs, capped per new item -------------
     plausible = prefilter_pairs(new_pairs, all_images,
@@ -1047,11 +1080,13 @@ def _incremental_add_locked(spark: SparkSession, cfg: PipelineConfig,
     # §2.6): every verified edge endpoint is an endpoint of `capped`
     # (edges = verify(capped) filtered), and the matched reps' promoted
     # members are known from the mr collect — so the pruned id_index
-    # lookup the fused tail needs can run NOW, off the critical path,
+    # lookup the driver tail needs can run NOW, off the critical path,
     # on the (slightly larger) capped-endpoint superset.  The side
-    # thread self-gates on the driver budget: past the bound it returns
-    # None and the tail falls back to the inline lookup / distributed
-    # path.  Probing a superset only ADDS rows for ids the tail then
+    # thread self-gates on the driver budget — the add tail's ONE gate:
+    # the verified edges are a subset of `capped`, so
+    # 2·|capped| + n_new bounds every set the driver tail collects; past
+    # it the prefetch returns None and the add takes the distributed
+    # tail.  Probing a superset only ADDS rows for ids the tail then
     # filters out — labels for non-edge endpoints are never read.
     def _ep_prefetch():
         if mr_future is None:
@@ -1072,13 +1107,13 @@ def _incremental_add_locked(spark: SparkSession, cfg: PipelineConfig,
                 schema="image_id string")).distinct()
         rows = lookup_id_index(spark, id_path, probe, cfg,
                                idx_df=id_idx_df).collect()
-        _trace("fused: ep prefetch done")
         return mr_l, rmp, rows
 
     ep_future = _spawn(_ep_prefetch)
     new_edges = stage("verified_edges",
                       verify_pairs(attached, cfg).filter(F.col("dup"))
-                      .select("a", "b", "src", "psnr", "caption_eq"))
+                      .select("a", "b", "src", "psnr", "caption_eq"),
+                      after="candidate_pairs")
 
     # -- INCREMENTAL clusters: CC by contraction ------------------------
     # Stored clusters are exactly CC(stored edges), so contracting each
@@ -1089,10 +1124,6 @@ def _incremental_add_locked(spark: SparkSession, cfg: PipelineConfig,
     # lookup (partition filter + IN-list row-group pruning) — neither
     # the stored clusters table nor any other corpus-sized relation is
     # scanned on this path.
-    gen_file = os.path.join(checkpoint_dir, ID_GEN_FILE)
-    new_gen = (int(pipe.fs.read_text(gen_file))
-               if pipe.fs.exists(gen_file) else 0) + 1
-
     def _c_edge_for(ep_info):
         # dedup-graph edge delta for the remove path's split
         # recomputation: endpoints translated to their FOUNDING group
@@ -1114,37 +1145,22 @@ def _incremental_add_locked(spark: SparkSession, cfg: PipelineConfig,
                   .distinct())
         stage_edge_append(fedges, staging, cfg)
 
-    def _pb(col: str) -> "F.Column":
-        return F.pmod(F.xxhash64(col), F.lit(cfg.cluster_buckets)) \
-                .cast("int")
-
-    # FUSED small-add tail (guide §2.6 taken to its limit): the whole
-    # labels -> contracted-CC -> affected-set algebra operates on sets
-    # bounded by O(new edges + new rows) — the SAME magnitude the
-    # union-find fast path has always collected — yet the DataFrame form
-    # paid ~5 small jobs of latency (mr_map cut, ep_info cut, labels
-    # record, label_edges cut, affected collect).  When that bound fits
-    # the existing driver-CC budget, three collects (matched reps, the
-    # staged edge list, the pruned ep_info lookup) bring the inputs to
+    # DRIVER tail (guide §2.6 taken to its limit): the whole labels ->
+    # contracted-CC -> affected-set algebra operates on sets bounded by
+    # O(new edges + new rows) — the SAME magnitude the union-find fast
+    # path has always collected — yet the DataFrame form pays ~5 small
+    # jobs of latency (mr_map cut, ep_info cut, labels record,
+    # label_edges cut, affected collect).  Whenever the endpoint
+    # prefetch came back (its bound is the driver budget), the
+    # prefetched rows, the matched reps and the staged edge list are on
     # the driver and plain dict/set algebra replaces the join chain —
     # provably the same maps: get(x, x) IS coalesce over a left join,
     # the set comprehension IS the distinct union.  Bulk adds past the
-    # bound keep the distributed DataFrame path verbatim below.
-    n_edges_rec = next(r.rows_out for r in reversed(pipe.records)
-                       if r.stage == "add_verified_edges")
-    fused_small = (n_edges_rec + n_new) <= cfg.add_cc_local_max_edges
-    if fused_small:
-        t0 = time.time()
-        prefetch = ep_future.result()
-        if prefetch is not None:
-            mr_list, remap, super_rows = prefetch
-        else:
-            # fused_small implies n_new <= add_cc_local_max_edges — the
-            # exact mr_future spawn gate — so the future always exists
-            # here; only the ep prefetch may have self-gated out
-            mr_list, remap = mr_future.result()
-            super_rows = None
-        _trace("fused: mr joined")
+    # bound take the distributed DataFrame tail below.
+    t0 = time.time()
+    prefetch = ep_future.result()
+    if prefetch is not None:
+        mr_list, remap, super_rows = prefetch
         # a matched group's founding rep may be tombstoned (group
         # alive): its own id_index label is a stale null-or-old row, so
         # the LABEL is read through the promoted surviving member
@@ -1152,19 +1168,11 @@ def _incremental_add_locked(spark: SparkSession, cfg: PipelineConfig,
         mr_pairs = [(r, remap.get(r, r)) for r in mr_list]
         edge_rows = [(r["a"], r["b"]) for r in
                      new_edges.select("a", "b").collect()]
-        _trace("fused: edges collected")
         ep_ids = ({a for a, _ in edge_rows} | {b for _, b in edge_rows}
                   | {l for _, l in mr_pairs})
-        if super_rows is not None:
-            # prefetched superset (capped endpoints ∪ lreps) ⊇ ep_ids:
-            # restricting the collected rows IS the direct lookup
-            ep_rows = [r for r in super_rows if r["image_id"] in ep_ids]
-        else:
-            ep_probe = spark.createDataFrame(
-                [(i,) for i in sorted(ep_ids)], schema="image_id string")
-            ep_rows = lookup_id_index(spark, id_path, ep_probe, cfg,
-                                      idx_df=id_idx_df).collect()
-        _trace("fused: ep_info collected")
+        # prefetched superset (capped endpoints ∪ lreps) ⊇ ep_ids:
+        # restricting the collected rows IS the direct lookup
+        ep_rows = [r for r in super_rows if r["image_id"] in ep_ids]
         ep_info = spark.createDataFrame(
             [(r["image_id"], r["cluster_id"], r["is_rep"], r["rep_id"])
              for r in ep_rows],
@@ -1187,7 +1195,8 @@ def _incremental_add_locked(spark: SparkSession, cfg: PipelineConfig,
         labels = spark.createDataFrame(
             sorted(labels_map.items()),
             schema="image_id string, label string")
-        pipe._record("add_lookup_labels", labels, t0, skipped=False)
+        pipe._record("add_lookup_labels", labels, t0,
+                     after="add_verified_edges")
         t0 = time.time()
         le_set = set()
         for a, b in edge_rows:
@@ -1197,7 +1206,8 @@ def _incremental_add_locked(spark: SparkSession, cfg: PipelineConfig,
                 le_set.add((la, lb))
         label_edges = spark.createDataFrame(
             sorted(le_set), schema="a string, b string")
-        pipe._record("add_cc_edges", label_edges, t0, skipped=False)
+        pipe._record("add_cc_edges", label_edges, t0,
+                     after="add_verified_edges")
         mapping = union_find(sorted(le_set))
         rep_cc = spark.createDataFrame(
             sorted(mapping.items()),
@@ -1216,18 +1226,8 @@ def _incremental_add_locked(spark: SparkSession, cfg: PipelineConfig,
         # job over O(affected) rows
         aff_buckets = sorted(
             {r["pb"] for r in
-             aff_cl.select(_pb("cluster_id").alias("pb")).collect()})
+             aff_cl.select(cluster_pbucket(cfg).alias("pb")).collect()})
     else:
-        # the advisory prefetch future must not outlive this call (its
-        # detached jobs would run past commit/lock release and any
-        # exception would vanish): join it best-effort — for bulk adds
-        # it either never spawned the lookup (mr gate) or self-gated
-        # out after a cheap count, so this waits ~0 in practice
-        try:
-            ep_future.result()
-        except Exception:
-            pass  # advisory only; the inline path below is authoritative
-        t0 = time.time()
         matched_reps = mr_expr  # old reps gaining members
         # a matched group's founding rep may be tombstoned (group
         # alive): label read through the promoted surviving member
@@ -1272,7 +1272,8 @@ def _incremental_add_locked(spark: SparkSession, cfg: PipelineConfig,
                 .distinct())
         else:
             labels = labels_live
-        pipe._record("add_lookup_labels", labels, t0, skipped=False)
+        pipe._record("add_lookup_labels", labels, t0,
+                     after="add_verified_edges")
         t0 = time.time()
         lab_a = labels.select(F.col("image_id").alias("a"),
                               F.col("label").alias("la"))
@@ -1285,22 +1286,9 @@ def _incremental_add_locked(spark: SparkSession, cfg: PipelineConfig,
                                F.coalesce("lb", F.col("b")).alias("b"))
                        .filter(F.col("a") != F.col("b"))
                        .distinct().localCheckpoint())
-        pipe._record("add_cc_edges", label_edges, t0, skipped=False)
-        n_label_edges = next(r.rows_out for r in reversed(pipe.records)
-                             if r.stage == "add_cc_edges")
-        small_graph = n_label_edges <= cfg.add_cc_local_max_edges
-        if small_graph:
-            # small contracted graph: driver union-find beats
-            # O(log^2 n) distributed rounds of per-job latency
-            # (identical min-member labels)
-            mapping = union_find([(r["a"], r["b"])
-                                  for r in label_edges.collect()])
-            rep_cc = spark.createDataFrame(
-                sorted(mapping.items()),
-                schema="image_id string, cluster_id string")
-        else:
-            rep_cc = connected_components(label_edges).localCheckpoint()
-
+        n_label_edges = pipe._record("add_cc_edges", label_edges, t0,
+                                     after="add_verified_edges")
+        rep_cc = cc_roots(label_edges, n_label_edges, cfg)
         # affected clusters: merged old labels ∪ clusters whose
         # exact-groups gained members
         t0 = time.time()
@@ -1310,24 +1298,14 @@ def _incremental_add_locked(spark: SparkSession, cfg: PipelineConfig,
                                                              "rep_id"),
                                     "rep_id")
                               .select("label"))
-        aff_expr = (rep_cc.select(F.col("image_id").alias("label"))
-                    .join(stored_labels, "label", "left_semi")
-                    .unionByName(matched_rep_labels)
-                    .distinct())
-        if small_graph:
-            # ONE collect resolves labels AND their bucket set
-            aff_rows = (aff_expr.select("label", _pb("label").alias("pb"))
-                        .collect())
-            aff_buckets = sorted({r["pb"] for r in aff_rows})
-            aff_cl = spark.createDataFrame(
-                [(r["label"],) for r in aff_rows],
-                schema="cluster_id string")
-        else:
-            aff = aff_expr.localCheckpoint()
-            aff_buckets = sorted(r[0] for r in
-                                 aff.select(_pb("label").alias("pb"))
-                                 .distinct().collect())
-            aff_cl = aff.withColumnRenamed("label", "cluster_id")
+        aff = (rep_cc.select(F.col("image_id").alias("label"))
+               .join(stored_labels, "label", "left_semi")
+               .unionByName(matched_rep_labels)
+               .distinct().localCheckpoint())
+        aff_buckets = sorted(r[0] for r in
+                             aff.select(cluster_pbucket(cfg, "label"))
+                             .distinct().collect())
+        aff_cl = aff.withColumnRenamed("label", "cluster_id")
     # member rows of affected clusters ONLY, read under pbucket pruning
     aff_members = (clusters_stored
                    .filter(F.col("pbucket").isin(aff_buckets))
@@ -1366,81 +1344,29 @@ def _incremental_add_locked(spark: SparkSession, cfg: PipelineConfig,
     delta = (members.join(F.broadcast(norm), "root")
              .select("image_id", "cluster_id", "is_rep", "rep_id")
              .localCheckpoint())
-    pipe._record("add_clusters", delta, t0, skipped=False)
+    pipe._record("add_clusters", delta, t0, after="add_cc_edges")
 
     # -- stage the rewritten clusters partitions (touched buckets only)
     #    and the id_index delta — the ck_index delta was staged in the
     #    parallel candidate block and the edge_index delta has been
-    #    staging on a side thread since ep_info was cut --------------
-    def _c_clusters():
-        t0 = time.time()
-        delta_buckets = {r[0] for r in
-                         delta.select(_pb("cluster_id").alias("pb"))
-                         .distinct().collect()}
-        touched = sorted(set(aff_buckets) | delta_buckets)
-        kept = (clusters_stored.filter(F.col("pbucket").isin(touched))
-                .join(F.broadcast(aff_cl.select("cluster_id")),
-                      "cluster_id", "left_anti")
-                .select("image_id", "cluster_id"))
-        (kept.unionByName(delta.select("image_id", "cluster_id"))
-         .withColumn("pbucket", _pb("cluster_id"))
-         .repartition(max(len(touched), 1), F.col("pbucket"))
-         .write.mode("overwrite").partitionBy("pbucket")
-         .parquet(f"{staging}/clusters"))
-        staged_clusters = spark.read.parquet(f"{staging}/clusters")
-        pipe._record("add_clusters_rewrite", staged_clusters, t0,
-                     skipped=False)
-        present = {r[0] for r in staged_clusters.select("pbucket")
-                   .distinct().collect()}
-        # a touched bucket with no staged rows (all its clusters merged
-        # away into other buckets) must be DELETED at commit, not stale
-        return {str(p): bool(p in present) for p in touched}
-
-    # key-index deltas: brand-new (ck, rep_id) rows were staged in the
-    # candidate block; the re-labelled/new member rows stage at the next
-    # id_index generation (LSM append, latest-gen-wins — no stored index
-    # rows are read or rewritten)
-    def _c_id():
-        stage_id_append(delta, new_gen, staging, cfg)
-
+    #    staging on a side thread since ep_info was cut.  The re-labelled
+    #    and new member rows stage at the next id_index generation (LSM
+    #    append, latest-gen-wins — no stored index rows are read or
+    #    rewritten) ---------------------------------------------------
     t0 = time.time()
-    swap, _ = _run_parallel(_c_clusters, _c_id)
+    swap, _ = _run_parallel(
+        lambda: stage_clusters_rewrite(pipe, staging, clusters_stored,
+                                       aff_cl, aff_buckets, delta, "add"),
+        lambda: stage_id_append(delta, new_gen, staging, cfg))
     edge_future.result()  # staged since ep_info; must land pre-manifest
     pipe._record("add_index_delta",
                  spark.read.parquet(f"{staging}/id_index"), t0,
-                 skipped=False)
-
-    # -- commit: manifest first, then renames; crash => roll-forward -----
-    manifest = {"version": 2, "staging": staging,
-                "append_stages": ["exact_groups", "signatures", "bands",
-                                  "candidate_pairs", "verified_edges"],
-                "partitioned_appends": ["ck_index", "id_index",
-                                        "edge_index"],
-                "id_index_gen": new_gen,
-                "clusters_swap": swap}
-    mpath = os.path.join(checkpoint_dir, ADD_MANIFEST)
-    _trace("commit: manifest")
-    pipe.fs.write_text(mpath, json.dumps(manifest))
-    _apply_add_commit(pipe.fs, checkpoint_dir, manifest)
-    pipe.fs.delete(mpath)
-    _trace("commit: applied")
-
-    # post-commit housekeeping: the staging wipe (recursive FS delete),
-    # the lineage flush (one parquet append job) and the file-status
-    # cache refresh (the swap happened via raw FS renames, invisible to
-    # Spark's shared cache — the documented plan-cache-over-rewritten-
-    # path pitfall, FS-metadata edition) touch disjoint state and run
-    # CONCURRENTLY (guide §2.6)
-    def _refresh():
-        for name in ("exact_groups", "signatures", "bands",
-                     "candidate_pairs", "verified_edges", "clusters",
-                     "ck_index", "id_index", "edge_index"):
-            spark.catalog.refreshByPath(pipe._path(name))
-
-    _run_parallel(lambda: pipe.fs.delete(staging),
-                  pipe._flush_state,  # one lineage append for the add
-                  _refresh)
-    _trace("commit: housekeeping done")
+                 after="add_clusters")
+    finish_commit(spark, pipe.fs, checkpoint_dir, write_manifest(
+        pipe, staging, new_gen, swap,
+        ["exact_groups", "signatures", "bands", "candidate_pairs",
+         "verified_edges"],
+        ["ck_index", "id_index", "edge_index"]), pipe._flush_state)
     return (spark.read.parquet(pipe._path("clusters"))
             .select("image_id", "cluster_id"))
 
@@ -1489,7 +1415,6 @@ def _apply_add_commit(fs: CheckpointFS, root: str, manifest: dict) -> None:
                     for n in manifest["append_stages"]],
                   *[(lambda n=n: _move_partitioned(n))
                     for n in manifest.get("partitioned_appends", [])])
-    _trace("commit: table moves done")
     if "id_index_gen" in manifest:
         fs.write_text(f"{root}/{ID_GEN_FILE}",
                       str(manifest["id_index_gen"]))
@@ -1513,23 +1438,16 @@ def _apply_add_commit(fs: CheckpointFS, root: str, manifest: dict) -> None:
 
 
 def recover_add_commit(spark: SparkSession, checkpoint_dir: str) -> bool:
-    """Roll FORWARD a torn append-only-add commit (crash after the
-    manifest was written but before the commit finished).  Called
-    automatically at the start of every :func:`incremental_add`; safe to
-    call any time.  Returns True iff a torn commit was found and
-    completed.  A staging dir WITHOUT a manifest is pre-commit garbage
-    (the add never logically happened) and is left for the next add to
-    wipe."""
+    """Roll FORWARD a torn mutation commit (crash after the manifest was
+    written but before the commit finished): :func:`finish_commit` on
+    the manifest found on disk.  Called automatically at the start of
+    every add and remove; safe to call any time.  Returns True iff a
+    torn commit was found and completed.  A staging dir WITHOUT a
+    manifest is pre-commit garbage (the mutation never logically
+    happened) and is left for the next mutation to wipe."""
     fs = CheckpointFS(spark, checkpoint_dir)
     mpath = f"{checkpoint_dir}/{ADD_MANIFEST}"
     if not fs.exists(mpath):
         return False
-    manifest = json.loads(fs.read_text(mpath))
-    _apply_add_commit(fs, checkpoint_dir, manifest)
-    fs.delete(mpath)
-    fs.delete(manifest["staging"])
-    for name in (manifest["append_stages"]
-                 + manifest.get("partitioned_appends", [])
-                 + ["clusters"]):
-        spark.catalog.refreshByPath(f"{checkpoint_dir}/{name}")
+    finish_commit(spark, fs, checkpoint_dir, json.loads(fs.read_text(mpath)))
     return True

@@ -38,10 +38,14 @@ as the mirror image of the append path:
   SPLIT a cluster — recomputed from the ``edge_index`` sidecar under
   partition pruning, O(affected), never a corpus scan.
 
-* **same single-writer lock + manifest commit** as the append path:
-  every delta is staged, then committed via the identical
-  roll-forward-recoverable manifest protocol (``recover_add_commit``
-  completes a torn remove exactly as it completes a torn add).
+* **the append path's mutation skeleton** (operators/pipeline.py):
+  the same single-writer lock, the same ``mutation_prologue`` (config
+  check, torn-commit and torn-swap roll-forward, sidecar checks, staging
+  wipe, next id_index generation), the same touched-bucket
+  ``stage_clusters_rewrite``, and the same manifest commit — every
+  delta is staged, ``write_manifest`` marks the commit point and
+  ``finish_commit`` applies it, the very function ``recover_add_commit``
+  runs to complete a torn remove or add.
 
 Parity contract (pinned by tests/test_remove.py): after any sequence of
 builds, adds and removes, the clusters table equals a from-scratch
@@ -50,13 +54,21 @@ rebuild over the surviving images — including label renames and splits.
 
 from __future__ import annotations
 
-import json
-import os
 import time
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from gsearch_spark.config import PipelineConfig
+from gsearch_spark.operators.keyidx import (key_bucket, lookup_edges_among,
+                                            lookup_id_index, stage_id_append)
+from gsearch_spark.operators.pipeline import (NearDupPipeline, _run_parallel,
+                                              _spawn, _writer_locked,
+                                              add_writer_lock, cc_roots,
+                                              cluster_pbucket, finish_commit,
+                                              mutation_prologue,
+                                              recover_add_commit,
+                                              stage_clusters_rewrite,
+                                              write_manifest)
 
 TOMBSTONES = "tombstones"
 DEAD_GROUPS = "dead_groups"
@@ -131,50 +143,24 @@ def recover_all_swaps(fs, checkpoint_dir: str) -> bool:
 
 # --------------------------------------------------------------- removal
 
+@_writer_locked
 def remove_images(spark: SparkSession, cfg: PipelineConfig,
                   checkpoint_dir: str, remove_ids: DataFrame) -> DataFrame:
     """Remove the given image_ids from the build (single-column
     DataFrame ``image_id``).  Refuses unknown and already-removed ids.
-    Returns the post-remove clusters table.  Holds the build's
-    single-writer mutation lock; commit is manifest-protected and
-    crash-roll-forward-recoverable (shared with the append path)."""
-    from gsearch_spark.operators.pipeline import (NearDupPipeline,
-                                                  acquire_add_lock,
-                                                  release_add_lock)
+    Returns the post-remove clusters table.  Runs under the build's
+    single-writer mutation lock and shares the append path's skeleton
+    (operators/pipeline.py): ``mutation_prologue``, the touched-bucket
+    ``stage_clusters_rewrite`` and the manifest commit
+    (``write_manifest`` + ``finish_commit``, crash-roll-forward-
+    recoverable)."""
     pipe = NearDupPipeline(spark, cfg, checkpoint_dir)
-    lock_owner = acquire_add_lock(pipe.fs, checkpoint_dir)
-    try:
-        return _remove_locked(spark, cfg, checkpoint_dir, remove_ids, pipe)
-    finally:
-        if lock_owner:
-            release_add_lock(pipe.fs, checkpoint_dir)
-
-
-def _remove_locked(spark: SparkSession, cfg: PipelineConfig,
-                   checkpoint_dir: str, remove_ids: DataFrame,
-                   pipe) -> DataFrame:
-    from gsearch_spark.operators.cc import connected_components, union_find
-    from gsearch_spark.operators.keyidx import (lookup_edges_among,
-                                                lookup_id_index,
-                                                stage_id_append)
-    from gsearch_spark.operators.pipeline import (ADD_MANIFEST, ID_GEN_FILE,
-                                                  _apply_add_commit,
-                                                  recover_add_commit)
-
-    cfg.assert_matches_via(pipe.fs, checkpoint_dir)
-    recover_add_commit(spark, checkpoint_dir)
-    recover_all_swaps(pipe.fs, checkpoint_dir)
+    staging, new_gen = mutation_prologue(pipe, ("id_index", "edge_index"))
     id_path = pipe._path("id_index")
     edge_path = pipe._path("edge_index")
-    if not (pipe.fs.exists(f"{id_path}/_SUCCESS")
-            and pipe.fs.exists(f"{edge_path}/_SUCCESS")):
-        raise ValueError(
-            "checkpoint predates key-addressed lookup layouts (no "
-            "id_index/edge_index); rebuild with tohnsw first")
     id_idx_df = spark.read.parquet(id_path)
     clusters_stored = spark.read.parquet(pipe._path("clusters"))
 
-    from gsearch_spark.operators.pipeline import _run_parallel
     rm = remove_ids.select("image_id").distinct().localCheckpoint()
     n_rm = rm.count()
     if n_rm == 0:
@@ -187,9 +173,7 @@ def _remove_locked(spark: SparkSession, cfg: PipelineConfig,
         t0 = time.time()
         info = lookup_id_index(spark, id_path, rm, cfg,
                                idx_df=id_idx_df).localCheckpoint()
-        pipe._record("rm_lookup_ids", info, t0, skipped=False)
-        return info, next(r for r in pipe.records
-                          if r.stage == "rm_lookup_ids").rows_out
+        return info, pipe._record("rm_lookup_ids", info, t0)
 
     def _chk_already():
         already = rm.join(read_tombstones(spark, checkpoint_dir),
@@ -211,17 +195,9 @@ def _remove_locked(spark: SparkSession, cfg: PipelineConfig,
     # tombstone staging needs only the (already-checkpointed) rm list
     # and the next generation number — start it NOW on a side thread so
     # it overlaps the whole members/CC/delta chain below (guide §2.6)
-    from gsearch_spark.operators.pipeline import _spawn
-    staging = pipe._path("_add_staging")
-    pipe.fs.delete(staging)
-    gen_file = os.path.join(checkpoint_dir, ID_GEN_FILE)
-    new_gen = (int(pipe.fs.read_text(gen_file))
-               if pipe.fs.exists(gen_file) else 0) + 1
-
     def _st_tomb():
         (rm.withColumn("gen", F.lit(new_gen))
-         .withColumn("tb", F.pmod(F.xxhash64("image_id"),
-                                  F.lit(cfg.key_buckets)).cast("int"))
+         .withColumn("tb", key_bucket("image_id", cfg.key_buckets))
          .repartition(1)
          .write.mode("overwrite").partitionBy("tb")
          .parquet(f"{staging}/{TOMBSTONES}"))
@@ -229,26 +205,21 @@ def _remove_locked(spark: SparkSession, cfg: PipelineConfig,
     tomb_future = _spawn(_st_tomb)
 
     # -- affected clusters: members read under pbucket pruning ----------
-    def _pb(col: str) -> "F.Column":
-        return F.pmod(F.xxhash64(col), F.lit(cfg.cluster_buckets)) \
-                .cast("int")
-
     t0 = time.time()
+    pb = cluster_pbucket(cfg).alias("pb")
     if n_rm <= cfg.add_lookup_max_literals:
         # the affected-label set is bounded by the remove batch: ONE
         # collect resolves the labels AND their bucket set (instead of
         # a localCheckpoint job + a buckets-only collect job)
         aff_rows = (info.select("cluster_id").distinct()
-                    .select("cluster_id", _pb("cluster_id").alias("pb"))
-                    .collect())
+                    .select("cluster_id", pb).collect())
         aff_buckets = sorted({r["pb"] for r in aff_rows})
         aff = spark.createDataFrame([(r["cluster_id"],) for r in aff_rows],
                                     schema="cluster_id string")
     else:
         aff = info.select("cluster_id").distinct().localCheckpoint()
         aff_buckets = sorted(r[0] for r in
-                             aff.select(_pb("cluster_id").alias("pb"))
-                             .distinct().collect())
+                             aff.select(pb).distinct().collect())
     members = (clusters_stored
                .filter(F.col("pbucket").isin(aff_buckets))
                .join(F.broadcast(aff), "cluster_id")
@@ -259,7 +230,7 @@ def _remove_locked(spark: SparkSession, cfg: PipelineConfig,
                              cfg, idx_df=id_idx_df)
              .select("image_id", "rep_id"))
     mem = members.join(minfo, "image_id").localCheckpoint()
-    pipe._record("rm_members", mem, t0, skipped=False)
+    pipe._record("rm_members", mem, t0, after="rm_lookup_ids")
 
     # PREFETCH the dedup-graph edge read (guide §2.6): the surviving
     # nodes are a subset of ALL affected founding nodes, which are known
@@ -324,17 +295,9 @@ def _remove_locked(spark: SparkSession, cfg: PipelineConfig,
     edges = (e_sup.join(F.broadcast(sn_a), "a", "left_semi")
              .join(F.broadcast(sn_b), "b", "left_semi")
              .localCheckpoint())
-    pipe._record("rm_cc_edges", edges, t0, skipped=False)
-    n_edges = pipe.records[-1].rows_out
-    if n_edges <= cfg.add_cc_local_max_edges:
-        mapping = union_find([(r["a"], r["b"]) for r in edges.collect()])
-        roots_df = spark.createDataFrame(
-            sorted(mapping.items()), schema="rep_id string, root string")
-    else:
-        roots_df = (connected_components(edges)
-                    .select(F.col("image_id").alias("rep_id"),
-                            F.col("cluster_id").alias("root"))
-                    .localCheckpoint())
+    n_edges = pipe._record("rm_cc_edges", edges, t0, after="rm_members")
+    roots_df = cc_roots(edges, n_edges, cfg).select(
+        F.col("image_id").alias("rep_id"), F.col("cluster_id").alias("root"))
     t0 = time.time()
     relab = (surv.select("image_id", "rep_id")
              .join(F.broadcast(roots_df), "rep_id", "left")
@@ -342,39 +305,12 @@ def _remove_locked(spark: SparkSession, cfg: PipelineConfig,
     norm = relab.groupBy("root").agg(F.min("image_id").alias("cluster_id"))
     delta = (relab.join(F.broadcast(norm), "root")
              .select("image_id", "cluster_id").localCheckpoint())
-    pipe._record("rm_clusters", delta, t0, skipped=False)
+    pipe._record("rm_clusters", delta, t0, after="rm_cc_edges")
 
     # -- stage the remaining deltas, then the shared manifest commit.
     #    Tombstones and the dead-group/remap sidecars have been staging
     #    on side threads since their inputs were cut; the clusters
     #    rewrite and id_index delta run CONCURRENTLY here (guide §2.6)
-    def _st_clusters():
-        t0 = time.time()
-        delta_buckets = {r[0] for r in
-                         delta.select(_pb("cluster_id").alias("pb"))
-                         .distinct().collect()}
-        touched = sorted(set(aff_buckets) | delta_buckets)
-        kept = (clusters_stored.filter(F.col("pbucket").isin(touched))
-                .join(F.broadcast(aff), "cluster_id", "left_anti")
-                .select("image_id", "cluster_id"))
-        (kept.unionByName(delta)
-         .withColumn("pbucket", _pb("cluster_id"))
-         .repartition(max(len(touched), 1), F.col("pbucket"))
-         .write.mode("overwrite").partitionBy("pbucket")
-         .parquet(f"{staging}/clusters"))
-        # explicit schema: a remove that kills every cluster in its
-        # touched buckets stages an EMPTY dir, which inference cannot
-        # read
-        staged_clusters = (spark.read
-                           .schema("image_id string, cluster_id string, "
-                                   "pbucket int")
-                           .parquet(f"{staging}/clusters"))
-        pipe._record("rm_clusters_rewrite", staged_clusters, t0,
-                     skipped=False)
-        present = {r[0] for r in staged_clusters.select("pbucket")
-                   .distinct().collect()}
-        return {str(p): bool(p in present) for p in touched}
-
     def _st_id():
         # id_index delta: survivors at their new label; removed ids at
         # a NULL label (the dead marker — membership/tombstone-ness
@@ -390,30 +326,15 @@ def _remove_locked(spark: SparkSession, cfg: PipelineConfig,
                                            null_s.alias("rep_id"))))
         stage_id_append(id_delta, new_gen, staging, cfg)
 
-    swap, _ = _run_parallel(_st_clusters, _st_id)
+    swap, _ = _run_parallel(
+        lambda: stage_clusters_rewrite(pipe, staging, clusters_stored, aff,
+                                       aff_buckets, delta, "rm"),
+        _st_id)
     tomb_future.result()      # staged since the refusal checks passed
     sidecars_future.result()  # staged since surv was cut
-
-    manifest = {"version": 2, "staging": staging,
-                "append_stages": [DEAD_GROUPS, REP_REMAP],
-                "partitioned_appends": ["id_index", TOMBSTONES],
-                "id_index_gen": new_gen,
-                "clusters_swap": swap}
-    mpath = os.path.join(checkpoint_dir, ADD_MANIFEST)
-    pipe.fs.write_text(mpath, json.dumps(manifest))
-    _apply_add_commit(pipe.fs, checkpoint_dir, manifest)
-    pipe.fs.delete(mpath)
-
-    # post-commit housekeeping overlaps (same shape as the add path):
-    # staging wipe ∥ lineage flush ∥ file-status cache refresh
-    def _refresh():
-        for name in ("clusters", "id_index", TOMBSTONES, DEAD_GROUPS,
-                     REP_REMAP):
-            spark.catalog.refreshByPath(pipe._path(name))
-
-    _run_parallel(lambda: pipe.fs.delete(staging),
-                  pipe._flush_state,
-                  _refresh)
+    finish_commit(spark, pipe.fs, checkpoint_dir, write_manifest(
+        pipe, staging, new_gen, swap, [DEAD_GROUPS, REP_REMAP],
+        ["id_index", TOMBSTONES]), pipe._flush_state)
     return (spark.read.parquet(pipe._path("clusters"))
             .select("image_id", "cluster_id"))
 
@@ -444,9 +365,6 @@ def purge_removed(spark: SparkSession, cfg: PipelineConfig,
     """
     from gsearch_spark.operators.keyidx import (read_edge_index,
                                                 swap_table_in)
-    from gsearch_spark.operators.pipeline import (NearDupPipeline,
-                                                  add_writer_lock,
-                                                  recover_add_commit)
     pipe = NearDupPipeline(spark, cfg, checkpoint_dir)
     with add_writer_lock(spark, checkpoint_dir):
         cfg.assert_matches_via(pipe.fs, checkpoint_dir)
@@ -517,9 +435,7 @@ def purge_removed(spark: SparkSession, cfg: PipelineConfig,
               pair_fix(ve, [c for c in ve.columns if c not in ("a", "b")]))
         ei = read_edge_index(spark, pipe._path("edge_index"))
         ei2 = (pair_fix(ei.select("a", "b"), [])
-               .withColumn("eb", F.pmod(F.xxhash64("a"),
-                                        F.lit(cfg.key_buckets))
-                           .cast("int")))
+               .withColumn("eb", key_bucket("a", cfg.key_buckets)))
         _swap("edge_index", ei2, partition_col="eb")
         ck = spark.read.parquet(pipe._path("ck_index"))
         _swap("ck_index",
@@ -537,9 +453,7 @@ def purge_removed(spark: SparkSession, cfg: PipelineConfig,
                            .alias("is_rep"), "rep_id")
         idx = (clusters.join(flags, "image_id")
                .withColumn("gen", F.lit(0))
-               .withColumn("ib", F.pmod(F.xxhash64("image_id"),
-                                        F.lit(cfg.key_buckets))
-                           .cast("int")))
+               .withColumn("ib", key_bucket("image_id", cfg.key_buckets)))
         _swap("id_index", idx, partition_col="ib")
         # sidecars go LAST: until here every reader stayed correct under
         # merge-on-read; after, the zero-removal fast paths re-engage

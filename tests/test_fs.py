@@ -37,7 +37,9 @@ def test_local_fastpath_matches_jvm_backend(spark, monkeypatch):
     """The os-based local fast path and the Hadoop JVM path must agree
     on every observable: existence, rename refusal semantics (src
     missing / dst present -> False), move_children counts + _SUCCESS
-    skipping, create_atomic mutual exclusion, list_children contents."""
+    skipping, create_atomic mutual exclusion, list_children contents
+    (checksum sidecars hidden), mkdirs refusal when a file is in the
+    way."""
     import os
 
     def drive(fs, root):
@@ -45,6 +47,10 @@ def test_local_fastpath_matches_jvm_backend(spark, monkeypatch):
         fs.write_text(f"{root}/src/part-0", "a")
         fs.write_text(f"{root}/src/part-1", "b")
         fs.write_text(f"{root}/src/_SUCCESS", "")
+        # a checksum sidecar as a JVM-path Spark write leaves it beside
+        # its part file: listings must hide it on both backends
+        with open(f"{root}/src/.part-0.crc", "w") as f:
+            f.write("crc")
         obs = []
         obs.append(fs.exists(f"{root}/src"))            # True
         # rename of a MISSING src: HDFS returns false, the Hadoop local
@@ -67,6 +73,9 @@ def test_local_fastpath_matches_jvm_backend(spark, monkeypatch):
         obs.append(fs.create_atomic(f"{root}/lock", "me"))     # True
         obs.append(fs.create_atomic(f"{root}/lock", "other"))  # False
         obs.append(fs.read_text(f"{root}/lock"))               # "me"
+        obs.append(fs.mkdirs(f"{root}/lock"))        # False: a file
+        obs.append(fs.mkdirs(f"{root}/lock/sub"))    # False: parent file
+        obs.append(fs.mkdirs(f"{root}/newdir/sub"))            # True
         obs.append(fs.delete(f"{root}/nothing"))               # False
         obs.append(fs.delete(f"{root}/dstdir"))                # True
         obs.append(fs.exists(f"{root}/dstdir"))                # False

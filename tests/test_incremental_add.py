@@ -285,6 +285,69 @@ def test_incremental_add_distributed_cc_fallback(spark, add_build):
     assert added == add_build["added"]
 
 
+def test_add_tail_gate_moves_bulk_add_to_distributed_tail(
+        spark, add_build, small_fixture_dir, monkeypatch):
+    """The add tail's ONE gate is the endpoint prefetch's bound
+    2·|capped| + n_new <= add_cc_local_max_edges.  A threshold of
+    exactly n_edges + n_new (the fixture add's recorded counts) still
+    fits the verified edges but not the capped pairs, so the add takes
+    the DISTRIBUTED tail (with driver union-find inside cc_roots) — and
+    its clusters must equal the default add's."""
+    import dataclasses
+    from gsearch_spark.operators import pipeline as pl
+    state = _state_rows(spark, CKPT_ADD)
+    bound = state["add_verified_edges"] + state["add_exact_groups"]
+    cfg = dataclasses.replace(CFG, add_cc_local_max_edges=bound)
+    images = add_build["images"]
+    ids = sorted(r["image_id"] for r in images.select("image_id").collect())
+    cut = ids[int(len(ids) * 0.8)]
+    ckpt = "/tmp/gsearch_spark_ckpt_tailgate"
+    shutil.rmtree(ckpt, ignore_errors=True)
+    NearDupPipeline(spark, cfg, ckpt).run(
+        images.filter(F.col("image_id") < cut), resume=False)
+    calls = []
+    real = pl.cc_roots
+    monkeypatch.setattr(pl, "cc_roots",
+                        lambda *a, **k: calls.append(a[1]) or real(*a, **k))
+    added = _assign(incremental_add(
+        spark, cfg, ckpt, images.filter(F.col("image_id") >= cut), images))
+    # only the distributed tail calls cc_roots, and its label graph is
+    # small enough for the driver union-find inside it
+    assert len(calls) == 1 and calls[0] <= bound
+    assert added == add_build["added"]
+
+
+def test_stage_rows_in_names_the_predecessor(spark, add_build):
+    """pipeline_state lineage: every stage's rows_in is the rows_out of
+    its LOGICAL predecessor (-1 for a source stage) — never whichever
+    concurrent recorder happened to finish last."""
+    pred = {"exact_groups": None, "signatures": "exact_groups",
+            "bands": "signatures", "candidate_pairs": "bands",
+            "verified_edges": "candidate_pairs",
+            "ck_index": "exact_groups", "edge_index": "verified_edges",
+            "clusters": "verified_edges", "id_index": "clusters",
+            "add_lookup_idclash": None, "add_lookup_ck": None,
+            "add_lookup_touched_reps": None, "add_exact_groups": None,
+            "add_signatures": "add_exact_groups",
+            "add_bands": "add_signatures",
+            "add_candidate_pairs": "add_bands",
+            "add_verified_edges": "add_candidate_pairs",
+            "add_lookup_labels": "add_verified_edges",
+            "add_cc_edges": "add_verified_edges",
+            "add_clusters": "add_cc_edges",
+            "add_clusters_rewrite": "add_clusters",
+            "add_index_delta": "add_clusters"}
+    state = spark.read.parquet(os.path.join(CKPT_ADD, "pipeline_state"))
+    rows = (state.groupBy("stage")
+            .agg(F.sum("rows_out").alias("n"),
+                 F.collect_set("rows_in").alias("rows_in")).collect())
+    n = {r["stage"]: r["n"] for r in rows}
+    rows_in = {r["stage"]: r["rows_in"] for r in rows}
+    assert set(n) == set(pred)
+    for stage, before in pred.items():
+        assert rows_in[stage] == [n[before] if before else -1], stage
+
+
 def test_incremental_add_four_generations(spark, small_fixture_dir):
     """Endurance: FOUR sequential adds (hash-interleaved slices, so every
     generation contains ids sorting below existing reps and duplicates of

@@ -108,6 +108,54 @@ def test_remove_matches_rebuild_on_survivors(spark, removal_build):
     assert not set(b["rm_ids"]) & set(got)
 
 
+@pytest.fixture(scope="module")
+def gate_removal(spark):
+    """A cluster of two exact groups joined by one verified edge (g_a
+    with its exact copy g_a2, and the caption-containment near-dup g_b)
+    plus an unrelated singleton.  Removing g_a2 and g_c is a batch past
+    a literal bound of 1 whose affected cluster keeps its edge, so the
+    remove's CC sees a non-empty graph.  Returns the images, that batch
+    and the rebuild over its survivors."""
+    px = _pixels(41)
+    images = spark.createDataFrame(
+        [_row("g_a", px, "red cat"), _row("g_a2", px, "red cat"),
+         _row("g_b", px, "red cat on mat"),
+         _row("g_c", _pixels(42), "unrelated row")], IMG_SCHEMA)
+    rm_ids = ["g_a2", "g_c"]
+    want = _rebuild(spark, images.filter(~F.col("image_id").isin(rm_ids)),
+                    "/tmp/gsearch_spark_ckpt_remove_gate_truth")
+    assert want == {"g_a": "g_a", "g_b": "g_a"}
+    return images, rm_ids, want
+
+
+@pytest.mark.parametrize("gate, bound", [("add_lookup_max_literals", 1),
+                                         ("add_cc_local_max_edges", 0)])
+def test_remove_forced_gates_match_rebuild(spark, gate_removal, gate,
+                                           bound):
+    """Each remove size gate forced past its bound at a tiny threshold:
+    add_lookup_max_literals=1 sends the affected labels through the
+    localCheckpoint branch (and every pruned lookup through its
+    semi-join fallback); add_cc_local_max_edges=0 sends the surviving
+    edges through cc_roots' distributed star CC.  The clusters must
+    still equal the rebuild on the survivors."""
+    import dataclasses
+    images, rm_ids, want = gate_removal
+    cfg = dataclasses.replace(CFG, **{gate: bound})
+    ckpt = f"/tmp/gsearch_spark_ckpt_remove_gate_{gate}"
+    shutil.rmtree(ckpt, ignore_errors=True)
+    NearDupPipeline(spark, cfg, ckpt).run(images, resume=False)
+    got = _assign(remove_images(spark, cfg, ckpt, spark.createDataFrame(
+        [(i,) for i in rm_ids], "image_id string")))
+    assert got == want
+    # the gate's observed size really was past the bound
+    state = spark.read.parquet(f"{ckpt}/pipeline_state")
+    n_cc = (state.filter(F.col("stage") == "rm_cc_edges")
+            .agg(F.sum("rows_out")).collect()[0][0])
+    observed = {"add_lookup_max_literals": len(rm_ids),
+                "add_cc_local_max_edges": n_cc}[gate]
+    assert observed > bound
+
+
 def test_remove_sidecars_recorded(spark, removal_build):
     b = removal_build
     tomb = {r["image_id"] for r in
