@@ -163,18 +163,19 @@ def cmd_remove(args) -> int:
     from gsearch_spark.config import PipelineConfig
     from gsearch_spark.fs import CheckpointFS
     from gsearch_spark.operators.remove import remove_images
+    from gsearch_spark.session import local_frame
     spark = _spark(args.cores)
     cfg = PipelineConfig.reload_via(CheckpointFS(spark, args.build_dir),
                                     args.build_dir)
     if args.ids:
         ids = [(s,) for s in args.ids.split(",") if s]
-        rm = spark.createDataFrame(ids, "image_id string")
+        rm = local_frame(spark, ids, "image_id string")
     elif args.ids_file and args.ids_file.endswith(".parquet"):
         rm = spark.read.parquet(args.ids_file).select("image_id")
     elif args.ids_file:
         with open(args.ids_file) as f:
             ids = [(line.strip(),) for line in f if line.strip()]
-        rm = spark.createDataFrame(ids, "image_id string")
+        rm = local_frame(spark, ids, "image_id string")
     else:
         raise SystemExit("remove: pass --ids or --ids-file")
     n = rm.count()

@@ -33,6 +33,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from gsearch_spark.session import local_frame
+
 BANDS_SCHEMA = "band_id int, band_hash bigint, salt int, image_id string"
 SIMHASH_BAND_ID_OFFSET = 1000
 PHASH_BAND_ID_OFFSET = 2000
@@ -140,8 +142,8 @@ def salt_hot_buckets(bands_df: DataFrame, hot_threshold: int,
             "salt_hot_buckets: more than %d hot buckets; salting only the "
             "%d hottest (tail stays unsalted, star policy bounds its pairs)",
             max_hot_buckets, max_hot_buckets)
-    stats = spark.createDataFrame(
-        hot_rows, schema="band_id int, band_hash bigint, n_salt int")
+    stats = local_frame(spark, hot_rows,
+                        "band_id int, band_hash bigint, n_salt int")
     return (bands_df
             .join(F.broadcast(stats), ["band_id", "band_hash"], "left")
             .withColumn("n_salt", F.coalesce(F.col("n_salt"), F.lit(1)))

@@ -51,6 +51,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from gsearch_spark.config import PipelineConfig
+from gsearch_spark.session import local_frame
 
 CK_INDEX = "ck_index"
 ID_INDEX = "id_index"
@@ -240,9 +241,8 @@ def _pruned(spark: SparkSession, path: str, part_col: str, key_col: str,
                 F.col(key_col).isin([p["k"] for p in pairs]))
         # reuse the one collect as a broadcast LocalRelation probe —
         # no second job over `keys`, no large-IN-list evaluation tax
-        probe = spark.createDataFrame(
-            [(p["k"],) for p in pairs],
-            schema=keys.select(key_col).schema)
+        probe = local_frame(spark, [(p["k"],) for p in pairs],
+                            keys.select(key_col).schema)
         return sliced.join(F.broadcast(probe), key_col, "left_semi")
     buckets = sorted(r[0] for r in
                      keys.select(kb.alias("pb")).distinct().collect())

@@ -40,6 +40,7 @@ from gsearch_spark.operators.keyidx import key_bucket
 from gsearch_spark.operators.signatures import compute_signatures
 from gsearch_spark.operators.suffix import suffix_candidate_pairs
 from gsearch_spark.operators.verify import verified_edges
+from gsearch_spark.session import local_frame
 
 STAGES = ("exact_groups", "signatures", "bands", "candidate_pairs",
           "verified_edges", "clusters", "ck_index", "id_index")
@@ -120,6 +121,17 @@ def _spawn(thunk):
     fut = pool.submit(wrap(thunk))
     pool.shutdown(wait=False)
     return fut
+
+
+def _join_quietly(*futures) -> None:
+    """Wait for every started side chain, ignoring its outcome: the
+    failure paths join their detached futures so no job outlives the
+    call, and the error already in flight is the one to report."""
+    for fut in futures:
+        try:
+            fut.result()
+        except Exception:
+            pass
 
 
 def _pid_alive(pid: int) -> bool:
@@ -215,9 +227,9 @@ def cc_roots(edges: DataFrame, n_edges: int, cfg: PipelineConfig,
     if checkpoint_dir is None and n_edges <= cfg.add_cc_local_max_edges:
         mapping = union_find([(r["a"], r["b"]) for r in
                               edges.select("a", "b").collect()])
-        return F.broadcast(edges.sparkSession.createDataFrame(
-            sorted(mapping.items()),
-            schema="image_id string, cluster_id string"))
+        return F.broadcast(local_frame(
+            edges.sparkSession, sorted(mapping.items()),
+            "image_id string, cluster_id string"))
     return connected_components(edges, checkpoint_dir=checkpoint_dir)
 
 
@@ -317,11 +329,11 @@ class NearDupPipeline:
     def _flush_state(self) -> None:
         if not self._state_buf:
             return
-        df = self.spark.createDataFrame(
-            self._state_buf,
-            schema="stage string, part_id int, rows_in bigint, "
-                   "rows_out bigint, ts double, te double, "
-                   "seconds double, skipped boolean, config_hash string")
+        df = local_frame(
+            self.spark, self._state_buf,
+            "stage string, part_id int, rows_in bigint, "
+            "rows_out bigint, ts double, te double, "
+            "seconds double, skipped boolean, config_hash string")
         (df.withColumn("t_start", F.timestamp_seconds(F.col("ts")))
          .withColumn("t_end", F.timestamp_seconds(F.col("te")))
          .select("stage", "part_id", "rows_in", "rows_out",
@@ -333,6 +345,22 @@ class NearDupPipeline:
     # ------------------------------------------------------------ stages
 
     def run(self, images: DataFrame, resume: bool = True) -> DataFrame:
+        side: "list" = []  # futures of the side chains _run starts
+        try:
+            return self._run(images, resume, side)
+        except Exception:
+            # a failed stage must not leave side chains writing into the
+            # checkpoint dir after run() raises: join every started one
+            # (best effort — the stage's own error is the one re-raised)
+            _join_quietly(*side)
+            raise
+
+    def _run(self, images: DataFrame, resume: bool,
+             side: "list") -> DataFrame:
+        def spawn(thunk):
+            side.append(_spawn(thunk))
+            return side[-1]
+
         self.fs.mkdirs(self.dir)
         params = os.path.join(self.dir, "parameters.json")
         if self.fs.exists(params):
@@ -361,7 +389,7 @@ class NearDupPipeline:
         # Only the sent==received check AFTER signatures consumes it, so
         # the count job runs on a side thread under the decode-bound
         # signatures stage (guide §2.6) instead of on the critical path
-        nreps_future = _spawn(
+        nreps_future = spawn(
             lambda: groups.filter(F.col("image_id") == F.col("rep_id"))
             .count())
 
@@ -372,7 +400,7 @@ class NearDupPipeline:
         # Only started when candidate_pairs will actually be computed.
         sfx_future = None
         if not (resume and self._done("candidate_pairs")):
-            sfx_future = _spawn(
+            sfx_future = spawn(
                 lambda: suffix_candidate_pairs(images_rep).localCheckpoint())
 
         # -- stage 1: signatures (representatives only) --------------------
@@ -413,7 +441,7 @@ class NearDupPipeline:
                     os.path.join(self.dir, "bucket_stats.json"),
                     json.dumps({k: (float(v) if v is not None else None)
                                 for k, v in stats.items()}))
-            stats_future = _spawn(_stats)
+            stats_future = spawn(_stats)
 
         # -- stage 4: verified edges --------------------------------------
         # the candidate_pairs stage record bounds the pair count, so the
@@ -432,11 +460,11 @@ class NearDupPipeline:
         # signatures stage — was measured WORSE per-stage: all 32 task
         # slots are busy there, so the sidecar job just queued and its
         # recorded wall inflated 1.6 s → 3.7 s.)
-        ck_future = _spawn(lambda: self._stage(
+        ck_future = spawn(lambda: self._stage(
             "ck_index", resume,
             lambda p: write_ck_index(groups, p, self.cfg),
             after="exact_groups"))
-        edge_future = _spawn(lambda: self._stage(
+        edge_future = spawn(lambda: self._stage(
             "edge_index", resume,
             lambda p: write_edge_index(edges, p, self.cfg),
             after="verified_edges",
@@ -874,10 +902,7 @@ def incremental_add(spark: SparkSession, cfg: PipelineConfig,
         # refusal path: don't leave the detached touched chain's jobs
         # running into whatever the caller does after catching — join
         # it best-effort before raising (its own error is secondary)
-        try:
-            touched_future.result()
-        except Exception:
-            pass
+        _join_quietly(touched_future)
         if n_all != n_old - n_dead + n_new:
             raise ValueError("all_images must be exactly old ∪ new "
                              "(minus removed rows)")
@@ -1102,9 +1127,9 @@ def incremental_add(spark: SparkSession, cfg: PipelineConfig,
                    .distinct())
         probe = cap_ids
         if lreps:
-            probe = probe.unionByName(spark.createDataFrame(
-                [(i,) for i in lreps],
-                schema="image_id string")).distinct()
+            probe = probe.unionByName(local_frame(
+                spark, [(i,) for i in lreps],
+                "image_id string")).distinct()
         rows = lookup_id_index(spark, id_path, probe, cfg,
                                idx_df=id_idx_df).collect()
         return mr_l, rmp, rows
@@ -1173,11 +1198,12 @@ def incremental_add(spark: SparkSession, cfg: PipelineConfig,
         # prefetched superset (capped endpoints ∪ lreps) ⊇ ep_ids:
         # restricting the collected rows IS the direct lookup
         ep_rows = [r for r in super_rows if r["image_id"] in ep_ids]
-        ep_info = spark.createDataFrame(
+        ep_info = local_frame(
+            spark,
             [(r["image_id"], r["cluster_id"], r["is_rep"], r["rep_id"])
              for r in ep_rows],
-            schema="image_id string, cluster_id string, "
-                   "is_rep boolean, rep_id string")
+            "image_id string, cluster_id string, "
+            "is_rep boolean, rep_id string")
         edge_future = _spawn(lambda: _c_edge_for(ep_info))
         # defensive None-guard: a NULL cluster_id (a "stale null-or-old
         # row") must behave like an ABSENT label — the DataFrame path's
@@ -1192,9 +1218,8 @@ def incremental_add(spark: SparkSession, cfg: PipelineConfig,
             for rep, lrep in mr_pairs:
                 if lrep in labels_live:  # inner-join semantics
                     labels_map[rep] = labels_live[lrep]
-        labels = spark.createDataFrame(
-            sorted(labels_map.items()),
-            schema="image_id string, label string")
+        labels = local_frame(spark, sorted(labels_map.items()),
+                             "image_id string, label string")
         pipe._record("add_lookup_labels", labels, t0,
                      after="add_verified_edges")
         t0 = time.time()
@@ -1204,14 +1229,13 @@ def incremental_add(spark: SparkSession, cfg: PipelineConfig,
             lb = labels_map.get(b, b)
             if la != lb:
                 le_set.add((la, lb))
-        label_edges = spark.createDataFrame(
-            sorted(le_set), schema="a string, b string")
+        label_edges = local_frame(spark, sorted(le_set),
+                                  "a string, b string")
         pipe._record("add_cc_edges", label_edges, t0,
                      after="add_verified_edges")
         mapping = union_find(sorted(le_set))
-        rep_cc = spark.createDataFrame(
-            sorted(mapping.items()),
-            schema="image_id string, cluster_id string")
+        rep_cc = local_frame(spark, sorted(mapping.items()),
+                             "image_id string, cluster_id string")
         # affected clusters: merged old labels ∪ clusters whose
         # exact-groups gained members (their min MEMBER id — the label
         # under the from-scratch normalization contract — may change)
@@ -1219,8 +1243,8 @@ def incremental_add(spark: SparkSession, cfg: PipelineConfig,
         stored_label_set = set(labels_map.values())
         aff_set = {l for l in mapping if l in stored_label_set}
         aff_set |= {labels_map[r] for r in mr_list if r in labels_map}
-        aff_cl = spark.createDataFrame(
-            [(l,) for l in sorted(aff_set)], schema="cluster_id string")
+        aff_cl = local_frame(spark, [(l,) for l in sorted(aff_set)],
+                             "cluster_id string")
         # bucket ids via the SAME Spark hash expression the layout uses
         # (xxhash64 is not reimplemented driver-side) — one LocalRelation
         # job over O(affected) rows

@@ -31,6 +31,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from gsearch_spark.session import local_frame
+
 # 8-class character alphabet (the amino-acid-alphabet analog).  Any
 # character outside SRC falls through translate() unchanged and is
 # folded to class 7 by the [^0-7] replace — both engines share the
@@ -70,7 +72,7 @@ def profile_weights(motif: str) -> "list[int]":
 def _profiles_df(spark: SparkSession,
                  motifs: "dict[str, str]") -> DataFrame:
     rows = [(pid, profile_weights(m)) for pid, m in sorted(motifs.items())]
-    return spark.createDataFrame(rows, "profile_id string, warr array<int>")
+    return local_frame(spark, rows, "profile_id string, warr array<int>")
 
 
 # Shared expression fragments so the Spark query and the DuckDB oracle

@@ -69,6 +69,7 @@ from gsearch_spark.operators.pipeline import (NearDupPipeline, _run_parallel,
                                               recover_add_commit,
                                               stage_clusters_rewrite,
                                               write_manifest)
+from gsearch_spark.session import local_frame
 
 TOMBSTONES = "tombstones"
 DEAD_GROUPS = "dead_groups"
@@ -89,7 +90,7 @@ def _read_or_empty(spark: SparkSession, checkpoint_dir: str, name: str,
     path = f"{checkpoint_dir}/{name}"
     from gsearch_spark.fs import CheckpointFS
     if not CheckpointFS(spark, path).exists(path):
-        return spark.createDataFrame([], schema)
+        return local_frame(spark, [], schema)
     return spark.read.schema(schema).parquet(path)
 
 
@@ -214,8 +215,8 @@ def remove_images(spark: SparkSession, cfg: PipelineConfig,
         aff_rows = (info.select("cluster_id").distinct()
                     .select("cluster_id", pb).collect())
         aff_buckets = sorted({r["pb"] for r in aff_rows})
-        aff = spark.createDataFrame([(r["cluster_id"],) for r in aff_rows],
-                                    schema="cluster_id string")
+        aff = local_frame(spark, [(r["cluster_id"],) for r in aff_rows],
+                          "cluster_id string")
     else:
         aff = info.select("cluster_id").distinct().localCheckpoint()
         aff_buckets = sorted(r[0] for r in

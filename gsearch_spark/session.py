@@ -4,7 +4,8 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 
 def get_spark(app: str = "gsearch_spark", cores: int | None = None,
@@ -31,7 +32,7 @@ def get_spark(app: str = "gsearch_spark", cores: int | None = None,
         or f"local[{cores}]"
     if m != "from-submit":
         builder = builder.master(m)
-    return (
+    spark = (
         builder
         .appName(app)
         .config("spark.sql.shuffle.partitions", str(shuffle))
@@ -53,14 +54,6 @@ def get_spark(app: str = "gsearch_spark", cores: int | None = None,
         .config("spark.sql.files.maxPartitionBytes",
                 os.environ.get("SPARK_GRAFT_MAX_PARTITION_BYTES",
                                str(128 * 1024 * 1024)))
-        # parallelism FLOOR on scans (guide §6: files.minPartitionNum).
-        # Mid-size tables (a 45 MB bands checkpoint, a 130 MB signatures
-        # checkpoint) otherwise pack into 1-4 splits and run whole
-        # stages on a handful of cores; the floor is derived from the
-        # core count, not a constant, so it scales with the cluster
-        .config("spark.sql.files.minPartitionNum",
-                os.environ.get("SPARK_GRAFT_MIN_PARTITION_NUM",
-                               str(cores)))
         # tmpfs-backed shuffle dirs (scaling bench) don't benefit from
         # compression: it spends scaling-neutral CPU to save RAM-speed IO
         .config("spark.shuffle.compress",
@@ -70,3 +63,35 @@ def get_spark(app: str = "gsearch_spark", cores: int | None = None,
         .config("spark.ui.enabled", "false")
         .getOrCreate()
     )
+    # parallelism FLOOR on scans (guide §6: files.minPartitionNum).
+    # Mid-size tables (a 45 MB bands checkpoint, a 130 MB signatures
+    # checkpoint) otherwise pack into 1-4 splits and run whole stages on
+    # a handful of cores.  The floor is the started context's
+    # parallelism, not the requested core count: under from-submit the
+    # cluster's executors decide it (``local[n]`` gives n either way)
+    spark.conf.set("spark.sql.files.minPartitionNum",
+                   os.environ.get("SPARK_GRAFT_MIN_PARTITION_NUM")
+                   or str(spark.sparkContext.defaultParallelism))
+    return spark
+
+
+def local_frame(spark: SparkSession, rows,
+                schema: "str | StructType") -> DataFrame:
+    """Driver-side ``rows`` (tuples or Rows in schema order) as a JVM
+    local relation — the one way the engine turns Python rows into a
+    DataFrame.  ``spark.createDataFrame(<list>)`` plans as a scan over a
+    pickled PythonRDD, so every plan reading it starts Python worker
+    tasks; here the rows cross to the JVM once as an Arrow table and
+    plan as a ``LocalTableScan`` with exact size statistics.  ``schema``
+    is a DDL string or a StructType; names, types and nullability are
+    kept as given."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    if isinstance(schema, str):
+        schema = StructType.fromDDL(schema)
+    arrow = to_arrow_schema(schema)
+    cols = list(zip(*rows)) or [()] * len(arrow)
+    table = pa.Table.from_arrays(
+        [pa.array(c, type=f.type) for c, f in zip(cols, arrow)],
+        schema=arrow)
+    return spark.createDataFrame(table, schema=schema)

@@ -146,3 +146,28 @@ def test_attach_strategies_identical(spark, small_fixture_dir):
             for r in df.collect())
     assert outs["broadcast"] == outs["shuffle"]
     assert len(outs["shuffle"]) == 3
+
+
+def test_build_joins_side_chains_when_a_stage_fails(spark,
+                                                    small_fixture_dir,
+                                                    monkeypatch):
+    """A stage raising between spawn and join (here: clusters) must not
+    leave the build's side chains running after run() raises — the
+    ck_index / edge_index writes that overlap clusters are joined, so no
+    Spark job is active and their checkpoints are complete."""
+    from gsearch_spark.operators import pipeline
+
+    def boom(*args, **kwargs):
+        raise RuntimeError("injected clusters failure")
+
+    monkeypatch.setattr(pipeline, "cc_roots", boom)
+    ckpt = "/tmp/gsearch_spark_ckpt_e2e_fail"
+    shutil.rmtree(ckpt, ignore_errors=True)
+    images = spark.read.parquet(f"{small_fixture_dir}/images.parquet")
+    with pytest.raises(RuntimeError, match="injected clusters failure"):
+        NearDupPipeline(spark, CFG, ckpt).run(images, resume=False)
+    # job-end events reach the status tracker through the listener bus
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    assert list(spark.sparkContext.statusTracker().getActiveJobsIds()) == []
+    for stage in ("ck_index", "edge_index"):
+        assert os.path.exists(os.path.join(ckpt, stage, "_SUCCESS")), stage

@@ -1,0 +1,191 @@
+"""Session helpers (gsearch_spark/session.py): the scan-parallelism
+floor, and ``local_frame`` — the engine's one way to turn driver-side
+rows into a DataFrame.
+
+``local_frame`` must be a drop-in for ``spark.createDataFrame(<list>)``
+(same schema, nullability included, and same rows) that plans as a JVM
+``LocalTableScan`` instead of a pickled PythonRDD scan.  Two guards keep
+it the only way: a source walk finds no other ``createDataFrame`` call
+in the package, and a build, an add and a remove run with no stage whose
+operation graph holds a ``PythonRDD`` node."""
+
+from __future__ import annotations
+
+import ast
+import pathlib
+import shutil
+
+import pytest
+from py4j.protocol import Py4JJavaError
+from pyspark.sql import functions as F
+from pyspark.sql.types import (LongType, StringType, StructField,
+                               StructType)
+
+import gsearch_spark
+from gsearch_spark.config import PipelineConfig
+from gsearch_spark.operators.pipeline import NearDupPipeline, incremental_add
+from gsearch_spark.operators.remove import (DEAD_SCHEMA, REMAP_SCHEMA,
+                                            TOMBSTONE_SCHEMA, remove_images)
+from gsearch_spark.session import local_frame
+
+I64_MAX = 2 ** 63 - 1
+I64_MIN = -2 ** 63
+
+# every schema the engine passes to local_frame, each with rows that
+# cover its column types (None in string/boolean columns, int64
+# extremes, doubles, array<int>)
+SCHEMA_ROWS = [
+    pytest.param("band_id int, band_hash bigint, n_salt int",
+                 [(0, I64_MAX, 3), (7, I64_MIN, 2), (2, 0, 1)],
+                 id="hot_buckets"),
+    pytest.param("image_id string, cluster_id string",
+                 [("b", "a"), ("a", "a"), ("c", None)], id="cc_roots"),
+    pytest.param("stage string, part_id int, rows_in bigint, "
+                 "rows_out bigint, ts double, te double, seconds double, "
+                 "skipped boolean, config_hash string",
+                 [("add_bands", -1, -1, 0, 1.5e9, 1.5e9 + 0.25, 0.25,
+                   False, "h"),
+                  ("clusters", 3, I64_MAX, I64_MIN, 0.0, -1.0, 1e-9,
+                   None, None)], id="pipeline_state"),
+    pytest.param("image_id string", [("x",), (None,), ("",)],
+                 id="image_ids"),
+    pytest.param("image_id string, cluster_id string, is_rep boolean, "
+                 "rep_id string",
+                 [("a", "a", True, "a"), ("b", None, None, "a"),
+                  ("c", "a", False, None)], id="ep_info"),
+    pytest.param("image_id string, label string",
+                 [("a", "a"), ("é", "ü")], id="labels"),
+    pytest.param("a string, b string", [("a", "b"), ("b", "c")],
+                 id="label_edges"),
+    pytest.param("cluster_id string", [("k",)], id="affected_clusters"),
+    pytest.param("profile_id string, warr array<int>",
+                 [("p0", [1, -2, 2 ** 31 - 1]), ("p1", []), ("p2", None),
+                  ("p3", [None, 0])], id="profiles"),
+    pytest.param(TOMBSTONE_SCHEMA, [("a", 0, 5), ("b", None, None)],
+                 id="tombstones"),
+    pytest.param(DEAD_SCHEMA, [("a", 2)], id="dead_groups"),
+    pytest.param(REMAP_SCHEMA, [("a", "b", 1)], id="rep_remap"),
+]
+
+
+def _plan(df) -> str:
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+@pytest.mark.parametrize("schema, rows", SCHEMA_ROWS)
+@pytest.mark.parametrize("empty", [False, True], ids=["rows", "empty"])
+def test_local_frame_matches_create_dataframe(spark, schema, rows, empty):
+    rows = [] if empty else rows
+    got = local_frame(spark, rows, schema)
+    want = spark.createDataFrame(rows, schema)
+    assert got.schema == want.schema
+    assert got.collect() == want.collect()
+    assert "LocalTableScan" in _plan(got)
+    assert "ExistingRDD" not in _plan(got)
+
+
+def test_local_frame_struct_schema_keeps_nullability(spark):
+    """keyidx passes the probed key column's StructType; a NOT NULL
+    field must stay NOT NULL, exactly as createDataFrame keeps it."""
+    schema = StructType([StructField("k", LongType(), False),
+                         StructField("s", StringType(), True)])
+    rows = [(I64_MAX, None), (I64_MIN, "x")]
+    got = local_frame(spark, rows, schema)
+    want = spark.createDataFrame(rows, schema)
+    assert got.schema == want.schema == schema
+    assert got.collect() == want.collect()
+    assert "LocalTableScan" in _plan(got)
+
+
+def test_local_frame_many_rows_is_one_local_relation(spark):
+    """More rows than one Arrow batch (maxRecordsPerBatch) still plan as
+    one LocalTableScan, and Row objects are accepted as input rows."""
+    rows = [(f"i{n:05d}", n) for n in range(3000)]
+    df = local_frame(spark, rows, "image_id string, n bigint")
+    assert "LocalTableScan" in _plan(df)
+    again = local_frame(spark, df.collect(), df.schema)
+    assert (again.agg(F.count(F.lit(1)), F.sum("n")).collect()[0][:]
+            == (3000, sum(range(3000))))
+
+
+def test_no_create_dataframe_outside_local_frame():
+    """Source guard: inside the package, only local_frame may call
+    createDataFrame (a list-built frame is a PythonRDD scan)."""
+    root = pathlib.Path(gsearch_spark.__file__).parent
+    offenders = []
+    for path in sorted(root.rglob("*.py")):
+        tree = ast.parse(path.read_text(), filename=str(path))
+        allowed = set()
+        for node in ast.walk(tree):
+            if (isinstance(node, ast.FunctionDef)
+                    and node.name == "local_frame"
+                    and path.name == "session.py"):
+                allowed |= {id(n) for n in ast.walk(node)}
+        for node in ast.walk(tree):
+            if (isinstance(node, ast.Attribute)
+                    and node.attr == "createDataFrame"
+                    and id(node) not in allowed):
+                offenders.append(f"{path.relative_to(root)}:{node.lineno}")
+    assert not offenders, offenders
+
+
+def test_scan_floor_follows_default_parallelism(spark):
+    assert (spark.conf.get("spark.sql.files.minPartitionNum")
+            == str(spark.sparkContext.defaultParallelism))
+
+
+def _python_rdd_stages(spark, group: str) -> "list[int]":
+    """Stages of the jobs run under ``group`` whose operation graph
+    holds a PythonRDD node (a pickled Python-RDD scan)."""
+    sc = spark.sparkContext
+    store = sc._jsc.sc().statusStore()
+    dot = sc._jvm.org.apache.spark.ui.scope.RDDOperationGraph.makeDotFile
+    tracker = sc.statusTracker()
+    checked, bad = 0, []
+    for job in tracker.getJobIdsForGroup(group):
+        for stage in tracker.getJobInfo(job).stageIds:
+            try:
+                graph = store.operationGraphForStage(stage)
+            except Py4JJavaError:
+                # past spark.ui.retainedStages the store evicts skipped
+                # stages (they ran no tasks) first, newest or not
+                continue
+            checked += 1
+            if 'label="PythonRDD [' in dot(graph):
+                bad.append(stage)
+    assert checked, f"no stage graphs recorded under {group}"
+    return bad
+
+
+def test_mutations_start_no_python_rdd_scans(spark, small_fixture_dir):
+    """A build, an add and a remove over parquet inputs: no stage of
+    theirs scans a pickled PythonRDD (every driver-side relation is a
+    LocalTableScan)."""
+    cfg = PipelineConfig()
+    ckpt = "/tmp/gsearch_spark_ckpt_local_frame"
+    images = spark.read.parquet(f"{small_fixture_dir}/images.parquet")
+    ids = sorted(r[0] for r in images.select("image_id").collect())
+    cut = ids[int(len(ids) * 0.8)]
+    old = images.filter(F.col("image_id") < cut)
+    new = images.filter(F.col("image_id") >= cut)
+    rm = images.filter(F.col("image_id").isin(ids[:3] + ids[-2:])) \
+        .select("image_id")
+    shutil.rmtree(ckpt, ignore_errors=True)
+    phases = [
+        ("build", lambda: NearDupPipeline(spark, cfg, ckpt)
+         .run(old, resume=False)),
+        ("add", lambda: incremental_add(spark, cfg, ckpt, new, images)),
+        ("remove", lambda: remove_images(spark, cfg, ckpt, rm)),
+    ]
+    sc = spark.sparkContext
+    for name, phase in phases:
+        group = f"local_frame_{name}"
+        sc.setJobGroup(group, name)
+        try:
+            phase()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        # checked per phase: the status store keeps a bounded window of
+        # stages
+        assert _python_rdd_stages(spark, group) == [], name
