@@ -23,6 +23,7 @@ from __future__ import annotations
 import functools
 import json
 import os
+import threading
 import time
 from contextlib import contextmanager
 from dataclasses import dataclass
@@ -62,27 +63,53 @@ class ConcurrentAddError(RuntimeError):
     """Another writer holds the build's mutation lock."""
 
 
-def _run_parallel(*thunks):
-    """Run independent Spark job chains concurrently (guide §2.6,
-    overlap independent jobs): the mutation paths are long sequences of
-    SMALL jobs whose per-job latency — not data volume — dominates at
-    append/remove sizes, and independent chains (new-vs-new bands,
-    new-vs-old probe, suffix pass; the three sidecar staging writes)
-    back-fill each other's task tails instead of serializing.  Results
-    return in call order; the first exception is re-raised.  Threads
-    use pyspark's inheritable_thread_target so job-group/description
-    properties propagate."""
-    if len(thunks) == 1:
-        return [thunks[0]()]
-    from concurrent.futures import ThreadPoolExecutor
+@contextmanager
+def chains():
+    """Scope for independent Spark job chains overlapped on driver
+    threads (guide §2.6, overlap independent jobs): the mutation paths
+    are long sequences of SMALL jobs whose per-job latency — not data
+    volume — dominates at append/remove sizes, so independent chains
+    back-fill each other's task tails instead of serializing.
+
+    Yields ``spawn(thunk)``, which starts ``thunk`` on its own thread
+    and returns its Future.  One thread per chain, never a bounded
+    pool: a chain may block on another chain's future (the add's
+    endpoint prefetch waits on its matched-reps collect).  Threads use
+    pyspark's inheritable_thread_target, so a chain runs under the
+    caller's job group and description and its jobs count with the
+    call that started it.  Like the reference's rayon scope
+    (src/dna/dnasketch.rs:183) the scope cannot be left while a chain
+    runs: on exit — normal or by an exception — it joins every chain
+    (it never cancels one), then re-raises the body's error, else the
+    first failed chain's error in spawn order."""
+    from concurrent.futures import Future
     from pyspark import inheritable_thread_target
-    from pyspark.sql import SparkSession
-    session = SparkSession.getActiveSession()
-    wrap = (inheritable_thread_target(session) if session is not None
-            else inheritable_thread_target)
-    with ThreadPoolExecutor(max_workers=len(thunks)) as pool:
-        futs = [pool.submit(wrap(t)) for t in thunks]
-        return [f.result() for f in futs]
+    started: "list[tuple[threading.Thread, Future]]" = []
+
+    def spawn(thunk) -> Future:
+        session = SparkSession.getActiveSession()
+        wrap = (inheritable_thread_target(session) if session is not None
+                else inheritable_thread_target)
+        fut = Future()
+
+        def target():
+            try:
+                fut.set_result(thunk())
+            except BaseException as exc:  # delivered by fut.result()
+                fut.set_exception(exc)
+
+        thread = threading.Thread(target=wrap(target))
+        thread.start()
+        started.append((thread, fut))
+        return fut
+
+    try:
+        yield spawn
+    finally:
+        for thread, _ in started:
+            thread.join()
+    for _, fut in started:
+        fut.result()
 
 
 def _fanout(fn, items, workers: int = 16):
@@ -101,37 +128,6 @@ def _fanout(fn, items, workers: int = 16):
         futs = [pool.submit(fn, it) for it in items]
         for f in futs:
             f.result()
-
-
-def _spawn(thunk):
-    """Start ONE job chain on a side thread and return its Future —
-    the overlap primitive behind :func:`_run_parallel` when the caller
-    needs to keep doing its own Spark work on the main thread while the
-    side chain runs (e.g. the build's suffix pass overlapping the
-    decode-bound signatures stage).  The caller must ``.result()`` the
-    future (which re-raises any exception) before depending on its
-    output; the single-thread pool shuts down with the future."""
-    from concurrent.futures import ThreadPoolExecutor
-    from pyspark import inheritable_thread_target
-    from pyspark.sql import SparkSession
-    session = SparkSession.getActiveSession()
-    wrap = (inheritable_thread_target(session) if session is not None
-            else inheritable_thread_target)
-    pool = ThreadPoolExecutor(max_workers=1)
-    fut = pool.submit(wrap(thunk))
-    pool.shutdown(wait=False)
-    return fut
-
-
-def _join_quietly(*futures) -> None:
-    """Wait for every started side chain, ignoring its outcome: the
-    failure paths join their detached futures so no job outlives the
-    call, and the error already in flight is the one to report."""
-    for fut in futures:
-        try:
-            fut.result()
-        except Exception:
-            pass
 
 
 def _pid_alive(pid: int) -> bool:
@@ -262,7 +258,6 @@ class NearDupPipeline:
         self._state_buf: "list[tuple]" = []
         # mutation paths record stages from concurrent driver threads
         # (guide §2.6); the record buffers are the only shared state
-        import threading
         self._rec_lock = threading.Lock()
 
     # ------------------------------------------------------------ plumbing
@@ -345,22 +340,6 @@ class NearDupPipeline:
     # ------------------------------------------------------------ stages
 
     def run(self, images: DataFrame, resume: bool = True) -> DataFrame:
-        side: "list" = []  # futures of the side chains _run starts
-        try:
-            return self._run(images, resume, side)
-        except Exception:
-            # a failed stage must not leave side chains writing into the
-            # checkpoint dir after run() raises: join every started one
-            # (best effort — the stage's own error is the one re-raised)
-            _join_quietly(*side)
-            raise
-
-    def _run(self, images: DataFrame, resume: bool,
-             side: "list") -> DataFrame:
-        def spawn(thunk):
-            side.append(_spawn(thunk))
-            return side[-1]
-
         self.fs.mkdirs(self.dir)
         params = os.path.join(self.dir, "parameters.json")
         if self.fs.exists(params):
@@ -382,138 +361,139 @@ class NearDupPipeline:
         if n_groups != n_images:
             raise RuntimeError("exact_groups row count != image count")
         images_rep = representatives(images, groups)
-        # rep count from the (keys-only, checkpointed) groups table — the
-        # same number as images_rep.count() by construction (rep_id =
-        # min image_id of its group, always a row of images) without
-        # paying the images⋈reps semi-join a count over images_rep runs.
-        # Only the sent==received check AFTER signatures consumes it, so
-        # the count job runs on a side thread under the decode-bound
-        # signatures stage (guide §2.6) instead of on the critical path
-        nreps_future = spawn(
-            lambda: groups.filter(F.col("image_id") == F.col("rep_id"))
-            .count())
+        with chains() as spawn:
+            # rep count from the (keys-only, checkpointed) groups table —
+            # the same number as images_rep.count() by construction
+            # (rep_id = min image_id of its group, always a row of
+            # images) without paying the images⋈reps semi-join a count
+            # over images_rep runs.  Only the sent==received check AFTER
+            # signatures consumes it, so the count job runs on a side
+            # thread under the decode-bound signatures stage (guide
+            # §2.6) instead of on the critical path
+            nreps_future = spawn(
+                lambda: groups.filter(F.col("image_id") == F.col("rep_id"))
+                .count())
 
-        # the suffix pass consumes only images_rep (captions + phash) —
-        # no signatures, no bands — so it overlaps the decode-bound
-        # signatures stage and the bands stage on a side thread
-        # (guide §2.6) instead of serializing inside candidate_pairs.
-        # Only started when candidate_pairs will actually be computed.
-        sfx_future = None
-        if not (resume and self._done("candidate_pairs")):
-            sfx_future = spawn(
-                lambda: suffix_candidate_pairs(images_rep).localCheckpoint())
+            # the suffix pass consumes only images_rep (captions + phash)
+            # — no signatures, no bands — so it overlaps the decode-bound
+            # signatures stage and the bands stage on a side thread
+            # (guide §2.6) instead of serializing inside candidate_pairs.
+            # Only started when candidate_pairs will actually be computed.
+            sfx_future = None
+            if not (resume and self._done("candidate_pairs")):
+                sfx_future = spawn(lambda: suffix_candidate_pairs(
+                    images_rep).localCheckpoint())
 
-        # -- stage 1: signatures (representatives only) --------------------
-        sigs, n_sigs = self._stage(
-            "signatures", resume,
-            lambda p: compute_signatures(images_rep, self.cfg),
-            after="exact_groups")
-        # sent == received invariant (gsearch src/dna/dnasketch.rs:458-464)
-        n_reps = nreps_future.result()
-        if n_sigs != n_reps:
-            raise RuntimeError(
-                f"signature count {n_sigs} != representative count "
-                f"{n_reps} (sent/received reconciliation failed)")
+            # -- stage 1: signatures (representatives only) ----------------
+            sigs, n_sigs = self._stage(
+                "signatures", resume,
+                lambda p: compute_signatures(images_rep, self.cfg),
+                after="exact_groups")
+            # sent == received invariant (src/dna/dnasketch.rs:458-464)
+            n_reps = nreps_future.result()
+            if n_sigs != n_reps:
+                raise RuntimeError(
+                    f"signature count {n_sigs} != representative count "
+                    f"{n_reps} (sent/received reconciliation failed)")
 
-        # -- stage 2: bands ------------------------------------------------
-        bands, _ = self._stage("bands", resume,
-                               lambda p: build_bands(sigs, self.cfg),
-                               after="signatures")
+            # -- stage 2: bands --------------------------------------------
+            bands, _ = self._stage("bands", resume,
+                                   lambda p: build_bands(sigs, self.cfg),
+                                   after="signatures")
 
-        # -- stage 3: candidate pairs (LSH buckets ∪ suffix pass) ----------
-        # min(src) dedup => deterministic winner per pair; the suffix
-        # pairs have been computing since stage 1
-        pairs, n_pairs = self._stage(
-            "candidate_pairs", resume,
-            lambda p: (emit_bucket_pairs(bands)
-                       .unionByName(sfx_future.result())
-                       .groupBy("a", "b").agg(F.min("src").alias("src"))),
-            after="bands")
-        stats_future = None
-        if sfx_future is not None:
-            # no silent caps: surface bucket policy stats in the log.
-            # The stats aggregation is observability-only (nothing
-            # downstream reads it), so it runs on a side thread under
-            # the verify stage and is joined before the final flush.
-            def _stats():
-                stats = bucket_stats(bands).collect()[0].asDict()
-                self.fs.write_text(
-                    os.path.join(self.dir, "bucket_stats.json"),
-                    json.dumps({k: (float(v) if v is not None else None)
-                                for k, v in stats.items()}))
-            stats_future = spawn(_stats)
+            # -- stage 3: candidate pairs (LSH buckets ∪ suffix pass) ------
+            # min(src) dedup => deterministic winner per pair; the suffix
+            # pairs have been computing since stage 1
+            pairs, n_pairs = self._stage(
+                "candidate_pairs", resume,
+                lambda p: (emit_bucket_pairs(bands)
+                           .unionByName(sfx_future.result())
+                           .groupBy("a", "b")
+                           .agg(F.min("src").alias("src"))),
+                after="bands")
+            if sfx_future is not None:
+                # no silent caps: surface bucket policy stats in the log.
+                # The stats aggregation is observability-only (nothing
+                # downstream reads it), so it runs on a side thread under
+                # the verify stage.
+                def _stats():
+                    stats = bucket_stats(bands).collect()[0].asDict()
+                    self.fs.write_text(
+                        os.path.join(self.dir, "bucket_stats.json"),
+                        json.dumps({k: (float(v) if v is not None else None)
+                                    for k, v in stats.items()}))
+                spawn(_stats)
 
-        # -- stage 4: verified edges --------------------------------------
-        # the candidate_pairs stage record bounds the pair count, so the
-        # attach strategy resolves WITHOUT the auto id-count job
-        edges, n_edges = self._stage(
-            "verified_edges", resume,
-            lambda p: verified_edges(pairs, images_rep, self.cfg,
-                                     n_pairs_hint=n_pairs),
-            after="candidate_pairs")
+            # -- stage 4: verified edges -----------------------------------
+            # the candidate_pairs stage record bounds the pair count, so
+            # the attach strategy resolves WITHOUT the auto id-count job
+            edges, n_edges = self._stage(
+                "verified_edges", resume,
+                lambda p: verified_edges(pairs, images_rep, self.cfg,
+                                         n_pairs_hint=n_pairs),
+                after="candidate_pairs")
 
-        # ck_index depends only on the stage-0 exact_groups checkpoint and
-        # edge_index only on the verified_edges checkpoint just written —
-        # both writes overlap the clusters stage below (guide §2.6), whose
-        # union-find fast path is driver-heavy and leaves executor slots
-        # idle.  (Spawning ck_index earlier — under the decode-bound
-        # signatures stage — was measured WORSE per-stage: all 32 task
-        # slots are busy there, so the sidecar job just queued and its
-        # recorded wall inflated 1.6 s → 3.7 s.)
-        ck_future = spawn(lambda: self._stage(
-            "ck_index", resume,
-            lambda p: write_ck_index(groups, p, self.cfg),
-            after="exact_groups"))
-        edge_future = spawn(lambda: self._stage(
-            "edge_index", resume,
-            lambda p: write_edge_index(edges, p, self.cfg),
-            after="verified_edges",
-            read=lambda p: read_edge_index(self.spark, p)))
+            # ck_index depends only on the stage-0 exact_groups checkpoint
+            # and edge_index only on the verified_edges checkpoint just
+            # written — both writes overlap the clusters stage below
+            # (guide §2.6), whose union-find fast path is driver-heavy and
+            # leaves executor slots idle.  (Spawning ck_index earlier —
+            # under the decode-bound signatures stage — was measured WORSE
+            # per-stage: all 32 task slots are busy there, so the sidecar
+            # job just queued and its recorded wall inflated 1.6 s → 3.7 s.)
+            spawn(lambda: self._stage(
+                "ck_index", resume,
+                lambda p: write_ck_index(groups, p, self.cfg),
+                after="exact_groups"))
+            spawn(lambda: self._stage(
+                "edge_index", resume,
+                lambda p: write_edge_index(edges, p, self.cfg),
+                after="verified_edges",
+                read=lambda p: read_edge_index(self.spark, p)))
 
-        # -- stage 5: clusters (CC over reps, then expand exact-group
-        #    members onto their rep's cluster).  The edge count is already
-        #    known from the verified_edges record (no extra job); the
-        #    reliable-checkpoint mode keeps the distributed path (its
-        #    point is surviving executor loss).  Written hive-partitioned
-        #    on pbucket(cluster_id) so the append path can prune its
-        #    partition-level rewrite --------------------------------------
-        def _w_clusters(path: str) -> None:
-            cc_dir = (os.path.join(self.dir, "cc_work")
-                      if self.cfg.cc_reliable_checkpoints else None)
-            comp = cc_roots(edges, n_edges, self.cfg, checkpoint_dir=cc_dir)
-            rep_clusters = (images_rep.select("image_id")
-                            .join(comp, "image_id", "left")
-                            .select("image_id",
-                                    F.coalesce("cluster_id", "image_id")
-                                    .alias("cluster_id")))
-            # repartition ON the partition column first: without it every
-            # task writes a file into every pbucket dir (tasks x buckets
-            # small files — measured 3x stage cost at 213k rows); with it
-            # each bucket is one task writing one file
-            (expand_clusters(rep_clusters, groups)
-             .withColumn("pbucket", cluster_pbucket(self.cfg))
-             .repartition(self.cfg.cluster_buckets, F.col("pbucket"))
-             .write.mode("overwrite").partitionBy("pbucket").parquet(path))
+            # -- stage 5: clusters (CC over reps, then expand exact-group
+            #    members onto their rep's cluster).  The edge count is
+            #    already known from the verified_edges record (no extra
+            #    job); the reliable-checkpoint mode keeps the distributed
+            #    path (its point is surviving executor loss).  Written
+            #    hive-partitioned on pbucket(cluster_id) so the append
+            #    path can prune its partition-level rewrite ---------------
+            def _w_clusters(path: str) -> None:
+                cc_dir = (os.path.join(self.dir, "cc_work")
+                          if self.cfg.cc_reliable_checkpoints else None)
+                comp = cc_roots(edges, n_edges, self.cfg,
+                                checkpoint_dir=cc_dir)
+                rep_clusters = (images_rep.select("image_id")
+                                .join(comp, "image_id", "left")
+                                .select("image_id",
+                                        F.coalesce("cluster_id", "image_id")
+                                        .alias("cluster_id")))
+                # repartition ON the partition column first: without it
+                # every task writes a file into every pbucket dir (tasks x
+                # buckets small files — measured 3x stage cost at 213k
+                # rows); with it each bucket is one task writing one file
+                (expand_clusters(rep_clusters, groups)
+                 .withColumn("pbucket", cluster_pbucket(self.cfg))
+                 .repartition(self.cfg.cluster_buckets, F.col("pbucket"))
+                 .write.mode("overwrite").partitionBy("pbucket")
+                 .parquet(path))
 
-        clusters, _ = self._stage("clusters", resume, _w_clusters,
-                                  after="verified_edges")
+            clusters, _ = self._stage("clusters", resume, _w_clusters,
+                                      after="verified_edges")
 
-        # -- stage 6: key-addressed lookup layouts (operators/keyidx.py).
-        #    Sidecar tables whose partitioning + in-file sort make the
-        #    append path's membership / label / id-clash probes prune to
-        #    O(probed keys) IO instead of scanning corpus-sized key
-        #    columns (reference: add addresses its persisted index by
-        #    rank, never rescans it — src/dna/dnasketch.rs:106-134).
-        #    ck_index and edge_index have been writing on side threads
-        #    (guide §2.6) — only the clusters-dependent id_index remains
-        #    on the critical path.
-        self._stage("id_index", resume,
-                    lambda p: write_id_index(clusters, groups, p, self.cfg),
-                    after="clusters")
-        ck_future.result()
-        edge_future.result()
-        if stats_future is not None:
-            stats_future.result()
+            # -- stage 6: key-addressed lookup layouts (operators/keyidx.py).
+            #    Sidecar tables whose partitioning + in-file sort make the
+            #    append path's membership / label / id-clash probes prune
+            #    to O(probed keys) IO instead of scanning corpus-sized key
+            #    columns (reference: add addresses its persisted index by
+            #    rank, never rescans it — src/dna/dnasketch.rs:106-134).
+            #    ck_index and edge_index have been writing on side threads
+            #    (guide §2.6) — only the clusters-dependent id_index
+            #    remains on the critical path.
+            self._stage("id_index", resume,
+                        lambda p: write_id_index(clusters, groups, p,
+                                                 self.cfg),
+                        after="clusters")
         gen_path = os.path.join(self.dir, ID_GEN_FILE)
         if not self.fs.exists(gen_path):
             self.fs.write_text(gen_path, "0")
@@ -596,14 +576,14 @@ def finish_commit(spark: SparkSession, fs: CheckpointFS, root: str,
     _apply_add_commit(fs, root, manifest)
     fs.delete(f"{root}/{ADD_MANIFEST}")
 
-    def _refresh():
+    with chains() as spawn:
+        spawn(lambda: fs.delete(manifest["staging"]))
+        if flush is not None:
+            spawn(flush)
         for name in (manifest["append_stages"]
                      + manifest.get("partitioned_appends", [])
                      + ["clusters"]):
             spark.catalog.refreshByPath(f"{root}/{name}")
-
-    _run_parallel(lambda: fs.delete(manifest["staging"]),
-                  flush or (lambda: None), _refresh)
 
 
 def stage_clusters_rewrite(pipe: NearDupPipeline, staging: str,
@@ -756,633 +736,609 @@ def incremental_add(spark: SparkSession, cfg: PipelineConfig,
                                                 read_dead_groups,
                                                 read_rep_remap)
 
-    # the stored-table handles are driver-side FILE-INDEX LISTINGS (the
-    # partitioned sidecars list ~key_buckets dirs each), the removal
-    # gate is more FS probes, and the new slice's one-time lineage cut
-    # is a small job — all independent, so the whole setup runs as ONE
-    # concurrent wave (guide §2.6; measured ~4 s serial at bench scale).
-    # One listing per lookup table serves the whole add (the tables
-    # don't change until this add's own commit).  The new-slice cut is
-    # localCheckpoint (NOT persist; the documented plan-cache-over-
-    # rewritten-path pitfall), O(new) bytes, consumed by ~8 downstream
-    # plans.
-    new_in = new_images
+    with chains() as spawn:
+        # the stored-table handles are driver-side FILE-INDEX LISTINGS (the
+        # partitioned sidecars list ~key_buckets dirs each), the removal
+        # gate is more FS probes, and the new slice's one-time lineage cut
+        # is a small job — all independent, so the whole setup runs as ONE
+        # concurrent wave (guide §2.6; measured ~4 s serial at bench scale).
+        # One listing per lookup table serves the whole add (the tables
+        # don't change until this add's own commit).  The new-slice cut is
+        # localCheckpoint (NOT persist; the documented plan-cache-over-
+        # rewritten-path pitfall), O(new) bytes, consumed by ~8 downstream
+        # plans.
+        def _rm_state():
+            # merge-on-read removal sidecars (operators/remove.py).  Gated
+            # on the tombstones table's existence so a build that never saw
+            # a remove keeps its exact pre-remove plans (no extra joins).
+            removals = has_removals(spark, checkpoint_dir)
+            dead = (read_dead_groups(spark, checkpoint_dir)
+                    .select("rep_id").localCheckpoint()) if removals else None
+            remap = (read_rep_remap(spark, checkpoint_dir)
+                     .localCheckpoint()) if removals else None
+            return removals, dead, remap
 
-    def _rm_state():
-        # merge-on-read removal sidecars (operators/remove.py).  Gated
-        # on the tombstones table's existence so a build that never saw
-        # a remove keeps its exact pre-remove plans (no extra joins).
-        removals = has_removals(spark, checkpoint_dir)
-        dead = (read_dead_groups(spark, checkpoint_dir)
-                .select("rep_id").localCheckpoint()) if removals else None
-        remap = (read_rep_remap(spark, checkpoint_dir)
-                 .localCheckpoint()) if removals else None
-        return removals, dead, remap
+        setup = [spawn(t) for t in (
+            lambda: spark.read.parquet(pipe._path("exact_groups")),
+            lambda: spark.read.parquet(pipe._path("bands")),
+            lambda: spark.read.parquet(pipe._path("clusters")),
+            lambda: spark.read.parquet(ck_path),
+            lambda: spark.read.parquet(id_path),
+            _rm_state)]
+        new_images = new_images.localCheckpoint()
+        (old_groups, old_bands, clusters_stored, ck_idx_df, id_idx_df,
+         (removals, dead_df, remap_df)) = [f.result() for f in setup]
+        if "ck" not in old_groups.columns:
+            raise ValueError(
+                "checkpoint predates append-only add (exact_groups has no "
+                "content-key column); rebuild with tohnsw first")
+        if "pbucket" not in clusters_stored.columns:
+            raise ValueError(
+                "checkpoint predates bucketed clusters (no pbucket "
+                "partitioning); rebuild with tohnsw first")
 
-    (old_groups, old_bands, clusters_stored, ck_idx_df, id_idx_df,
-     (removals, dead_df, remap_df), new_images) = _run_parallel(
-        lambda: spark.read.parquet(pipe._path("exact_groups")),
-        lambda: spark.read.parquet(pipe._path("bands")),
-        lambda: spark.read.parquet(pipe._path("clusters")),
-        lambda: spark.read.parquet(ck_path),
-        lambda: spark.read.parquet(id_path),
-        _rm_state,
-        lambda: new_in.localCheckpoint())
-    if "ck" not in old_groups.columns:
-        raise ValueError(
-            "checkpoint predates append-only add (exact_groups has no "
-            "content-key column); rebuild with tohnsw first")
-    if "pbucket" not in clusters_stored.columns:
-        raise ValueError(
-            "checkpoint predates bucketed clusters (no pbucket "
-            "partitioning); rebuild with tohnsw first")
+        # three independent probe chains run CONCURRENTLY (guide §2.6): the
+        # union sanity counts, the id-clash refusal lookup and the new
+        # slice's content keys share nothing and are each a couple of small
+        # jobs whose latency would otherwise serialize
+        def _chk_counts():
+            n_new = new_images.count()
+            n_old = old_groups.count()
+            # exact_groups is merge-on-read historical state: removed rows
+            # stay until compaction, so the live count subtracts tombstones
+            n_dead = count_tombstones(spark, checkpoint_dir) if removals \
+                else 0
+            return n_new, n_old, n_dead, all_images.count()
 
-    # three independent probe chains run CONCURRENTLY (guide §2.6): the
-    # union sanity counts, the id-clash refusal lookup and the new
-    # slice's content keys share nothing and are each a couple of small
-    # jobs whose latency would otherwise serialize
-    def _chk_counts():
-        n_new = new_images.count()
-        n_old = old_groups.count()
-        # exact_groups is merge-on-read historical state: removed rows
-        # stay until compaction, so the live count subtracts tombstones
-        n_dead = count_tombstones(spark, checkpoint_dir) if removals \
-            else 0
-        return n_new, n_old, n_dead, all_images.count()
+        def _chk_clash():
+            # id-clash refusal via the id-keyed layout: O(new) pruned point
+            # lookup, not a corpus scan of stored image_ids
+            t0 = time.time()
+            clash = lookup_id_index(spark, id_path,
+                                    new_images.select("image_id"), cfg,
+                                    idx_df=id_idx_df)
+            return pipe._record("add_lookup_idclash", clash, t0)
 
-    def _chk_clash():
-        # id-clash refusal via the id-keyed layout: O(new) pruned point
-        # lookup, not a corpus scan of stored image_ids
-        t0 = time.time()
-        clash = lookup_id_index(spark, id_path,
-                                new_images.select("image_id"), cfg,
-                                idx_df=id_idx_df)
-        return pipe._record("add_lookup_idclash", clash, t0)
+        def _mk_old_keys():
+            # content keys of the new slice, then the ck-membership probe —
+            # a read-only pruned point lookup, safe to overlap the refusal
+            # checks (staging mutation only starts after both validate)
+            nk = content_keys(new_images).localCheckpoint()
+            t0 = time.time()
+            old_keys = lookup_ck_index(spark, ck_path, nk.select("ck"), cfg,
+                                       idx_df=ck_idx_df)
+            if removals:
+                # a fully-removed exact-group's ck row lingers until
+                # compaction; re-added identical content must read as
+                # FRESH, not resurrect the dead group node
+                old_keys = old_keys.join(F.broadcast(dead_df), "rep_id",
+                                         "left_anti")
+            old_keys = old_keys.localCheckpoint()  # O(new) rows
+            pipe._record("add_lookup_ck", old_keys, t0)
+            return nk, old_keys
 
-    def _mk_old_keys():
-        # content keys of the new slice, then the ck-membership probe —
-        # a read-only pruned point lookup, safe to overlap the refusal
-        # checks (staging mutation only starts after both validate)
-        nk = content_keys(new_images).localCheckpoint()
-        t0 = time.time()
-        old_keys = lookup_ck_index(spark, ck_path, nk.select("ck"), cfg,
-                                   idx_df=ck_idx_df)
-        if removals:
-            # a fully-removed exact-group's ck row lingers until
-            # compaction; re-added identical content must read as
-            # FRESH, not resurrect the dead group node
-            old_keys = old_keys.join(F.broadcast(dead_df), "rep_id",
-                                     "left_anti")
-        old_keys = old_keys.localCheckpoint()  # O(new) rows
-        pipe._record("add_lookup_ck", old_keys, t0)
-        return nk, old_keys
+        def _touched_prefix():
+            # touched phash groups for the suffix pass: the slice is keyed
+            # by the NEW images' phashes — a superset of the new REPS'
+            # phashes (a new non-rep's pixels equal its dup's pixels, hence
+            # its phash), and the suffix tail filters pairs to new-rep
+            # endpoints, so using the superset changes nothing downstream
+            # while letting this chain overlap the setup lookups instead of
+            # waiting for exact grouping.  When the touched set is small
+            # enough to ship as literals, push it down as an isin() filter
+            # so parquet row-group stats prune the payload scan (on a
+            # phash-sorted / z-ordered Iceberg table this turns the per-add
+            # suffix input read into O(touched groups) IO); bulk appends
+            # past the cap fall back to the semi join.
+            ph_vals = [r[0] for r in new_images.select("phash").distinct()
+                       .limit(10_001).collect()]
+            if len(ph_vals) <= 10_000:
+                touched_imgs = all_images.filter(F.col("phash").isin(ph_vals))
+            else:
+                touched_imgs = all_images.join(
+                    new_images.select("phash").distinct(), "phash",
+                    "left_semi")
+            # eager cut — O(touched) keys+caption rows: the slice feeds the
+            # rep-ness lookup's key collect AND the suffix input join, which
+            # otherwise re-scan the corpus metadata once each
+            touched_imgs = (touched_imgs.select("phash", "image_id",
+                                                "caption")
+                            .localCheckpoint())
+            # rep-ness of the touched slice comes from a pruned id_index
+            # point lookup (is_rep flag), not a corpus scan of the stored
+            # group keys; new reps aren't in id_index yet and union in
+            # explicitly
+            t0 = time.time()
+            touched_lk = lookup_id_index(spark, id_path,
+                                         touched_imgs.select("image_id"),
+                                         cfg, idx_df=id_idx_df)
+            old_touched_reps = touched_lk.filter(F.col("is_rep")) \
+                .select("image_id")
+            if removals:
+                # a group whose founding rep was removed has NO live is_rep
+                # row; its promoted surviving member (rep_remap target)
+                # stands in as the group's suffix-pass node so the group
+                # isn't skipped
+                promoted = touched_lk.join(
+                    F.broadcast(remap_df.select(F.col("new_rep")
+                                                .alias("image_id"))),
+                    "image_id", "left_semi").select("image_id")
+                old_touched_reps = old_touched_reps.unionByName(promoted) \
+                    .distinct()
+            old_touched_reps = old_touched_reps.localCheckpoint()
+            pipe._record("add_lookup_touched_reps", old_touched_reps, t0)
+            return touched_imgs, old_touched_reps
 
-    def _touched_prefix():
-        # touched phash groups for the suffix pass: the slice is keyed
-        # by the NEW images' phashes — a superset of the new REPS'
-        # phashes (a new non-rep's pixels equal its dup's pixels, hence
-        # its phash), and the suffix tail filters pairs to new-rep
-        # endpoints, so using the superset changes nothing downstream
-        # while letting this chain overlap the setup lookups instead of
-        # waiting for exact grouping.  When the touched set is small
-        # enough to ship as literals, push it down as an isin() filter
-        # so parquet row-group stats prune the payload scan (on a
-        # phash-sorted / z-ordered Iceberg table this turns the per-add
-        # suffix input read into O(touched groups) IO); bulk appends
-        # past the cap fall back to the semi join.
-        ph_vals = [r[0] for r in new_images.select("phash").distinct()
-                   .limit(10_001).collect()]
-        if len(ph_vals) <= 10_000:
-            touched_imgs = all_images.filter(F.col("phash").isin(ph_vals))
-        else:
-            touched_imgs = all_images.join(
-                new_images.select("phash").distinct(), "phash",
-                "left_semi")
-        # eager cut — O(touched) keys+caption rows: the slice feeds the
-        # rep-ness lookup's key collect AND the suffix input join, which
-        # otherwise re-scan the corpus metadata once each
-        touched_imgs = (touched_imgs.select("phash", "image_id",
-                                            "caption")
-                        .localCheckpoint())
-        # rep-ness of the touched slice comes from a pruned id_index
-        # point lookup (is_rep flag), not a corpus scan of the stored
-        # group keys; new reps aren't in id_index yet and union in
-        # explicitly
-        t0 = time.time()
-        touched_lk = lookup_id_index(spark, id_path,
-                                     touched_imgs.select("image_id"),
-                                     cfg, idx_df=id_idx_df)
-        old_touched_reps = touched_lk.filter(F.col("is_rep")) \
-            .select("image_id")
-        if removals:
-            # a group whose founding rep was removed has NO live is_rep
-            # row; its promoted surviving member (rep_remap target)
-            # stands in as the group's suffix-pass node so the group
-            # isn't skipped
-            promoted = touched_lk.join(
-                F.broadcast(remap_df.select(F.col("new_rep")
-                                            .alias("image_id"))),
-                "image_id", "left_semi").select("image_id")
-            old_touched_reps = old_touched_reps.unionByName(promoted) \
-                .distinct()
-        old_touched_reps = old_touched_reps.localCheckpoint()
-        pipe._record("add_lookup_touched_reps", old_touched_reps, t0)
-        return touched_imgs, old_touched_reps
-
-    # the touched-phash chain is the LONGEST of the setup chains (three
-    # serial jobs) yet its outputs are consumed only by the suffix
-    # branch in the NEXT wave — so it runs as a detached future joined
-    # there, and the main thread proceeds to exact grouping as soon as
-    # the three chains it actually needs are done (guide §2.6)
-    touched_future = _spawn(_touched_prefix)
-    ((n_new, n_old, n_dead, n_all), n_clash,
-     (nk, old_keys)) = _run_parallel(_chk_counts, _chk_clash,
-                                     _mk_old_keys)
-    if n_all != n_old - n_dead + n_new or n_clash:
-        # refusal path: don't leave the detached touched chain's jobs
-        # running into whatever the caller does after catching — join
-        # it best-effort before raising (its own error is secondary)
-        _join_quietly(touched_future)
+        touched_future = spawn(_touched_prefix)
+        counts_future, clash_future = spawn(_chk_counts), spawn(_chk_clash)
+        nk, old_keys = _mk_old_keys()
+        n_new, n_old, n_dead, n_all = counts_future.result()
         if n_all != n_old - n_dead + n_new:
             raise ValueError("all_images must be exactly old ∪ new "
                              "(minus removed rows)")
-        raise ValueError("new_images contains ids already in the build")
+        if clash_future.result():
+            raise ValueError("new_images contains ids already in the build")
 
-    def stage(name: str, df: DataFrame,
-              after: "str | None" = None) -> DataFrame:
-        """Materialize a delta under staging; record rows/secs as add_*
-        (``after``: the logical predecessor's unprefixed name)."""
-        t0 = time.time()
-        df.write.mode("overwrite").parquet(f"{staging}/{name}")
-        out = spark.read.parquet(f"{staging}/{name}")
-        pipe._record(f"add_{name}", out, t0,
-                     after=after and f"add_{after}")
-        return out
+        def stage(name: str, df: DataFrame,
+                  after: "str | None" = None) -> DataFrame:
+            """Materialize a delta under staging; record rows/secs as add_*
+            (``after``: the logical predecessor's unprefixed name)."""
+            t0 = time.time()
+            df.write.mode("overwrite").parquet(f"{staging}/{name}")
+            out = spark.read.parquet(f"{staging}/{name}")
+            pipe._record(f"add_{name}", out, t0,
+                         after=after and f"add_{after}")
+            return out
 
-    # -- exact grouping of the new slice (no old bytes touched; the
-    #    membership probe was a pruned point lookup into ck_index in
-    #    the parallel setup block above — the stored corpus' key
-    #    columns are never scanned) --------------------------------------
-    matched = (nk.join(F.broadcast(old_keys), "ck")
-               .select("image_id", "rep_id", "ck"))
-    # same skew-immune form as the full build's exact_groups (a bulk
-    # append can carry a viral bomb too): min-per-ck via groupBy gets
-    # map-side combine, the join-back is AQE-skew-splittable; the
-    # anti-join re-runs per consumer but over the localCheckpointed
-    # keys-only nk — no byte rescan
-    fresh_keys = nk.join(F.broadcast(old_keys.select("ck")), "ck",
-                         "left_anti")
-    fresh_reps = (fresh_keys.groupBy("ck")
-                  .agg(F.min("image_id").alias("rep_id")))
-    fresh = (fresh_keys.join(fresh_reps, "ck")
-             .select("image_id", "rep_id", "ck"))
-    new_groups = stage("exact_groups", matched.unionByName(fresh))
+        # -- exact grouping of the new slice (no old bytes touched; the
+        #    membership probe was a pruned point lookup into ck_index in
+        #    the parallel setup block above — the stored corpus' key
+        #    columns are never scanned) --------------------------------------
+        matched = (nk.join(F.broadcast(old_keys), "ck")
+                   .select("image_id", "rep_id", "ck"))
+        # same skew-immune form as the full build's exact_groups (a bulk
+        # append can carry a viral bomb too): min-per-ck via groupBy gets
+        # map-side combine, the join-back is AQE-skew-splittable; the
+        # anti-join re-runs per consumer but over the localCheckpointed
+        # keys-only nk — no byte rescan
+        fresh_keys = nk.join(F.broadcast(old_keys.select("ck")), "ck",
+                             "left_anti")
+        fresh_reps = (fresh_keys.groupBy("ck")
+                      .agg(F.min("image_id").alias("rep_id")))
+        fresh = (fresh_keys.join(fresh_reps, "ck")
+                 .select("image_id", "rep_id", "ck"))
+        new_groups = stage("exact_groups", matched.unionByName(fresh))
 
-    # -- sketch only brand-new representatives ---------------------------
-    new_rep_ids = (new_groups
-                   .filter(F.col("image_id") == F.col("rep_id"))
-                   .select("image_id"))
-    to_sketch = new_images.join(new_rep_ids, "image_id", "left_semi")
+        # -- sketch only brand-new representatives ---------------------------
+        new_rep_ids = (new_groups
+                       .filter(F.col("image_id") == F.col("rep_id"))
+                       .select("image_id"))
+        to_sketch = new_images.join(new_rep_ids, "image_id", "left_semi")
 
-    # matched reps (old groups gaining members) depend only on the
-    # just-staged exact groups; the driver tail needs them as a driver
-    # list, so the collect runs on a side thread under the whole
-    # sketch/band/verify phase (guide §2.6).
-    mr_expr = (new_groups
-               .join(new_images.select(F.col("image_id").alias("rep_id")),
-                     "rep_id", "left_anti")
-               .select("rep_id").distinct())
-    def _mr_collect():
-        mr = sorted(r["rep_id"] for r in mr_expr.collect())
-        rmp = ({r["old_rep"]: r["new_rep"] for r in remap_df.collect()}
-               if removals else {})
-        return mr, rmp
+        # matched reps (old groups gaining members) depend only on the
+        # just-staged exact groups; the driver tail needs them as a driver
+        # list, so the collect runs on a side thread under the whole
+        # sketch/band/verify phase (guide §2.6).
+        mr_expr = (new_groups
+                   .join(new_images.select(F.col("image_id").alias("rep_id")),
+                         "rep_id", "left_anti")
+                   .select("rep_id").distinct())
+        def _mr_collect():
+            mr = sorted(r["rep_id"] for r in mr_expr.collect())
+            rmp = ({r["old_rep"]: r["new_rep"] for r in remap_df.collect()}
+                   if removals else {})
+            return mr, rmp
 
-    # the spawn gate bounds the COLLECT (mr_list <= n_new rows); past
-    # it the endpoint prefetch below returns None, and so does every add
-    # its own bound sends to the distributed tail
-    mr_future = _spawn(_mr_collect) \
-        if n_new <= cfg.add_cc_local_max_edges else None
+        # the spawn gate bounds the COLLECT (mr_list <= n_new rows); past
+        # it the endpoint prefetch below returns None, and so does every add
+        # its own bound sends to the distributed tail
+        mr_future = spawn(_mr_collect) \
+            if n_new <= cfg.add_cc_local_max_edges else None
 
-    # -- candidates: new-vs-new ∪ new-vs-old ∪ touched suffix groups -----
-    # Each branch is cut with an eager localCheckpoint before the union:
-    # the branches build near-identical exchanges over the same staged
-    # inputs (bands keys), and Spark's AQE exchange reuse across union
-    # arms produced mismatched coalesced partitionings inside one
-    # codegen'd join ("Can't zip RDDs with unequal numbers of
-    # partitions", reproduced at 32 cores / 213k rows).  The cut
-    # materializes each (small) pair list independently; localCheckpoint,
-    # not persist — the documented plan-cache-over-rewritten-path
-    # pitfall.  The three branches below (sketch -> banding/probe,
-    # touched-suffix chain, ck_index staging) depend only on
-    # new_groups/to_sketch and run CONCURRENTLY (guide §2.6) — each is
-    # a chain of small jobs, so overlapping them converts serial
-    # per-job latency into one wave; the suffix chain does not need the
-    # new signatures, so it overlaps the decode+sketch stage too.
-    def _br_sig_chain():
+        # -- candidates: new-vs-new ∪ new-vs-old ∪ touched suffix groups -----
+        # Each branch is cut with an eager localCheckpoint before the union:
+        # the branches build near-identical exchanges over the same staged
+        # inputs (bands keys), and Spark's AQE exchange reuse across union
+        # arms produced mismatched coalesced partitionings inside one
+        # codegen'd join ("Can't zip RDDs with unequal numbers of
+        # partitions", reproduced at 32 cores / 213k rows).  The cut
+        # materializes each (small) pair list independently; localCheckpoint,
+        # not persist — the documented plan-cache-over-rewritten-path
+        # pitfall.  The three branches below (sketch -> banding/probe,
+        # touched-suffix chain, ck_index staging) depend only on
+        # new_groups/to_sketch and run CONCURRENTLY (guide §2.6) — each is
+        # a chain of small jobs, so overlapping them converts serial
+        # per-job latency into one wave; the suffix chain does not need the
+        # new signatures, so it overlaps the decode+sketch stage too.
+        def _probe_old_pairs(new_sigs):
+            no_pairs = probe_pairs_vs_stored(explode_all_bands(new_sigs, cfg),
+                                             old_bands)
+            if not removals:
+                return no_pairs.localCheckpoint()
+            # stored bands stay keyed by founding group nodes until
+            # compaction: pairs against a DEAD group's node are content
+            # that no longer exists (drop), and pairs against a tombstoned
+            # founding whose group survives re-point at the promoted
+            # surviving member so the verify stage attaches live payloads.
+            # The stored endpoint can sit in EITHER column (pairs are
+            # least/greatest-canonicalized), so both sides are treated and
+            # the pair re-canonicalized.
+            rm_a = remap_df.select(F.col("old_rep").alias("a"),
+                                   F.col("new_rep").alias("na"))
+            rm_b = remap_df.select(F.col("old_rep").alias("b"),
+                                   F.col("new_rep").alias("nb"))
+            no_pairs = (no_pairs
+                        .join(F.broadcast(dead_df.withColumnRenamed(
+                            "rep_id", "a")), "a", "left_anti")
+                        .join(F.broadcast(dead_df.withColumnRenamed(
+                            "rep_id", "b")), "b", "left_anti")
+                        .join(F.broadcast(rm_a), "a", "left")
+                        .join(F.broadcast(rm_b), "b", "left")
+                        .select(F.coalesce("na", F.col("a")).alias("pa"),
+                                F.coalesce("nb", F.col("b")).alias("pb"),
+                                "src")
+                        .filter(F.col("pa") != F.col("pb"))
+                        .select(F.least("pa", "pb").alias("a"),
+                                F.greatest("pa", "pb").alias("b"), "src")
+                        .groupBy("a", "b").agg(F.min("src").alias("src")))
+            return no_pairs.localCheckpoint()
+
+        def _br_touched():
+            touched_imgs, old_touched_reps = touched_future.result()
+            # eager cut before the suffix pass: at bulk append sizes the
+            # rep-ness lookup takes the semi-join fallback and this
+            # subtree's exchanges get reused by both arms of the sfx_new
+            # union below — the documented AQE exchange-reuse zip bug
+            # ("Can't zip RDDs with unequal numbers of partitions",
+            # reproduced at a 10% append)
+            touched_reps = (touched_imgs.join(
+                old_touched_reps.unionByName(new_rep_ids), "image_id",
+                "left_semi").localCheckpoint())
+            # sfx feeds BOTH union arms below — cut it first, or the shared
+            # exchange under the two consumers trips the AQE reuse bug
+            sfx = suffix_candidate_pairs(touched_reps).localCheckpoint()
+            return (sfx.join(new_rep_ids.withColumnRenamed("image_id", "a"),
+                             "a", "left_semi")
+                    .unionByName(
+                        sfx.join(new_rep_ids.withColumnRenamed("image_id",
+                                                               "b"),
+                                 "b", "left_semi"))
+                    .dropDuplicates(["a", "b"])).localCheckpoint()
+
+        sfx_future = spawn(_br_touched)
+        spawn(lambda: stage_ck_append(new_groups, staging, cfg))
         new_sigs = stage("signatures", compute_signatures(to_sketch, cfg),
                          after="exact_groups")
+        no_future = spawn(lambda: _probe_old_pairs(new_sigs))
+        new_bands = stage("bands", build_bands(new_sigs, cfg),
+                          after="signatures")
+        nn_pairs = emit_bucket_pairs(new_bands).localCheckpoint()
+        new_pairs = stage("candidate_pairs",
+                          nn_pairs.unionByName(no_future.result())
+                          .unionByName(sfx_future.result())
+                          .groupBy("a", "b").agg(F.min("src").alias("src")),
+                          after="bands")
 
-        def bands_nn():
-            nb = stage("bands", build_bands(new_sigs, cfg),
-                       after="signatures")
-            return nb, emit_bucket_pairs(nb).localCheckpoint()
+        # -- verify only new-touching pairs, capped per new item -------------
+        plausible = prefilter_pairs(new_pairs, all_images,
+                                    cfg.prefilter_max_phash_hamming,
+                                    cfg.prefilter_max_phash_hamming_phash_src)
+        flag_a = new_rep_ids.select(F.col("image_id").alias("a"),
+                                    F.lit(True).alias("a_new"))
+        keyed = (plausible
+                 .join(flag_a, "a", "left")
+                 .withColumn("key",
+                             F.when(F.coalesce("a_new", F.lit(False)),
+                                    F.col("a")).otherwise(F.col("b")))
+                 .withColumn("other",
+                             F.when(F.coalesce("a_new", F.lit(False)),
+                                    F.col("b")).otherwise(F.col("a"))))
+        w_cap = Window.partitionBy("key").orderBy("other")
+        # eager cut: O(new x cap) keys-only rows.  The capped-pair subtree
+        # (meta joins + window) otherwise evaluates THREE times — once for
+        # attach's auto-strategy id count, once as the candidate-id semi
+        # build side, once as the pair probe side (guide §2.4: duplicated
+        # subtrees in the plan)
+        capped = (keyed.withColumn("rn", F.row_number().over(w_cap))
+                  .filter(F.col("rn") <= cfg.add_max_candidates_per_item)
+                  .select("a", "b", "src")).localCheckpoint()
+        # materialize_slim: the candidate payload slice is O(new x cap) ids
+        # out of the whole corpus — one eager cut replaces TWO full payload
+        # scans in the pair-attach plan (guide §8: move heavy bytes once).
+        # The "auto" strategy's id-count job is SKIPPED when the algebraic
+        # bound already proves broadcast fits: every capped pair has a new
+        # endpoint, so distinct ids <= 2 x new x cap — no count needed.
+        # Bulk adds past the bound keep the counted auto path.
+        attach_strategy = cfg.verify_attach
+        if (attach_strategy == "auto"
+                and 2 * n_new * cfg.add_max_candidates_per_item
+                <= cfg.verify_broadcast_max_ids):
+            attach_strategy = "broadcast"
+        attached = attach_payloads(
+            capped, all_images, strategy=attach_strategy,
+            broadcast_max_ids=cfg.verify_broadcast_max_ids,
+            materialize_slim=True)
 
-        (nb, nn), no_p = _run_parallel(
-            bands_nn, lambda: _probe_old_pairs(new_sigs))
-        return nb, nn, no_p
+        # PREFETCH the endpoint-label lookup under the verify stage (guide
+        # §2.6): every verified edge endpoint is an endpoint of `capped`
+        # (edges = verify(capped) filtered), and the matched reps' promoted
+        # members are known from the mr collect — so the pruned id_index
+        # lookup the driver tail needs can run NOW, off the critical path,
+        # on the (slightly larger) capped-endpoint superset.  The side
+        # thread self-gates on the driver budget — the add tail's ONE gate:
+        # the verified edges are a subset of `capped`, so
+        # 2·|capped| + n_new bounds every set the driver tail collects; past
+        # it the prefetch returns None and the add takes the distributed
+        # tail.  Probing a superset only ADDS rows for ids the tail then
+        # filters out — labels for non-edge endpoints are never read.
+        def _ep_prefetch():
+            if mr_future is None:
+                return None
+            mr_l, rmp = mr_future.result()
+            n_cap = capped.count()
+            if (2 * n_cap + n_new) > cfg.add_cc_local_max_edges:
+                return None  # collect would blow the driver budget
+            lreps = sorted({rmp.get(r, r) for r in mr_l})
+            cap_ids = (capped.select(F.col("a").alias("image_id"))
+                       .unionByName(capped.select(F.col("b")
+                                                  .alias("image_id")))
+                       .distinct())
+            probe = cap_ids
+            if lreps:
+                probe = probe.unionByName(local_frame(
+                    spark, [(i,) for i in lreps],
+                    "image_id string")).distinct()
+            rows = lookup_id_index(spark, id_path, probe, cfg,
+                                   idx_df=id_idx_df).collect()
+            return mr_l, rmp, rows
 
-    def _br_ck_stage():
-        stage_ck_append(new_groups, staging, cfg)
+        ep_future = spawn(_ep_prefetch)
+        new_edges = stage("verified_edges",
+                          verify_pairs(attached, cfg).filter(F.col("dup"))
+                          .select("a", "b", "src", "psnr", "caption_eq"),
+                          after="candidate_pairs")
 
-    def _probe_old_pairs(new_sigs):
-        no_pairs = probe_pairs_vs_stored(explode_all_bands(new_sigs, cfg),
-                                         old_bands)
-        if not removals:
-            return no_pairs.localCheckpoint()
-        # stored bands stay keyed by founding group nodes until
-        # compaction: pairs against a DEAD group's node are content
-        # that no longer exists (drop), and pairs against a tombstoned
-        # founding whose group survives re-point at the promoted
-        # surviving member so the verify stage attaches live payloads.
-        # The stored endpoint can sit in EITHER column (pairs are
-        # least/greatest-canonicalized), so both sides are treated and
-        # the pair re-canonicalized.
-        rm_a = remap_df.select(F.col("old_rep").alias("a"),
-                               F.col("new_rep").alias("na"))
-        rm_b = remap_df.select(F.col("old_rep").alias("b"),
-                               F.col("new_rep").alias("nb"))
-        no_pairs = (no_pairs
-                    .join(F.broadcast(dead_df.withColumnRenamed(
-                        "rep_id", "a")), "a", "left_anti")
-                    .join(F.broadcast(dead_df.withColumnRenamed(
-                        "rep_id", "b")), "b", "left_anti")
-                    .join(F.broadcast(rm_a), "a", "left")
-                    .join(F.broadcast(rm_b), "b", "left")
-                    .select(F.coalesce("na", F.col("a")).alias("pa"),
-                            F.coalesce("nb", F.col("b")).alias("pb"),
-                            "src")
-                    .filter(F.col("pa") != F.col("pb"))
-                    .select(F.least("pa", "pb").alias("a"),
-                            F.greatest("pa", "pb").alias("b"), "src")
-                    .groupBy("a", "b").agg(F.min("src").alias("src")))
-        return no_pairs.localCheckpoint()
+        # -- INCREMENTAL clusters: CC by contraction ------------------------
+        # Stored clusters are exactly CC(stored edges), so contracting each
+        # old component to its label preserves connectivity when the new
+        # edges arrive: CC input is the label-level image of the NEW edges
+        # only — O(|new edges|), independent of the stored edge count (which
+        # is never read).  Endpoint labels come from a pruned id_index point
+        # lookup (partition filter + IN-list row-group pruning) — neither
+        # the stored clusters table nor any other corpus-sized relation is
+        # scanned on this path.
+        def _c_edge_for(ep_info):
+            # dedup-graph edge delta for the remove path's split
+            # recomputation: endpoints translated to their FOUNDING group
+            # nodes (old endpoints via the ep_info point lookup, new reps
+            # are their own founding node), canonical a < b, intra-group
+            # self-loops dropped
+            ef_a = ep_info.select(F.col("image_id").alias("a"),
+                                  F.col("rep_id").alias("fa"))
+            ef_b = ep_info.select(F.col("image_id").alias("b"),
+                                  F.col("rep_id").alias("fb"))
+            fedges = (new_edges.select("a", "b")
+                      .join(F.broadcast(ef_a), "a", "left")
+                      .join(F.broadcast(ef_b), "b", "left")
+                      .select(F.coalesce("fa", F.col("a")).alias("na"),
+                              F.coalesce("fb", F.col("b")).alias("nb"))
+                      .filter(F.col("na") != F.col("nb"))
+                      .select(F.least("na", "nb").alias("a"),
+                              F.greatest("na", "nb").alias("b"))
+                      .distinct())
+            stage_edge_append(fedges, staging, cfg)
 
-    def _br_touched():
-        # prefix results were computed on the detached setup-wave future
-        # (overlapping the setup lookups AND exact grouping — the
-        # touched-slice selection only needs the NEW slice's phashes);
-        # here only the parts that need new_rep_ids remain.
-        touched_imgs, old_touched_reps = touched_future.result()
-        # eager cut before the suffix pass: at bulk append sizes the
-        # rep-ness lookup takes the semi-join fallback and this
-        # subtree's exchanges get reused by both arms of the sfx_new
-        # union below — the documented AQE exchange-reuse zip bug
-        # ("Can't zip RDDs with unequal numbers of partitions",
-        # reproduced at a 10% append)
-        touched_reps = (touched_imgs.join(
-            old_touched_reps.unionByName(new_rep_ids), "image_id",
-            "left_semi").localCheckpoint())
-        # sfx feeds BOTH union arms below — cut it first, or the shared
-        # exchange under the two consumers trips the AQE reuse bug
-        sfx = suffix_candidate_pairs(touched_reps).localCheckpoint()
-        return (sfx.join(new_rep_ids.withColumnRenamed("image_id", "a"),
-                         "a", "left_semi")
-                .unionByName(
-                    sfx.join(new_rep_ids.withColumnRenamed("image_id",
-                                                           "b"),
-                             "b", "left_semi"))
-                .dropDuplicates(["a", "b"])).localCheckpoint()
-
-    (new_bands, nn_pairs, no_pairs), sfx_new, _ = _run_parallel(
-        _br_sig_chain, _br_touched, _br_ck_stage)
-    new_pairs = stage("candidate_pairs",
-                      nn_pairs.unionByName(no_pairs).unionByName(sfx_new)
-                      .groupBy("a", "b").agg(F.min("src").alias("src")),
-                      after="bands")
-
-    # -- verify only new-touching pairs, capped per new item -------------
-    plausible = prefilter_pairs(new_pairs, all_images,
-                                cfg.prefilter_max_phash_hamming,
-                                cfg.prefilter_max_phash_hamming_phash_src)
-    flag_a = new_rep_ids.select(F.col("image_id").alias("a"),
-                                F.lit(True).alias("a_new"))
-    keyed = (plausible
-             .join(flag_a, "a", "left")
-             .withColumn("key",
-                         F.when(F.coalesce("a_new", F.lit(False)),
-                                F.col("a")).otherwise(F.col("b")))
-             .withColumn("other",
-                         F.when(F.coalesce("a_new", F.lit(False)),
-                                F.col("b")).otherwise(F.col("a"))))
-    w_cap = Window.partitionBy("key").orderBy("other")
-    # eager cut: O(new x cap) keys-only rows.  The capped-pair subtree
-    # (meta joins + window) otherwise evaluates THREE times — once for
-    # attach's auto-strategy id count, once as the candidate-id semi
-    # build side, once as the pair probe side (guide §2.4: duplicated
-    # subtrees in the plan)
-    capped = (keyed.withColumn("rn", F.row_number().over(w_cap))
-              .filter(F.col("rn") <= cfg.add_max_candidates_per_item)
-              .select("a", "b", "src")).localCheckpoint()
-    # materialize_slim: the candidate payload slice is O(new x cap) ids
-    # out of the whole corpus — one eager cut replaces TWO full payload
-    # scans in the pair-attach plan (guide §8: move heavy bytes once).
-    # The "auto" strategy's id-count job is SKIPPED when the algebraic
-    # bound already proves broadcast fits: every capped pair has a new
-    # endpoint, so distinct ids <= 2 x new x cap — no count needed.
-    # Bulk adds past the bound keep the counted auto path.
-    attach_strategy = cfg.verify_attach
-    if (attach_strategy == "auto"
-            and 2 * n_new * cfg.add_max_candidates_per_item
-            <= cfg.verify_broadcast_max_ids):
-        attach_strategy = "broadcast"
-    attached = attach_payloads(capped, all_images,
-                               strategy=attach_strategy,
-                               broadcast_max_ids=cfg.verify_broadcast_max_ids,
-                               materialize_slim=True)
-
-    # PREFETCH the endpoint-label lookup under the verify stage (guide
-    # §2.6): every verified edge endpoint is an endpoint of `capped`
-    # (edges = verify(capped) filtered), and the matched reps' promoted
-    # members are known from the mr collect — so the pruned id_index
-    # lookup the driver tail needs can run NOW, off the critical path,
-    # on the (slightly larger) capped-endpoint superset.  The side
-    # thread self-gates on the driver budget — the add tail's ONE gate:
-    # the verified edges are a subset of `capped`, so
-    # 2·|capped| + n_new bounds every set the driver tail collects; past
-    # it the prefetch returns None and the add takes the distributed
-    # tail.  Probing a superset only ADDS rows for ids the tail then
-    # filters out — labels for non-edge endpoints are never read.
-    def _ep_prefetch():
-        if mr_future is None:
-            return None
-        mr_l, rmp = mr_future.result()
-        n_cap = capped.count()
-        if (2 * n_cap + n_new) > cfg.add_cc_local_max_edges:
-            return None  # collect would blow the driver budget
-        lreps = sorted({rmp.get(r, r) for r in mr_l})
-        cap_ids = (capped.select(F.col("a").alias("image_id"))
-                   .unionByName(capped.select(F.col("b")
-                                              .alias("image_id")))
-                   .distinct())
-        probe = cap_ids
-        if lreps:
-            probe = probe.unionByName(local_frame(
-                spark, [(i,) for i in lreps],
-                "image_id string")).distinct()
-        rows = lookup_id_index(spark, id_path, probe, cfg,
-                               idx_df=id_idx_df).collect()
-        return mr_l, rmp, rows
-
-    ep_future = _spawn(_ep_prefetch)
-    new_edges = stage("verified_edges",
-                      verify_pairs(attached, cfg).filter(F.col("dup"))
-                      .select("a", "b", "src", "psnr", "caption_eq"),
-                      after="candidate_pairs")
-
-    # -- INCREMENTAL clusters: CC by contraction ------------------------
-    # Stored clusters are exactly CC(stored edges), so contracting each
-    # old component to its label preserves connectivity when the new
-    # edges arrive: CC input is the label-level image of the NEW edges
-    # only — O(|new edges|), independent of the stored edge count (which
-    # is never read).  Endpoint labels come from a pruned id_index point
-    # lookup (partition filter + IN-list row-group pruning) — neither
-    # the stored clusters table nor any other corpus-sized relation is
-    # scanned on this path.
-    def _c_edge_for(ep_info):
-        # dedup-graph edge delta for the remove path's split
-        # recomputation: endpoints translated to their FOUNDING group
-        # nodes (old endpoints via the ep_info point lookup, new reps
-        # are their own founding node), canonical a < b, intra-group
-        # self-loops dropped
-        ef_a = ep_info.select(F.col("image_id").alias("a"),
-                              F.col("rep_id").alias("fa"))
-        ef_b = ep_info.select(F.col("image_id").alias("b"),
-                              F.col("rep_id").alias("fb"))
-        fedges = (new_edges.select("a", "b")
-                  .join(F.broadcast(ef_a), "a", "left")
-                  .join(F.broadcast(ef_b), "b", "left")
-                  .select(F.coalesce("fa", F.col("a")).alias("na"),
-                          F.coalesce("fb", F.col("b")).alias("nb"))
-                  .filter(F.col("na") != F.col("nb"))
-                  .select(F.least("na", "nb").alias("a"),
-                          F.greatest("na", "nb").alias("b"))
-                  .distinct())
-        stage_edge_append(fedges, staging, cfg)
-
-    # DRIVER tail (guide §2.6 taken to its limit): the whole labels ->
-    # contracted-CC -> affected-set algebra operates on sets bounded by
-    # O(new edges + new rows) — the SAME magnitude the union-find fast
-    # path has always collected — yet the DataFrame form pays ~5 small
-    # jobs of latency (mr_map cut, ep_info cut, labels record,
-    # label_edges cut, affected collect).  Whenever the endpoint
-    # prefetch came back (its bound is the driver budget), the
-    # prefetched rows, the matched reps and the staged edge list are on
-    # the driver and plain dict/set algebra replaces the join chain —
-    # provably the same maps: get(x, x) IS coalesce over a left join,
-    # the set comprehension IS the distinct union.  Bulk adds past the
-    # bound take the distributed DataFrame tail below.
-    t0 = time.time()
-    prefetch = ep_future.result()
-    if prefetch is not None:
-        mr_list, remap, super_rows = prefetch
-        # a matched group's founding rep may be tombstoned (group
-        # alive): its own id_index label is a stale null-or-old row, so
-        # the LABEL is read through the promoted surviving member
-        # (lrep), while group identity stays the founding node
-        mr_pairs = [(r, remap.get(r, r)) for r in mr_list]
-        edge_rows = [(r["a"], r["b"]) for r in
-                     new_edges.select("a", "b").collect()]
-        ep_ids = ({a for a, _ in edge_rows} | {b for _, b in edge_rows}
-                  | {l for _, l in mr_pairs})
-        # prefetched superset (capped endpoints ∪ lreps) ⊇ ep_ids:
-        # restricting the collected rows IS the direct lookup
-        ep_rows = [r for r in super_rows if r["image_id"] in ep_ids]
-        ep_info = local_frame(
-            spark,
-            [(r["image_id"], r["cluster_id"], r["is_rep"], r["rep_id"])
-             for r in ep_rows],
-            "image_id string, cluster_id string, "
-            "is_rep boolean, rep_id string")
-        edge_future = _spawn(lambda: _c_edge_for(ep_info))
-        # defensive None-guard: a NULL cluster_id (a "stale null-or-old
-        # row") must behave like an ABSENT label — the DataFrame path's
-        # coalesce(label, id) rescues it, so the dict must not store
-        # None (get(x, x) then rescues identically, and a None could
-        # never equi-join in the stored-label set either).  ep_info
-        # keeps the full row: its rep_id still serves the edge delta.
-        labels_live = {r["image_id"]: r["cluster_id"] for r in ep_rows
-                       if r["cluster_id"] is not None}
-        labels_map = dict(labels_live)
-        if removals:
-            for rep, lrep in mr_pairs:
-                if lrep in labels_live:  # inner-join semantics
-                    labels_map[rep] = labels_live[lrep]
-        labels = local_frame(spark, sorted(labels_map.items()),
-                             "image_id string, label string")
-        pipe._record("add_lookup_labels", labels, t0,
-                     after="add_verified_edges")
+        # DRIVER tail (guide §2.6 taken to its limit): the whole labels ->
+        # contracted-CC -> affected-set algebra operates on sets bounded by
+        # O(new edges + new rows) — the SAME magnitude the union-find fast
+        # path has always collected — yet the DataFrame form pays ~5 small
+        # jobs of latency (mr_map cut, ep_info cut, labels record,
+        # label_edges cut, affected collect).  Whenever the endpoint
+        # prefetch came back (its bound is the driver budget), the
+        # prefetched rows, the matched reps and the staged edge list are on
+        # the driver and plain dict/set algebra replaces the join chain —
+        # provably the same maps: get(x, x) IS coalesce over a left join,
+        # the set comprehension IS the distinct union.  Bulk adds past the
+        # bound take the distributed DataFrame tail below.
         t0 = time.time()
-        le_set = set()
-        for a, b in edge_rows:
-            la = labels_map.get(a, a)
-            lb = labels_map.get(b, b)
-            if la != lb:
-                le_set.add((la, lb))
-        label_edges = local_frame(spark, sorted(le_set),
-                                  "a string, b string")
-        pipe._record("add_cc_edges", label_edges, t0,
-                     after="add_verified_edges")
-        mapping = union_find(sorted(le_set))
-        rep_cc = local_frame(spark, sorted(mapping.items()),
-                             "image_id string, cluster_id string")
-        # affected clusters: merged old labels ∪ clusters whose
-        # exact-groups gained members (their min MEMBER id — the label
-        # under the from-scratch normalization contract — may change)
-        t0 = time.time()
-        stored_label_set = set(labels_map.values())
-        aff_set = {l for l in mapping if l in stored_label_set}
-        aff_set |= {labels_map[r] for r in mr_list if r in labels_map}
-        aff_cl = local_frame(spark, [(l,) for l in sorted(aff_set)],
-                             "cluster_id string")
-        # bucket ids via the SAME Spark hash expression the layout uses
-        # (xxhash64 is not reimplemented driver-side) — one LocalRelation
-        # job over O(affected) rows
-        aff_buckets = sorted(
-            {r["pb"] for r in
-             aff_cl.select(cluster_pbucket(cfg).alias("pb")).collect()})
-    else:
-        matched_reps = mr_expr  # old reps gaining members
-        # a matched group's founding rep may be tombstoned (group
-        # alive): label read through the promoted surviving member
-        if removals:
-            mr_map = (matched_reps
-                      .join(F.broadcast(remap_df.withColumnRenamed(
-                          "old_rep", "rep_id")), "rep_id", "left")
-                      .select("rep_id",
-                              F.coalesce("new_rep", "rep_id")
-                              .alias("lrep"))
-                      .localCheckpoint())
+        prefetch = ep_future.result()
+        if prefetch is not None:
+            mr_list, remap, super_rows = prefetch
+            # a matched group's founding rep may be tombstoned (group
+            # alive): its own id_index label is a stale null-or-old row, so
+            # the LABEL is read through the promoted surviving member
+            # (lrep), while group identity stays the founding node
+            mr_pairs = [(r, remap.get(r, r)) for r in mr_list]
+            edge_rows = [(r["a"], r["b"]) for r in
+                         new_edges.select("a", "b").collect()]
+            ep_ids = ({a for a, _ in edge_rows} | {b for _, b in edge_rows}
+                      | {l for _, l in mr_pairs})
+            # prefetched superset (capped endpoints ∪ lreps) ⊇ ep_ids:
+            # restricting the collected rows IS the direct lookup
+            ep_rows = [r for r in super_rows if r["image_id"] in ep_ids]
+            ep_info = local_frame(
+                spark,
+                [(r["image_id"], r["cluster_id"], r["is_rep"], r["rep_id"])
+                 for r in ep_rows],
+                "image_id string, cluster_id string, "
+                "is_rep boolean, rep_id string")
+            spawn(lambda: _c_edge_for(ep_info))
+            # defensive None-guard: a NULL cluster_id (a "stale null-or-old
+            # row") must behave like an ABSENT label — the DataFrame path's
+            # coalesce(label, id) rescues it, so the dict must not store
+            # None (get(x, x) then rescues identically, and a None could
+            # never equi-join in the stored-label set either).  ep_info
+            # keeps the full row: its rep_id still serves the edge delta.
+            labels_live = {r["image_id"]: r["cluster_id"] for r in ep_rows
+                           if r["cluster_id"] is not None}
+            labels_map = dict(labels_live)
+            if removals:
+                for rep, lrep in mr_pairs:
+                    if lrep in labels_live:  # inner-join semantics
+                        labels_map[rep] = labels_live[lrep]
+            labels = local_frame(spark, sorted(labels_map.items()),
+                                 "image_id string, label string")
+            pipe._record("add_lookup_labels", labels, t0,
+                         after="add_verified_edges")
+            t0 = time.time()
+            le_set = set()
+            for a, b in edge_rows:
+                la = labels_map.get(a, a)
+                lb = labels_map.get(b, b)
+                if la != lb:
+                    le_set.add((la, lb))
+            label_edges = local_frame(spark, sorted(le_set),
+                                      "a string, b string")
+            pipe._record("add_cc_edges", label_edges, t0,
+                         after="add_verified_edges")
+            mapping = union_find(sorted(le_set))
+            rep_cc = local_frame(spark, sorted(mapping.items()),
+                                 "image_id string, cluster_id string")
+            # affected clusters: merged old labels ∪ clusters whose
+            # exact-groups gained members (their min MEMBER id — the label
+            # under the from-scratch normalization contract — may change)
+            t0 = time.time()
+            stored_label_set = set(labels_map.values())
+            aff_set = {l for l in mapping if l in stored_label_set}
+            aff_set |= {labels_map[r] for r in mr_list if r in labels_map}
+            aff_cl = local_frame(spark, [(l,) for l in sorted(aff_set)],
+                                 "cluster_id string")
+            # bucket ids via the SAME Spark hash expression the layout uses
+            # (xxhash64 is not reimplemented driver-side) — one LocalRelation
+            # job over O(affected) rows
+            aff_buckets = sorted(
+                {r["pb"] for r in
+                 aff_cl.select(cluster_pbucket(cfg).alias("pb")).collect()})
         else:
-            mr_map = matched_reps.select("rep_id",
-                                         F.col("rep_id").alias("lrep"))
-        endpoint_ids = (new_edges.select(F.col("a").alias("image_id"))
-                        .unionByName(new_edges.select(F.col("b")
-                                                      .alias("image_id")))
-                        .unionByName(mr_map.select(F.col("lrep")
-                                                   .alias("image_id")))
-                        .distinct())
-        # endpoint labels via the id-keyed layout: pruned point lookup,
-        # O(new edges + matched reps) rows read.  The same lookup also
-        # resolves each old endpoint's FOUNDING group node (rep_id) for
-        # the edge_index delta.
-        ep_info = (lookup_id_index(spark, id_path, endpoint_ids, cfg,
-                                   idx_df=id_idx_df)
-                   .localCheckpoint())  # O(new edges + matched reps)
-        # the edge_index delta needs only ep_info + the staged
-        # new_edges — its staging write overlaps the labels->CC->delta
-        # chain on a side thread (guide §2.6)
-        edge_future = _spawn(lambda: _c_edge_for(ep_info))
-        labels_live = ep_info.select("image_id",
-                                     F.col("cluster_id").alias("label"))
-        if removals:
-            # founding reps resolve their label via their promoted
-            # member
-            labels = (labels_live.unionByName(
-                mr_map.join(labels_live.withColumnRenamed("image_id",
-                                                          "lrep"),
-                            "lrep")
-                .select(F.col("rep_id").alias("image_id"), "label"))
-                .distinct())
-        else:
-            labels = labels_live
-        pipe._record("add_lookup_labels", labels, t0,
-                     after="add_verified_edges")
-        t0 = time.time()
-        lab_a = labels.select(F.col("image_id").alias("a"),
-                              F.col("label").alias("la"))
-        lab_b = labels.select(F.col("image_id").alias("b"),
-                              F.col("label").alias("lb"))
-        label_edges = (new_edges.select("a", "b")
-                       .join(F.broadcast(lab_a), "a", "left")
-                       .join(F.broadcast(lab_b), "b", "left")
-                       .select(F.coalesce("la", F.col("a")).alias("a"),
-                               F.coalesce("lb", F.col("b")).alias("b"))
-                       .filter(F.col("a") != F.col("b"))
-                       .distinct().localCheckpoint())
-        n_label_edges = pipe._record("add_cc_edges", label_edges, t0,
-                                     after="add_verified_edges")
-        rep_cc = cc_roots(label_edges, n_label_edges, cfg)
-        # affected clusters: merged old labels ∪ clusters whose
-        # exact-groups gained members
-        t0 = time.time()
-        stored_labels = labels.select("label").distinct()
-        matched_rep_labels = (matched_reps
-                              .join(labels.withColumnRenamed("image_id",
-                                                             "rep_id"),
-                                    "rep_id")
-                              .select("label"))
-        aff = (rep_cc.select(F.col("image_id").alias("label"))
-               .join(stored_labels, "label", "left_semi")
-               .unionByName(matched_rep_labels)
-               .distinct().localCheckpoint())
-        aff_buckets = sorted(r[0] for r in
-                             aff.select(cluster_pbucket(cfg, "label"))
-                             .distinct().collect())
-        aff_cl = aff.withColumnRenamed("label", "cluster_id")
-    # member rows of affected clusters ONLY, read under pbucket pruning
-    aff_members = (clusters_stored
-                   .filter(F.col("pbucket").isin(aff_buckets))
-                   .join(F.broadcast(aff_cl), "cluster_id")
-                   .select("image_id", "cluster_id"))
-    Rm = rep_cc.select(F.col("image_id").alias("cluster_id"),
-                       F.col("cluster_id").alias("root"))
-    # is_rep rides along so the id_index delta rows keep the flag's
-    # bool_or-across-generations contract: re-labelled OLD members append
-    # is_rep=false (their first-appearance row already carries the truth,
-    # and rep-ness is immutable); NEW members carry their actual flag
-    relab_old = (aff_members.join(F.broadcast(Rm), "cluster_id", "left")
-                 .select("image_id",
-                         F.coalesce("root", "cluster_id").alias("root"),
-                         F.lit(False).alias("is_rep"),
-                         F.lit(None).cast("string").alias("rep_id")))
-    # every NEW member routes through its rep's label to the merged root
-    rep_lab = (new_groups.select("image_id", "rep_id",
-                                 (F.col("image_id") == F.col("rep_id"))
-                                 .alias("is_rep"))
-               .join(F.broadcast(labels.withColumnRenamed("image_id",
-                                                          "rep_id")),
-                     "rep_id", "left")
-               .select("image_id",
-                       F.coalesce("label", F.col("rep_id"))
-                       .alias("cluster_id"), "is_rep", "rep_id"))
-    relab_new = (rep_lab.join(F.broadcast(Rm), "cluster_id", "left")
-                 .select("image_id",
-                         F.coalesce("root", "cluster_id").alias("root"),
-                         "is_rep", "rep_id"))
-    # min-member normalization over the affected slice only (the rest of
-    # the corpus already satisfies cluster_id == min member by induction)
-    members = relab_old.unionByName(relab_new)
-    norm = members.groupBy("root").agg(F.min("image_id")
-                                       .alias("cluster_id"))
-    delta = (members.join(F.broadcast(norm), "root")
-             .select("image_id", "cluster_id", "is_rep", "rep_id")
-             .localCheckpoint())
-    pipe._record("add_clusters", delta, t0, after="add_cc_edges")
+            matched_reps = mr_expr  # old reps gaining members
+            # a matched group's founding rep may be tombstoned (group
+            # alive): label read through the promoted surviving member
+            if removals:
+                mr_map = (matched_reps
+                          .join(F.broadcast(remap_df.withColumnRenamed(
+                              "old_rep", "rep_id")), "rep_id", "left")
+                          .select("rep_id",
+                                  F.coalesce("new_rep", "rep_id")
+                                  .alias("lrep"))
+                          .localCheckpoint())
+            else:
+                mr_map = matched_reps.select("rep_id",
+                                             F.col("rep_id").alias("lrep"))
+            endpoint_ids = (new_edges.select(F.col("a").alias("image_id"))
+                            .unionByName(new_edges.select(F.col("b")
+                                                          .alias("image_id")))
+                            .unionByName(mr_map.select(F.col("lrep")
+                                                       .alias("image_id")))
+                            .distinct())
+            # endpoint labels via the id-keyed layout: pruned point lookup,
+            # O(new edges + matched reps) rows read.  The same lookup also
+            # resolves each old endpoint's FOUNDING group node (rep_id) for
+            # the edge_index delta.
+            ep_info = (lookup_id_index(spark, id_path, endpoint_ids, cfg,
+                                       idx_df=id_idx_df)
+                       .localCheckpoint())  # O(new edges + matched reps)
+            # the edge_index delta needs only ep_info + the staged
+            # new_edges — its staging write overlaps the labels->CC->delta
+            # chain on a side thread (guide §2.6)
+            spawn(lambda: _c_edge_for(ep_info))
+            labels_live = ep_info.select("image_id",
+                                         F.col("cluster_id").alias("label"))
+            if removals:
+                # founding reps resolve their label via their promoted
+                # member
+                labels = (labels_live.unionByName(
+                    mr_map.join(labels_live.withColumnRenamed("image_id",
+                                                              "lrep"),
+                                "lrep")
+                    .select(F.col("rep_id").alias("image_id"), "label"))
+                    .distinct())
+            else:
+                labels = labels_live
+            pipe._record("add_lookup_labels", labels, t0,
+                         after="add_verified_edges")
+            t0 = time.time()
+            lab_a = labels.select(F.col("image_id").alias("a"),
+                                  F.col("label").alias("la"))
+            lab_b = labels.select(F.col("image_id").alias("b"),
+                                  F.col("label").alias("lb"))
+            label_edges = (new_edges.select("a", "b")
+                           .join(F.broadcast(lab_a), "a", "left")
+                           .join(F.broadcast(lab_b), "b", "left")
+                           .select(F.coalesce("la", F.col("a")).alias("a"),
+                                   F.coalesce("lb", F.col("b")).alias("b"))
+                           .filter(F.col("a") != F.col("b"))
+                           .distinct().localCheckpoint())
+            n_label_edges = pipe._record("add_cc_edges", label_edges, t0,
+                                         after="add_verified_edges")
+            rep_cc = cc_roots(label_edges, n_label_edges, cfg)
+            # affected clusters: merged old labels ∪ clusters whose
+            # exact-groups gained members
+            t0 = time.time()
+            stored_labels = labels.select("label").distinct()
+            matched_rep_labels = (matched_reps
+                                  .join(labels.withColumnRenamed("image_id",
+                                                                 "rep_id"),
+                                        "rep_id")
+                                  .select("label"))
+            aff = (rep_cc.select(F.col("image_id").alias("label"))
+                   .join(stored_labels, "label", "left_semi")
+                   .unionByName(matched_rep_labels)
+                   .distinct().localCheckpoint())
+            aff_buckets = sorted(r[0] for r in
+                                 aff.select(cluster_pbucket(cfg, "label"))
+                                 .distinct().collect())
+            aff_cl = aff.withColumnRenamed("label", "cluster_id")
+        # member rows of affected clusters ONLY, read under pbucket pruning
+        aff_members = (clusters_stored
+                       .filter(F.col("pbucket").isin(aff_buckets))
+                       .join(F.broadcast(aff_cl), "cluster_id")
+                       .select("image_id", "cluster_id"))
+        Rm = rep_cc.select(F.col("image_id").alias("cluster_id"),
+                           F.col("cluster_id").alias("root"))
+        # is_rep rides along so the id_index delta rows keep the flag's
+        # bool_or-across-generations contract: re-labelled OLD members append
+        # is_rep=false (their first-appearance row already carries the truth,
+        # and rep-ness is immutable); NEW members carry their actual flag
+        relab_old = (aff_members.join(F.broadcast(Rm), "cluster_id", "left")
+                     .select("image_id",
+                             F.coalesce("root", "cluster_id").alias("root"),
+                             F.lit(False).alias("is_rep"),
+                             F.lit(None).cast("string").alias("rep_id")))
+        # every NEW member routes through its rep's label to the merged root
+        rep_lab = (new_groups.select("image_id", "rep_id",
+                                     (F.col("image_id") == F.col("rep_id"))
+                                     .alias("is_rep"))
+                   .join(F.broadcast(labels.withColumnRenamed("image_id",
+                                                              "rep_id")),
+                         "rep_id", "left")
+                   .select("image_id",
+                           F.coalesce("label", F.col("rep_id"))
+                           .alias("cluster_id"), "is_rep", "rep_id"))
+        relab_new = (rep_lab.join(F.broadcast(Rm), "cluster_id", "left")
+                     .select("image_id",
+                             F.coalesce("root", "cluster_id").alias("root"),
+                             "is_rep", "rep_id"))
+        # min-member normalization over the affected slice only (the rest of
+        # the corpus already satisfies cluster_id == min member by induction)
+        members = relab_old.unionByName(relab_new)
+        norm = members.groupBy("root").agg(F.min("image_id")
+                                           .alias("cluster_id"))
+        delta = (members.join(F.broadcast(norm), "root")
+                 .select("image_id", "cluster_id", "is_rep", "rep_id")
+                 .localCheckpoint())
+        pipe._record("add_clusters", delta, t0, after="add_cc_edges")
 
-    # -- stage the rewritten clusters partitions (touched buckets only)
-    #    and the id_index delta — the ck_index delta was staged in the
-    #    parallel candidate block and the edge_index delta has been
-    #    staging on a side thread since ep_info was cut.  The re-labelled
-    #    and new member rows stage at the next id_index generation (LSM
-    #    append, latest-gen-wins — no stored index rows are read or
-    #    rewritten) ---------------------------------------------------
-    t0 = time.time()
-    swap, _ = _run_parallel(
-        lambda: stage_clusters_rewrite(pipe, staging, clusters_stored,
-                                       aff_cl, aff_buckets, delta, "add"),
-        lambda: stage_id_append(delta, new_gen, staging, cfg))
-    edge_future.result()  # staged since ep_info; must land pre-manifest
+        # -- stage the rewritten clusters partitions (touched buckets only)
+        #    and the id_index delta — the ck_index delta was staged in the
+        #    parallel candidate block and the edge_index delta has been
+        #    staging on a side thread since ep_info was cut.  The re-labelled
+        #    and new member rows stage at the next id_index generation (LSM
+        #    append, latest-gen-wins — no stored index rows are read or
+        #    rewritten) ---------------------------------------------------
+        t0 = time.time()
+        spawn(lambda: stage_id_append(delta, new_gen, staging, cfg))
+        swap = stage_clusters_rewrite(pipe, staging, clusters_stored, aff_cl,
+                                      aff_buckets, delta, "add")
     pipe._record("add_index_delta",
                  spark.read.parquet(f"{staging}/id_index"), t0,
                  after="add_clusters")
@@ -1435,10 +1391,11 @@ def _apply_add_commit(fs: CheckpointFS, root: str, manifest: dict) -> None:
     # per-table rename loops (hundreds of FS metadata calls for the
     # key_buckets-partitioned sidecars) run concurrently; a crash
     # mid-commit recovers exactly as before, table by table
-    _run_parallel(*[(lambda n=n: _move_flat(n))
-                    for n in manifest["append_stages"]],
-                  *[(lambda n=n: _move_partitioned(n))
-                    for n in manifest.get("partitioned_appends", [])])
+    with chains() as spawn:
+        for n in manifest["append_stages"]:
+            spawn(lambda n=n: _move_flat(n))
+        for n in manifest.get("partitioned_appends", []):
+            spawn(lambda n=n: _move_partitioned(n))
     if "id_index_gen" in manifest:
         fs.write_text(f"{root}/{ID_GEN_FILE}",
                       str(manifest["id_index_gen"]))

@@ -61,10 +61,10 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from gsearch_spark.config import PipelineConfig
 from gsearch_spark.operators.keyidx import (key_bucket, lookup_edges_among,
                                             lookup_id_index, stage_id_append)
-from gsearch_spark.operators.pipeline import (NearDupPipeline, _run_parallel,
-                                              _spawn, _writer_locked,
+from gsearch_spark.operators.pipeline import (NearDupPipeline, _writer_locked,
                                               add_writer_lock, cc_roots,
-                                              cluster_pbucket, finish_commit,
+                                              chains, cluster_pbucket,
+                                              finish_commit,
                                               mutation_prologue,
                                               recover_add_commit,
                                               stage_clusters_rewrite,
@@ -182,157 +182,158 @@ def remove_images(spark: SparkSession, cfg: PipelineConfig,
         return None if already.isEmpty() else \
             [r[0] for r in already.limit(5).collect()]
 
-    (info, n_info), already_ids = _run_parallel(_lk_info, _chk_already)
-    if n_info != n_rm:
-        missing = rm.join(info.select("image_id"), "image_id", "left_anti")
-        raise ValueError(
-            "remove_images: unknown image_ids (not in this build), e.g. "
-            f"{[r[0] for r in missing.limit(5).collect()]}")
-    if already_ids is not None:
-        raise ValueError(
-            "remove_images: ids already removed, e.g. "
-            f"{already_ids}")
+    with chains() as spawn:
+        lk_future = spawn(_lk_info)
+        already_ids = _chk_already()
+        info, n_info = lk_future.result()
+        if n_info != n_rm:
+            missing = rm.join(info.select("image_id"), "image_id", "left_anti")
+            raise ValueError(
+                "remove_images: unknown image_ids (not in this build), e.g. "
+                f"{[r[0] for r in missing.limit(5).collect()]}")
+        if already_ids is not None:
+            raise ValueError(
+                "remove_images: ids already removed, e.g. "
+                f"{already_ids}")
 
-    # tombstone staging needs only the (already-checkpointed) rm list
-    # and the next generation number — start it NOW on a side thread so
-    # it overlaps the whole members/CC/delta chain below (guide §2.6)
-    def _st_tomb():
-        (rm.withColumn("gen", F.lit(new_gen))
-         .withColumn("tb", key_bucket("image_id", cfg.key_buckets))
-         .repartition(1)
-         .write.mode("overwrite").partitionBy("tb")
-         .parquet(f"{staging}/{TOMBSTONES}"))
+        # tombstone staging needs only the (already-checkpointed) rm list
+        # and the next generation number — start it NOW on a side thread so
+        # it overlaps the whole members/CC/delta chain below (guide §2.6)
+        def _st_tomb():
+            (rm.withColumn("gen", F.lit(new_gen))
+             .withColumn("tb", key_bucket("image_id", cfg.key_buckets))
+             .repartition(1)
+             .write.mode("overwrite").partitionBy("tb")
+             .parquet(f"{staging}/{TOMBSTONES}"))
 
-    tomb_future = _spawn(_st_tomb)
+        spawn(_st_tomb)
 
-    # -- affected clusters: members read under pbucket pruning ----------
-    t0 = time.time()
-    pb = cluster_pbucket(cfg).alias("pb")
-    if n_rm <= cfg.add_lookup_max_literals:
-        # the affected-label set is bounded by the remove batch: ONE
-        # collect resolves the labels AND their bucket set (instead of
-        # a localCheckpoint job + a buckets-only collect job)
-        aff_rows = (info.select("cluster_id").distinct()
-                    .select("cluster_id", pb).collect())
-        aff_buckets = sorted({r["pb"] for r in aff_rows})
-        aff = local_frame(spark, [(r["cluster_id"],) for r in aff_rows],
-                          "cluster_id string")
-    else:
-        aff = info.select("cluster_id").distinct().localCheckpoint()
-        aff_buckets = sorted(r[0] for r in
-                             aff.select(pb).distinct().collect())
-    members = (clusters_stored
-               .filter(F.col("pbucket").isin(aff_buckets))
-               .join(F.broadcast(aff), "cluster_id")
-               .select("image_id", "cluster_id").localCheckpoint())
-    # founding group node of every affected member: pruned point lookup,
-    # O(affected members) — never a scan of exact_groups
-    minfo = (lookup_id_index(spark, id_path, members.select("image_id"),
-                             cfg, idx_df=id_idx_df)
-             .select("image_id", "rep_id"))
-    mem = members.join(minfo, "image_id").localCheckpoint()
-    pipe._record("rm_members", mem, t0, after="rm_lookup_ids")
+        # -- affected clusters: members read under pbucket pruning ----------
+        t0 = time.time()
+        pb = cluster_pbucket(cfg).alias("pb")
+        if n_rm <= cfg.add_lookup_max_literals:
+            # the affected-label set is bounded by the remove batch: ONE
+            # collect resolves the labels AND their bucket set (instead of
+            # a localCheckpoint job + a buckets-only collect job)
+            aff_rows = (info.select("cluster_id").distinct()
+                        .select("cluster_id", pb).collect())
+            aff_buckets = sorted({r["pb"] for r in aff_rows})
+            aff = local_frame(spark, [(r["cluster_id"],) for r in aff_rows],
+                              "cluster_id string")
+        else:
+            aff = info.select("cluster_id").distinct().localCheckpoint()
+            aff_buckets = sorted(r[0] for r in
+                                 aff.select(pb).distinct().collect())
+        members = (clusters_stored
+                   .filter(F.col("pbucket").isin(aff_buckets))
+                   .join(F.broadcast(aff), "cluster_id")
+                   .select("image_id", "cluster_id").localCheckpoint())
+        # founding group node of every affected member: pruned point lookup,
+        # O(affected members) — never a scan of exact_groups
+        minfo = (lookup_id_index(spark, id_path, members.select("image_id"),
+                                 cfg, idx_df=id_idx_df)
+                 .select("image_id", "rep_id"))
+        mem = members.join(minfo, "image_id").localCheckpoint()
+        pipe._record("rm_members", mem, t0, after="rm_lookup_ids")
 
-    # PREFETCH the dedup-graph edge read (guide §2.6): the surviving
-    # nodes are a subset of ALL affected founding nodes, which are known
-    # the moment mem lands — so the pruned edge_index lookup runs on a
-    # side thread over the affected-node superset, overlapping the
-    # survivor cut and the sidecar chain; the CC step below restricts
-    # to edges with BOTH endpoints surviving, which is exactly
-    # lookup(surviving nodes) since surviving ⊆ affected.
-    def _edges_prefetch():
-        all_nodes = (mem.select(F.col("rep_id").alias("a")).distinct()
-                     .localCheckpoint())
-        return lookup_edges_among(spark, edge_path, all_nodes,
-                                  cfg).localCheckpoint()
+        # PREFETCH the dedup-graph edge read (guide §2.6): the surviving
+        # nodes are a subset of ALL affected founding nodes, which are known
+        # the moment mem lands — so the pruned edge_index lookup runs on a
+        # side thread over the affected-node superset, overlapping the
+        # survivor cut and the sidecar chain; the CC step below restricts
+        # to edges with BOTH endpoints surviving, which is exactly
+        # lookup(surviving nodes) since surviving ⊆ affected.
+        def _edges_prefetch():
+            all_nodes = (mem.select(F.col("rep_id").alias("a")).distinct()
+                         .localCheckpoint())
+            return lookup_edges_among(spark, edge_path, all_nodes,
+                                      cfg).localCheckpoint()
 
-    edges_future = _spawn(_edges_prefetch)
+        edges_future = spawn(_edges_prefetch)
 
-    surv = mem.join(rm, "image_id", "left_anti").localCheckpoint()
-    # cut once: surv_groups serves the sidecar chain's anti-join AND
-    # both broadcast build sides of the CC edge restriction below —
-    # lazy, the distinct would recompute per consumer (3x)
-    surv_groups = surv.select("rep_id").distinct().localCheckpoint()
+        surv = mem.join(rm, "image_id", "left_anti").localCheckpoint()
+        # cut once: surv_groups serves the sidecar chain's anti-join AND
+        # both broadcast build sides of the CC edge restriction below —
+        # lazy, the distinct would recompute per consumer (3x)
+        surv_groups = surv.select("rep_id").distinct().localCheckpoint()
 
-    # the dead-group / rep-remap sidecar chain consumes only mem + surv
-    # (both checkpointed) — nothing from the CC recompute — so the whole
-    # chain INCLUDING its staging writes runs on a side thread under the
-    # edge-lookup/CC/delta work below (guide §2.6)
-    def _st_sidecars():
-        gone_groups = (mem.join(rm, "image_id", "left_semi")
-                       .select("rep_id").distinct()
-                       .join(surv_groups, "rep_id", "left_anti")
-                       .localCheckpoint())
-        # remap refresh: every surviving group whose FOUNDING rep is not
-        # among the survivors points at its minimum surviving member
-        # (also re-points groups remapped by earlier batches whose
-        # target just died — the recompute is total over the affected
-        # slice)
-        founders_alive = (surv.filter(F.col("image_id") == F.col("rep_id"))
-                          .select("rep_id"))
-        remap_delta = (surv.groupBy("rep_id")
-                       .agg(F.min("image_id").alias("new_rep"))
-                       .join(founders_alive, "rep_id", "left_anti")
-                       .select(F.col("rep_id").alias("old_rep"),
-                               "new_rep"))
-        if not gone_groups.isEmpty():
-            (gone_groups.withColumn("gen", F.lit(new_gen)).repartition(1)
-             .write.mode("overwrite").parquet(f"{staging}/{DEAD_GROUPS}"))
-        if not remap_delta.isEmpty():
-            (remap_delta.withColumn("gen", F.lit(new_gen)).repartition(1)
-             .write.mode("overwrite").parquet(f"{staging}/{REP_REMAP}"))
+        # the dead-group / rep-remap sidecar chain consumes only mem + surv
+        # (both checkpointed) — nothing from the CC recompute — so the whole
+        # chain INCLUDING its staging writes runs on a side thread under the
+        # edge-lookup/CC/delta work below (guide §2.6)
+        def _st_sidecars():
+            gone_groups = (mem.join(rm, "image_id", "left_semi")
+                           .select("rep_id").distinct()
+                           .join(surv_groups, "rep_id", "left_anti")
+                           .localCheckpoint())
+            # remap refresh: every surviving group whose FOUNDING rep is not
+            # among the survivors points at its minimum surviving member
+            # (also re-points groups remapped by earlier batches whose
+            # target just died — the recompute is total over the affected
+            # slice)
+            founders_alive = (surv.filter(F.col("image_id") == F.col("rep_id"))
+                              .select("rep_id"))
+            remap_delta = (surv.groupBy("rep_id")
+                           .agg(F.min("image_id").alias("new_rep"))
+                           .join(founders_alive, "rep_id", "left_anti")
+                           .select(F.col("rep_id").alias("old_rep"),
+                                   "new_rep"))
+            if not gone_groups.isEmpty():
+                (gone_groups.withColumn("gen", F.lit(new_gen)).repartition(1)
+                 .write.mode("overwrite").parquet(f"{staging}/{DEAD_GROUPS}"))
+            if not remap_delta.isEmpty():
+                (remap_delta.withColumn("gen", F.lit(new_gen)).repartition(1)
+                 .write.mode("overwrite").parquet(f"{staging}/{REP_REMAP}"))
 
-    sidecars_future = _spawn(_st_sidecars)
+        spawn(_st_sidecars)
 
-    # -- connectivity: CC over surviving group nodes ---------------------
-    # (a dying group's edges vanish — only then can a cluster split; the
-    # edge read was prefetched over the affected-node superset above and
-    # is restricted here to both-endpoints-surviving — identical to
-    # looking up the surviving nodes directly)
-    t0 = time.time()
-    e_sup = edges_future.result()
-    sn_a = surv_groups.withColumnRenamed("rep_id", "a")
-    sn_b = surv_groups.withColumnRenamed("rep_id", "b")
-    edges = (e_sup.join(F.broadcast(sn_a), "a", "left_semi")
-             .join(F.broadcast(sn_b), "b", "left_semi")
-             .localCheckpoint())
-    n_edges = pipe._record("rm_cc_edges", edges, t0, after="rm_members")
-    roots_df = cc_roots(edges, n_edges, cfg).select(
-        F.col("image_id").alias("rep_id"), F.col("cluster_id").alias("root"))
-    t0 = time.time()
-    relab = (surv.select("image_id", "rep_id")
-             .join(F.broadcast(roots_df), "rep_id", "left")
-             .withColumn("root", F.coalesce("root", "rep_id")))
-    norm = relab.groupBy("root").agg(F.min("image_id").alias("cluster_id"))
-    delta = (relab.join(F.broadcast(norm), "root")
-             .select("image_id", "cluster_id").localCheckpoint())
-    pipe._record("rm_clusters", delta, t0, after="rm_cc_edges")
+        # -- connectivity: CC over surviving group nodes ---------------------
+        # (a dying group's edges vanish — only then can a cluster split; the
+        # edge read was prefetched over the affected-node superset above and
+        # is restricted here to both-endpoints-surviving — identical to
+        # looking up the surviving nodes directly)
+        t0 = time.time()
+        e_sup = edges_future.result()
+        sn_a = surv_groups.withColumnRenamed("rep_id", "a")
+        sn_b = surv_groups.withColumnRenamed("rep_id", "b")
+        edges = (e_sup.join(F.broadcast(sn_a), "a", "left_semi")
+                 .join(F.broadcast(sn_b), "b", "left_semi")
+                 .localCheckpoint())
+        n_edges = pipe._record("rm_cc_edges", edges, t0, after="rm_members")
+        roots_df = cc_roots(edges, n_edges, cfg).select(
+            F.col("image_id").alias("rep_id"),
+            F.col("cluster_id").alias("root"))
+        t0 = time.time()
+        relab = (surv.select("image_id", "rep_id")
+                 .join(F.broadcast(roots_df), "rep_id", "left")
+                 .withColumn("root", F.coalesce("root", "rep_id")))
+        norm = relab.groupBy("root").agg(F.min("image_id").alias("cluster_id"))
+        delta = (relab.join(F.broadcast(norm), "root")
+                 .select("image_id", "cluster_id").localCheckpoint())
+        pipe._record("rm_clusters", delta, t0, after="rm_cc_edges")
 
-    # -- stage the remaining deltas, then the shared manifest commit.
-    #    Tombstones and the dead-group/remap sidecars have been staging
-    #    on side threads since their inputs were cut; the clusters
-    #    rewrite and id_index delta run CONCURRENTLY here (guide §2.6)
-    def _st_id():
-        # id_index delta: survivors at their new label; removed ids at
-        # a NULL label (the dead marker — membership/tombstone-ness
-        # lives in the tombstones table, label resolution of a removed
-        # id is null)
-        null_s = F.lit(None).cast("string")
-        id_delta = (delta
-                    .withColumn("is_rep", F.lit(False))
-                    .withColumn("rep_id", null_s)
-                    .unionByName(rm.select("image_id",
-                                           null_s.alias("cluster_id"),
-                                           F.lit(False).alias("is_rep"),
-                                           null_s.alias("rep_id"))))
-        stage_id_append(id_delta, new_gen, staging, cfg)
+        # -- stage the remaining deltas, then the shared manifest commit.
+        #    Tombstones and the dead-group/remap sidecars have been staging
+        #    on side threads since their inputs were cut; the clusters
+        #    rewrite and id_index delta run CONCURRENTLY here (guide §2.6)
+        def _st_id():
+            # id_index delta: survivors at their new label; removed ids at
+            # a NULL label (the dead marker — membership/tombstone-ness
+            # lives in the tombstones table, label resolution of a removed
+            # id is null)
+            null_s = F.lit(None).cast("string")
+            id_delta = (delta
+                        .withColumn("is_rep", F.lit(False))
+                        .withColumn("rep_id", null_s)
+                        .unionByName(rm.select("image_id",
+                                               null_s.alias("cluster_id"),
+                                               F.lit(False).alias("is_rep"),
+                                               null_s.alias("rep_id"))))
+            stage_id_append(id_delta, new_gen, staging, cfg)
 
-    swap, _ = _run_parallel(
-        lambda: stage_clusters_rewrite(pipe, staging, clusters_stored, aff,
-                                       aff_buckets, delta, "rm"),
-        _st_id)
-    tomb_future.result()      # staged since the refusal checks passed
-    sidecars_future.result()  # staged since surv was cut
+        spawn(_st_id)
+        swap = stage_clusters_rewrite(pipe, staging, clusters_stored, aff,
+                                      aff_buckets, delta, "rm")
     finish_commit(spark, pipe.fs, checkpoint_dir, write_manifest(
         pipe, staging, new_gen, swap, [DEAD_GROUPS, REP_REMAP],
         ["id_index", TOMBSTONES]), pipe._flush_state)

@@ -41,3 +41,20 @@ def t1_fixture_dir():
         shutil.rmtree(out, ignore_errors=True)
         write_fixture_local(out, n_base=1000, seed=42)
     return out
+
+
+@pytest.fixture
+def assert_settled(spark):
+    """Checks for a build or mutation that just raised: no Spark job it
+    started (side chains included) is still running, and it left no
+    writer lock or commit manifest in ``ckpt``."""
+    from gsearch_spark.operators.pipeline import ADD_LOCK, ADD_MANIFEST
+
+    def check(ckpt: str) -> None:
+        sc = spark.sparkContext
+        # job-end events reach the status tracker through the listener bus
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        assert list(sc.statusTracker().getActiveJobsIds()) == []
+        for name in (ADD_LOCK, ADD_MANIFEST):
+            assert not os.path.exists(os.path.join(ckpt, name)), name
+    return check

@@ -11,6 +11,9 @@ from __future__ import annotations
 
 import os
 import shutil
+import sys
+import threading
+import time
 
 import pytest
 from pyspark.sql import functions as F
@@ -265,6 +268,55 @@ def test_add_commit_crash_rolls_forward(spark, add_build, monkeypatch):
     # 1st swap — AFTER its live partition dir was already deleted, the
     # nastiest window
     crash_scenario("/tmp/gsearch_spark_ckpt_crash_b", "rename", 1)
+
+
+def test_failed_add_joins_side_chains(spark, add_build, monkeypatch,
+                                      assert_settled):
+    """verify raising on the main thread must not leave a side chain
+    running after incremental_add raises: the endpoint-label prefetch,
+    held open until the failure, finishes before the call returns, and
+    the same add then succeeds on that build."""
+    from gsearch_spark.operators import keyidx, verify
+    images = add_build["images"]
+    ids = sorted(r["image_id"] for r in images.select("image_id").collect())
+    cut = ids[int(len(ids) * 0.8)]
+    old = images.filter(F.col("image_id") < cut)
+    new = images.filter(F.col("image_id") >= cut)
+    ckpt = "/tmp/gsearch_spark_ckpt_add_fail"
+    shutil.rmtree(ckpt, ignore_errors=True)
+    NearDupPipeline(spark, CFG, ckpt).run(old, resume=False)
+
+    failed = threading.Event()
+    finished: "list[float]" = []
+    real_lookup = keyidx.lookup_id_index
+
+    def held_lookup(*args, **kwargs):
+        df = real_lookup(*args, **kwargs)
+        if sys._getframe(1).f_code.co_name != "_ep_prefetch":
+            return df
+
+        def collect():
+            assert failed.wait(60)
+            rows = type(df).collect(df)
+            finished.append(time.time())
+            return rows
+        df.collect = collect
+        return df
+
+    def failing_verify(*args, **kwargs):
+        failed.set()
+        raise RuntimeError("injected verify failure")
+
+    monkeypatch.setattr(keyidx, "lookup_id_index", held_lookup)
+    monkeypatch.setattr(verify, "verify_pairs", failing_verify)
+    with pytest.raises(RuntimeError, match="injected verify failure"):
+        incremental_add(spark, CFG, ckpt, new, images)
+    raised_at = time.time()
+    assert finished and finished[0] < raised_at, "prefetch outlived the add"
+    assert_settled(ckpt)
+    monkeypatch.undo()
+    assert _assign(incremental_add(spark, CFG, ckpt, new, images)) \
+        == add_build["added"]
 
 
 def test_incremental_add_distributed_cc_fallback(spark, add_build):

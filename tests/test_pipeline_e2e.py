@@ -8,13 +8,14 @@ from __future__ import annotations
 
 import os
 import shutil
+import time
 
 import numpy as np
 import pyarrow.parquet as pq
 import pytest
 
 from gsearch_spark.config import PipelineConfig
-from gsearch_spark.operators.pipeline import NearDupPipeline
+from gsearch_spark.operators.pipeline import NearDupPipeline, chains
 from gsearch_spark.operators.signatures import compute_signatures
 from gsearch_spark.oracle import (cluster_pair_recall, oracle_clusters,
                                   oracle_minhash, oracle_pairs_bruteforce,
@@ -150,7 +151,8 @@ def test_attach_strategies_identical(spark, small_fixture_dir):
 
 def test_build_joins_side_chains_when_a_stage_fails(spark,
                                                     small_fixture_dir,
-                                                    monkeypatch):
+                                                    monkeypatch,
+                                                    assert_settled):
     """A stage raising between spawn and join (here: clusters) must not
     leave the build's side chains running after run() raises — the
     ck_index / edge_index writes that overlap clusters are joined, so no
@@ -166,8 +168,33 @@ def test_build_joins_side_chains_when_a_stage_fails(spark,
     images = spark.read.parquet(f"{small_fixture_dir}/images.parquet")
     with pytest.raises(RuntimeError, match="injected clusters failure"):
         NearDupPipeline(spark, CFG, ckpt).run(images, resume=False)
-    # job-end events reach the status tracker through the listener bus
-    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
-    assert list(spark.sparkContext.statusTracker().getActiveJobsIds()) == []
+    assert_settled(ckpt)
     for stage in ("ck_index", "edge_index"):
         assert os.path.exists(os.path.join(ckpt, stage, "_SUCCESS")), stage
+
+
+def test_chains_scope_joins_every_chain(spark):
+    """chains() cannot be left while a chain runs: a failing body waits
+    for its chains, then re-raises its own error; a clean body re-raises
+    the first failed chain's error in spawn order."""
+    finished = []
+
+    def slow(tag):
+        time.sleep(0.3)
+        finished.append(tag)
+
+    def fail(msg):
+        raise ValueError(msg)
+
+    with pytest.raises(RuntimeError, match="body"):
+        with chains() as spawn:
+            spawn(lambda: slow("a"))
+            spawn(lambda: fail("chain"))
+            raise RuntimeError("body")
+    assert finished == ["a"]
+    with pytest.raises(ValueError, match="first"):
+        with chains() as spawn:
+            spawn(lambda: slow("b"))
+            spawn(lambda: fail("first"))
+            spawn(lambda: fail("second"))
+    assert finished == ["a", "b"]

@@ -13,6 +13,8 @@ from __future__ import annotations
 
 import os
 import shutil
+import threading
+import time
 
 import numpy as np
 import pytest
@@ -338,6 +340,51 @@ def test_remove_commit_crash_rolls_forward(spark, monkeypatch):
     out = remove_images(spark, CFG, crash, spark.createDataFrame(
         [("c_c",)], "image_id string"))
     assert _assign(out) == {"c_b": "c_b"}
+
+
+def test_failed_remove_joins_side_chains(spark, monkeypatch,
+                                         assert_settled):
+    """cc_roots raising must not leave a side chain writing into
+    _add_staging after remove_images raises and drops the writer lock:
+    the tombstone staging write, held open until the failure, finishes
+    before the call returns, and the same remove then succeeds."""
+    from pyspark.sql.readwriter import DataFrameWriter
+    from gsearch_spark.operators import remove
+    px1, px2 = _pixels(41), _pixels(42)
+    images = spark.createDataFrame(
+        [_row("f_a", px1, "fail cap"), _row("f_b", px1, "fail cap"),
+         _row("f_c", px2, "other")], IMG_SCHEMA)
+    ckpt = "/tmp/gsearch_spark_ckpt_rm_fail"
+    shutil.rmtree(ckpt, ignore_errors=True)
+    NearDupPipeline(spark, CFG, ckpt).run(images, resume=False)
+    rm = spark.createDataFrame([("f_a",)], "image_id string")
+
+    failed = threading.Event()
+    finished: "list[float]" = []
+    real_parquet = DataFrameWriter.parquet
+
+    def held_parquet(self, path, *args, **kwargs):
+        if not path.endswith(f"/_add_staging/{remove.TOMBSTONES}"):
+            return real_parquet(self, path, *args, **kwargs)
+        assert failed.wait(60)
+        real_parquet(self, path, *args, **kwargs)
+        finished.append(time.time())
+
+    def failing_cc(*args, **kwargs):
+        failed.set()
+        raise RuntimeError("injected CC failure")
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", held_parquet)
+    monkeypatch.setattr(remove, "cc_roots", failing_cc)
+    with pytest.raises(RuntimeError, match="injected CC failure"):
+        remove_images(spark, CFG, ckpt, rm)
+    raised_at = time.time()
+    assert finished and finished[0] < raised_at, \
+        "tombstone write outlived the remove"
+    assert_settled(ckpt)
+    monkeypatch.undo()
+    assert _assign(remove_images(spark, CFG, ckpt, rm)) == \
+        {"f_b": "f_b", "f_c": "f_c"}
 
 
 def test_purge_restores_zero_removal_build(spark, removal_build):

@@ -7,7 +7,8 @@ rows into a DataFrame.
 ``LocalTableScan`` instead of a pickled PythonRDD scan.  Two guards keep
 it the only way: a source walk finds no other ``createDataFrame`` call
 in the package, and a build, an add and a remove run with no stage whose
-operation graph holds a ``PythonRDD`` node."""
+operation graph holds a ``PythonRDD`` node.  The same source walk keeps
+the package's thread starts inside ``pipeline.chains``."""
 
 from __future__ import annotations
 
@@ -108,24 +109,47 @@ def test_local_frame_many_rows_is_one_local_relation(spark):
             == (3000, sum(range(3000))))
 
 
-def test_no_create_dataframe_outside_local_frame():
-    """Source guard: inside the package, only local_frame may call
-    createDataFrame (a list-built frame is a PythonRDD scan)."""
+def _used_outside(names: "set[str]", owner_file: str,
+                  owners: "set[str]") -> "list[str]":
+    """Places (file:line) in the package that use any of ``names`` — as
+    an attribute, a bare name or an import — outside the functions
+    ``owners`` of the module file ``owner_file``."""
     root = pathlib.Path(gsearch_spark.__file__).parent
     offenders = []
     for path in sorted(root.rglob("*.py")):
         tree = ast.parse(path.read_text(), filename=str(path))
         allowed = set()
         for node in ast.walk(tree):
-            if (isinstance(node, ast.FunctionDef)
-                    and node.name == "local_frame"
-                    and path.name == "session.py"):
+            if (isinstance(node, ast.FunctionDef) and node.name in owners
+                    and path.name == owner_file):
                 allowed |= {id(n) for n in ast.walk(node)}
         for node in ast.walk(tree):
-            if (isinstance(node, ast.Attribute)
-                    and node.attr == "createDataFrame"
-                    and id(node) not in allowed):
+            used = (node.attr if isinstance(node, ast.Attribute)
+                    else node.id if isinstance(node, ast.Name)
+                    else node.name if isinstance(node, ast.alias)
+                    else None)
+            if used in names and id(node) not in allowed:
                 offenders.append(f"{path.relative_to(root)}:{node.lineno}")
+    return offenders
+
+
+def test_no_create_dataframe_outside_local_frame():
+    """Source guard: inside the package, only local_frame may call
+    createDataFrame (a list-built frame is a PythonRDD scan)."""
+    offenders = _used_outside({"createDataFrame"}, "session.py",
+                              {"local_frame"})
+    assert not offenders, offenders
+
+
+def test_threads_start_only_in_chains():
+    """Source guard: ``pipeline.chains`` is the one way the package
+    starts a Spark side chain (its scope joins every chain), so thread
+    pools, threads and pyspark's thread wrapper appear only there and
+    in ``_fanout``, the commit's FS-metadata rename pool (no Spark
+    jobs)."""
+    offenders = _used_outside(
+        {"ThreadPoolExecutor", "Thread", "inheritable_thread_target"},
+        "pipeline.py", {"chains", "_fanout"})
     assert not offenders, offenders
 
 
