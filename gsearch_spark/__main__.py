@@ -125,21 +125,15 @@ def _cmd_add_locked(args, spark, fs, cfg, manifest, new_images) -> int:
         # build commit resumes cleanly instead of refusing forever
         # (genuine conflicts with the BUILD still refuse inside
         # incremental_add's id-clash check).
-        from pyspark.sql import functions as F
         from gsearch_spark.bucketed import (append_images_bucketed,
                                             ensure_bucketed_table)
+        from gsearch_spark.operators.keyidx import probe_keys
         table = manifest["payload_table"]
         ensure_bucketed_table(spark, table, manifest["payload_path"],
                               manifest["payload_buckets"],
                               ddl=manifest.get("payload_schema"))
-        ids = [r[0] for r in new_images.select("image_id")
-               .limit(cfg.add_lookup_max_literals + 1).collect()]
-        present = spark.table(table).select("image_id")
-        if len(ids) <= cfg.add_lookup_max_literals:
-            present = present.filter(F.col("image_id").isin(ids))
-        else:
-            present = present.join(new_images.select("image_id"),
-                                   "image_id", "left_semi")
+        present = probe_keys(spark.table(table).select("image_id"),
+                             "image_id", new_images)
         missing = new_images.join(present, "image_id", "left_anti")
         if not missing.isEmpty():
             append_images_bucketed(spark, missing, table)

@@ -17,6 +17,10 @@ import json
 import math
 from dataclasses import dataclass
 
+# former fields, ignored when read from a stored parameters.json
+RETIRED_FIELDS = ("pair_cap_per_bucket", "verify_broadcast_max_ids",
+                  "add_lookup_max_literals")
+
 
 @dataclass(frozen=True)
 class PipelineConfig:
@@ -79,15 +83,20 @@ class PipelineConfig:
     # --- verification (BASELINE.json input_hint invariant)
     psnr_min_db: float = 40.0
     caption_equality: str = "normalized"
-    # --- execution
+    # --- execution.  Driver budgets that only pick between equivalent
+    # plans are module constants beside the rule that reads them, not
+    # fields, so retuning one keeps a build's identity: the key-set probe
+    # (operators/keyidx.py INLIST_MAX / BROADCAST_KEYS_MAX) and the
+    # payload attach's broadcast budget (operators/verify.py
+    # BROADCAST_MAX_IDS).  The fields below still hash into it
     shuffle_partitions: int = 32
-    pair_cap_per_bucket: int = 2000  # hard guard against pair explosion
-    # verify payload attach: "auto" counts candidate ids and broadcasts
-    # only under verify_broadcast_max_ids; "broadcast"/"shuffle" force a
-    # strategy (at 10^12 rows the id set is billions of keys — the
-    # shuffle-hash semi join is the scale path, broadcast the fast path)
+    # verify payload attach: "auto" broadcasts the candidate-id set when
+    # the caller's algebraic distinct-id bound fits the broadcast budget
+    # (verify.attach_strategy; no count job), else shuffles;
+    # "broadcast"/"shuffle" force a strategy (at 10^12 rows the id set is
+    # billions of keys — the shuffle-hash semi join is the scale path,
+    # broadcast the fast path)
     verify_attach: str = "auto"
-    verify_broadcast_max_ids: int = 5_000_000
     # hot-bucket salting: bound the driver-collected hot list; buckets
     # beyond the cap stay unsalted (star policy still caps their pairs)
     max_hot_buckets: int = 100_000
@@ -135,10 +144,6 @@ class PipelineConfig:
     # resuming or appending to a checkpoint written by an older layout
     # refuses loudly instead of mis-reading it.
     layout_version: int = 2
-    # probe key sets up to this size ship as IN-list literals (parquet
-    # row-group stats pruning); larger sets fall back to a semi join over
-    # the partition-pruned slice (still never the whole table)
-    add_lookup_max_literals: int = 10_000
     # request: per-(band,bucket) stored-member cap, xxhash64-ordered heads
     # (operators/request.py::probe_candidates).  DEFAULT ON: at 10^12 rows
     # a query landing in a viral bucket (10^6 stored copies of one meme)
@@ -194,6 +199,11 @@ class PipelineConfig:
     @classmethod
     def from_json(cls, text: str) -> "PipelineConfig":
         d = json.loads(text)
+        # execution budgets that left the config: a parameters.json
+        # written while they were fields names them; dropping them keeps
+        # that build's identity equal to today's config
+        for key in RETIRED_FIELDS:
+            d.pop(key, None)
         # parameters.json written before the layout_version field existed
         # describes a layout-1 checkpoint — do NOT let the dataclass
         # default claim otherwise, so the hash discipline refuses it

@@ -36,14 +36,17 @@ the build whose LAYOUT makes point lookups prune to O(probed keys) IO.
     image (run it offline when the stale fraction grows; at 10^12 scale
     this is the routine Iceberg rewrite-data-files maintenance job).
 
-Both probes follow one pattern (:func:`_pruned`): the touched partition
-list is computed from the probe keys (at most ``min(|keys|,
-key_buckets)`` values — always driver-collectable) and applied as a
-partition filter; when the probe key set fits
-``cfg.add_lookup_max_literals`` it additionally ships as an IN-list so
-parquet row-group stats on the key-sorted files prune inside each
-partition.  Larger probe sets degrade to a semi join over the
-partition-pruned slice — still never a full-table scan.
+Every key-set probe in the package — these lookups, the add's touched
+phash slice, the CLI's and the stream's payload-table membership checks
+— is one rule, :func:`probe_keys`: ONE collect of the distinct probe
+keys (capped at ``BROADCAST_KEYS_MAX + 1``) resolves both the keys and,
+on a hive-partitioned table, their bucket set (at most ``min(|keys|,
+buckets)`` values), applied as a partition filter.  Up to
+``INLIST_MAX`` keys then ship as an IN-list so parquet row-group stats
+on the key-sorted files prune inside each partition; up to
+``BROADCAST_KEYS_MAX`` they join as a broadcast local-relation semi
+join; past it the probe joins the keys themselves — still
+partition-pruned, never a full-table scan of a partitioned table.
 """
 
 from __future__ import annotations
@@ -67,21 +70,23 @@ def read_edge_index(spark: SparkSession, path: str) -> DataFrame:
     build's table is empty — inference would fail)."""
     return spark.read.schema(EDGE_SCHEMA).parquet(path)
 
-# Key-filter strategy switch inside a partition-pruned lookup.  Up to
-# this many probe keys ship as an IN-list: parquet's in-filter pushdown
-# (spark.sql.parquet.pushdown.inFilterThreshold) evaluates each literal
-# against row-group stats on the key-sorted files — a true point lookup
-# (the streaming / single-image add case).  Past it the pushdown
-# silently degrades to a min/max RANGE filter, which on arbitrary probe
-# keys covers every row group — all the IN-list then buys is a per-row
-# O(|keys|)-ish predicate that measured 1.85 s vs 0.47 s for a
-# broadcast left-semi join against the same 2,196-key probe at 213k
-# stored rows.  So larger probe sets join instead: a LocalRelation
-# built from the already-collected keys, explicitly broadcast — same
-# partition pruning, no literal-evaluation tax.  Execution strategy
-# only (never signature-affecting), hence a constant and not a
-# PipelineConfig field.
+# The two bounds of probe_keys, execution strategy only (never
+# signature-affecting), hence constants and not PipelineConfig fields.
+# Up to INLIST_MAX probe keys ship as an IN-list: parquet's in-filter
+# pushdown (spark.sql.parquet.pushdown.inFilterThreshold) evaluates each
+# literal against row-group stats on the key-sorted files — a true
+# point lookup (the streaming / single-image add case).  Past it the
+# pushdown silently degrades to a min/max RANGE filter, which on
+# arbitrary probe keys covers every row group — all the IN-list then
+# buys is a per-row O(|keys|)-ish predicate that measured 1.85 s vs
+# 0.47 s for a broadcast left-semi join against the same 2,196-key probe
+# at 213k stored rows.  So up to BROADCAST_KEYS_MAX keys join as a
+# LocalRelation built from the already-collected keys, explicitly
+# broadcast — same partition pruning, no literal-evaluation tax.  Past
+# it the keys stay distributed: the probe semi-joins the key DataFrame
+# instead of collecting it to the driver.
 INLIST_MAX = 32
+BROADCAST_KEYS_MAX = 10_000
 
 
 def key_bucket(col: str, buckets: int) -> "F.Column":
@@ -207,54 +212,54 @@ def lookup_edges_among(spark: SparkSession, path: str, nodes: DataFrame,
     the same already-small node list)."""
     if idx_df is None:
         idx_df = read_edge_index(spark, path)  # inference-safe when empty
-    hits = _pruned(spark, path, "eb", "a", nodes, cfg, idx_df=idx_df)
+    hits = probe_keys(idx_df, "a", nodes, "eb", cfg.key_buckets)
     far = nodes.select(F.col("a").alias("b")).distinct()
     return (hits.join(F.broadcast(far), "b", "left_semi")
             .select("a", "b"))
 
 
 # --------------------------------------------------------------- lookups
+# ``idx_df`` lets a caller issuing several lookups against the same
+# table reuse one file-index listing (each fresh ``spark.read.parquet``
+# over the partition dirs costs ~2 s of driver-side listing at 64
+# buckets).
 
-def _pruned(spark: SparkSession, path: str, part_col: str, key_col: str,
-            keys: DataFrame, cfg: PipelineConfig,
-            idx_df: "DataFrame | None" = None) -> DataFrame:
-    """The shared pruned-point-lookup plan: partition filter from the
-    probe keys' bucket set + IN-list (or partition-pruned semi join)
-    on the key column.  ONE collect resolves both the literal list and
-    its bucket set (the bucket is a pure function of the key); only a
-    probe set past the literal cap pays a second, buckets-only collect
-    for the semi-join fallback.  ``idx_df`` lets a caller issuing
-    several lookups against the same table reuse one file-index listing
-    (each fresh ``spark.read.parquet`` over the partition dirs costs
-    ~2 s of driver-side listing at 64 buckets)."""
-    kb = key_bucket(key_col, cfg.key_buckets)
+def probe_keys(table: DataFrame, key_col: str, keys: DataFrame,
+               part_col: "str | None" = None, buckets: int = 0
+               ) -> DataFrame:
+    """Rows of ``table`` whose ``key_col`` value appears in the
+    same-named column of ``keys`` — the package's one key-set probe
+    (module docstring).  ``part_col``/``buckets`` name a
+    hive partition column holding ``key_bucket(key_col, buckets)``;
+    the probe then partition-filters on the keys' bucket set.  ONE
+    collect resolves the keys and their buckets (the bucket is a pure
+    function of the key); only a partitioned probe past
+    ``BROADCAST_KEYS_MAX`` pays a second, buckets-only collect."""
+    kb = key_bucket(key_col, buckets) if part_col else F.lit(0)
     pairs = (keys.select(F.col(key_col).alias("k"), kb.alias("pb"))
-             .distinct().limit(cfg.add_lookup_max_literals + 1).collect())
-    idx = idx_df if idx_df is not None else spark.read.parquet(path)
-    if len(pairs) <= cfg.add_lookup_max_literals:
-        buckets = sorted({p["pb"] for p in pairs})
-        sliced = idx.filter(F.col(part_col).isin(buckets))
-        if len(pairs) <= INLIST_MAX:
-            # few enough literals for parquet's in-filter row-group
-            # pruning: the genuine point-lookup path
-            return sliced.filter(
-                F.col(key_col).isin([p["k"] for p in pairs]))
-        # reuse the one collect as a broadcast LocalRelation probe —
-        # no second job over `keys`, no large-IN-list evaluation tax
-        probe = local_frame(spark, [(p["k"],) for p in pairs],
-                            keys.select(key_col).schema)
-        return sliced.join(F.broadcast(probe), key_col, "left_semi")
-    buckets = sorted(r[0] for r in
-                     keys.select(kb.alias("pb")).distinct().collect())
-    return (idx.filter(F.col(part_col).isin(buckets))
-            .join(keys.select(key_col).distinct(), key_col, "left_semi"))
+             .distinct().limit(BROADCAST_KEYS_MAX + 1).collect())
+    if len(pairs) > BROADCAST_KEYS_MAX:
+        if part_col:
+            table = table.filter(F.col(part_col).isin(sorted(
+                r[0] for r in keys.select(kb).distinct().collect())))
+        return table.join(keys.select(key_col).distinct(), key_col,
+                          "left_semi")
+    if part_col:
+        table = table.filter(
+            F.col(part_col).isin(sorted({p["pb"] for p in pairs})))
+    if len(pairs) <= INLIST_MAX:
+        return table.filter(F.col(key_col).isin([p["k"] for p in pairs]))
+    probe = local_frame(keys.sparkSession, [(p["k"],) for p in pairs],
+                        keys.select(key_col).schema)
+    return table.join(F.broadcast(probe), key_col, "left_semi")
 
 
 def lookup_ck_index(spark: SparkSession, path: str, cks: DataFrame,
                     cfg: PipelineConfig,
                     idx_df: "DataFrame | None" = None) -> DataFrame:
     """(ck, rep_id) for exactly the probed cks present in the build."""
-    return (_pruned(spark, path, "kb", "ck", cks, cfg, idx_df=idx_df)
+    idx = idx_df if idx_df is not None else spark.read.parquet(path)
+    return (probe_keys(idx, "ck", cks, "kb", cfg.key_buckets)
             .select("ck", "rep_id"))
 
 
@@ -264,7 +269,8 @@ def lookup_id_index(spark: SparkSession, path: str, ids: DataFrame,
     """(image_id, cluster_id, is_rep, rep_id) — latest generation wins
     (rep_id: the single non-null first-appearance value, via null-
     skipping max) — for exactly the probed ids present in the build."""
-    return (_pruned(spark, path, "ib", "image_id", ids, cfg, idx_df=idx_df)
+    idx = idx_df if idx_df is not None else spark.read.parquet(path)
+    return (probe_keys(idx, "image_id", ids, "ib", cfg.key_buckets)
             .groupBy("image_id")
             .agg(F.max_by("cluster_id", "gen").alias("cluster_id"),
                  F.bool_or("is_rep").alias("is_rep"),
@@ -310,11 +316,6 @@ def recover_table_swap(fs, path: str) -> bool:
     return False
 
 
-# established call sites (pipeline add entry, tests) use the original,
-# id_index-specific name
-recover_id_index_compaction = recover_table_swap
-
-
 def swap_table_in(fs, path: str, staged: str) -> None:
     """Atomically swap a fully-staged replacement directory into
     ``path`` via the two-rename protocol :func:`recover_table_swap`
@@ -341,13 +342,13 @@ def compact_id_index(spark: SparkSession, path: str,
     generation rows.  The swap is crash-safe: the compacted table is
     fully staged, then swapped in via two renames (never a delete of
     the live table before its replacement is in place);
-    :func:`recover_id_index_compaction` rolls any torn window forward."""
+    :func:`recover_table_swap` rolls any torn window forward."""
     from gsearch_spark.operators.pipeline import add_writer_lock
     from gsearch_spark.fs import CheckpointFS
     ckpt_dir = path.rsplit("/", 1)[0]
     with add_writer_lock(spark, ckpt_dir):
         fs = CheckpointFS(spark, path)
-        recover_id_index_compaction(fs, path)  # clear any prior torn swap
+        recover_table_swap(fs, path)  # clear any prior torn swap
         compacted = (spark.read.parquet(path)
                      .groupBy("image_id")
                      .agg(F.max_by("cluster_id", "gen").alias("cluster_id"),

@@ -425,8 +425,8 @@ class NearDupPipeline:
                 spawn(_stats)
 
             # -- stage 4: verified edges -----------------------------------
-            # the candidate_pairs stage record bounds the pair count, so
-            # the attach strategy resolves WITHOUT the auto id-count job
+            # the candidate_pairs stage record bounds the pair count, and
+            # so the attach's distinct-id count (two ids per pair)
             edges, n_edges = self._stage(
                 "verified_edges", resume,
                 lambda p: verified_edges(pairs, images_rep, self.cfg,
@@ -718,12 +718,13 @@ def incremental_add(spark: SparkSession, cfg: PipelineConfig,
                                                     probe_pairs_vs_stored)
     from gsearch_spark.operators.exact import content_keys
     from gsearch_spark.operators.keyidx import (lookup_ck_index,
-                                                lookup_id_index,
+                                                lookup_id_index, probe_keys,
                                                 stage_ck_append,
                                                 stage_edge_append,
                                                 stage_id_append)
     from gsearch_spark.operators.suffix import suffix_candidate_pairs
     from gsearch_spark.operators.verify import (attach_payloads,
+                                                attach_strategy,
                                                 prefilter_pairs, verify_pairs)
 
     pipe = NearDupPipeline(spark, cfg, checkpoint_dir)
@@ -824,20 +825,14 @@ def incremental_add(spark: SparkSession, cfg: PipelineConfig,
             # its phash), and the suffix tail filters pairs to new-rep
             # endpoints, so using the superset changes nothing downstream
             # while letting this chain overlap the setup lookups instead of
-            # waiting for exact grouping.  When the touched set is small
-            # enough to ship as literals, push it down as an isin() filter
-            # so parquet row-group stats prune the payload scan (on a
-            # phash-sorted / z-ordered Iceberg table this turns the per-add
-            # suffix input read into O(touched groups) IO); bulk appends
-            # past the cap fall back to the semi join.
-            ph_vals = [r[0] for r in new_images.select("phash").distinct()
-                       .limit(10_001).collect()]
-            if len(ph_vals) <= 10_000:
-                touched_imgs = all_images.filter(F.col("phash").isin(ph_vals))
-            else:
-                touched_imgs = all_images.join(
-                    new_images.select("phash").distinct(), "phash",
-                    "left_semi")
+            # waiting for exact grouping.  The slice is a key-set probe
+            # of the payload table (keyidx.probe_keys): a few touched
+            # phashes push down as an IN-list so parquet row-group stats
+            # prune the payload scan (on a phash-sorted / z-ordered
+            # Iceberg table this turns the per-add suffix input read into
+            # O(touched groups) IO).
+            touched_imgs = probe_keys(all_images, "phash",
+                                      new_images.select("phash"))
             # eager cut — O(touched) keys+caption rows: the slice feeds the
             # rep-ness lookup's key collect AND the suffix input join, which
             # otherwise re-scan the corpus metadata once each
@@ -1035,28 +1030,21 @@ def incremental_add(spark: SparkSession, cfg: PipelineConfig,
                                     F.col("b")).otherwise(F.col("a"))))
         w_cap = Window.partitionBy("key").orderBy("other")
         # eager cut: O(new x cap) keys-only rows.  The capped-pair subtree
-        # (meta joins + window) otherwise evaluates THREE times — once for
-        # attach's auto-strategy id count, once as the candidate-id semi
-        # build side, once as the pair probe side (guide §2.4: duplicated
-        # subtrees in the plan)
+        # (meta joins + window) otherwise evaluates twice — once as the
+        # candidate-id semi build side, once as the pair probe side
+        # (guide §2.4: duplicated subtrees in the plan)
         capped = (keyed.withColumn("rn", F.row_number().over(w_cap))
                   .filter(F.col("rn") <= cfg.add_max_candidates_per_item)
                   .select("a", "b", "src")).localCheckpoint()
         # materialize_slim: the candidate payload slice is O(new x cap) ids
         # out of the whole corpus — one eager cut replaces TWO full payload
         # scans in the pair-attach plan (guide §8: move heavy bytes once).
-        # The "auto" strategy's id-count job is SKIPPED when the algebraic
-        # bound already proves broadcast fits: every capped pair has a new
-        # endpoint, so distinct ids <= 2 x new x cap — no count needed.
-        # Bulk adds past the bound keep the counted auto path.
-        attach_strategy = cfg.verify_attach
-        if (attach_strategy == "auto"
-                and 2 * n_new * cfg.add_max_candidates_per_item
-                <= cfg.verify_broadcast_max_ids):
-            attach_strategy = "broadcast"
+        # Every capped pair has a new endpoint, so distinct candidate ids
+        # <= 2 x new x cap bounds the attach strategy.
         attached = attach_payloads(
-            capped, all_images, strategy=attach_strategy,
-            broadcast_max_ids=cfg.verify_broadcast_max_ids,
+            capped, all_images,
+            strategy=attach_strategy(
+                cfg, 2 * n_new * cfg.add_max_candidates_per_item),
             materialize_slim=True)
 
         # PREFETCH the endpoint-label lookup under the verify stage (guide

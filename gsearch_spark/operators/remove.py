@@ -210,20 +210,9 @@ def remove_images(spark: SparkSession, cfg: PipelineConfig,
 
         # -- affected clusters: members read under pbucket pruning ----------
         t0 = time.time()
-        pb = cluster_pbucket(cfg).alias("pb")
-        if n_rm <= cfg.add_lookup_max_literals:
-            # the affected-label set is bounded by the remove batch: ONE
-            # collect resolves the labels AND their bucket set (instead of
-            # a localCheckpoint job + a buckets-only collect job)
-            aff_rows = (info.select("cluster_id").distinct()
-                        .select("cluster_id", pb).collect())
-            aff_buckets = sorted({r["pb"] for r in aff_rows})
-            aff = local_frame(spark, [(r["cluster_id"],) for r in aff_rows],
-                              "cluster_id string")
-        else:
-            aff = info.select("cluster_id").distinct().localCheckpoint()
-            aff_buckets = sorted(r[0] for r in
-                                 aff.select(pb).distinct().collect())
+        aff = info.select("cluster_id").distinct().localCheckpoint()
+        aff_buckets = sorted(r[0] for r in aff.select(cluster_pbucket(cfg))
+                             .distinct().collect())
         members = (clusters_stored
                    .filter(F.col("pbucket").isin(aff_buckets))
                    .join(F.broadcast(aff), "cluster_id")

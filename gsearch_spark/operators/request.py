@@ -183,7 +183,7 @@ def request(spark: SparkSession, checkpoint_dir: str,
             "parameters.json discipline)")
     cfg = stored_cfg
     if max_bucket_probe is None:
-        max_bucket_probe = getattr(cfg, "max_bucket_probe", 0)
+        max_bucket_probe = cfg.max_bucket_probe
     cap = max_bucket_probe if max_bucket_probe else None  # 0 = exact
 
     # localCheckpoint (eager): the probe signatures feed BOTH the band

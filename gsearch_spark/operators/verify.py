@@ -78,9 +78,31 @@ def prefilter_pairs(pairs: DataFrame, images: DataFrame,
             .select("a", "b", "src"))
 
 
+# Broadcast budget of the payload attach's candidate-id semi join, in
+# distinct ids.  Execution strategy only (never signature-affecting),
+# hence a constant and not a PipelineConfig field.
+BROADCAST_MAX_IDS = 5_000_000
+
+
+def attach_strategy(cfg: PipelineConfig, n_ids_bound: "int | None") -> str:
+    """The one attach rule: broadcast the candidate-id set when the
+    caller's bound on its distinct ids fits ``BROADCAST_MAX_IDS``, else
+    (past it, or with no bound) the shuffle-hash semi join.  The bound
+    comes from sizes the caller already holds — the build's
+    candidate_pairs stage record, the add's new-row count x candidate
+    cap — so choosing costs no job (*To Partition, or Not to
+    Partition*, SIGMOD 2021: decide broadcast vs partitioned once, from
+    a size the engine knows).  ``cfg.verify_attach`` "broadcast" /
+    "shuffle" overrides the rule."""
+    if cfg.verify_attach != "auto":
+        return cfg.verify_attach
+    if n_ids_bound is not None and n_ids_bound <= BROADCAST_MAX_IDS:
+        return "broadcast"
+    return "shuffle"
+
+
 def attach_payloads(pairs: DataFrame, images: DataFrame,
-                    strategy: str = "auto",
-                    broadcast_max_ids: int = 5_000_000,
+                    strategy: str = "shuffle",
                     materialize_slim: bool = False) -> DataFrame:
     """pairs (a,b,src) + images -> one row per pair with both payloads.
 
@@ -88,13 +110,13 @@ def attach_payloads(pairs: DataFrame, images: DataFrame,
     images side to ids that actually appear in a candidate pair BEFORE the
     two payload joins, so only candidate payloads ever shuffle.
 
-    Semi-join strategy (cfg.verify_attach): the id set is keys-only and
-    normally orders of magnitude smaller than the table, so ``broadcast``
-    is the fast path — but at 10^12 rows it can reach billions of keys
-    and OOM the driver.  ``auto`` counts the ids (a cheap keys-only agg
-    over the checkpointed pairs) and falls back to a SHUFFLE-HASH semi
-    join above ``broadcast_max_ids``; the shuffle path shuffles the
-    payload table once on image_id, which is bounded and spillable.
+    ``strategy`` (from :func:`attach_strategy`) is the semi join's:
+    ``broadcast`` ships the keys-only id set to every task — the fast
+    path, since the set is normally orders of magnitude smaller than the
+    table; ``shuffle`` (the default, safe at any size) is a SHUFFLE-HASH
+    semi join for id sets that could OOM the driver — billions of keys at
+    10^12 rows — and shuffles the payload table once on image_id, which
+    is bounded and spillable.  Neither runs a job to decide.
 
     ``materialize_slim``: both payload joins below consume ``slim``, so
     the plan otherwise scans the full payload table TWICE.  When the
@@ -108,9 +130,6 @@ def attach_payloads(pairs: DataFrame, images: DataFrame,
     cand_ids = (pairs.select(F.col("a").alias("image_id"))
                 .union(pairs.select(F.col("b").alias("image_id")))
                 .distinct())
-    if strategy == "auto":
-        strategy = ("broadcast" if cand_ids.count() <= broadcast_max_ids
-                    else "shuffle")
     if strategy == "broadcast":
         semi = F.broadcast(cand_ids)
     else:
@@ -218,30 +237,24 @@ def verified_edges(pairs: DataFrame, images: DataFrame,
     """Full verify stage: metadata prefilter (phase 1, JVM) -> payload
     attach -> pixel/caption verify (phase 2, Arrow); keep dup edges.
 
-    The prefiltered pair list is cut eagerly: it feeds the attach
-    strategy's id count, the candidate-id semi join AND the pair probe
-    side — three evaluations of the same meta-join subtree without the
-    cut (guide §2.4 duplicated subtrees).  It is keys-only rows of the
-    same magnitude as the candidate_pairs checkpoint (star-capped, so
-    O(n x bands) even at 10^12 rows — the stage already materializes
-    that table to parquet).
+    The prefiltered pair list is cut eagerly: it feeds both the
+    candidate-id semi join AND the pair probe side — two evaluations of
+    the same meta-join subtree without the cut (guide §2.4 duplicated
+    subtrees).  It is keys-only rows of the same magnitude as the
+    candidate_pairs checkpoint (star-capped, so O(n x bands) even at
+    10^12 rows — the stage already materializes that table to parquet).
 
     ``n_pairs_hint``: the caller's known upper bound on the INPUT pair
     count (the pipeline already holds the candidate_pairs stage record).
-    When ``2 x hint`` fits the broadcast budget, the "auto" strategy's
-    id-count job is skipped — distinct candidate ids can never exceed
-    two per pair, so the algebraic bound replaces the counted one."""
-    strategy = cfg.verify_attach
-    if (strategy == "auto" and n_pairs_hint is not None
-            and 2 * n_pairs_hint <= cfg.verify_broadcast_max_ids):
-        strategy = "broadcast"
+    Distinct candidate ids never exceed two per pair, so ``2 x hint``
+    is the attach rule's bound; without a hint the attach shuffles."""
     plausible = prefilter_pairs(pairs, images,
                                 cfg.prefilter_max_phash_hamming,
                                 cfg.prefilter_max_phash_hamming_phash_src
                                 ).localCheckpoint()
+    bound = None if n_pairs_hint is None else 2 * n_pairs_hint
     attached = attach_payloads(plausible, images,
-                               strategy=strategy,
-                               broadcast_max_ids=cfg.verify_broadcast_max_ids)
+                               strategy=attach_strategy(cfg, bound))
     verdicts = verify_pairs(attached, cfg)
     return verdicts.filter(F.col("dup")).select(
         "a", "b", "src", "psnr", "caption_eq")

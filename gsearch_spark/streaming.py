@@ -180,9 +180,8 @@ def stream_append_images(spark: SparkSession, cfg, checkpoint_dir: str,
     metastore/Iceberg catalog deployment refreshes via snapshot
     metadata instead).
     """
-    from pyspark.sql import functions as F
     from gsearch_spark.bucketed import append_images_bucketed
-    from gsearch_spark.operators.keyidx import lookup_id_index
+    from gsearch_spark.operators.keyidx import lookup_id_index, probe_keys
     from gsearch_spark.operators.pipeline import (incremental_add,
                                                   recover_add_commit)
 
@@ -206,17 +205,11 @@ def stream_append_images(spark: SparkSession, cfg, checkpoint_dir: str,
                         .localCheckpoint()
         if fresh.isEmpty():
             return
-        # payload-table membership of the (tiny) batch: IN-list filter
-        # on the image_id-bucketed/sorted table => bucket + row-group
-        # pruned scan, not a table scan
-        ids = [r[0] for r in fresh.select("image_id")
-               .limit(cfg.add_lookup_max_literals + 1).collect()]
-        in_payload = s.table(payload_table).select("image_id")
-        if len(ids) <= cfg.add_lookup_max_literals:
-            in_payload = in_payload.filter(F.col("image_id").isin(ids))
-        else:  # giant batch: semi join instead of an IN-list
-            in_payload = in_payload.join(fresh.select("image_id"),
-                                         "image_id", "left_semi")
+        # payload-table membership of the (tiny) batch: a key-set probe,
+        # so a few ids prune the image_id-bucketed/sorted table by bucket
+        # and row group instead of scanning it
+        in_payload = probe_keys(s.table(payload_table).select("image_id"),
+                                "image_id", fresh)
         to_append = fresh.join(in_payload, "image_id", "left_anti")
         if not to_append.isEmpty():
             append_images_bucketed(s, to_append, payload_table)

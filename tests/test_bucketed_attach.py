@@ -71,12 +71,13 @@ def test_bucketed_attach_skips_payload_exchanges(spark, small_fixture_dir,
 
 def test_verified_edges_pair_count_hint_equivalent(spark, small_fixture_dir,
                                                    pairs):
-    """The attach-strategy shortcut (2 x n_pairs_hint under the broadcast
-    budget => skip the auto id-count job) must be invisible in the rows:
-    hinted and unhinted verified_edges agree exactly, and a hint past the
-    budget (falls back to the counted auto path) agrees too."""
+    """The attach rule's bound (2 x n_pairs_hint distinct ids against
+    the broadcast budget) must be invisible in the rows: a hint under
+    the budget (broadcast attach) and one past it (shuffle attach)
+    give the same verified edges."""
     from gsearch_spark.config import PipelineConfig
-    from gsearch_spark.operators.verify import verified_edges
+    from gsearch_spark.operators.verify import (BROADCAST_MAX_IDS,
+                                                verified_edges)
 
     cfg = PipelineConfig()
     images = spark.read.parquet(f"{small_fixture_dir}/images.parquet")
@@ -87,6 +88,5 @@ def test_verified_edges_pair_count_hint_equivalent(spark, small_fixture_dir,
             for r in verified_edges(pairs, images, cfg,
                                     n_pairs_hint=hint).collect())
 
-    want = rows(None)                                    # counted auto path
-    assert rows(4) == want                               # algebraic shortcut
-    assert rows(cfg.verify_broadcast_max_ids) == want    # over-budget hint
+    want = rows(4)                                 # broadcast attach
+    assert rows(BROADCAST_MAX_IDS) == want         # over-budget hint

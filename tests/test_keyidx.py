@@ -10,7 +10,6 @@ pin the columnar analog of that contract."""
 
 from __future__ import annotations
 
-import dataclasses
 import os
 import shutil
 
@@ -118,7 +117,7 @@ def test_lookup_plan_partition_and_rowgroup_prunes(spark, keyidx_build):
 
 
 def test_lookup_midsize_broadcast_semi_same_result(spark, keyidx_build):
-    """Probe sets past INLIST_MAX (but under add_lookup_max_literals)
+    """Probe sets past INLIST_MAX (but under BROADCAST_KEYS_MAX)
     take the broadcast-LocalRelation semi join: same rows as the
     point-lookup form, partition pruning still bound, and no large
     IN-list on the key column in the executed plan."""
@@ -142,19 +141,48 @@ def test_lookup_midsize_broadcast_semi_same_result(spark, keyidx_build):
     assert "BroadcastHashJoin" in plan and "LeftSemi" in plan, plan
 
 
-def test_lookup_semi_join_fallback_same_result(spark, keyidx_build):
-    """Probe sets past add_lookup_max_literals degrade to a semi join
-    over the partition-pruned slice — same rows, no IN-list."""
-    cfg2 = dataclasses.replace(CFG, add_lookup_max_literals=3)
+def test_lookup_semi_join_fallback_same_result(spark, keyidx_build,
+                                              monkeypatch):
+    """Probe sets past BROADCAST_KEYS_MAX degrade to a semi join over
+    the partition-pruned slice — same rows, no IN-list."""
+    from gsearch_spark.operators import keyidx
+
     probe = (keyidx_build["images"].select("image_id").limit(40)
              .localCheckpoint())
     a = {(r["image_id"], r["cluster_id"], r["is_rep"])
          for r in lookup_id_index(spark, f"{CKPT}/id_index",
                                   probe, CFG).collect()}
+    monkeypatch.setattr(keyidx, "BROADCAST_KEYS_MAX", 3)
     b = {(r["image_id"], r["cluster_id"], r["is_rep"])
          for r in lookup_id_index(spark, f"{CKPT}/id_index",
-                                  probe, cfg2).collect()}
+                                  probe, CFG).collect()}
     assert a == b and len(a) > 0
+
+
+@pytest.mark.parametrize("inlist_max, broadcast_max, node, not_node", [
+    (64, 64, "In(image_id", "LeftSemi"),       # IN-list pushed into the scan
+    (0, 64, "LocalTableScan", "In(image_id"),  # broadcast local-relation semi
+    (0, 0, "LeftSemi", "LocalTableScan"),      # semi join against the keys
+], ids=["inlist", "broadcast", "semi"])
+def test_probe_keys_unpartitioned_branches(spark, keyidx_build,
+                                           monkeypatch, inlist_max,
+                                           broadcast_max, node, not_node):
+    """The key-set probe over an unpartitioned payload table (the add's
+    touched-phash slice, the CLI's and the stream's payload membership
+    checks), each branch forced by its constants: the same rows as a
+    driver-side filter, through the branch's own plan node."""
+    from gsearch_spark.operators import keyidx
+
+    images = keyidx_build["images"]
+    keys = images.select("image_id").limit(40).localCheckpoint()
+    want = {r["image_id"] for r in keys.collect()}
+    monkeypatch.setattr(keyidx, "INLIST_MAX", inlist_max)
+    monkeypatch.setattr(keyidx, "BROADCAST_KEYS_MAX", broadcast_max)
+    out = keyidx.probe_keys(images, "image_id", keys)
+    got = sorted(r["image_id"] for r in out.collect())
+    assert got == sorted(want) and len(got) == 40
+    plan = _plan(out)
+    assert node in plan and not_node not in plan, plan
 
 
 def test_compact_id_index_preserves_lookups(spark, keyidx_build):
@@ -222,13 +250,13 @@ def test_add_after_compaction_matches_rebuild(spark, small_fixture_dir):
 def test_compaction_crash_windows_recover(spark, monkeypatch):
     """The compaction swap must never lose the live id_index: crash it
     at EACH of its two rename calls (live -> __old, then staged ->
-    live), roll forward with recover_id_index_compaction, and require
+    live), roll forward with recover_table_swap, and require
     the resolved per-id state to match the pre-crash ground truth with
     no leftover swap directories.  Also: pre-commit staging garbage
     beside an intact live table is dropped, and a torn window heals
     implicitly when the next compact_id_index runs."""
     from gsearch_spark.fs import CheckpointFS
-    from gsearch_spark.operators.keyidx import recover_id_index_compaction
+    from gsearch_spark.operators.keyidx import recover_table_swap
 
     base = "/tmp/gsearch_spark_keyidx_crash"
     shutil.rmtree(base, ignore_errors=True)
@@ -271,7 +299,7 @@ def test_compaction_crash_windows_recover(spark, monkeypatch):
         finally:
             monkeypatch.setattr(CheckpointFS, "rename", real_rename)
         fs = CheckpointFS(spark, path)
-        assert recover_id_index_compaction(fs, path) is True
+        assert recover_table_swap(fs, path) is True
         assert state() == truth
         assert not fs.exists(f"{path}__old")
         assert not fs.exists(f"{path}__compact")
@@ -279,7 +307,7 @@ def test_compaction_crash_windows_recover(spark, monkeypatch):
     # pre-commit garbage: a stale staged dir beside an intact live table
     shutil.copytree(path, f"{path}__compact")
     fs = CheckpointFS(spark, path)
-    assert recover_id_index_compaction(fs, path) is True
+    assert recover_table_swap(fs, path) is True
     assert not fs.exists(f"{path}__compact")
     assert state() == truth
 

@@ -130,19 +130,23 @@ def gate_removal(spark):
     return images, rm_ids, want
 
 
-@pytest.mark.parametrize("gate, bound", [("add_lookup_max_literals", 1),
+@pytest.mark.parametrize("gate, bound", [("BROADCAST_KEYS_MAX", 1),
                                          ("add_cc_local_max_edges", 0)])
 def test_remove_forced_gates_match_rebuild(spark, gate_removal, gate,
-                                           bound):
+                                           bound, monkeypatch):
     """Each remove size gate forced past its bound at a tiny threshold:
-    add_lookup_max_literals=1 sends the affected labels through the
-    localCheckpoint branch (and every pruned lookup through its
-    semi-join fallback); add_cc_local_max_edges=0 sends the surviving
-    edges through cc_roots' distributed star CC.  The clusters must
-    still equal the rebuild on the survivors."""
+    keyidx.BROADCAST_KEYS_MAX=1 sends every pruned lookup through the
+    key-set probe's semi-join branch; add_cc_local_max_edges=0 sends
+    the surviving edges through cc_roots' distributed star CC.  The
+    clusters must still equal the rebuild on the survivors."""
     import dataclasses
+    from gsearch_spark.operators import keyidx
     images, rm_ids, want = gate_removal
-    cfg = dataclasses.replace(CFG, **{gate: bound})
+    if gate == "BROADCAST_KEYS_MAX":
+        monkeypatch.setattr(keyidx, gate, bound)
+        cfg = CFG
+    else:
+        cfg = dataclasses.replace(CFG, **{gate: bound})
     ckpt = f"/tmp/gsearch_spark_ckpt_remove_gate_{gate}"
     shutil.rmtree(ckpt, ignore_errors=True)
     NearDupPipeline(spark, cfg, ckpt).run(images, resume=False)
@@ -153,7 +157,7 @@ def test_remove_forced_gates_match_rebuild(spark, gate_removal, gate,
     state = spark.read.parquet(f"{ckpt}/pipeline_state")
     n_cc = (state.filter(F.col("stage") == "rm_cc_edges")
             .agg(F.sum("rows_out")).collect()[0][0])
-    observed = {"add_lookup_max_literals": len(rm_ids),
+    observed = {"BROADCAST_KEYS_MAX": len(rm_ids),
                 "add_cc_local_max_edges": n_cc}[gate]
     assert observed > bound
 

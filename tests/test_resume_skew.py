@@ -3,6 +3,7 @@
 from __future__ import annotations
 
 import dataclasses
+import json
 import os
 import shutil
 
@@ -49,6 +50,39 @@ def test_resume_refuses_config_mismatch(spark, small_fixture_dir):
     other = dataclasses.replace(CFG, caption_kgram=7)
     with pytest.raises(ValueError, match="different pipeline config"):
         NearDupPipeline(spark, other, CKPT).run(images, resume=True)
+
+
+def _stored_params(tmp_path, **extra) -> str:
+    """A checkpoint dir whose parameters.json is today's default plus
+    ``extra`` keys."""
+    d = json.loads(CFG.to_json())
+    d.update(extra)
+    (tmp_path / "parameters.json").write_text(json.dumps(d))
+    return str(tmp_path)
+
+
+def test_retired_config_keys_keep_build_identity(spark, tmp_path):
+    """A parameters.json written while the retired execution budgets
+    were fields still names them — here with one retuned: loading drops
+    exactly those keys, so the stored build hashes like today's default
+    and the add/remove prologue's config check accepts it."""
+    from gsearch_spark.config import RETIRED_FIELDS
+    from gsearch_spark.fs import CheckpointFS
+    old = dict(zip(RETIRED_FIELDS, (2000, 5_000_000, 1)))
+    ckpt = _stored_params(tmp_path, **old)
+    fs = CheckpointFS(spark, ckpt)
+    stored = PipelineConfig.reload_via(fs, ckpt)
+    assert stored.config_hash() == CFG.config_hash()
+    CFG.assert_matches_via(fs, ckpt)
+
+
+def test_unknown_config_key_still_refuses(spark, tmp_path):
+    """Only the retired keys are forgiven: any other key the dataclass
+    does not know still fails the load."""
+    from gsearch_spark.fs import CheckpointFS
+    ckpt = _stored_params(tmp_path, pair_cap_per_band=2000)
+    with pytest.raises(TypeError, match="pair_cap_per_band"):
+        CFG.assert_matches_via(CheckpointFS(spark, ckpt), ckpt)
 
 
 def _bomb_ids(n_base: int, seed: int, skew_fraction: float) -> "list[str]":

@@ -8,11 +8,13 @@ rows into a DataFrame.
 it the only way: a source walk finds no other ``createDataFrame`` call
 in the package, and a build, an add and a remove run with no stage whose
 operation graph holds a ``PythonRDD`` node.  The same source walk keeps
-the package's thread starts inside ``pipeline.chains``."""
+the package's thread starts inside ``pipeline.chains``, and another
+finds every ``PipelineConfig`` field read by the package."""
 
 from __future__ import annotations
 
 import ast
+import dataclasses
 import pathlib
 import shutil
 
@@ -151,6 +153,34 @@ def test_threads_start_only_in_chains():
         {"ThreadPoolExecutor", "Thread", "inheritable_thread_target"},
         "pipeline.py", {"chains", "_fanout"})
     assert not offenders, offenders
+
+
+# PipelineConfig fields no package code reads: each pins into the
+# build's identity (parameters.json) a format or a semantic that the
+# code implements without consulting the field.  Exact: a field leaves
+# this map the moment code reads it.
+IDENTITY_ONLY = {
+    "sig_version": "signature/checkpoint-format version",
+    "layout_version": "sidecar layout generation",
+    "simhash_bits": "pinned to 64 by __post_init__",
+    "pixel_block": "the SimHash tile size simhash.py implements",
+    "caption_equality": "the normalized caption rule verify implements",
+    "shuffle_partitions": "callers size their session from it",
+}
+
+
+def test_every_config_field_is_read():
+    """Source guard: a PipelineConfig field hashes into every build's
+    identity, so one that no code outside config.py reads (as
+    ``<obj>.<field>``) is a dead knob — it promises behaviour nothing
+    implements, and changing it still refuses the stored build."""
+    root = pathlib.Path(gsearch_spark.__file__).parent
+    read = {node.attr
+            for path in root.rglob("*.py") if path.name != "config.py"
+            for node in ast.walk(ast.parse(path.read_text()))
+            if isinstance(node, ast.Attribute)}
+    unread = {f.name for f in dataclasses.fields(PipelineConfig)} - read
+    assert unread == set(IDENTITY_ONLY), sorted(unread ^ set(IDENTITY_ONLY))
 
 
 def test_scan_floor_follows_default_parallelism(spark):

@@ -50,7 +50,7 @@ def main() -> None:
     bands = build_bands(sigs, cfg)
     pairs = emit_bucket_pairs(bands)
     sfx = suffix_candidate_pairs(images)
-    verified = verify_pairs(attach_payloads(pairs, images), cfg)
+    verified = verify_pairs(attach_payloads(pairs, images, "broadcast"), cfg)
 
     # request (build-vs-probe): needs a materialized build; reuse a tiny one
     from pyspark.sql import functions as F
