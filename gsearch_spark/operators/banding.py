@@ -41,50 +41,6 @@ PHASH_BAND_ID_OFFSET = 2000
 CAPTION_BAND_ID = 3000
 
 
-def explode_phash_bands(signatures: DataFrame, phash_chunks: int = 4,
-                        phash_combo: int = 2,
-                        band_id_offset: int = 2000) -> DataFrame:
-    """phash -> (band_id, band_hash, image_id) by chunk-COMBO equality
-    (default: C(4,2)=6 bands keyed on 2x16=32-bit chunk pairs).
-
-    Covers the regime MinHash is weakest in: the lossy re-encode.  The
-    guarantee is pigeonhole: k flipped bits damage at most k of the
-    ``phash_chunks`` chunks, so any pair within Hamming distance
-    (phash_chunks - phash_combo) keeps >= phash_combo intact chunks and
-    matches the combo band made of them — EXACT Hamming<=2 coverage by
-    default; cfg (phash_chunks=8, phash_combo=4) widens it to EXACT
-    Hamming<=4, the codec's whole PSNR>=40 envelope (q85 flips up to 4
-    bits), at C(8,4)=70 bands and ~3x candidate volume.  The radius is a
-    deliberate config knob, not a hardcode: guaranteeing Hamming<=4 from
-    64 bits REQUIRES either >=5 near-disjoint (hence <=12-bit, junk-
-    flooded) keys or combinatorially many strong keys — pigeonhole bit
-    budget — so the wide radius is priced for when a corpus needs it,
-    and the default stays cheap on the 10^12-row hot path where
-    probabilistic coverage above Hamming 2 suffices for recall>=0.99.
-
-    Single 16-bit chunks are NOT usable as keys at scale: phash bits are
-    DCT-sign-structured and correlated across images (~1.7M junk pairs
-    at 188k rows in round 1); 32-bit combo keys push random collisions
-    to O(n^2/2^32), and the structured remainder is absorbed by salting,
-    the star policy and the tighter phash-src prefilter.
-    """
-    width = 64 // phash_chunks
-    mask = (1 << width) - 1
-    chunk = [F.shiftright(F.col("phash"), b * width).bitwiseAND(
-        F.lit(mask)) for b in range(phash_chunks)]
-    from itertools import combinations
-    combos = []
-    for sel in combinations(range(phash_chunks), phash_combo):
-        combos.append(F.xxhash64(F.lit(band_id_offset + len(combos)),
-                                 *[chunk[i] for i in sel]))
-    return (signatures
-            .select("image_id",
-                    F.posexplode(F.array(*combos))
-                    .alias("band_pos", "band_hash"))
-            .select((F.col("band_pos") + F.lit(band_id_offset))
-                    .alias("band_id"), "band_hash", "image_id"))
-
-
 def salt_hot_buckets(bands_df: DataFrame, hot_threshold: int,
                      max_salts: int,
                      max_hot_buckets: int = 100_000,
@@ -155,25 +111,6 @@ def salt_hot_buckets(bands_df: DataFrame, hot_threshold: int,
             .select("band_id", "band_hash", "salt", "image_id"))
 
 
-def _chunk_combo_hashes(col: str, n_chunks: int, r: int,
-                        offset: int) -> "list":
-    """All C(n_chunks, r) chunk-combination band hashes of a 64-bit col."""
-    from itertools import combinations
-    width = 64 // n_chunks
-    mask = (1 << width) - 1
-    chunk = [F.shiftright(F.col(col), b * width).bitwiseAND(F.lit(mask))
-             for b in range(n_chunks)]
-    combos = []
-    for sel in combinations(range(n_chunks), r):
-        combos.append(F.xxhash64(F.lit(offset + len(combos)),
-                                 *[chunk[i] for i in sel]))
-    return combos
-
-
-def _chunk_pair_hashes(col: str, n_chunks: int, offset: int) -> "list":
-    return _chunk_combo_hashes(col, n_chunks, 2, offset)
-
-
 def explode_all_bands(signatures: DataFrame, cfg) -> DataFrame:
     """signatures -> UNSALTED (band_id, band_hash, image_id) across every
     band family, via ONE fused explode.
@@ -183,7 +120,7 @@ def explode_all_bands(signatures: DataFrame, cfg) -> DataFrame:
     against a stored salted table on (band_id, band_hash) — salting only
     matters for the self-join's skew, not for probing).
 
-    Band families (row values identical to the per-family functions):
+    Band families:
       * minhash bands (LSH quality knob),
       * simhash chunk-PAIR bands (pixel-feature Hamming<=2 net),
       * caption-identity band (skipped for empty captions): every
@@ -198,7 +135,10 @@ def explode_all_bands(signatures: DataFrame, cfg) -> DataFrame:
         the caption band and halves minhash J — the adversarial case in
         tests/test_suffix_array.py; cfg 8/4 widens the radius to 4 at
         ~3x candidate cost).  Junk cost is bounded by 32-bit combo keys,
-        salting, the star policy, and the src-aware prefilter.
+        salting, the star policy, and the src-aware prefilter.  Single
+        16-bit chunks are NOT usable as keys: phash bits are
+        DCT-sign-structured and correlated across images (~1.7M junk
+        pairs at 188k rows in round 1).
 
     ONE explode instead of a 4-way union: the union form scans the
     signatures input once PER FAMILY per pass (8 scans across the stats
@@ -207,37 +147,53 @@ def explode_all_bands(signatures: DataFrame, cfg) -> DataFrame:
     when the input is an unmaterialized persist).  The fused form scans
     once per pass and keeps one task per input partition.
     """
-    from gsearch_spark.operators.signatures import EMPTY_CAPTION_HASH
-
-    entries = []
-    for b in range(cfg.bands):
-        slots = [F.element_at("minhash", b * cfg.rows_per_band + j + 1)
-                 for j in range(cfg.rows_per_band)]
-        entries.append(F.struct(
-            F.lit(b).alias("band_id"),
-            F.xxhash64(F.lit(b), *slots).alias("band_hash")))
-    for i, h in enumerate(_chunk_pair_hashes("simhash", cfg.simhash_bands,
-                                             SIMHASH_BAND_ID_OFFSET)):
-        entries.append(F.struct(
-            F.lit(SIMHASH_BAND_ID_OFFSET + i).alias("band_id"),
-            h.alias("band_hash")))
-    for i, h in enumerate(_chunk_combo_hashes("phash", cfg.phash_chunks,
-                                              cfg.phash_combo,
-                                              PHASH_BAND_ID_OFFSET)):
-        entries.append(F.struct(
-            F.lit(PHASH_BAND_ID_OFFSET + i).alias("band_id"),
-            h.alias("band_hash")))
-    # caption band last; emitted as NULL hash for empty captions and
-    # filtered out post-explode (keeps the array shape static)
-    entries.append(F.struct(
-        F.lit(CAPTION_BAND_ID).alias("band_id"),
-        F.when(F.col("cap_hash") != F.lit(EMPTY_CAPTION_HASH),
-               F.col("cap_hash")).alias("band_hash")))
     return (signatures
-            .select("image_id", F.explode(F.array(*entries)).alias("e"))
+            .select("image_id",
+                    F.explode(F.expr(_bands_sql(cfg))).alias("e"))
             .filter(F.col("e.band_hash").isNotNull())
             .select(F.col("e.band_id").alias("band_id"),
                     F.col("e.band_hash").alias("band_hash"), "image_id"))
+
+
+def _bands_sql(cfg) -> str:
+    """The fused band array of :func:`explode_all_bands` as ONE SQL
+    expression: ``array(named_struct('band_id', id, 'band_hash',
+    xxhash64(id, ...)), ...)``.  Built as Column objects it took ~1,300
+    py4j calls (0.3-0.65 s of driver time per build, add pass and
+    request); one string is parsed by the JVM in one call.  Band ids,
+    xxhash64 argument order and literal types (int ids and masks) are
+    those of the stored bands tables, which probes must keep matching —
+    tests/test_primitives.py pins the rows with golden digests."""
+    from itertools import combinations
+    from gsearch_spark.operators.signatures import EMPTY_CAPTION_HASH
+
+    def band(band_id: int, hashed: str) -> str:
+        return f"named_struct('band_id', {band_id}, 'band_hash', {hashed})"
+
+    r = cfg.rows_per_band
+    entries = []
+    for b in range(cfg.bands):
+        slots = ", ".join(f"element_at(minhash, {b * r + j + 1})"
+                          for j in range(r))
+        entries.append(band(b, f"xxhash64({b}, {slots})"))
+    # chunk-combination bands of a 64-bit column: simhash chunk PAIRS,
+    # phash chunk COMBOs
+    for col, n_chunks, k, offset in (
+            ("simhash", cfg.simhash_bands, 2, SIMHASH_BAND_ID_OFFSET),
+            ("phash", cfg.phash_chunks, cfg.phash_combo,
+             PHASH_BAND_ID_OFFSET)):
+        width = 64 // n_chunks
+        mask = (1 << width) - 1
+        for i, sel in enumerate(combinations(range(n_chunks), k)):
+            chunks = ", ".join(f"(shiftright({col}, {c * width}) & {mask})"
+                               for c in sel)
+            entries.append(band(offset + i,
+                                f"xxhash64({offset + i}, {chunks})"))
+    # caption band last; emitted as NULL hash for empty captions and
+    # filtered out post-explode (keeps the array shape static)
+    entries.append(band(CAPTION_BAND_ID, "CASE WHEN cap_hash != "
+                        f"{EMPTY_CAPTION_HASH} THEN cap_hash END"))
+    return f"array({', '.join(entries)})"
 
 
 def build_bands(signatures: DataFrame, cfg) -> DataFrame:

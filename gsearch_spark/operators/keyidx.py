@@ -59,9 +59,12 @@ from gsearch_spark.session import local_frame
 CK_INDEX = "ck_index"
 ID_INDEX = "id_index"
 EDGE_INDEX = "edge_index"
-# explicit read schema: a build with no verified edges writes a LEGAL
-# empty edge_index (only _SUCCESS), which parquet schema inference
-# cannot read back — every edge_index read declares this instead
+# declared layouts, read back without schema inference; an edge-free
+# build writes a LEGAL empty edge_index (only _SUCCESS), which inference
+# could not read at all
+CK_SCHEMA = "ck string, rep_id string, kb int"
+ID_SCHEMA = ("image_id string, cluster_id string, is_rep boolean, "
+             "rep_id string, gen int, ib int")
 EDGE_SCHEMA = "a string, b string, eb int"
 
 
@@ -99,25 +102,37 @@ def key_bucket(col: str, buckets: int) -> "F.Column":
 
 
 # --------------------------------------------------------------- writers
+# ``tap`` (optional) wraps the frame exactly as it is written — after
+# the repartition — so a caller can observe its row count on the write
+# itself (pipeline.row_counter).
 
-def write_ck_index(groups: DataFrame, path: str,
-                   cfg: PipelineConfig) -> None:
-    """Full build: one (ck, rep_id) row per exact-content group.
+def write_keyed(df: DataFrame, key_col: str, part_col: str, path: str,
+                cfg: PipelineConfig, tap=None) -> None:
+    """The one writer of every key-addressed layout: hive-partitioned on
+    ``part_col = key_bucket(key_col)``, repartitioned ON the partition
+    column first (each bucket = one task writing one file, not tasks x
+    buckets small files), then sorted by the key within the partition so
+    every file's row groups carry tight key min/max stats for the
+    IN-list probes."""
+    out = (df.withColumn(part_col, key_bucket(key_col, cfg.key_buckets))
+           .repartition(cfg.key_buckets, F.col(part_col))
+           .sortWithinPartitions(key_col))
+    ((tap or (lambda d: d))(out)
+     .write.mode("overwrite").partitionBy(part_col).parquet(path))
 
-    repartition ON the partition column before partitionBy (each bucket
-    = one task writing one file, not tasks x buckets small files), then
-    sort by ck within the partition so every file's row groups carry
-    tight ck min/max stats for the IN-list probes."""
-    (groups.filter(F.col("image_id") == F.col("rep_id"))
-     .select("ck", "rep_id")
-     .withColumn("kb", key_bucket("ck", cfg.key_buckets))
-     .repartition(cfg.key_buckets, F.col("kb"))
-     .sortWithinPartitions("ck")
-     .write.mode("overwrite").partitionBy("kb").parquet(path))
+
+def write_ck_index(groups: DataFrame, path: str, cfg: PipelineConfig,
+                   tap=None) -> None:
+    """One (ck, rep_id) row per exact-content group of ``groups`` — the
+    full build's table, or an add's delta of fresh groups (the commit
+    renames each staged ``kb=`` dir's files into the live table; parquet
+    part names embed a UUID, so they never collide)."""
+    write_keyed(groups.filter(F.col("image_id") == F.col("rep_id"))
+                .select("ck", "rep_id"), "ck", "kb", path, cfg, tap)
 
 
 def write_id_index(clusters: DataFrame, groups: DataFrame, path: str,
-                   cfg: PipelineConfig) -> None:
+                   cfg: PipelineConfig, tap=None) -> None:
     """Full build: one (image_id, cluster_id, is_rep, rep_id, gen=0)
     row per image.  ``clusters`` is the expanded (image_id, cluster_id)
     table; rep-ness and the founding group node join in from the exact
@@ -125,52 +140,32 @@ def write_id_index(clusters: DataFrame, groups: DataFrame, path: str,
     flags = groups.select("image_id",
                           (F.col("image_id") == F.col("rep_id"))
                           .alias("is_rep"), "rep_id")
-    (clusters.select("image_id", "cluster_id")
-     .join(flags, "image_id")
-     .withColumn("gen", F.lit(0))
-     .withColumn("ib", key_bucket("image_id", cfg.key_buckets))
-     .repartition(cfg.key_buckets, F.col("ib"))
-     .sortWithinPartitions("image_id")
-     .write.mode("overwrite").partitionBy("ib").parquet(path))
-
-
-def stage_ck_append(fresh_groups: DataFrame, staging_dir: str,
-                    cfg: PipelineConfig) -> None:
-    """Stage the add's NEW content-key rows (reps of fresh groups) as a
-    partitioned delta; the commit renames each ``kb=`` dir's files into
-    the live table (parquet part names embed a UUID — no collisions)."""
-    (fresh_groups.filter(F.col("image_id") == F.col("rep_id"))
-     .select("ck", "rep_id")
-     .withColumn("kb", key_bucket("ck", cfg.key_buckets))
-     .repartition(cfg.key_buckets, F.col("kb"))
-     .sortWithinPartitions("ck")
-     .write.mode("overwrite").partitionBy("kb")
-     .parquet(f"{staging_dir}/{CK_INDEX}"))
+    write_keyed(clusters.select("image_id", "cluster_id")
+                .join(flags, "image_id").withColumn("gen", F.lit(0)),
+                "image_id", "ib", path, cfg, tap)
 
 
 def stage_id_append(delta: DataFrame, gen: int, staging_dir: str,
-                    cfg: PipelineConfig) -> None:
+                    cfg: PipelineConfig, tap=None) -> None:
     """Stage a mutation's (image_id, cluster_id, is_rep, rep_id) delta
     rows at generation ``gen`` (strictly increasing per mutation,
     carried in the commit manifest so a torn commit can roll forward
     idempotently).  ``rep_id`` must be null on relabel rows (founding
     group nodes are first-appearance-immutable)."""
-    (delta.select("image_id", "cluster_id", "is_rep", "rep_id")
-     .withColumn("gen", F.lit(gen))
-     .withColumn("ib", key_bucket("image_id", cfg.key_buckets))
-     .repartition(cfg.key_buckets, F.col("ib"))
-     .sortWithinPartitions("image_id")
-     .write.mode("overwrite").partitionBy("ib")
-     .parquet(f"{staging_dir}/{ID_INDEX}"))
+    write_keyed(delta.select("image_id", "cluster_id", "is_rep", "rep_id")
+                .withColumn("gen", F.lit(gen)), "image_id", "ib",
+                f"{staging_dir}/{ID_INDEX}", cfg, tap)
 
 
-def write_edge_index(edges: DataFrame, path: str,
-                     cfg: PipelineConfig) -> None:
-    """Full build: the dedup graph's edge list keyed by FOUNDING group
-    nodes — (a, b) with a < b, hive-partitioned on
-    ``eb = xxhash64(a) % key_buckets`` and sorted by ``a`` within files.
-    At build time every verified-edge endpoint is its own group's
-    founding rep, so the checkpoint edges pass through untranslated.
+def write_edge_index(edges: DataFrame, path: str, cfg: PipelineConfig,
+                     tap=None) -> None:
+    """The dedup graph's edge list keyed by FOUNDING group nodes — (a,
+    b) with a < b, hive-partitioned on ``eb = xxhash64(a) % key_buckets``
+    and sorted by ``a`` within files.  At build time every verified-edge
+    endpoint is its own group's founding rep, so the checkpoint edges
+    pass through untranslated; an add stages its new edges (already
+    translated to founding-node endpoints, self-loops dropped) the same
+    way.
 
     This sidecar exists for :func:`~gsearch_spark.operators.remove.\
 remove_images`: a delete that kills an entire exact-group can SPLIT a
@@ -181,25 +176,7 @@ remove_images`: a delete that kills an entire exact-group can SPLIT a
     pruning on ``a`` alone is lossless).  The reports/oracle surface
     keeps reading the flat ``verified_edges`` checkpoint; this is a
     connectivity-only (a, b) projection."""
-    (edges.select("a", "b")
-     .withColumn("eb", key_bucket("a", cfg.key_buckets))
-     .repartition(cfg.key_buckets, F.col("eb"))
-     .sortWithinPartitions("a")
-     .write.mode("overwrite").partitionBy("eb").parquet(path))
-
-
-def stage_edge_append(edges: DataFrame, staging_dir: str,
-                      cfg: PipelineConfig) -> None:
-    """Stage a mutation's new dedup-graph edges (already translated to
-    founding-node endpoints, self-loops dropped) as a partitioned
-    delta; committed by the same manifest machinery as the other
-    partitioned appends."""
-    (edges.select("a", "b")
-     .withColumn("eb", key_bucket("a", cfg.key_buckets))
-     .repartition(cfg.key_buckets, F.col("eb"))
-     .sortWithinPartitions("a")
-     .write.mode("overwrite").partitionBy("eb")
-     .parquet(f"{staging_dir}/{EDGE_INDEX}"))
+    write_keyed(edges.select("a", "b"), "a", "eb", path, cfg, tap)
 
 
 def lookup_edges_among(spark: SparkSession, path: str, nodes: DataFrame,
@@ -258,7 +235,8 @@ def lookup_ck_index(spark: SparkSession, path: str, cks: DataFrame,
                     cfg: PipelineConfig,
                     idx_df: "DataFrame | None" = None) -> DataFrame:
     """(ck, rep_id) for exactly the probed cks present in the build."""
-    idx = idx_df if idx_df is not None else spark.read.parquet(path)
+    idx = idx_df if idx_df is not None else \
+        spark.read.schema(CK_SCHEMA).parquet(path)
     return (probe_keys(idx, "ck", cks, "kb", cfg.key_buckets)
             .select("ck", "rep_id"))
 
@@ -269,7 +247,8 @@ def lookup_id_index(spark: SparkSession, path: str, ids: DataFrame,
     """(image_id, cluster_id, is_rep, rep_id) — latest generation wins
     (rep_id: the single non-null first-appearance value, via null-
     skipping max) — for exactly the probed ids present in the build."""
-    idx = idx_df if idx_df is not None else spark.read.parquet(path)
+    idx = idx_df if idx_df is not None else \
+        spark.read.schema(ID_SCHEMA).parquet(path)
     return (probe_keys(idx, "image_id", ids, "ib", cfg.key_buckets)
             .groupBy("image_id")
             .agg(F.max_by("cluster_id", "gen").alias("cluster_id"),
@@ -349,17 +328,13 @@ def compact_id_index(spark: SparkSession, path: str,
     with add_writer_lock(spark, ckpt_dir):
         fs = CheckpointFS(spark, path)
         recover_table_swap(fs, path)  # clear any prior torn swap
-        compacted = (spark.read.parquet(path)
+        compacted = (spark.read.schema(ID_SCHEMA).parquet(path)
                      .groupBy("image_id")
                      .agg(F.max_by("cluster_id", "gen").alias("cluster_id"),
                           F.bool_or("is_rep").alias("is_rep"),
                           F.max("rep_id").alias("rep_id"),
-                          F.max("gen").alias("gen"))
-                     .withColumn("ib", key_bucket("image_id",
-                                                  cfg.key_buckets))
-                     .repartition(cfg.key_buckets, F.col("ib"))
-                     .sortWithinPartitions("image_id"))
+                          F.max("gen").alias("gen")))
         tmp = f"{path}__compact"
-        compacted.write.mode("overwrite").partitionBy("ib").parquet(tmp)
+        write_keyed(compacted, "image_id", "ib", tmp, cfg)
         swap_table_in(fs, path, tmp)
         spark.catalog.refreshByPath(path)

@@ -27,24 +27,43 @@ import threading
 import time
 from contextlib import contextmanager
 from dataclasses import dataclass
+from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from gsearch_spark.config import PipelineConfig
 from gsearch_spark.fs import CheckpointFS
-from gsearch_spark.operators.banding import build_bands
-from gsearch_spark.operators.candidates import bucket_stats, emit_bucket_pairs
+from gsearch_spark.operators.banding import BANDS_SCHEMA, build_bands
+from gsearch_spark.operators.candidates import (PAIRS_SCHEMA, bucket_stats,
+                                                emit_bucket_pairs)
 from gsearch_spark.operators.cc import connected_components, union_find
-from gsearch_spark.operators.exact import (exact_groups, expand_clusters,
-                                           representatives)
-from gsearch_spark.operators.keyidx import key_bucket
-from gsearch_spark.operators.signatures import compute_signatures
+from gsearch_spark.operators.exact import (EXACT_GROUPS_SCHEMA, exact_groups,
+                                           expand_clusters, representatives)
+from gsearch_spark.operators.keyidx import (CK_SCHEMA, EDGE_SCHEMA,
+                                            ID_SCHEMA, key_bucket)
+from gsearch_spark.operators.signatures import (SIGNATURES_SCHEMA,
+                                                compute_signatures)
 from gsearch_spark.operators.suffix import suffix_candidate_pairs
 from gsearch_spark.operators.verify import verified_edges
 from gsearch_spark.session import local_frame
 
 STAGES = ("exact_groups", "signatures", "bands", "candidate_pairs",
           "verified_edges", "clusters", "ck_index", "id_index")
+# the declared schema of every table the engine writes under a build or
+# its staging dir: read back without footer inference (and readable when
+# a mutation staged no rows at all)
+LAYOUTS = {
+    "exact_groups": EXACT_GROUPS_SCHEMA,
+    "signatures": SIGNATURES_SCHEMA,
+    "bands": BANDS_SCHEMA,
+    "candidate_pairs": PAIRS_SCHEMA,
+    "verified_edges": ("a string, b string, src string, psnr double, "
+                       "caption_eq boolean"),
+    "clusters": "image_id string, cluster_id string, pbucket int",
+    "ck_index": CK_SCHEMA,
+    "id_index": ID_SCHEMA,
+    "edge_index": EDGE_SCHEMA,
+}
 
 ADD_MANIFEST = "_add_commit_manifest.json"
 # current id_index generation (monotone add counter); bumped inside the
@@ -110,6 +129,35 @@ def chains():
             thread.join()
     for _, fut in started:
         fut.result()
+
+
+def read_layout(spark: SparkSession, root: str, name: str) -> DataFrame:
+    """The table ``root/name`` read with its declared layout."""
+    return spark.read.schema(LAYOUTS[name]).parquet(f"{root}/{name}")
+
+
+def row_counter() -> tuple[Callable[[DataFrame], DataFrame],
+                           Callable[[], int]]:
+    """The one row counter of every recorded stage: ``tap(df)`` returns
+    ``df`` under a one-use Observation of its row count, and ``rows()``
+    reads that count.  Tap the frame exactly as its materializing action
+    sees it — the writer's input after any repartition, or the frame an
+    eager localCheckpoint cuts — so the count rides on that action and
+    costs no job of its own.  ``rows()`` must follow the action: an
+    Observation reports the FIRST action over its frame and blocks until
+    one has finished.  A plan the optimizer prunes to empty reports 0."""
+    from pyspark.sql import Observation
+    obs = Observation()
+    return (lambda df: df.observe(obs, F.count(F.lit(1)).alias("rows")),
+            lambda: int(obs.get["rows"]))
+
+
+def checkpoint_rows(df: DataFrame) -> "tuple[DataFrame, int]":
+    """Eager localCheckpoint of ``df`` and its row count, observed on
+    the checkpoint job itself."""
+    tap, rows = row_counter()
+    df = tap(df).localCheckpoint()
+    return df, rows()
 
 
 def _fanout(fn, items, workers: int = 16):
@@ -269,57 +317,52 @@ class NearDupPipeline:
         return self.fs.exists(os.path.join(self._path(stage), "_SUCCESS"))
 
     def _stage(self, name: str, resume: bool, write,
-               after: "str | None" = None,
-               read=None) -> "tuple[DataFrame, int]":
+               after: "str | None" = None) -> "tuple[DataFrame, int]":
         """Resume-or-compute one build stage: a completed checkpoint is
-        reused under ``resume``, otherwise ``write(path)`` produces it —
-        either by writing it itself or by returning the DataFrame to
-        persist as plain Parquet.  The checkpoint is read back (``read``,
-        default ``spark.read.parquet``) and recorded; returns it with
-        its row count."""
+        reused under ``resume`` (counted by one job — nothing in this
+        run materialized it), otherwise ``write(path, tap)`` produces it
+        — either by writing ``tap(frame)`` itself or by returning the
+        DataFrame to persist as plain Parquet — and its row count is
+        observed on that write.  The checkpoint is read back with its
+        declared layout and recorded; returns it with its row count."""
         t0 = time.time()
         path = self._path(name)
         skipped = resume and self._done(name)
         if not skipped:
-            out = write(path)
+            tap, rows = row_counter()
+            out = write(path, tap)
             if isinstance(out, DataFrame):
-                out.write.mode("overwrite").parquet(path)
-        df = (read or self.spark.read.parquet)(path)
-        return df, self._record(name, df, t0, skipped, after=after)
+                tap(out).write.mode("overwrite").parquet(path)
+        df = read_layout(self.spark, self.dir, name)
+        n = df.count() if skipped else rows()
+        return df, self._record(name, n, t0, skipped, after=after)
 
-    def _record(self, stage: str, out: DataFrame, t0: float,
+    def _record(self, stage: str, rows: int, t0: float,
                 skipped: bool = False, after: "str | None" = None) -> int:
-        """ONE job per stage: the per-partition row counts are collected
-        (their sum IS the stage row count — no separate count() job) and
-        buffered as pipeline_state rows for a single flush at the end
-        (FIXTURES.md §4 contract: stage, part_id, rows_in, rows_out,
-        t_start, t_end, config_hash — the processing_state.json analog,
-        per partition; the collect is bounded by the partition count).
-        ``rows_in`` is the rows_out of ``after``, the stage's logical
-        predecessor (-1 for a source stage) — named by the caller, since
-        concurrent recorders make "the previous record" meaningless.
-        Returns the stage's row count."""
-        parts = (out.groupBy(F.spark_partition_id().alias("part_id"))
-                 .agg(F.count(F.lit(1)).alias("rows_out")).collect())
-        n = sum(p["rows_out"] for p in parts)
+        """Bookkeeping only, no Spark job: buffer one StageRecord and one
+        pipeline_state row for a single flush at the end (FIXTURES.md §4
+        contract: stage, part_id, rows_in, rows_out, t_start, t_end,
+        config_hash — the processing_state.json analog).  ``rows`` comes
+        from what already materialized the stage: a :func:`row_counter`
+        on its write or eager localCheckpoint, or ``len()`` of a driver
+        list; the row's ``part_id`` is -1 (a count per stage, not per
+        partition), also for a stage with no rows — zero-row probes (e.g.
+        a clean id-clash check) must appear for the sent==received
+        reconciliation.  ``rows_in`` is the rows_out of ``after``, the
+        stage's logical predecessor (-1 for a source stage) — named by
+        the caller, since concurrent recorders make "the previous
+        record" meaningless.  Returns ``rows``."""
         with self._rec_lock:
             rows_in = next((r.rows_out for r in reversed(self.records)
                             if r.stage == after), -1)
-            rec = StageRecord(stage, n, time.time() - t0, skipped,
+            rec = StageRecord(stage, rows, time.time() - t0, skipped,
                               rows_in=rows_in, t_start=t0,
                               t_end=time.time())
             self.records.append(rec)
-            if not parts:
-                # an empty stage still gets a lineage row (part_id -1):
-                # zero-row probes (e.g. a clean id-clash check) must
-                # appear in pipeline_state for the sent==received
-                # reconciliation
-                parts = [{"part_id": -1, "rows_out": 0}]
-            self._state_buf.extend(
-                (stage, int(p["part_id"]), rows_in, int(p["rows_out"]),
-                 rec.t_start, rec.t_end, rec.seconds, skipped,
-                 self.cfg.config_hash()) for p in parts)
-        return n
+            self._state_buf.append(
+                (stage, -1, rows_in, rows, rec.t_start, rec.t_end,
+                 rec.seconds, skipped, self.cfg.config_hash()))
+        return rows
 
     def _flush_state(self) -> None:
         if not self._state_buf:
@@ -349,15 +392,14 @@ class NearDupPipeline:
             self.cfg.dump_via(self.fs, self.dir)
 
         n_images = images.count()
-        from gsearch_spark.operators.keyidx import (read_edge_index,
-                                                    write_ck_index,
+        from gsearch_spark.operators.keyidx import (write_ck_index,
                                                     write_edge_index,
                                                     write_id_index)
 
         # -- stage 0: exact-duplicate collapse (identity short-circuit,
         #    gsearch src/bin/bindash.rs:139-153) ---------------------------
         groups, n_groups = self._stage("exact_groups", resume,
-                                       lambda p: exact_groups(images))
+                                       lambda p, tap: exact_groups(images))
         if n_groups != n_images:
             raise RuntimeError("exact_groups row count != image count")
         images_rep = representatives(images, groups)
@@ -387,7 +429,7 @@ class NearDupPipeline:
             # -- stage 1: signatures (representatives only) ----------------
             sigs, n_sigs = self._stage(
                 "signatures", resume,
-                lambda p: compute_signatures(images_rep, self.cfg),
+                lambda p, tap: compute_signatures(images_rep, self.cfg),
                 after="exact_groups")
             # sent == received invariant (src/dna/dnasketch.rs:458-464)
             n_reps = nreps_future.result()
@@ -398,7 +440,8 @@ class NearDupPipeline:
 
             # -- stage 2: bands --------------------------------------------
             bands, _ = self._stage("bands", resume,
-                                   lambda p: build_bands(sigs, self.cfg),
+                                   lambda p, tap: build_bands(sigs,
+                                                              self.cfg),
                                    after="signatures")
 
             # -- stage 3: candidate pairs (LSH buckets ∪ suffix pass) ------
@@ -406,10 +449,10 @@ class NearDupPipeline:
             # pairs have been computing since stage 1
             pairs, n_pairs = self._stage(
                 "candidate_pairs", resume,
-                lambda p: (emit_bucket_pairs(bands)
-                           .unionByName(sfx_future.result())
-                           .groupBy("a", "b")
-                           .agg(F.min("src").alias("src"))),
+                lambda p, tap: (emit_bucket_pairs(bands)
+                                .unionByName(sfx_future.result())
+                                .groupBy("a", "b")
+                                .agg(F.min("src").alias("src"))),
                 after="bands")
             if sfx_future is not None:
                 # no silent caps: surface bucket policy stats in the log.
@@ -429,8 +472,8 @@ class NearDupPipeline:
             # so the attach's distinct-id count (two ids per pair)
             edges, n_edges = self._stage(
                 "verified_edges", resume,
-                lambda p: verified_edges(pairs, images_rep, self.cfg,
-                                         n_pairs_hint=n_pairs),
+                lambda p, tap: verified_edges(pairs, images_rep, self.cfg,
+                                              n_pairs_hint=n_pairs),
                 after="candidate_pairs")
 
             # ck_index depends only on the stage-0 exact_groups checkpoint
@@ -443,13 +486,12 @@ class NearDupPipeline:
             # job just queued and its recorded wall inflated 1.6 s → 3.7 s.)
             spawn(lambda: self._stage(
                 "ck_index", resume,
-                lambda p: write_ck_index(groups, p, self.cfg),
+                lambda p, tap: write_ck_index(groups, p, self.cfg, tap),
                 after="exact_groups"))
             spawn(lambda: self._stage(
                 "edge_index", resume,
-                lambda p: write_edge_index(edges, p, self.cfg),
-                after="verified_edges",
-                read=lambda p: read_edge_index(self.spark, p)))
+                lambda p, tap: write_edge_index(edges, p, self.cfg, tap),
+                after="verified_edges"))
 
             # -- stage 5: clusters (CC over reps, then expand exact-group
             #    members onto their rep's cluster).  The edge count is
@@ -458,7 +500,7 @@ class NearDupPipeline:
             #    path (its point is surviving executor loss).  Written
             #    hive-partitioned on pbucket(cluster_id) so the append
             #    path can prune its partition-level rewrite ---------------
-            def _w_clusters(path: str) -> None:
+            def _w_clusters(path: str, tap) -> None:
                 cc_dir = (os.path.join(self.dir, "cc_work")
                           if self.cfg.cc_reliable_checkpoints else None)
                 comp = cc_roots(edges, n_edges, self.cfg,
@@ -472,10 +514,11 @@ class NearDupPipeline:
                 # every task writes a file into every pbucket dir (tasks x
                 # buckets small files — measured 3x stage cost at 213k
                 # rows); with it each bucket is one task writing one file
-                (expand_clusters(rep_clusters, groups)
-                 .withColumn("pbucket", cluster_pbucket(self.cfg))
-                 .repartition(self.cfg.cluster_buckets, F.col("pbucket"))
-                 .write.mode("overwrite").partitionBy("pbucket")
+                out = (expand_clusters(rep_clusters, groups)
+                       .withColumn("pbucket", cluster_pbucket(self.cfg))
+                       .repartition(self.cfg.cluster_buckets,
+                                    F.col("pbucket")))
+                (tap(out).write.mode("overwrite").partitionBy("pbucket")
                  .parquet(path))
 
             clusters, _ = self._stage("clusters", resume, _w_clusters,
@@ -491,8 +534,8 @@ class NearDupPipeline:
             #    (guide §2.6) — only the clusters-dependent id_index
             #    remains on the critical path.
             self._stage("id_index", resume,
-                        lambda p: write_id_index(clusters, groups, p,
-                                                 self.cfg),
+                        lambda p, tap: write_id_index(clusters, groups, p,
+                                                      self.cfg, tap),
                         after="clusters")
         gen_path = os.path.join(self.dir, ID_GEN_FILE)
         if not self.fs.exists(gen_path):
@@ -608,21 +651,21 @@ def stage_clusters_rewrite(pipe: NearDupPipeline, staging: str,
             .join(F.broadcast(aff.select("cluster_id")), "cluster_id",
                   "left_anti")
             .select("image_id", "cluster_id"))
-    (kept.unionByName(delta.select("image_id", "cluster_id"))
-     .withColumn("pbucket", pb)
-     .repartition(max(len(touched), 1), F.col("pbucket"))
+    tap, rows = row_counter()
+    (tap(kept.unionByName(delta.select("image_id", "cluster_id"))
+         .withColumn("pbucket", pb)
+         .repartition(max(len(touched), 1), F.col("pbucket")))
      .write.mode("overwrite").partitionBy("pbucket")
      .parquet(f"{staging}/clusters"))
-    # explicit schema: a remove that kills every cluster in its touched
-    # buckets stages an EMPTY dir, which inference cannot read
-    staged = (pipe.spark.read
-              .schema("image_id string, cluster_id string, pbucket int")
-              .parquet(f"{staging}/clusters"))
-    pipe._record(f"{prefix}_clusters_rewrite", staged, t0,
+    pipe._record(f"{prefix}_clusters_rewrite", rows(), t0,
                  after=f"{prefix}_clusters")
-    present = {r[0] for r in
-               staged.select("pbucket").distinct().collect()}
-    return {str(p): bool(p in present) for p in touched}
+    # a partitioned write makes a pbucket= dir exactly for the buckets
+    # it wrote rows to (a remove that kills every cluster in its touched
+    # buckets stages none)
+    present = {child.rsplit("/pbucket=", 1)[1] for child in
+               pipe.fs.list_children(f"{staging}/clusters")
+               if "/pbucket=" in child}
+    return {str(p): str(p) in present for p in touched}
 
 
 @_writer_locked
@@ -717,11 +760,12 @@ def incremental_add(spark: SparkSession, cfg: PipelineConfig,
     from gsearch_spark.operators.candidates import (emit_bucket_pairs,
                                                     probe_pairs_vs_stored)
     from gsearch_spark.operators.exact import content_keys
-    from gsearch_spark.operators.keyidx import (lookup_ck_index,
+    from gsearch_spark.operators.keyidx import (CK_INDEX, EDGE_INDEX,
+                                                lookup_ck_index,
                                                 lookup_id_index, probe_keys,
-                                                stage_ck_append,
-                                                stage_edge_append,
-                                                stage_id_append)
+                                                stage_id_append,
+                                                write_ck_index,
+                                                write_edge_index)
     from gsearch_spark.operators.suffix import suffix_candidate_pairs
     from gsearch_spark.operators.verify import (attach_payloads,
                                                 attach_strategy,
@@ -759,37 +803,24 @@ def incremental_add(spark: SparkSession, cfg: PipelineConfig,
                      .localCheckpoint()) if removals else None
             return removals, dead, remap
 
-        setup = [spawn(t) for t in (
-            lambda: spark.read.parquet(pipe._path("exact_groups")),
-            lambda: spark.read.parquet(pipe._path("bands")),
-            lambda: spark.read.parquet(pipe._path("clusters")),
-            lambda: spark.read.parquet(ck_path),
-            lambda: spark.read.parquet(id_path),
-            _rm_state)]
-        new_images = new_images.localCheckpoint()
+        setup = [spawn(lambda n=n: read_layout(spark, checkpoint_dir, n))
+                 for n in ("exact_groups", "bands", "clusters", "ck_index",
+                           "id_index")] + [spawn(_rm_state)]
+        new_images, n_new = checkpoint_rows(new_images)
         (old_groups, old_bands, clusters_stored, ck_idx_df, id_idx_df,
          (removals, dead_df, remap_df)) = [f.result() for f in setup]
-        if "ck" not in old_groups.columns:
-            raise ValueError(
-                "checkpoint predates append-only add (exact_groups has no "
-                "content-key column); rebuild with tohnsw first")
-        if "pbucket" not in clusters_stored.columns:
-            raise ValueError(
-                "checkpoint predates bucketed clusters (no pbucket "
-                "partitioning); rebuild with tohnsw first")
 
         # three independent probe chains run CONCURRENTLY (guide §2.6): the
         # union sanity counts, the id-clash refusal lookup and the new
         # slice's content keys share nothing and are each a couple of small
         # jobs whose latency would otherwise serialize
         def _chk_counts():
-            n_new = new_images.count()
             n_old = old_groups.count()
             # exact_groups is merge-on-read historical state: removed rows
             # stay until compaction, so the live count subtracts tombstones
             n_dead = count_tombstones(spark, checkpoint_dir) if removals \
                 else 0
-            return n_new, n_old, n_dead, all_images.count()
+            return n_old, n_dead, all_images.count()
 
         def _chk_clash():
             # id-clash refusal via the id-keyed layout: O(new) pruned point
@@ -798,7 +829,7 @@ def incremental_add(spark: SparkSession, cfg: PipelineConfig,
             clash = lookup_id_index(spark, id_path,
                                     new_images.select("image_id"), cfg,
                                     idx_df=id_idx_df)
-            return pipe._record("add_lookup_idclash", clash, t0)
+            return pipe._record("add_lookup_idclash", clash.count(), t0)
 
         def _mk_old_keys():
             # content keys of the new slice, then the ck-membership probe —
@@ -814,8 +845,8 @@ def incremental_add(spark: SparkSession, cfg: PipelineConfig,
                 # FRESH, not resurrect the dead group node
                 old_keys = old_keys.join(F.broadcast(dead_df), "rep_id",
                                          "left_anti")
-            old_keys = old_keys.localCheckpoint()  # O(new) rows
-            pipe._record("add_lookup_ck", old_keys, t0)
+            old_keys, n_keys = checkpoint_rows(old_keys)  # O(new) rows
+            pipe._record("add_lookup_ck", n_keys, t0)
             return nk, old_keys
 
         def _touched_prefix():
@@ -860,14 +891,14 @@ def incremental_add(spark: SparkSession, cfg: PipelineConfig,
                     "image_id", "left_semi").select("image_id")
                 old_touched_reps = old_touched_reps.unionByName(promoted) \
                     .distinct()
-            old_touched_reps = old_touched_reps.localCheckpoint()
-            pipe._record("add_lookup_touched_reps", old_touched_reps, t0)
+            old_touched_reps, n_reps = checkpoint_rows(old_touched_reps)
+            pipe._record("add_lookup_touched_reps", n_reps, t0)
             return touched_imgs, old_touched_reps
 
         touched_future = spawn(_touched_prefix)
         counts_future, clash_future = spawn(_chk_counts), spawn(_chk_clash)
         nk, old_keys = _mk_old_keys()
-        n_new, n_old, n_dead, n_all = counts_future.result()
+        n_old, n_dead, n_all = counts_future.result()
         if n_all != n_old - n_dead + n_new:
             raise ValueError("all_images must be exactly old ∪ new "
                              "(minus removed rows)")
@@ -879,11 +910,11 @@ def incremental_add(spark: SparkSession, cfg: PipelineConfig,
             """Materialize a delta under staging; record rows/secs as add_*
             (``after``: the logical predecessor's unprefixed name)."""
             t0 = time.time()
-            df.write.mode("overwrite").parquet(f"{staging}/{name}")
-            out = spark.read.parquet(f"{staging}/{name}")
-            pipe._record(f"add_{name}", out, t0,
+            tap, rows = row_counter()
+            tap(df).write.mode("overwrite").parquet(f"{staging}/{name}")
+            pipe._record(f"add_{name}", rows(), t0,
                          after=after and f"add_{after}")
-            return out
+            return read_layout(spark, staging, name)
 
         # -- exact grouping of the new slice (no old bytes touched; the
         #    membership probe was a pruned point lookup into ck_index in
@@ -1001,7 +1032,8 @@ def incremental_add(spark: SparkSession, cfg: PipelineConfig,
                     .dropDuplicates(["a", "b"])).localCheckpoint()
 
         sfx_future = spawn(_br_touched)
-        spawn(lambda: stage_ck_append(new_groups, staging, cfg))
+        spawn(lambda: write_ck_index(new_groups, f"{staging}/{CK_INDEX}",
+                                     cfg))
         new_sigs = stage("signatures", compute_signatures(to_sketch, cfg),
                          after="exact_groups")
         no_future = spawn(lambda: _probe_old_pairs(new_sigs))
@@ -1033,9 +1065,10 @@ def incremental_add(spark: SparkSession, cfg: PipelineConfig,
         # (meta joins + window) otherwise evaluates twice — once as the
         # candidate-id semi build side, once as the pair probe side
         # (guide §2.4: duplicated subtrees in the plan)
-        capped = (keyed.withColumn("rn", F.row_number().over(w_cap))
-                  .filter(F.col("rn") <= cfg.add_max_candidates_per_item)
-                  .select("a", "b", "src")).localCheckpoint()
+        capped, n_cap = checkpoint_rows(
+            keyed.withColumn("rn", F.row_number().over(w_cap))
+            .filter(F.col("rn") <= cfg.add_max_candidates_per_item)
+            .select("a", "b", "src"))
         # materialize_slim: the candidate payload slice is O(new x cap) ids
         # out of the whole corpus — one eager cut replaces TWO full payload
         # scans in the pair-attach plan (guide §8: move heavy bytes once).
@@ -1063,7 +1096,6 @@ def incremental_add(spark: SparkSession, cfg: PipelineConfig,
             if mr_future is None:
                 return None
             mr_l, rmp = mr_future.result()
-            n_cap = capped.count()
             if (2 * n_cap + n_new) > cfg.add_cc_local_max_edges:
                 return None  # collect would blow the driver budget
             lreps = sorted({rmp.get(r, r) for r in mr_l})
@@ -1114,7 +1146,7 @@ def incremental_add(spark: SparkSession, cfg: PipelineConfig,
                       .select(F.least("na", "nb").alias("a"),
                               F.greatest("na", "nb").alias("b"))
                       .distinct())
-            stage_edge_append(fedges, staging, cfg)
+            write_edge_index(fedges, f"{staging}/{EDGE_INDEX}", cfg)
 
         # DRIVER tail (guide §2.6 taken to its limit): the whole labels ->
         # contracted-CC -> affected-set algebra operates on sets bounded by
@@ -1166,7 +1198,7 @@ def incremental_add(spark: SparkSession, cfg: PipelineConfig,
                         labels_map[rep] = labels_live[lrep]
             labels = local_frame(spark, sorted(labels_map.items()),
                                  "image_id string, label string")
-            pipe._record("add_lookup_labels", labels, t0,
+            pipe._record("add_lookup_labels", len(labels_map), t0,
                          after="add_verified_edges")
             t0 = time.time()
             le_set = set()
@@ -1175,9 +1207,7 @@ def incremental_add(spark: SparkSession, cfg: PipelineConfig,
                 lb = labels_map.get(b, b)
                 if la != lb:
                     le_set.add((la, lb))
-            label_edges = local_frame(spark, sorted(le_set),
-                                      "a string, b string")
-            pipe._record("add_cc_edges", label_edges, t0,
+            pipe._record("add_cc_edges", len(le_set), t0,
                          after="add_verified_edges")
             mapping = union_find(sorted(le_set))
             rep_cc = local_frame(spark, sorted(mapping.items()),
@@ -1242,22 +1272,25 @@ def incremental_add(spark: SparkSession, cfg: PipelineConfig,
                     .distinct())
             else:
                 labels = labels_live
-            pipe._record("add_lookup_labels", labels, t0,
+            # cut: five plans below read the labels
+            labels, n_labels = checkpoint_rows(labels)
+            pipe._record("add_lookup_labels", n_labels, t0,
                          after="add_verified_edges")
             t0 = time.time()
             lab_a = labels.select(F.col("image_id").alias("a"),
                                   F.col("label").alias("la"))
             lab_b = labels.select(F.col("image_id").alias("b"),
                                   F.col("label").alias("lb"))
-            label_edges = (new_edges.select("a", "b")
-                           .join(F.broadcast(lab_a), "a", "left")
-                           .join(F.broadcast(lab_b), "b", "left")
-                           .select(F.coalesce("la", F.col("a")).alias("a"),
-                                   F.coalesce("lb", F.col("b")).alias("b"))
-                           .filter(F.col("a") != F.col("b"))
-                           .distinct().localCheckpoint())
-            n_label_edges = pipe._record("add_cc_edges", label_edges, t0,
-                                         after="add_verified_edges")
+            label_edges, n_label_edges = checkpoint_rows(
+                new_edges.select("a", "b")
+                .join(F.broadcast(lab_a), "a", "left")
+                .join(F.broadcast(lab_b), "b", "left")
+                .select(F.coalesce("la", F.col("a")).alias("a"),
+                        F.coalesce("lb", F.col("b")).alias("b"))
+                .filter(F.col("a") != F.col("b"))
+                .distinct())
+            pipe._record("add_cc_edges", n_label_edges, t0,
+                         after="add_verified_edges")
             rep_cc = cc_roots(label_edges, n_label_edges, cfg)
             # affected clusters: merged old labels ∪ clusters whose
             # exact-groups gained members
@@ -1311,10 +1344,10 @@ def incremental_add(spark: SparkSession, cfg: PipelineConfig,
         members = relab_old.unionByName(relab_new)
         norm = members.groupBy("root").agg(F.min("image_id")
                                            .alias("cluster_id"))
-        delta = (members.join(F.broadcast(norm), "root")
-                 .select("image_id", "cluster_id", "is_rep", "rep_id")
-                 .localCheckpoint())
-        pipe._record("add_clusters", delta, t0, after="add_cc_edges")
+        delta, n_delta = checkpoint_rows(
+            members.join(F.broadcast(norm), "root")
+            .select("image_id", "cluster_id", "is_rep", "rep_id"))
+        pipe._record("add_clusters", n_delta, t0, after="add_cc_edges")
 
         # -- stage the rewritten clusters partitions (touched buckets only)
         #    and the id_index delta — the ck_index delta was staged in the
@@ -1324,18 +1357,17 @@ def incremental_add(spark: SparkSession, cfg: PipelineConfig,
         #    append, latest-gen-wins — no stored index rows are read or
         #    rewritten) ---------------------------------------------------
         t0 = time.time()
-        spawn(lambda: stage_id_append(delta, new_gen, staging, cfg))
+        id_tap, id_rows = row_counter()
+        spawn(lambda: stage_id_append(delta, new_gen, staging, cfg, id_tap))
         swap = stage_clusters_rewrite(pipe, staging, clusters_stored, aff_cl,
                                       aff_buckets, delta, "add")
-    pipe._record("add_index_delta",
-                 spark.read.parquet(f"{staging}/id_index"), t0,
-                 after="add_clusters")
+    pipe._record("add_index_delta", id_rows(), t0, after="add_clusters")
     finish_commit(spark, pipe.fs, checkpoint_dir, write_manifest(
         pipe, staging, new_gen, swap,
         ["exact_groups", "signatures", "bands", "candidate_pairs",
          "verified_edges"],
         ["ck_index", "id_index", "edge_index"]), pipe._flush_state)
-    return (spark.read.parquet(pipe._path("clusters"))
+    return (read_layout(spark, checkpoint_dir, "clusters")
             .select("image_id", "cluster_id"))
 
 

@@ -63,9 +63,11 @@ from gsearch_spark.operators.keyidx import (key_bucket, lookup_edges_among,
                                             lookup_id_index, stage_id_append)
 from gsearch_spark.operators.pipeline import (NearDupPipeline, _writer_locked,
                                               add_writer_lock, cc_roots,
-                                              chains, cluster_pbucket,
+                                              chains, checkpoint_rows,
+                                              cluster_pbucket,
                                               finish_commit,
                                               mutation_prologue,
+                                              read_layout,
                                               recover_add_commit,
                                               stage_clusters_rewrite,
                                               write_manifest)
@@ -159,11 +161,10 @@ def remove_images(spark: SparkSession, cfg: PipelineConfig,
     staging, new_gen = mutation_prologue(pipe, ("id_index", "edge_index"))
     id_path = pipe._path("id_index")
     edge_path = pipe._path("edge_index")
-    id_idx_df = spark.read.parquet(id_path)
-    clusters_stored = spark.read.parquet(pipe._path("clusters"))
+    id_idx_df = read_layout(spark, checkpoint_dir, "id_index")
+    clusters_stored = read_layout(spark, checkpoint_dir, "clusters")
 
-    rm = remove_ids.select("image_id").distinct().localCheckpoint()
-    n_rm = rm.count()
+    rm, n_rm = checkpoint_rows(remove_ids.select("image_id").distinct())
     if n_rm == 0:
         return clusters_stored.select("image_id", "cluster_id")
 
@@ -172,9 +173,9 @@ def remove_images(spark: SparkSession, cfg: PipelineConfig,
     #    run concurrently (guide §2.6)
     def _lk_info():
         t0 = time.time()
-        info = lookup_id_index(spark, id_path, rm, cfg,
-                               idx_df=id_idx_df).localCheckpoint()
-        return info, pipe._record("rm_lookup_ids", info, t0)
+        info, n_info = checkpoint_rows(lookup_id_index(
+            spark, id_path, rm, cfg, idx_df=id_idx_df))
+        return info, pipe._record("rm_lookup_ids", n_info, t0)
 
     def _chk_already():
         already = rm.join(read_tombstones(spark, checkpoint_dir),
@@ -222,8 +223,8 @@ def remove_images(spark: SparkSession, cfg: PipelineConfig,
         minfo = (lookup_id_index(spark, id_path, members.select("image_id"),
                                  cfg, idx_df=id_idx_df)
                  .select("image_id", "rep_id"))
-        mem = members.join(minfo, "image_id").localCheckpoint()
-        pipe._record("rm_members", mem, t0, after="rm_lookup_ids")
+        mem, n_mem = checkpoint_rows(members.join(minfo, "image_id"))
+        pipe._record("rm_members", n_mem, t0, after="rm_lookup_ids")
 
         # PREFETCH the dedup-graph edge read (guide §2.6): the surviving
         # nodes are a subset of ALL affected founding nodes, which are known
@@ -285,10 +286,10 @@ def remove_images(spark: SparkSession, cfg: PipelineConfig,
         e_sup = edges_future.result()
         sn_a = surv_groups.withColumnRenamed("rep_id", "a")
         sn_b = surv_groups.withColumnRenamed("rep_id", "b")
-        edges = (e_sup.join(F.broadcast(sn_a), "a", "left_semi")
-                 .join(F.broadcast(sn_b), "b", "left_semi")
-                 .localCheckpoint())
-        n_edges = pipe._record("rm_cc_edges", edges, t0, after="rm_members")
+        edges, n_edges = checkpoint_rows(
+            e_sup.join(F.broadcast(sn_a), "a", "left_semi")
+            .join(F.broadcast(sn_b), "b", "left_semi"))
+        pipe._record("rm_cc_edges", n_edges, t0, after="rm_members")
         roots_df = cc_roots(edges, n_edges, cfg).select(
             F.col("image_id").alias("rep_id"),
             F.col("cluster_id").alias("root"))
@@ -297,9 +298,10 @@ def remove_images(spark: SparkSession, cfg: PipelineConfig,
                  .join(F.broadcast(roots_df), "rep_id", "left")
                  .withColumn("root", F.coalesce("root", "rep_id")))
         norm = relab.groupBy("root").agg(F.min("image_id").alias("cluster_id"))
-        delta = (relab.join(F.broadcast(norm), "root")
-                 .select("image_id", "cluster_id").localCheckpoint())
-        pipe._record("rm_clusters", delta, t0, after="rm_cc_edges")
+        delta, n_delta = checkpoint_rows(
+            relab.join(F.broadcast(norm), "root")
+            .select("image_id", "cluster_id"))
+        pipe._record("rm_clusters", n_delta, t0, after="rm_cc_edges")
 
         # -- stage the remaining deltas, then the shared manifest commit.
         #    Tombstones and the dead-group/remap sidecars have been staging
@@ -326,7 +328,7 @@ def remove_images(spark: SparkSession, cfg: PipelineConfig,
     finish_commit(spark, pipe.fs, checkpoint_dir, write_manifest(
         pipe, staging, new_gen, swap, [DEAD_GROUPS, REP_REMAP],
         ["id_index", TOMBSTONES]), pipe._flush_state)
-    return (spark.read.parquet(pipe._path("clusters"))
+    return (read_layout(spark, checkpoint_dir, "clusters")
             .select("image_id", "cluster_id"))
 
 
@@ -354,8 +356,7 @@ def purge_removed(spark: SparkSession, cfg: PipelineConfig,
     ids — the sidecar vetoes stay in force until the final step); run
     it in a maintenance window like any rewrite-data-files job.
     """
-    from gsearch_spark.operators.keyidx import (read_edge_index,
-                                                swap_table_in)
+    from gsearch_spark.operators.keyidx import swap_table_in, write_keyed
     pipe = NearDupPipeline(spark, cfg, checkpoint_dir)
     with add_writer_lock(spark, checkpoint_dir):
         cfg.assert_matches_via(pipe.fs, checkpoint_dir)
@@ -364,24 +365,26 @@ def purge_removed(spark: SparkSession, cfg: PipelineConfig,
         if not has_removals(spark, checkpoint_dir):
             return {"tombstones_purged": 0, "dead_groups_purged": 0,
                     "reps_rekeyed": 0}
-        T = (read_tombstones(spark, checkpoint_dir)
-             .select("image_id").localCheckpoint())
-        D = (read_dead_groups(spark, checkpoint_dir)
-             .select("rep_id").localCheckpoint())
-        R = read_rep_remap(spark, checkpoint_dir).localCheckpoint()
-        stats = {"tombstones_purged": T.count(),
-                 "dead_groups_purged": D.count(),
-                 "reps_rekeyed": R.count()}
+        T, n_t = checkpoint_rows(
+            read_tombstones(spark, checkpoint_dir).select("image_id"))
+        D, n_d = checkpoint_rows(
+            read_dead_groups(spark, checkpoint_dir).select("rep_id"))
+        R, n_r = checkpoint_rows(read_rep_remap(spark, checkpoint_dir))
+        stats = {"tombstones_purged": n_t, "dead_groups_purged": n_d,
+                 "reps_rekeyed": n_r}
+
+        def read(name: str) -> DataFrame:
+            return read_layout(spark, checkpoint_dir, name)
 
         def _swap(name: str, df: DataFrame,
-                  partition_col: "str | None" = None) -> None:
+                  keyed: "tuple[str, str] | None" = None) -> None:
+            """Stage ``df`` as ``name``'s replacement — flat, or as a
+            key-addressed layout on ``keyed = (key_col, part_col)`` —
+            and swap it in."""
             path = pipe._path(name)
             tmp = f"{path}__compact"
-            if partition_col:
-                (df.repartition(cfg.key_buckets, F.col(partition_col))
-                 .sortWithinPartitions(df.columns[0])
-                 .write.mode("overwrite").partitionBy(partition_col)
-                 .parquet(tmp))
+            if keyed:
+                write_keyed(df, *keyed, tmp, cfg)
             else:
                 df.write.mode("overwrite").parquet(tmp)
             swap_table_in(pipe.fs, path, tmp)
@@ -406,46 +409,40 @@ def purge_removed(spark: SparkSession, cfg: PipelineConfig,
                             F.greatest("a", "b").alias("b"), *extra)
 
         # member-level table: drop tombstoned rows, re-key group reps
-        eg = spark.read.parquet(pipe._path("exact_groups"))
+        eg = read("exact_groups")
         _swap("exact_groups",
               remap_col(eg.join(F.broadcast(T), "image_id", "left_anti"),
                         "rep_id"))
         # rep-keyed tables: dead groups vanish, remapped reps re-key
         # (the promoted member is byte-and-caption identical, so the
         # signature/band/sketch VALUES are already its own)
-        sigs = spark.read.parquet(pipe._path("signatures"))
+        sigs = read("signatures")
         _swap("signatures", remap_col(drop_dead(sigs, "image_id"),
                                       "image_id"))
-        bands = spark.read.parquet(pipe._path("bands"))
+        bands = read("bands")
         _swap("bands", remap_col(drop_dead(bands, "image_id"),
                                  "image_id"))
-        cp = spark.read.parquet(pipe._path("candidate_pairs"))
+        cp = read("candidate_pairs")
         _swap("candidate_pairs", pair_fix(cp, ["src"]))
-        ve = spark.read.parquet(pipe._path("verified_edges"))
+        ve = read("verified_edges")
         _swap("verified_edges",
               pair_fix(ve, [c for c in ve.columns if c not in ("a", "b")]))
-        ei = read_edge_index(spark, pipe._path("edge_index"))
-        ei2 = (pair_fix(ei.select("a", "b"), [])
-               .withColumn("eb", key_bucket("a", cfg.key_buckets)))
-        _swap("edge_index", ei2, partition_col="eb")
-        ck = spark.read.parquet(pipe._path("ck_index"))
+        _swap("edge_index",
+              pair_fix(read("edge_index").select("a", "b"), []),
+              ("a", "eb"))
         _swap("ck_index",
-              remap_col(drop_dead(ck, "rep_id"), "rep_id")
-              .select("ck", "rep_id", "kb"), partition_col="kb")
+              remap_col(drop_dead(read("ck_index"), "rep_id"), "rep_id")
+              .select("ck", "rep_id"), ("ck", "kb"))
         # id_index: rebuild one gen-0 row per surviving image from the
         # purged clusters+groups (restores is_rep on promoted reps; the
         # generation counter file is untouched, so future mutations'
         # deltas still win lookups)
-        eg2 = spark.read.parquet(pipe._path("exact_groups"))
-        clusters = (spark.read.parquet(pipe._path("clusters"))
-                    .select("image_id", "cluster_id"))
-        flags = eg2.select("image_id",
-                           (F.col("image_id") == F.col("rep_id"))
-                           .alias("is_rep"), "rep_id")
-        idx = (clusters.join(flags, "image_id")
-               .withColumn("gen", F.lit(0))
-               .withColumn("ib", key_bucket("image_id", cfg.key_buckets)))
-        _swap("id_index", idx, partition_col="ib")
+        flags = read("exact_groups").select(
+            "image_id", (F.col("image_id") == F.col("rep_id"))
+            .alias("is_rep"), "rep_id")
+        idx = (read("clusters").select("image_id", "cluster_id")
+               .join(flags, "image_id").withColumn("gen", F.lit(0)))
+        _swap("id_index", idx, ("image_id", "ib"))
         # sidecars go LAST: until here every reader stayed correct under
         # merge-on-read; after, the zero-removal fast paths re-engage
         for name in (TOMBSTONES, DEAD_GROUPS, REP_REMAP):

@@ -173,6 +173,7 @@ def request(spark: SparkSession, checkpoint_dir: str,
       an explicit int overrides it, 0 forces exact.
     """
     from gsearch_spark.fs import CheckpointFS
+    from gsearch_spark.operators.pipeline import read_layout
     stored_cfg = PipelineConfig.reload_via(CheckpointFS(spark, checkpoint_dir),
                                            checkpoint_dir)
     if cfg is not None and cfg.config_hash() != stored_cfg.config_hash():
@@ -194,8 +195,8 @@ def request(spark: SparkSession, checkpoint_dir: str,
     # through Spark's plan-keyed cache (the documented pitfall).
     q_sigs = compute_signatures(query_images, cfg).localCheckpoint()
     q_bands = explode_all_bands(q_sigs, cfg)
-    stored_bands = spark.read.parquet(f"{checkpoint_dir}/bands")
-    stored_sigs = spark.read.parquet(f"{checkpoint_dir}/signatures")
+    stored_bands = read_layout(spark, checkpoint_dir, "bands")
+    stored_sigs = read_layout(spark, checkpoint_dir, "signatures")
     cands = probe_candidates(q_bands, stored_bands,
                              broadcast_probe=broadcast_probe,
                              max_bucket_probe=cap)

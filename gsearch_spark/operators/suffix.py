@@ -21,7 +21,7 @@ IDENTICAL pixels (same phash).  A pair that is BOTH lossy-re-encoded
 groups and is NOT this pass's job — it is caught by the phash
 chunk-COMBO band net (exact Hamming <= phash_chunks - phash_combo over
 ALL rows: 2 by default, 4 with the wide-radius config — see
-banding.explode_phash_bands), and verify's substring rule then accepts
+banding.explode_all_bands), and verify's substring rule then accepts
 the pair.  tests/test_suffix_array.py::
 test_reencode_plus_truncation_caught_by_phash_net proves BOTH radii
 end-to-end with an adversarial fixture.

@@ -102,8 +102,9 @@ def test_pipeline_precision_vs_oracle(clusters_df, rows):
 
 
 def test_pipeline_state_lineage(clusters_df, spark):
-    """pipeline_state has per-partition rows for every stage and a single
-    config hash (processing_state.json analog)."""
+    """pipeline_state has a row (part_id -1, the stage's whole row count)
+    for every stage and a single config hash (processing_state.json
+    analog)."""
     _, pipe = clusters_df
     state = spark.read.parquet(os.path.join(CKPT, "pipeline_state"))
     got = {r["stage"] for r in state.select("stage").distinct().collect()}
@@ -113,6 +114,26 @@ def test_pipeline_state_lineage(clusters_df, spark):
     hashes = {r["config_hash"]
               for r in state.select("config_hash").distinct().collect()}
     assert hashes == {CFG.config_hash()}
+
+
+def test_stage_counts_match_tables(clusters_df, spark):
+    """Count oracle: every build stage's rows_out — observed on the write
+    that materialized the stage, no count job of its own — equals a
+    plain count of the checkpoint it wrote, in one part_id -1 row."""
+    from pyspark.sql import functions as F
+    from gsearch_spark.operators.pipeline import read_layout
+    _, pipe = clusters_df
+    state = (spark.read.parquet(os.path.join(CKPT, "pipeline_state"))
+             .groupBy("stage")
+             .agg(F.sum("rows_out").alias("rows"),
+                  F.collect_set("part_id").alias("parts")).collect())
+    assert len(state) == 9
+    for r in state:
+        assert r["parts"] == [-1], r["stage"]
+        assert r["rows"] == read_layout(spark, CKPT, r["stage"]).count(), \
+            r["stage"]
+    assert {r.stage: r.rows_out for r in pipe.records} == \
+        {r["stage"]: r["rows"] for r in state}
 
 
 def test_partitioning_invariance(spark, small_fixture_dir, clusters_df):

@@ -331,3 +331,39 @@ def test_pooled_gray_accumulator_matches_pool_to():
                 pool.feed(r0, px[r0:r0 + 16])
             assert np.allclose(pool.result(),
                                _pool_to(to_gray(px), grid)), (grid, h, w)
+
+
+@pytest.fixture(scope="module")
+def fixture_signatures(spark, small_fixture_dir):
+    from gsearch_spark.config import PipelineConfig
+    from gsearch_spark.operators.signatures import compute_signatures
+    images = spark.read.parquet(f"{small_fixture_dir}/images.parquet")
+    return compute_signatures(images, PipelineConfig()).localCheckpoint()
+
+
+# Golden digests of explode_all_bands over the 375 fixture signatures,
+# taken from the Column-object builder it replaced: the row count and
+# bit_xor(xxhash64(band_id, band_hash, image_id)).  Stored bands tables
+# are probed with freshly exploded bands (add, request), so a change to
+# any band id, hash argument or literal type breaks every existing
+# build — these must never be re-pinned to make a change pass.
+@pytest.mark.parametrize("overrides, n_rows, digest", [
+    ({}, 10_853, 3240373642542513294),
+    ({"phash_chunks": 8, "phash_combo": 4}, 34_853, -4161924761124048039),
+    ({"bands": 32, "rows_per_band": 4, "simhash_bands": 8}, 25_103,
+     3308525796958238142),
+], ids=["default", "phash8x4", "bands32x4_simhash8"])
+def test_band_rows_match_golden_digest(fixture_signatures, overrides,
+                                       n_rows, digest):
+    import dataclasses
+    from pyspark.sql import functions as F
+    from gsearch_spark.config import PipelineConfig
+    from gsearch_spark.operators.banding import explode_all_bands
+    cfg = dataclasses.replace(PipelineConfig(), **overrides)
+    bands = explode_all_bands(fixture_signatures, cfg)
+    assert bands.schema.simpleString() == \
+        "struct<band_id:int,band_hash:bigint,image_id:string>"
+    got = bands.agg(F.count(F.lit(1)).alias("n"),
+                    F.bit_xor(F.xxhash64("band_id", "band_hash",
+                                         "image_id")).alias("x")).first()
+    assert (got["n"], got["x"]) == (n_rows, digest)

@@ -179,6 +179,17 @@ def test_remove_sidecars_recorded(spark, removal_build):
     assert remap[b["rep_removed"]] == members[0]
 
 
+def test_empty_observed_stage_keeps_lineage_row(spark, removal_build):
+    """The fixture removal leaves no surviving edge in its affected
+    clusters, so rm_cc_edges — counted by an Observation on its eager
+    localCheckpoint — comes out empty: the remove still returned, and
+    the stage records 0 rows in its one part_id -1 lineage row."""
+    state = (spark.read.parquet(f"{removal_build['ckpt']}/pipeline_state")
+             .filter(F.col("stage") == "rm_cc_edges").collect())
+    assert [(r["part_id"], r["rows_in"] > 0, r["rows_out"])
+            for r in state] == [(-1, True, 0)]
+
+
 def test_remove_refusals(spark, removal_build):
     b = removal_build
     with pytest.raises(ValueError, match="unknown image_ids"):

@@ -155,6 +155,28 @@ def test_threads_start_only_in_chains():
     assert not offenders, offenders
 
 
+def test_stage_counts_come_from_the_materializing_action():
+    """Source guard: a stage's row count is taken from the action that
+    already materializes it, never from a count job of its own —
+    ``NearDupPipeline._record`` takes a row count, not a DataFrame; no
+    per-partition count (``spark_partition_id``) is left in the build
+    and mutation paths; and ``pyspark.sql.Observation`` is built (and
+    imported) only in the one counting helper, ``row_counter``."""
+    root = pathlib.Path(gsearch_spark.__file__).parent / "operators"
+    tree = ast.parse((root / "pipeline.py").read_text())
+    record = next(node for cls in tree.body if isinstance(cls, ast.ClassDef)
+                  and cls.name == "NearDupPipeline" for node in cls.body
+                  if isinstance(node, ast.FunctionDef)
+                  and node.name == "_record")
+    rows = record.args.args[2]
+    assert (rows.arg, ast.unparse(rows.annotation)) == ("rows", "int")
+    for name in ("pipeline.py", "remove.py"):
+        assert "spark_partition_id" not in (root / name).read_text(), name
+    offenders = _used_outside({"Observation"}, "pipeline.py",
+                              {"row_counter"})
+    assert not offenders, offenders
+
+
 # PipelineConfig fields no package code reads: each pins into the
 # build's identity (parameters.json) a format or a semantic that the
 # code implements without consulting the field.  Exact: a field leaves
