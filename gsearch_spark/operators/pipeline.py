@@ -703,6 +703,13 @@ def incremental_add(spark: SparkSession, cfg: PipelineConfig,
       arrives later — output labels are normalized below so clusters still
       equal a from-scratch rebuild's);
     * only genuinely new representatives are decoded + sketched + banded;
+    * removed images stay removed: the merge-on-read removal sidecars
+      (``remove.read_removal_state``) apply on every add — the ck probe
+      vetoes dead groups, stored-pair probes drop dead group nodes and
+      re-point remapped founding reps, matched groups read their label
+      through the promoted member.  On a build that never saw a remove
+      the sidecars are empty local relations and those joins fold out
+      of the optimized plans, so the add keeps no removal gate;
     * candidates = new-vs-new (the standard salted bucket self-join over
       the new slice only) ∪ new-vs-old (bounded probe join against the
       stored bands, :func:`probe_pairs_vs_stored`) ∪ the suffix pass over
@@ -777,14 +784,14 @@ def incremental_add(spark: SparkSession, cfg: PipelineConfig,
     ck_path = pipe._path("ck_index")
     id_path = pipe._path("id_index")
     from gsearch_spark.operators.remove import (count_tombstones,
-                                                has_removals,
-                                                read_dead_groups,
-                                                read_rep_remap)
+                                                drop_dead, pair_fix,
+                                                read_removal_state,
+                                                remap_col)
 
     with chains() as spawn:
         # the stored-table handles are driver-side FILE-INDEX LISTINGS (the
         # partitioned sidecars list ~key_buckets dirs each), the removal
-        # gate is more FS probes, and the new slice's one-time lineage cut
+        # state is more FS probes, and the new slice's one-time lineage cut
         # is a small job — all independent, so the whole setup runs as ONE
         # concurrent wave (guide §2.6; measured ~4 s serial at bench scale).
         # One listing per lookup table serves the whole add (the tables
@@ -792,23 +799,16 @@ def incremental_add(spark: SparkSession, cfg: PipelineConfig,
         # localCheckpoint (NOT persist; the documented plan-cache-over-
         # rewritten-path pitfall), O(new) bytes, consumed by ~8 downstream
         # plans.
-        def _rm_state():
-            # merge-on-read removal sidecars (operators/remove.py).  Gated
-            # on the tombstones table's existence so a build that never saw
-            # a remove keeps its exact pre-remove plans (no extra joins).
-            removals = has_removals(spark, checkpoint_dir)
-            dead = (read_dead_groups(spark, checkpoint_dir)
-                    .select("rep_id").localCheckpoint()) if removals else None
-            remap = (read_rep_remap(spark, checkpoint_dir)
-                     .localCheckpoint()) if removals else None
-            return removals, dead, remap
-
+        # merge-on-read removal sidecars (operators/remove.py), applied
+        # on every add: without removals they are empty local relations
+        # and the optimizer folds their joins out of each plan below
         setup = [spawn(lambda n=n: read_layout(spark, checkpoint_dir, n))
                  for n in ("exact_groups", "bands", "clusters", "ck_index",
-                           "id_index")] + [spawn(_rm_state)]
+                           "id_index")] + [
+            spawn(lambda: read_removal_state(spark, checkpoint_dir))]
         new_images, n_new = checkpoint_rows(new_images)
         (old_groups, old_bands, clusters_stored, ck_idx_df, id_idx_df,
-         (removals, dead_df, remap_df)) = [f.result() for f in setup]
+         (dead_df, remap_df)) = [f.result() for f in setup]
 
         # three independent probe chains run CONCURRENTLY (guide §2.6): the
         # union sanity counts, the id-clash refusal lookup and the new
@@ -818,8 +818,7 @@ def incremental_add(spark: SparkSession, cfg: PipelineConfig,
             n_old = old_groups.count()
             # exact_groups is merge-on-read historical state: removed rows
             # stay until compaction, so the live count subtracts tombstones
-            n_dead = count_tombstones(spark, checkpoint_dir) if removals \
-                else 0
+            n_dead = count_tombstones(spark, checkpoint_dir)
             return n_old, n_dead, all_images.count()
 
         def _chk_clash():
@@ -837,15 +836,12 @@ def incremental_add(spark: SparkSession, cfg: PipelineConfig,
             # checks (staging mutation only starts after both validate)
             nk = content_keys(new_images).localCheckpoint()
             t0 = time.time()
-            old_keys = lookup_ck_index(spark, ck_path, nk.select("ck"), cfg,
-                                       idx_df=ck_idx_df)
-            if removals:
-                # a fully-removed exact-group's ck row lingers until
-                # compaction; re-added identical content must read as
-                # FRESH, not resurrect the dead group node
-                old_keys = old_keys.join(F.broadcast(dead_df), "rep_id",
-                                         "left_anti")
-            old_keys, n_keys = checkpoint_rows(old_keys)  # O(new) rows
+            # a fully-removed exact-group's ck row lingers until
+            # compaction; re-added identical content must read as FRESH,
+            # not resurrect the dead group node
+            old_keys, n_keys = checkpoint_rows(drop_dead(  # O(new) rows
+                lookup_ck_index(spark, ck_path, nk.select("ck"), cfg,
+                                idx_df=ck_idx_df), "rep_id", dead_df))
             pipe._record("add_lookup_ck", n_keys, t0)
             return nk, old_keys
 
@@ -878,20 +874,17 @@ def incremental_add(spark: SparkSession, cfg: PipelineConfig,
             touched_lk = lookup_id_index(spark, id_path,
                                          touched_imgs.select("image_id"),
                                          cfg, idx_df=id_idx_df)
-            old_touched_reps = touched_lk.filter(F.col("is_rep")) \
-                .select("image_id")
-            if removals:
-                # a group whose founding rep was removed has NO live is_rep
-                # row; its promoted surviving member (rep_remap target)
-                # stands in as the group's suffix-pass node so the group
-                # isn't skipped
-                promoted = touched_lk.join(
-                    F.broadcast(remap_df.select(F.col("new_rep")
-                                                .alias("image_id"))),
-                    "image_id", "left_semi").select("image_id")
-                old_touched_reps = old_touched_reps.unionByName(promoted) \
-                    .distinct()
-            old_touched_reps, n_reps = checkpoint_rows(old_touched_reps)
+            # a group whose founding rep was removed has NO live is_rep
+            # row; its promoted surviving member (rep_remap target) stands
+            # in as the group's suffix-pass node so the group isn't
+            # skipped
+            promoted = touched_lk.join(
+                F.broadcast(remap_df.select(F.col("new_rep")
+                                            .alias("image_id"))),
+                "image_id", "left_semi")
+            old_touched_reps, n_reps = checkpoint_rows(
+                touched_lk.filter(F.col("is_rep")).select("image_id")
+                .unionByName(promoted.select("image_id")).distinct())
             pipe._record("add_lookup_touched_reps", n_reps, t0)
             return touched_imgs, old_touched_reps
 
@@ -951,8 +944,7 @@ def incremental_add(spark: SparkSession, cfg: PipelineConfig,
                    .select("rep_id").distinct())
         def _mr_collect():
             mr = sorted(r["rep_id"] for r in mr_expr.collect())
-            rmp = ({r["old_rep"]: r["new_rep"] for r in remap_df.collect()}
-                   if removals else {})
+            rmp = {r["old_rep"]: r["new_rep"] for r in remap_df.collect()}
             return mr, rmp
 
         # the spawn gate bounds the COLLECT (mr_list <= n_new rows); past
@@ -977,37 +969,17 @@ def incremental_add(spark: SparkSession, cfg: PipelineConfig,
         # per-job latency into one wave; the suffix chain does not need the
         # new signatures, so it overlaps the decode+sketch stage too.
         def _probe_old_pairs(new_sigs):
-            no_pairs = probe_pairs_vs_stored(explode_all_bands(new_sigs, cfg),
-                                             old_bands)
-            if not removals:
-                return no_pairs.localCheckpoint()
-            # stored bands stay keyed by founding group nodes until
-            # compaction: pairs against a DEAD group's node are content
-            # that no longer exists (drop), and pairs against a tombstoned
-            # founding whose group survives re-point at the promoted
-            # surviving member so the verify stage attaches live payloads.
-            # The stored endpoint can sit in EITHER column (pairs are
-            # least/greatest-canonicalized), so both sides are treated and
-            # the pair re-canonicalized.
-            rm_a = remap_df.select(F.col("old_rep").alias("a"),
-                                   F.col("new_rep").alias("na"))
-            rm_b = remap_df.select(F.col("old_rep").alias("b"),
-                                   F.col("new_rep").alias("nb"))
-            no_pairs = (no_pairs
-                        .join(F.broadcast(dead_df.withColumnRenamed(
-                            "rep_id", "a")), "a", "left_anti")
-                        .join(F.broadcast(dead_df.withColumnRenamed(
-                            "rep_id", "b")), "b", "left_anti")
-                        .join(F.broadcast(rm_a), "a", "left")
-                        .join(F.broadcast(rm_b), "b", "left")
-                        .select(F.coalesce("na", F.col("a")).alias("pa"),
-                                F.coalesce("nb", F.col("b")).alias("pb"),
-                                "src")
-                        .filter(F.col("pa") != F.col("pb"))
-                        .select(F.least("pa", "pb").alias("a"),
-                                F.greatest("pa", "pb").alias("b"), "src")
-                        .groupBy("a", "b").agg(F.min("src").alias("src")))
-            return no_pairs.localCheckpoint()
+            # stored bands stay keyed by founding group nodes until purge:
+            # pairs against a DEAD group's node are content that no longer
+            # exists (drop), and pairs against a tombstoned founding whose
+            # group survives re-point at the promoted surviving member so
+            # the verify stage attaches live payloads.  Pairs the
+            # re-pointing merges are deduplicated by the candidate_pairs
+            # stage's groupBy below.
+            return pair_fix(
+                probe_pairs_vs_stored(explode_all_bands(new_sigs, cfg),
+                                      old_bands),
+                dead_df, remap_df, ["src"]).localCheckpoint()
 
         def _br_touched():
             touched_imgs, old_touched_reps = touched_future.result()
@@ -1152,8 +1124,8 @@ def incremental_add(spark: SparkSession, cfg: PipelineConfig,
         # contracted-CC -> affected-set algebra operates on sets bounded by
         # O(new edges + new rows) — the SAME magnitude the union-find fast
         # path has always collected — yet the DataFrame form pays ~5 small
-        # jobs of latency (mr_map cut, ep_info cut, labels record,
-        # label_edges cut, affected collect).  Whenever the endpoint
+        # jobs of latency (ep_info cut, labels cut, label_edges cut,
+        # affected cut and collect).  Whenever the endpoint
         # prefetch came back (its bound is the driver budget), the
         # prefetched rows, the matched reps and the staged edge list are on
         # the driver and plain dict/set algebra replaces the join chain —
@@ -1192,10 +1164,9 @@ def incremental_add(spark: SparkSession, cfg: PipelineConfig,
             labels_live = {r["image_id"]: r["cluster_id"] for r in ep_rows
                            if r["cluster_id"] is not None}
             labels_map = dict(labels_live)
-            if removals:
-                for rep, lrep in mr_pairs:
-                    if lrep in labels_live:  # inner-join semantics
-                        labels_map[rep] = labels_live[lrep]
+            for rep, lrep in mr_pairs:
+                if lrep in labels_live:  # inner-join semantics
+                    labels_map[rep] = labels_live[lrep]
             labels = local_frame(spark, sorted(labels_map.items()),
                                  "image_id string, label string")
             pipe._record("add_lookup_labels", len(labels_map), t0,
@@ -1230,23 +1201,15 @@ def incremental_add(spark: SparkSession, cfg: PipelineConfig,
         else:
             matched_reps = mr_expr  # old reps gaining members
             # a matched group's founding rep may be tombstoned (group
-            # alive): label read through the promoted surviving member
-            if removals:
-                mr_map = (matched_reps
-                          .join(F.broadcast(remap_df.withColumnRenamed(
-                              "old_rep", "rep_id")), "rep_id", "left")
-                          .select("rep_id",
-                                  F.coalesce("new_rep", "rep_id")
-                                  .alias("lrep"))
-                          .localCheckpoint())
-            else:
-                mr_map = matched_reps.select("rep_id",
-                                             F.col("rep_id").alias("lrep"))
+            # alive): its label is read through the promoted surviving
+            # member
             endpoint_ids = (new_edges.select(F.col("a").alias("image_id"))
                             .unionByName(new_edges.select(F.col("b")
                                                           .alias("image_id")))
-                            .unionByName(mr_map.select(F.col("lrep")
-                                                       .alias("image_id")))
+                            .unionByName(remap_col(matched_reps, "rep_id",
+                                                   remap_df)
+                                         .select(F.col("rep_id")
+                                                 .alias("image_id")))
                             .distinct())
             # endpoint labels via the id-keyed layout: pruned point lookup,
             # O(new edges + matched reps) rows read.  The same lookup also
@@ -1261,19 +1224,18 @@ def incremental_add(spark: SparkSession, cfg: PipelineConfig,
             spawn(lambda: _c_edge_for(ep_info))
             labels_live = ep_info.select("image_id",
                                          F.col("cluster_id").alias("label"))
-            if removals:
-                # founding reps resolve their label via their promoted
-                # member
-                labels = (labels_live.unionByName(
-                    mr_map.join(labels_live.withColumnRenamed("image_id",
-                                                              "lrep"),
-                                "lrep")
-                    .select(F.col("rep_id").alias("image_id"), "label"))
-                    .distinct())
-            else:
-                labels = labels_live
+            # remapped founding reps resolve their label via their
+            # promoted member
+            promoted = (matched_reps
+                        .join(F.broadcast(remap_df.withColumnRenamed(
+                            "old_rep", "rep_id")), "rep_id")
+                        .join(labels_live.withColumnRenamed("image_id",
+                                                            "new_rep"),
+                              "new_rep")
+                        .select(F.col("rep_id").alias("image_id"), "label"))
             # cut: five plans below read the labels
-            labels, n_labels = checkpoint_rows(labels)
+            labels, n_labels = checkpoint_rows(
+                labels_live.unionByName(promoted))
             pipe._record("add_lookup_labels", n_labels, t0,
                          after="add_verified_edges")
             t0 = time.time()

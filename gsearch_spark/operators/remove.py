@@ -87,8 +87,11 @@ REMAP_SCHEMA = "old_rep string, new_rep string, gen int"
 def _read_or_empty(spark: SparkSession, checkpoint_dir: str, name: str,
                    schema: str) -> DataFrame:
     """Explicit-schema read; a build with no removes yet has no sidecar
-    — read as empty instead of failing (and instead of inferring, which
-    an all-empty partitioned table cannot support)."""
+    — read as an empty local relation instead of failing (and instead
+    of inferring, which an all-empty partitioned table cannot support).
+    Kept a LocalRelation on purpose: the optimizer's
+    PropagateEmptyRelation folds every join it feeds out of the plan,
+    which a checkpointed empty frame (a LogicalRDD) would hide."""
     path = f"{checkpoint_dir}/{name}"
     from gsearch_spark.fs import CheckpointFS
     if not CheckpointFS(spark, path).exists(path):
@@ -114,16 +117,70 @@ def read_rep_remap(spark: SparkSession, checkpoint_dir: str) -> DataFrame:
             .agg(F.max_by("new_rep", "gen").alias("new_rep")))
 
 
+def read_removal_state(spark: SparkSession,
+                       checkpoint_dir: str) -> "tuple[DataFrame, DataFrame]":
+    """``(dead, remap)``: the dead founding group nodes (``rep_id``) and
+    the resolved ``rep_remap`` (``old_rep``, ``new_rep``) — what every
+    reader of the stored rep-keyed tables applies, unconditionally, via
+    :func:`drop_dead`, :func:`remap_col` and :func:`pair_fix`.  On a
+    build that never saw a remove both are empty local relations and
+    the optimizer folds those joins away, so its plans are the
+    zero-removal ones with no gate in the caller."""
+    return (read_dead_groups(spark, checkpoint_dir).select("rep_id"),
+            read_rep_remap(spark, checkpoint_dir))
+
+
 def count_tombstones(spark: SparkSession, checkpoint_dir: str) -> int:
+    """Removed images so far.  An absent sidecar answers 0 without a
+    job: a count of an empty local relation still runs one."""
+    if not has_removals(spark, checkpoint_dir):
+        return 0
     return read_tombstones(spark, checkpoint_dir).count()
 
 
 def has_removals(spark: SparkSession, checkpoint_dir: str) -> bool:
-    """Cheap gate so the zero-removal fast paths keep their exact
-    pre-remove plans (no extra joins when the sidecars don't exist)."""
+    """Whether any remove has run since the last purge — purge's
+    nothing-to-purge check and :func:`count_tombstones`' job-free zero.
+    Readers never branch on it; they apply :func:`read_removal_state`."""
     from gsearch_spark.fs import CheckpointFS
     path = f"{checkpoint_dir}/{TOMBSTONES}"
     return CheckpointFS(spark, path).exists(path)
+
+
+# ------------------------------------------------ key translation helpers
+# Stored signatures/bands/pairs stay keyed by FOUNDING group nodes until
+# purge.  These three are the one place that translates such keys: the
+# add (ck veto, stored-pair probe, matched-rep labels), the request
+# (dead targets, answer ids) and purge's physical rewrite all call them.
+
+def drop_dead(df: DataFrame, col: str, dead: DataFrame) -> DataFrame:
+    """Rows of ``df`` whose ``col`` is not a dead group node."""
+    return df.join(F.broadcast(dead.withColumnRenamed("rep_id", col)),
+                   col, "left_anti")
+
+
+def remap_col(df: DataFrame, col: str, remap: DataFrame) -> DataFrame:
+    """``df`` with ``col`` re-pointed from a remapped founding rep to its
+    promoted surviving member (other values and the column order kept)."""
+    rr = remap.select(F.col("old_rep").alias(col),
+                      F.col("new_rep").alias("__nr"))
+    return (df.join(F.broadcast(rr), col, "left")
+            .select(*[F.coalesce("__nr", F.col(c)).alias(c) if c == col
+                      else c for c in df.columns]))
+
+
+def pair_fix(df: DataFrame, dead: DataFrame, remap: DataFrame,
+             extra: "list[str]") -> DataFrame:
+    """Canonical ``(a, b, *extra)`` pairs with either endpoint on a dead
+    group dropped and both endpoints re-pointed — the stored endpoint
+    can sit in EITHER column (pairs are least/greatest-canonical), so
+    both are treated, self-pairs dropped and the pair re-canonicalized.
+    Duplicates it may create are left to the consumer's dedup."""
+    d = remap_col(remap_col(drop_dead(drop_dead(df, "a", dead), "b", dead),
+                            "a", remap), "b", remap)
+    return (d.filter(F.col("a") != F.col("b"))
+            .select(F.least("a", "b").alias("a"),
+                    F.greatest("a", "b").alias("b"), *extra))
 
 
 # tables the purge pass swaps atomically (and whose torn swaps every
@@ -343,8 +400,8 @@ def purge_removed(spark: SparkSession, cfg: PipelineConfig,
     from the purged clusters+groups (restoring is_rep for promoted
     reps), then drops the three sidecars.  After a purge the build is
     byte-level indistinguishable in BEHAVIOR from one that never held
-    the removed rows: adds, requests and reports run their exact
-    zero-removal plans again.
+    the removed rows: the sidecars are gone, so readers see them as
+    empty relations again and their sidecar joins fold out of the plan.
 
     Crash-safety: each table swap is individually atomic (staged write
     + the two-rename protocol of ``keyidx.recover_table_swap``), the
@@ -367,9 +424,9 @@ def purge_removed(spark: SparkSession, cfg: PipelineConfig,
                     "reps_rekeyed": 0}
         T, n_t = checkpoint_rows(
             read_tombstones(spark, checkpoint_dir).select("image_id"))
-        D, n_d = checkpoint_rows(
-            read_dead_groups(spark, checkpoint_dir).select("rep_id"))
-        R, n_r = checkpoint_rows(read_rep_remap(spark, checkpoint_dir))
+        dead, remap = read_removal_state(spark, checkpoint_dir)
+        D, n_d = checkpoint_rows(dead)
+        R, n_r = checkpoint_rows(remap)
         stats = {"tombstones_purged": n_t, "dead_groups_purged": n_d,
                  "reps_rekeyed": n_r}
 
@@ -390,49 +447,29 @@ def purge_removed(spark: SparkSession, cfg: PipelineConfig,
             swap_table_in(pipe.fs, path, tmp)
             spark.catalog.refreshByPath(path)
 
-        def remap_col(df: DataFrame, col: str) -> DataFrame:
-            rr = R.select(F.col("old_rep").alias(col),
-                          F.col("new_rep").alias("__nr"))
-            return (df.join(F.broadcast(rr), col, "left")
-                    .withColumn(col, F.coalesce("__nr", F.col(col)))
-                    .drop("__nr"))
-
-        def drop_dead(df: DataFrame, col: str) -> DataFrame:
-            return df.join(
-                F.broadcast(D.withColumnRenamed("rep_id", col)),
-                col, "left_anti")
-
-        def pair_fix(df: DataFrame, extra: "list[str]") -> DataFrame:
-            d = remap_col(remap_col(drop_dead(drop_dead(df, "a"), "b"),
-                                    "a"), "b")
-            return d.select(F.least("a", "b").alias("a"),
-                            F.greatest("a", "b").alias("b"), *extra)
-
         # member-level table: drop tombstoned rows, re-key group reps
         eg = read("exact_groups")
         _swap("exact_groups",
               remap_col(eg.join(F.broadcast(T), "image_id", "left_anti"),
-                        "rep_id"))
+                        "rep_id", R))
         # rep-keyed tables: dead groups vanish, remapped reps re-key
         # (the promoted member is byte-and-caption identical, so the
         # signature/band/sketch VALUES are already its own)
-        sigs = read("signatures")
-        _swap("signatures", remap_col(drop_dead(sigs, "image_id"),
-                                      "image_id"))
-        bands = read("bands")
-        _swap("bands", remap_col(drop_dead(bands, "image_id"),
-                                 "image_id"))
-        cp = read("candidate_pairs")
-        _swap("candidate_pairs", pair_fix(cp, ["src"]))
+        for name in ("signatures", "bands"):
+            _swap(name, remap_col(drop_dead(read(name), "image_id", D),
+                                  "image_id", R))
+        _swap("candidate_pairs", pair_fix(read("candidate_pairs"), D, R,
+                                          ["src"]))
         ve = read("verified_edges")
         _swap("verified_edges",
-              pair_fix(ve, [c for c in ve.columns if c not in ("a", "b")]))
+              pair_fix(ve, D, R,
+                       [c for c in ve.columns if c not in ("a", "b")]))
         _swap("edge_index",
-              pair_fix(read("edge_index").select("a", "b"), []),
+              pair_fix(read("edge_index").select("a", "b"), D, R, []),
               ("a", "eb"))
         _swap("ck_index",
-              remap_col(drop_dead(read("ck_index"), "rep_id"), "rep_id")
-              .select("ck", "rep_id"), ("ck", "kb"))
+              remap_col(drop_dead(read("ck_index"), "rep_id", D), "rep_id",
+                        R).select("ck", "rep_id"), ("ck", "kb"))
         # id_index: rebuild one gen-0 row per surviving image from the
         # purged clusters+groups (restores is_rep on promoted reps; the
         # generation counter file is untouched, so future mutations'
@@ -444,7 +481,7 @@ def purge_removed(spark: SparkSession, cfg: PipelineConfig,
                .join(flags, "image_id").withColumn("gen", F.lit(0)))
         _swap("id_index", idx, ("image_id", "ib"))
         # sidecars go LAST: until here every reader stayed correct under
-        # merge-on-read; after, the zero-removal fast paths re-engage
+        # merge-on-read; after, they read as empty and fold away
         for name in (TOMBSTONES, DEAD_GROUPS, REP_REMAP):
             pipe.fs.delete(pipe._path(name))
             spark.catalog.refreshByPath(pipe._path(name))

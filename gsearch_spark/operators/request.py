@@ -171,6 +171,9 @@ def request(spark: SparkSession, checkpoint_dir: str,
     * ``max_bucket_probe``: None (default) applies the stored config's
       viral-bucket cap (``PipelineConfig.max_bucket_probe``, 0 = exact);
       an explicit int overrides it, 0 forces exact.
+    * Removed images never answer: the removal sidecars apply on every
+      call (``remove.read_removal_state``); on a build without removes
+      they are empty and the optimizer folds their joins away.
     """
     from gsearch_spark.fs import CheckpointFS
     from gsearch_spark.operators.pipeline import read_layout
@@ -200,28 +203,18 @@ def request(spark: SparkSession, checkpoint_dir: str,
     cands = probe_candidates(q_bands, stored_bands,
                              broadcast_probe=broadcast_probe,
                              max_bucket_probe=cap)
-    from gsearch_spark.operators.remove import (has_removals,
-                                                read_dead_groups,
-                                                read_rep_remap)
-    if has_removals(spark, checkpoint_dir):
-        # merge-on-read removals: stored bands/signatures stay keyed by
-        # founding group nodes until compaction.  Candidates against a
-        # DEAD group are gone content (drop before ranking); ranking
-        # runs on the founding node's signature (the surviving member
-        # is byte-and-caption identical), and the ANSWER id is then
-        # remapped to that live member so no tombstoned id escapes.
-        dead = read_dead_groups(spark, checkpoint_dir) \
-            .select(F.col("rep_id").alias("target_id"))
-        cands = cands.join(F.broadcast(dead), "target_id", "left_anti")
-        remap = read_rep_remap(spark, checkpoint_dir) \
-            .select(F.col("old_rep").alias("target_id"), "new_rep")
-        ranked = rank_answers(cands, q_sigs, stored_sigs, cfg, k,
-                              max_distance,
-                              broadcast_probe=broadcast_probe)
-        return (ranked.join(F.broadcast(remap), "target_id", "left")
-                .withColumn("target_id",
-                            F.coalesce("new_rep", "target_id"))
-                .drop("new_rep")
-                .select(*ranked.columns))
-    return rank_answers(cands, q_sigs, stored_sigs, cfg, k, max_distance,
-                        broadcast_probe=broadcast_probe)
+    # merge-on-read removals (operators/remove.py): stored bands and
+    # signatures stay keyed by founding group nodes until purge.
+    # Candidates against a DEAD group are gone content (dropped before
+    # ranking); ranking runs on the founding node's signature (the
+    # surviving member is byte-and-caption identical), and the ANSWER id
+    # is then remapped to that live member so no tombstoned id escapes.
+    # Without removals both sidecars are empty and their joins fold out.
+    from gsearch_spark.operators.remove import (drop_dead,
+                                                read_removal_state,
+                                                remap_col)
+    dead, remap = read_removal_state(spark, checkpoint_dir)
+    ranked = rank_answers(drop_dead(cands, "target_id", dead), q_sigs,
+                          stored_sigs, cfg, k, max_distance,
+                          broadcast_probe=broadcast_probe)
+    return remap_col(ranked, "target_id", remap)

@@ -482,3 +482,106 @@ def test_add_and_request_after_purge_match_rebuild(spark,
                       for r in request(spark, ck, probes, k=3,
                                        max_distance=0.6).collect())
     assert _ans(ckpt) == _ans(truth_ckpt)
+
+
+def _joins(df) -> int:
+    """Join operators in ``df``'s optimized logical plan."""
+    plan = df._jdf.queryExecution().optimizedPlan().toString()
+    return sum(1 for line in plan.splitlines()
+               if line.lstrip(" :+-").startswith("Join "))
+
+
+def _jobs_under(spark, group: str, fn):
+    """(fn(), number of Spark jobs it ran under job group ``group``)."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_removal_sidecars_fold_out_until_a_remove(spark):
+    """The removal state is applied unconditionally, as data.  On a
+    build without removal sidecars they read as empty local relations,
+    and the optimizer folds every join they feed: the add's re-pointed
+    stored-pair probe keeps no join at all, the request keeps only its
+    own, and ``count_tombstones`` runs no job.  After one remove the
+    sidecar joins are in both plans."""
+    from gsearch_spark.operators.pipeline import read_layout
+    from gsearch_spark.operators.remove import (count_tombstones, pair_fix,
+                                                read_removal_state)
+    from gsearch_spark.operators.request import request
+    px = _pixels(51)
+    images = spark.createDataFrame(
+        [_row("z_a", px, "blue dog"), _row("z_a2", px, "blue dog"),
+         _row("z_b", px, "blue dog on sofa"),
+         _row("z_c", _pixels(52), "unrelated row")], IMG_SCHEMA)
+    probe = images.filter(F.col("image_id") == "z_b").select(
+        F.lit("q").alias("image_id"), "bytes", "caption", "phash")
+    ckpt = "/tmp/gsearch_spark_ckpt_rm_fold"
+    shutil.rmtree(ckpt, ignore_errors=True)
+    NearDupPipeline(spark, CFG, ckpt).run(images, resume=False)
+
+    def plan_joins():
+        stored = pair_fix(read_layout(spark, ckpt, "candidate_pairs"),
+                          *read_removal_state(spark, ckpt), ["src"])
+        return _joins(stored), _joins(request(spark, ckpt, probe))
+
+    n_stored, n_request = plan_joins()
+    assert n_stored == 0
+    n, jobs = _jobs_under(spark, "rm_fold_count",
+                          lambda: count_tombstones(spark, ckpt))
+    assert (n, jobs) == (0, 0)
+
+    remove_images(spark, CFG, ckpt, spark.createDataFrame(
+        [("z_a",), ("z_c",)], "image_id string"))
+    # z_a was z_a2's founding rep: the group survives under a remap;
+    # z_c's group lost its last member
+    assert {r["old_rep"]: r["new_rep"] for r in
+            read_rep_remap(spark, ckpt).collect()} == {"z_a": "z_a2"}
+    assert [r["rep_id"] for r in
+            read_dead_groups(spark, ckpt).collect()] == ["z_c"]
+    # dead-target anti join + answer remap join on the request; two
+    # dead anti joins + two remap joins on the stored pairs
+    assert plan_joins() == (4, n_request + 2)
+    n, jobs = _jobs_under(spark, "rm_fold_count_after",
+                          lambda: count_tombstones(spark, ckpt))
+    assert n == 2 and jobs > 0
+
+
+@pytest.mark.parametrize("tail", ["driver", "distributed"])
+def test_add_of_remapped_group_matches_rebuild(spark, tail):
+    """An add whose new rows join a group whose founding rep was removed
+    (the group lives on under its promoted member) and whose new near-dup
+    pairs with that founding node only in the stored bands: both add
+    tails read the group's label through the promoted member and
+    re-point the stored pair, so clusters equal a rebuild over the
+    survivors."""
+    import dataclasses
+    cfg = CFG if tail == "driver" else \
+        dataclasses.replace(CFG, add_cc_local_max_edges=0)
+    px = _pixels(61)
+    base = spark.createDataFrame(
+        [_row("r_a", px, "green bird"), _row("r_a2", px, "green bird"),
+         _row("r_c", _pixels(62), "unrelated row")], IMG_SCHEMA)
+    # r_d's phash is one bit off r_a's: no suffix-pass group joins them,
+    # so its only link to the group is the stored-band pair with r_a
+    near = _row("r_d", px, "green bird on branch")
+    new = spark.createDataFrame(
+        [_row("r_a3", px, "green bird"), near[:-1] + (near[-1] ^ 1,)],
+        IMG_SCHEMA)
+    ckpt = f"/tmp/gsearch_spark_ckpt_rm_remapped_{tail}"
+    shutil.rmtree(ckpt, ignore_errors=True)
+    NearDupPipeline(spark, cfg, ckpt).run(base, resume=False)
+    remove_images(spark, cfg, ckpt, spark.createDataFrame(
+        [("r_a",)], "image_id string"))
+    surv = base.filter(F.col("image_id") != "r_a").unionByName(new)
+    got = _assign(incremental_add(spark, cfg, ckpt, new, surv))
+    want = _rebuild(spark, surv, f"{ckpt}_truth")
+    assert want == {"r_a2": "r_a2", "r_a3": "r_a2", "r_d": "r_a2",
+                    "r_c": "r_c"}
+    assert got == want
