@@ -17,9 +17,12 @@ import json
 import math
 from dataclasses import dataclass
 
-# former fields, ignored when read from a stored parameters.json
+# former fields, ignored when read from a stored parameters.json: three
+# execution budgets, then three knobs no code read (the SimHash tile
+# size, the caption rule and the SimHash width the code fixes)
 RETIRED_FIELDS = ("pair_cap_per_bucket", "verify_broadcast_max_ids",
-                  "add_lookup_max_literals")
+                  "add_lookup_max_literals", "pixel_block",
+                  "caption_equality", "simhash_bits")
 
 
 @dataclass(frozen=True)
@@ -52,13 +55,11 @@ class PipelineConfig:
     # --- shingling (reference: k-mer generation, src/dna/dnasketch.rs:499-518)
     caption_kgram: int = 5           # caption character k-grams
     phash_shingle_bits: int = 16     # width of phash bit n-gram shingles
-    pixel_block: int = 8             # SimHash pixel feature block size
     # --- signature (reference: --algo optdens, src/dna/dnasketch.rs:600-620)
     sketch_size: int = 128           # minhash slots (reference -s, <=65535)
     # optdens | revoptdens | prob (weighted) | super | super2
     # (SuperMinHash f32-bits / rehashed-integer variants)
     algo: str = "optdens"
-    simhash_bits: int = 64
     # --- LSH banding (replaces HNSW ef/nbng quality-cost knobs)
     bands: int = 16
     rows_per_band: int = 8
@@ -82,7 +83,6 @@ class PipelineConfig:
     prefilter_max_phash_hamming_phash_src: int = 8  # phash-band-only pairs
     # --- verification (BASELINE.json input_hint invariant)
     psnr_min_db: float = 40.0
-    caption_equality: str = "normalized"
     # --- execution.  Driver budgets that only pick between equivalent
     # plans are module constants beside the rule that reads them, not
     # fields, so retuning one keeps a build's identity: the key-set probe
@@ -163,8 +163,6 @@ class PipelineConfig:
         if self.algo not in ("optdens", "revoptdens", "prob",
                              "super", "super2"):
             raise ValueError(f"unknown algo {self.algo!r}")
-        if self.simhash_bits != 64:
-            raise ValueError("only 64-bit simhash supported")
         if self.caption_kgram < 1:
             raise ValueError("caption_kgram must be >= 1")
         if 64 % self.phash_chunks != 0 or not (
@@ -199,9 +197,9 @@ class PipelineConfig:
     @classmethod
     def from_json(cls, text: str) -> "PipelineConfig":
         d = json.loads(text)
-        # execution budgets that left the config: a parameters.json
-        # written while they were fields names them; dropping them keeps
-        # that build's identity equal to today's config
+        # fields that left the config: a parameters.json written while
+        # they were fields names them; dropping them keeps that build's
+        # identity equal to today's config
         for key in RETIRED_FIELDS:
             d.pop(key, None)
         # parameters.json written before the layout_version field existed

@@ -258,57 +258,6 @@ def lookup_id_index(spark: SparkSession, path: str, ids: DataFrame,
 
 # ----------------------------------------------------------- maintenance
 
-def recover_table_swap(fs, path: str) -> bool:
-    """Roll a torn staged-table swap forward (or discard its pre-commit
-    staging) — used by :func:`compact_id_index` and the purge pass of
-    ``operators/remove.py``.  The swap protocol is: write
-    ``path__compact`` fully, rename live ``path`` -> ``path__old``,
-    rename ``path__compact`` -> ``path``, delete ``path__old`` — so
-    every crash window is distinguishable from the directories alone:
-
-    * live ``path`` present: anything left over is pre-swap staging or
-      a post-swap old copy — both droppable garbage;
-    * ``path`` missing, staged ``path__compact`` present: crashed
-      between the two renames — finish the swap;
-    * ``path`` missing, only ``path__old`` present (staging lost, which
-      the protocol cannot itself produce): restore the old copy.
-
-    Idempotent, callable any time under the writer lock.  Returns True
-    iff anything was repaired/cleaned.  Called automatically at the
-    start of every ``incremental_add`` and ``compact_id_index``."""
-    old, tmp = f"{path}__old", f"{path}__compact"
-    if fs.exists(path):
-        dropped_tmp = fs.delete(tmp)
-        dropped_old = fs.delete(old)
-        return bool(dropped_tmp or dropped_old)
-    if fs.exists(tmp):
-        if not fs.rename(tmp, path):
-            raise IOError(f"compaction roll-forward rename failed: "
-                          f"{tmp} -> {path}")
-        fs.delete(old)
-        return True
-    if fs.exists(old):
-        if not fs.rename(old, path):
-            raise IOError(f"compaction roll-back rename failed: "
-                          f"{old} -> {path}")
-        return True
-    return False
-
-
-def swap_table_in(fs, path: str, staged: str) -> None:
-    """Atomically swap a fully-staged replacement directory into
-    ``path`` via the two-rename protocol :func:`recover_table_swap`
-    understands (``staged`` must be ``path + '__compact'``)."""
-    old = f"{path}__old"
-    if staged != f"{path}__compact":
-        raise ValueError(f"staged dir must be {path}__compact")
-    if not fs.rename(path, old):
-        raise IOError(f"table swap rename failed: {path} -> {old}")
-    if not fs.rename(staged, path):
-        raise IOError(f"table swap rename failed: {staged} -> {path}")
-    fs.delete(old)
-
-
 def compact_id_index(spark: SparkSession, path: str,
                      cfg: PipelineConfig) -> None:
     """Rewrite id_index down to one latest row per image (offline
@@ -316,25 +265,33 @@ def compact_id_index(spark: SparkSession, path: str,
     image's max gen so subsequent adds (whose gens come from the
     monotonically increasing commit counter) still win lookups.
 
-    Takes the build's single-writer mutation lock (re-entrant): a
-    compaction racing an add could drop the add's freshly appended
-    generation rows.  The swap is crash-safe: the compacted table is
-    fully staged, then swapped in via two renames (never a delete of
-    the live table before its replacement is in place);
-    :func:`recover_table_swap` rolls any torn window forward."""
-    from gsearch_spark.operators.pipeline import add_writer_lock
-    from gsearch_spark.fs import CheckpointFS
-    ckpt_dir = path.rsplit("/", 1)[0]
-    with add_writer_lock(spark, ckpt_dir):
-        fs = CheckpointFS(spark, path)
-        recover_table_swap(fs, path)  # clear any prior torn swap
+    A mutation like any other (operators/pipeline.py skeleton): it runs
+    under the build's writer lock — a compaction racing an add could
+    drop the add's freshly appended generation rows — and
+    ``mutation_prologue``, stages the compacted table and commits it
+    through one manifest (``write_manifest`` + ``finish_commit``), so a
+    crash after the manifest rolls forward and the live table is never
+    deleted before its replacement is staged."""
+    from gsearch_spark.operators.pipeline import (NearDupPipeline,
+                                                  _writer_locked,
+                                                  finish_commit,
+                                                  mutation_prologue,
+                                                  write_manifest)
+    checkpoint_dir, name = path.rsplit("/", 1)
+
+    @_writer_locked
+    def compact(spark, cfg, checkpoint_dir):
+        pipe = NearDupPipeline(spark, cfg, checkpoint_dir)
+        staging, gen = mutation_prologue(pipe, (name,))
         compacted = (spark.read.schema(ID_SCHEMA).parquet(path)
                      .groupBy("image_id")
                      .agg(F.max_by("cluster_id", "gen").alias("cluster_id"),
                           F.bool_or("is_rep").alias("is_rep"),
                           F.max("rep_id").alias("rep_id"),
                           F.max("gen").alias("gen")))
-        tmp = f"{path}__compact"
-        write_keyed(compacted, "image_id", "ib", tmp, cfg)
-        swap_table_in(fs, path, tmp)
-        spark.catalog.refreshByPath(path)
+        write_keyed(compacted, "image_id", "ib", f"{staging}/{name}", cfg)
+        # the generation counter stays: compacted rows keep their gens
+        finish_commit(spark, pipe.fs, checkpoint_dir, write_manifest(
+            pipe, staging, gen - 1, {name: True}, [], []))
+
+    compact(spark, cfg, checkpoint_dir)

@@ -70,9 +70,10 @@ ADD_MANIFEST = "_add_commit_manifest.json"
 # manifest-protected commit so torn commits roll the counter forward too
 ID_GEN_FILE = "_id_index_gen"
 # single-writer mutation lock (append-only add / streaming append /
-# id_index compaction).  The manifest commit protocol is single-writer
-# by design — two interleaved adds could stage conflicting cluster
-# partition swaps — so concurrent writers must be REFUSED, not raced.
+# remove / purge / id_index compaction).  The manifest commit protocol
+# is single-writer by design — two interleaved adds could stage
+# conflicting cluster partition swaps — so concurrent writers must be
+# REFUSED, not raced.
 # The reference has the same property implicitly (one process owns the
 # memory-mapped HNSW during add, src/bin/gsearch.rs:488-505).
 ADD_LOCK = "_add_lock"
@@ -546,12 +547,14 @@ class NearDupPipeline:
 
 # -------------------------------------------- shared mutation skeleton
 #
-# incremental_add and remove_images are two bodies inside one skeleton:
-# the single-writer lock (_writer_locked), the prologue
-# (mutation_prologue), the touched-bucket clusters rewrite
-# (stage_clusters_rewrite), and the manifest commit — write_manifest at
-# the commit point, then finish_commit, which is also the whole of
-# recover_add_commit, so every mutation runs the recovery code.
+# incremental_add, remove_images, purge_removed and compact_id_index are
+# four bodies inside one skeleton: the single-writer lock
+# (_writer_locked), the prologue (mutation_prologue), and the manifest
+# commit — every output staged under _add_staging, write_manifest at the
+# commit point, then finish_commit, which is also the whole of
+# recover_add_commit, so every mutation runs the recovery code.  The add
+# and the remove also share the touched-bucket clusters rewrite
+# (stage_clusters_rewrite).
 
 def _writer_locked(mutation):
     """Run a mutation entry point ``mutation(spark, cfg, checkpoint_dir,
@@ -566,20 +569,46 @@ def _writer_locked(mutation):
     return locked
 
 
+def recover_table_swap(fs: CheckpointFS, path: str) -> bool:
+    """Heal a table swap torn by the two-rename protocol that purge and
+    id_index compaction used before they committed through the manifest:
+    ``path__compact`` staged, live ``path`` renamed to ``path__old``,
+    ``path__compact`` renamed to ``path``, ``path__old`` deleted.  With
+    live ``path`` present anything left over is droppable garbage; with
+    it missing, the staged copy (else the old one) is renamed back in.
+    Returns True iff anything was repaired or dropped."""
+    old, tmp = f"{path}__old", f"{path}__compact"
+    if fs.exists(path):
+        dropped_tmp = fs.delete(tmp)
+        dropped_old = fs.delete(old)
+        return bool(dropped_tmp or dropped_old)
+    for src in (tmp, old):
+        if fs.exists(src):
+            if not fs.rename(src, path):
+                raise IOError(f"table swap heal rename failed: {src} -> "
+                              f"{path}")
+            fs.delete(old)
+            return True
+    return False
+
+
 def mutation_prologue(pipe: NearDupPipeline,
                       required: "tuple[str, ...]") -> "tuple[str, int]":
     """Shared start of every mutation, under the writer lock: refuse a
-    build written with another config, roll a torn manifest commit and
-    any torn staged-table swap (id_index compaction, purge) forward,
-    refuse a build without the ``required`` key-addressed sidecars, and
+    build written with another config, roll a torn manifest commit
+    forward, heal a table swap torn by the former two-rename protocol
+    (only for the ``__compact``/``__old`` dirs one listing of the build
+    root shows), refuse a build without the ``required`` tables, and
     wipe pre-commit staging garbage (a staging dir without a manifest
-    is an add or remove that never happened).  Returns the staging dir
-    and the next id_index generation."""
-    from gsearch_spark.operators.remove import recover_all_swaps
+    is a mutation that never happened).  Returns the staging dir and
+    the next id_index generation."""
     fs = pipe.fs
     pipe.cfg.assert_matches_via(fs, pipe.dir)
     recover_add_commit(pipe.spark, pipe.dir)
-    recover_all_swaps(fs, pipe.dir)
+    for child in fs.list_children(pipe.dir):
+        name = child.rsplit("/", 1)[-1]
+        if name.endswith(("__compact", "__old")):
+            recover_table_swap(fs, pipe._path(name.rsplit("__", 1)[0]))
     if not all(fs.exists(f"{pipe._path(n)}/_SUCCESS") for n in required):
         raise ValueError(
             "checkpoint predates key-addressed lookup layouts (no "
@@ -591,30 +620,43 @@ def mutation_prologue(pipe: NearDupPipeline,
     return staging, gen + 1
 
 
+_BUCKET = "clusters/pbucket="
+
+
 def write_manifest(pipe: NearDupPipeline, staging: str, gen: int,
                    swap: "dict[str, bool]", append_stages: "list[str]",
                    partitioned_appends: "list[str]") -> dict:
-    """The commit point of a mutation whose deltas are all staged:
-    persist the manifest naming them (flat ``append_stages``, hive-
-    partitioned ``partitioned_appends``, the clusters bucket ``swap``
-    and the new id_index generation).  Before it a crash leaves
-    pre-commit staging garbage; after it the commit rolls FORWARD."""
+    """The commit point of a mutation whose output is all staged:
+    persist the manifest naming it — flat ``append_stages`` and hive-
+    partitioned ``partitioned_appends`` (their files move into the live
+    table), the ``swap`` map (a dir under the build, a clusters
+    ``clusters/pbucket=<p>`` or a whole table, -> whether a replacement
+    was staged for it; one without is deleted) and the id_index
+    generation.  Clusters buckets keep their own key,
+    ``clusters_swap``; the rest go to ``replace``.  Before the manifest
+    a crash leaves pre-commit staging garbage; after it the commit
+    rolls FORWARD."""
     manifest = {"version": 2, "staging": staging,
                 "append_stages": append_stages,
                 "partitioned_appends": partitioned_appends,
-                "id_index_gen": gen, "clusters_swap": swap}
+                "id_index_gen": gen,
+                "clusters_swap": {k[len(_BUCKET):]: v for k, v in
+                                  swap.items() if k.startswith(_BUCKET)},
+                "replace": {k: v for k, v in swap.items()
+                            if not k.startswith(_BUCKET)}}
     pipe.fs.write_text(pipe._path(ADD_MANIFEST), json.dumps(manifest))
     return manifest
 
 
 def finish_commit(spark: SparkSession, fs: CheckpointFS, root: str,
                   manifest: dict, flush=None) -> None:
-    """Finish a written manifest: apply it (idempotent renames), drop
-    it, then run the housekeeping as ONE concurrent wave (guide §2.6) —
-    the staging wipe (recursive FS delete), the lineage ``flush`` (one
-    parquet append job; none on recovery) and the file-status cache
-    refresh of every table the manifest touched (the swap happened via
-    raw FS renames, invisible to Spark's shared cache — the documented
+    """Finish a written manifest: apply it (idempotent; a failed rename
+    raises and leaves the manifest for roll-forward), drop it, then run
+    the housekeeping as ONE concurrent wave (guide §2.6) — the staging
+    wipe (recursive FS delete), the lineage ``flush`` (one parquet
+    append job; none on recovery) and the file-status cache refresh of
+    every table the manifest touched (the commit moved files via raw FS
+    renames, invisible to Spark's shared cache — the documented
     plan-cache-over-rewritten-path pitfall, FS-metadata edition)."""
     _apply_add_commit(fs, root, manifest)
     fs.delete(f"{root}/{ADD_MANIFEST}")
@@ -625,7 +667,7 @@ def finish_commit(spark: SparkSession, fs: CheckpointFS, root: str,
             spawn(flush)
         for name in (manifest["append_stages"]
                      + manifest.get("partitioned_appends", [])
-                     + ["clusters"]):
+                     + list(manifest.get("replace", {})) + ["clusters"]):
             spark.catalog.refreshByPath(f"{root}/{name}")
 
 
@@ -641,7 +683,7 @@ def stage_clusters_rewrite(pipe: NearDupPipeline, staging: str,
     ``<prefix>_clusters_rewrite``.  Returns the manifest's swap map:
     touched bucket -> whether rows were staged for it (a touched bucket
     left empty — all its clusters merged or removed away — is DELETED
-    at commit, not left stale)."""
+    at commit, not left stale), keyed ``clusters/pbucket=<p>``."""
     t0 = time.time()
     pb = cluster_pbucket(pipe.cfg)
     delta_buckets = {r[0] for r in
@@ -665,7 +707,7 @@ def stage_clusters_rewrite(pipe: NearDupPipeline, staging: str,
     present = {child.rsplit("/pbucket=", 1)[1] for child in
                pipe.fs.list_children(f"{staging}/clusters")
                if "/pbucket=" in child}
-    return {str(p): str(p) in present for p in touched}
+    return {f"{_BUCKET}{p}": str(p) in present for p in touched}
 
 
 @_writer_locked
@@ -684,9 +726,8 @@ def incremental_add(spark: SparkSession, cfg: PipelineConfig,
     * config reloads from the checkpoint and must hash-match (the
       reference re-sketches new data with the ORIGINAL parameters) —
       checked by :func:`mutation_prologue`, the start shared with
-      :func:`~gsearch_spark.operators.remove.remove_images`, which also
-      rolls torn commits and table swaps forward and wipes stale
-      staging;
+      every other mutation, which also rolls a torn commit forward and
+      wipes stale staging;
     * every stored-metadata probe (id-clash refusal, ck membership,
       suffix-group rep-ness, endpoint labels) is a PRUNED point lookup
       into the key-addressed ck_index / id_index layouts
@@ -1334,11 +1375,11 @@ def incremental_add(spark: SparkSession, cfg: PipelineConfig,
 
 
 def _apply_add_commit(fs: CheckpointFS, root: str, manifest: dict) -> None:
-    """Execute (or RESUME) a staged add commit.  Idempotent: every step
-    checks what already happened, so it can re-run after a crash at any
-    point — staged stage dirs are deleted once their files move (a
-    re-run skips them), and a clusters partition swap re-runs only while
-    its staged dir still exists."""
+    """Execute (or RESUME) a staged mutation commit.  Idempotent: every
+    step checks what already happened, so it can re-run after a crash at
+    any point — staged stage dirs are deleted once their files move (a
+    re-run skips them), and a dir replacement (clusters partition or
+    whole table) re-runs only while its staged dir still exists."""
     staging = manifest["staging"]
 
     def _move_flat(name: str) -> None:
@@ -1381,30 +1422,32 @@ def _apply_add_commit(fs: CheckpointFS, root: str, manifest: dict) -> None:
     if "id_index_gen" in manifest:
         fs.write_text(f"{root}/{ID_GEN_FILE}",
                       str(manifest["id_index_gen"]))
-    live = f"{root}/clusters"
+    swap = {f"{_BUCKET}{p}": has_rows
+            for p, has_rows in manifest["clusters_swap"].items()}
+    swap.update(manifest.get("replace", {}))
 
-    def _swap_bucket(item) -> None:
-        p, has_rows = item
-        staged_p = f"{staging}/clusters/pbucket={p}"
-        live_p = f"{live}/pbucket={p}"
-        if has_rows:
-            if fs.exists(staged_p):      # not yet swapped
-                fs.delete(live_p)
-                fs.rename(staged_p, live_p)
-        else:
-            fs.delete(live_p)
+    def _replace(rel: str) -> None:
+        staged, live = f"{staging}/{rel}", f"{root}/{rel}"
+        if fs.exists(staged):      # not yet replaced
+            fs.delete(live)
+            if not fs.rename(staged, live):
+                raise IOError(f"commit rename failed: {staged} -> {live}")
 
-    # bucket swaps are independent (distinct dirs) and each is 2-3 FS
+    # replacements are independent (distinct dirs) and each is 2-3 FS
     # metadata calls; same fan-out as the partitioned moves above, same
-    # per-bucket crash idempotence (a staged dir present => not swapped)
-    _fanout(_swap_bucket, manifest["clusters_swap"].items())
+    # per-dir crash idempotence (a staged dir present => not replaced).
+    # Every rename lands before any delete: a dir with nothing staged
+    # (purge's removal sidecars) goes last
+    _fanout(_replace, [rel for rel, has_rows in swap.items() if has_rows])
+    _fanout(lambda rel: fs.delete(f"{root}/{rel}"),
+            [rel for rel, has_rows in swap.items() if not has_rows])
 
 
 def recover_add_commit(spark: SparkSession, checkpoint_dir: str) -> bool:
     """Roll FORWARD a torn mutation commit (crash after the manifest was
     written but before the commit finished): :func:`finish_commit` on
     the manifest found on disk.  Called automatically at the start of
-    every add and remove; safe to call any time.  Returns True iff a
+    every mutation; safe to call any time.  Returns True iff a
     torn commit was found and completed.  A staging dir WITHOUT a
     manifest is pre-commit garbage (the mutation never logically
     happened) and is left for the next mutation to wipe."""

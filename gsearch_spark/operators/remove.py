@@ -40,12 +40,12 @@ as the mirror image of the append path:
 
 * **the append path's mutation skeleton** (operators/pipeline.py):
   the same single-writer lock, the same ``mutation_prologue`` (config
-  check, torn-commit and torn-swap roll-forward, sidecar checks, staging
-  wipe, next id_index generation), the same touched-bucket
+  check, torn-commit roll-forward, sidecar checks, staging wipe, next
+  id_index generation), the same touched-bucket
   ``stage_clusters_rewrite``, and the same manifest commit — every
   delta is staged, ``write_manifest`` marks the commit point and
   ``finish_commit`` applies it, the very function ``recover_add_commit``
-  runs to complete a torn remove or add.
+  runs to complete a torn remove, add or purge.
 
 Parity contract (pinned by tests/test_remove.py): after any sequence of
 builds, adds and removes, the clusters table equals a from-scratch
@@ -62,13 +62,12 @@ from gsearch_spark.config import PipelineConfig
 from gsearch_spark.operators.keyidx import (key_bucket, lookup_edges_among,
                                             lookup_id_index, stage_id_append)
 from gsearch_spark.operators.pipeline import (NearDupPipeline, _writer_locked,
-                                              add_writer_lock, cc_roots,
-                                              chains, checkpoint_rows,
+                                              cc_roots, chains,
+                                              checkpoint_rows,
                                               cluster_pbucket,
                                               finish_commit,
                                               mutation_prologue,
                                               read_layout,
-                                              recover_add_commit,
                                               stage_clusters_rewrite,
                                               write_manifest)
 from gsearch_spark.session import local_frame
@@ -181,24 +180,6 @@ def pair_fix(df: DataFrame, dead: DataFrame, remap: DataFrame,
     return (d.filter(F.col("a") != F.col("b"))
             .select(F.least("a", "b").alias("a"),
                     F.greatest("a", "b").alias("b"), *extra))
-
-
-# tables the purge pass swaps atomically (and whose torn swaps every
-# mutation entry point heals before touching the build)
-SWAP_TABLES = ("exact_groups", "signatures", "bands", "candidate_pairs",
-               "verified_edges", "edge_index", "ck_index", "id_index")
-
-
-def recover_all_swaps(fs, checkpoint_dir: str) -> bool:
-    """Heal any torn staged-table swap (purge / id_index compaction)
-    across every swappable table — a handful of existence probes when
-    nothing is torn.  Called at the start of every add, remove and
-    purge."""
-    from gsearch_spark.operators.keyidx import recover_table_swap
-    hit = False
-    for name in SWAP_TABLES:
-        hit = recover_table_swap(fs, f"{checkpoint_dir}/{name}") or hit
-    return hit
 
 
 # --------------------------------------------------------------- removal
@@ -391,6 +372,7 @@ def remove_images(spark: SparkSession, cfg: PipelineConfig,
 
 # ----------------------------------------------------------------- purge
 
+@_writer_locked
 def purge_removed(spark: SparkSession, cfg: PipelineConfig,
                   checkpoint_dir: str) -> dict:
     """Physically apply the merge-on-read removal state — the Iceberg
@@ -403,86 +385,81 @@ def purge_removed(spark: SparkSession, cfg: PipelineConfig,
     the removed rows: the sidecars are gone, so readers see them as
     empty relations again and their sidecar joins fold out of the plan.
 
-    Crash-safety: each table swap is individually atomic (staged write
-    + the two-rename protocol of ``keyidx.recover_table_swap``), the
-    pass is idempotent and re-runnable, and the sidecars are deleted
-    LAST — a crash anywhere leaves a build that is still correct under
-    merge-on-read and a purge that can simply run again.  Readers
-    without the writer lock can observe a mid-purge mix of rewritten
-    and pending tables (momentarily degraded recall, never resurrected
-    ids — the sidecar vetoes stay in force until the final step); run
-    it in a maintenance window like any rewrite-data-files job.
+    A mutation like any other (operators/pipeline.py skeleton): under
+    the writer lock and ``mutation_prologue`` every rewritten table is
+    staged, and one manifest (``write_manifest`` + ``finish_commit``)
+    replaces all eight, then deletes the sidecars — all-or-nothing at
+    its manifest, and a crash after it rolls forward.  Only while the
+    commit's renames run can a reader without the lock see a mix of
+    rewritten and pending tables, or a table missing; the sidecar
+    vetoes stay in force until every rename has landed, so no removed
+    id resurfaces.
     """
-    from gsearch_spark.operators.keyidx import swap_table_in, write_keyed
+    from gsearch_spark.operators.keyidx import write_keyed
     pipe = NearDupPipeline(spark, cfg, checkpoint_dir)
-    with add_writer_lock(spark, checkpoint_dir):
-        cfg.assert_matches_via(pipe.fs, checkpoint_dir)
-        recover_add_commit(spark, checkpoint_dir)
-        recover_all_swaps(pipe.fs, checkpoint_dir)
-        if not has_removals(spark, checkpoint_dir):
-            return {"tombstones_purged": 0, "dead_groups_purged": 0,
-                    "reps_rekeyed": 0}
-        T, n_t = checkpoint_rows(
-            read_tombstones(spark, checkpoint_dir).select("image_id"))
-        dead, remap = read_removal_state(spark, checkpoint_dir)
-        D, n_d = checkpoint_rows(dead)
-        R, n_r = checkpoint_rows(remap)
-        stats = {"tombstones_purged": n_t, "dead_groups_purged": n_d,
-                 "reps_rekeyed": n_r}
+    staging, gen = mutation_prologue(pipe, ())
+    if not has_removals(spark, checkpoint_dir):
+        return {"tombstones_purged": 0, "dead_groups_purged": 0,
+                "reps_rekeyed": 0}
+    T, n_t = checkpoint_rows(
+        read_tombstones(spark, checkpoint_dir).select("image_id"))
+    dead, remap = read_removal_state(spark, checkpoint_dir)
+    D, n_d = checkpoint_rows(dead)
+    R, n_r = checkpoint_rows(remap)
 
-        def read(name: str) -> DataFrame:
-            return read_layout(spark, checkpoint_dir, name)
+    def read(name: str) -> DataFrame:
+        return read_layout(spark, checkpoint_dir, name)
 
-        def _swap(name: str, df: DataFrame,
-                  keyed: "tuple[str, str] | None" = None) -> None:
-            """Stage ``df`` as ``name``'s replacement — flat, or as a
-            key-addressed layout on ``keyed = (key_col, part_col)`` —
-            and swap it in."""
-            path = pipe._path(name)
-            tmp = f"{path}__compact"
-            if keyed:
-                write_keyed(df, *keyed, tmp, cfg)
-            else:
-                df.write.mode("overwrite").parquet(tmp)
-            swap_table_in(pipe.fs, path, tmp)
-            spark.catalog.refreshByPath(path)
+    # table -> whether a replacement is staged (the manifest's map)
+    swap: "dict[str, bool]" = {}
 
-        # member-level table: drop tombstoned rows, re-key group reps
-        eg = read("exact_groups")
-        _swap("exact_groups",
-              remap_col(eg.join(F.broadcast(T), "image_id", "left_anti"),
-                        "rep_id", R))
-        # rep-keyed tables: dead groups vanish, remapped reps re-key
-        # (the promoted member is byte-and-caption identical, so the
-        # signature/band/sketch VALUES are already its own)
-        for name in ("signatures", "bands"):
-            _swap(name, remap_col(drop_dead(read(name), "image_id", D),
-                                  "image_id", R))
-        _swap("candidate_pairs", pair_fix(read("candidate_pairs"), D, R,
-                                          ["src"]))
-        ve = read("verified_edges")
-        _swap("verified_edges",
-              pair_fix(ve, D, R,
-                       [c for c in ve.columns if c not in ("a", "b")]))
-        _swap("edge_index",
-              pair_fix(read("edge_index").select("a", "b"), D, R, []),
-              ("a", "eb"))
-        _swap("ck_index",
-              remap_col(drop_dead(read("ck_index"), "rep_id", D), "rep_id",
-                        R).select("ck", "rep_id"), ("ck", "kb"))
-        # id_index: rebuild one gen-0 row per surviving image from the
-        # purged clusters+groups (restores is_rep on promoted reps; the
-        # generation counter file is untouched, so future mutations'
-        # deltas still win lookups)
-        flags = read("exact_groups").select(
-            "image_id", (F.col("image_id") == F.col("rep_id"))
-            .alias("is_rep"), "rep_id")
-        idx = (read("clusters").select("image_id", "cluster_id")
-               .join(flags, "image_id").withColumn("gen", F.lit(0)))
-        _swap("id_index", idx, ("image_id", "ib"))
-        # sidecars go LAST: until here every reader stayed correct under
-        # merge-on-read; after, they read as empty and fold away
-        for name in (TOMBSTONES, DEAD_GROUPS, REP_REMAP):
-            pipe.fs.delete(pipe._path(name))
-            spark.catalog.refreshByPath(pipe._path(name))
-        return stats
+    def stage(name: str, df: DataFrame,
+              keyed: "tuple[str, str] | None" = None) -> None:
+        """Stage ``df`` as ``name``'s replacement — flat, or as a
+        key-addressed layout on ``keyed = (key_col, part_col)``."""
+        swap[name] = True
+        if keyed:
+            write_keyed(df, *keyed, f"{staging}/{name}", cfg)
+        else:
+            df.write.mode("overwrite").parquet(f"{staging}/{name}")
+
+    # member-level table: drop tombstoned rows, re-key group reps
+    eg = read("exact_groups")
+    stage("exact_groups",
+          remap_col(eg.join(F.broadcast(T), "image_id", "left_anti"),
+                    "rep_id", R))
+    # rep-keyed tables: dead groups vanish, remapped reps re-key
+    # (the promoted member is byte-and-caption identical, so the
+    # signature/band/sketch VALUES are already its own)
+    for name in ("signatures", "bands"):
+        stage(name, remap_col(drop_dead(read(name), "image_id", D),
+                              "image_id", R))
+    stage("candidate_pairs", pair_fix(read("candidate_pairs"), D, R,
+                                      ["src"]))
+    ve = read("verified_edges")
+    stage("verified_edges",
+          pair_fix(ve, D, R, [c for c in ve.columns if c not in ("a", "b")]))
+    stage("edge_index",
+          pair_fix(read("edge_index").select("a", "b"), D, R, []),
+          ("a", "eb"))
+    stage("ck_index",
+          remap_col(drop_dead(read("ck_index"), "rep_id", D), "rep_id",
+                    R).select("ck", "rep_id"), ("ck", "kb"))
+    # id_index: rebuild one gen-0 row per surviving image from the
+    # clusters and the staged purged groups (restores is_rep on promoted
+    # reps; the generation counter stays, so future mutations' deltas
+    # still win lookups)
+    flags = read_layout(spark, staging, "exact_groups").select(
+        "image_id", (F.col("image_id") == F.col("rep_id"))
+        .alias("is_rep"), "rep_id")
+    idx = (read("clusters").select("image_id", "cluster_id")
+           .join(flags, "image_id").withColumn("gen", F.lit(0)))
+    stage("id_index", idx, ("image_id", "ib"))
+    # the sidecars have no replacement, so the commit deletes them after
+    # every table rename: until then readers stay correct under
+    # merge-on-read; after, the sidecars read as empty and fold away
+    swap.update(dict.fromkeys((TOMBSTONES, DEAD_GROUPS, REP_REMAP), False))
+    finish_commit(spark, pipe.fs, checkpoint_dir,
+                  write_manifest(pipe, staging, gen - 1, swap, [], []))
+    return {"tombstones_purged": n_t, "dead_groups_purged": n_d,
+            "reps_rekeyed": n_r}

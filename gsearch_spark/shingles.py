@@ -20,7 +20,7 @@ _WS = re.compile(r"\s+")
 
 def normalize_caption(caption: str) -> str:
     """Case-fold + collapse whitespace; the 'canonical form' for equality
-    and shingling (config.caption_equality == 'normalized')."""
+    and shingling, the one caption rule verify applies."""
     if caption is None:
         return ""
     return _WS.sub(" ", caption.strip().lower())

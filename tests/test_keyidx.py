@@ -20,7 +20,7 @@ from gsearch_spark.config import PipelineConfig
 from gsearch_spark.operators.keyidx import (compact_id_index,
                                             lookup_ck_index,
                                             lookup_id_index,
-                                            write_ck_index, write_id_index)
+                                            write_ck_index)
 from gsearch_spark.operators.pipeline import NearDupPipeline, incremental_add
 
 CFG = PipelineConfig()
@@ -247,87 +247,114 @@ def test_add_after_compaction_matches_rebuild(spark, small_fixture_dir):
     assert got == want
 
 
-def test_compaction_crash_windows_recover(spark, monkeypatch):
-    """The compaction swap must never lose the live id_index: crash it
-    at EACH of its two rename calls (live -> __old, then staged ->
-    live), roll forward with recover_table_swap, and require
-    the resolved per-id state to match the pre-crash ground truth with
-    no leftover swap directories.  Also: pre-commit staging garbage
-    beside an intact live table is dropped, and a torn window heals
-    implicitly when the next compact_id_index runs."""
+def _id_build(spark, base: str) -> str:
+    """A minimal build dir for id_index maintenance: parameters.json
+    and an id_index of 40 images at gen 0 plus a gen-1 relabel row for
+    every fourth image (so compaction has rows to drop).  Returns the
+    id_index path."""
     from gsearch_spark.fs import CheckpointFS
-    from gsearch_spark.operators.keyidx import recover_table_swap
-
-    base = "/tmp/gsearch_spark_keyidx_crash"
+    from gsearch_spark.operators.keyidx import write_keyed
     shutil.rmtree(base, ignore_errors=True)
     os.makedirs(base)
-    clusters = spark.createDataFrame(
-        [(f"i{k:03d}", f"i{k % 7:03d}") for k in range(40)],
-        "image_id string, cluster_id string")
-    groups = spark.createDataFrame(
-        [(f"i{k:03d}", f"i{k:03d}") for k in range(40)],
-        "image_id string, rep_id string")
+    CFG.dump_via(CheckpointFS(spark, base), base)
+    rows = ([(f"i{k:03d}", f"i{k % 7:03d}", True, f"i{k:03d}", 0)
+             for k in range(40)]
+            + [(f"i{k:03d}", f"i{k % 3:03d}", False, None, 1)
+               for k in range(0, 40, 4)])
     path = f"{base}/id_index"
-    write_id_index(clusters, groups, path, CFG)
+    write_keyed(spark.createDataFrame(
+        rows, "image_id string, cluster_id string, is_rep boolean, "
+        "rep_id string, gen int"), "image_id", "ib", path, CFG)
+    return path
 
-    def state():
-        spark.catalog.refreshByPath(path)
-        return {r["image_id"]: (r["cluster_id"], r["is_rep"])
-                for r in (spark.read.parquet(path)
-                          .groupBy("image_id")
-                          .agg(F.max_by("cluster_id", "gen")
-                               .alias("cluster_id"),
-                               F.bool_or("is_rep").alias("is_rep"))
-                          .collect())}
 
-    truth = state()
+def _id_rows(spark, path: str) -> "list[tuple]":
+    spark.catalog.refreshByPath(path)
+    return sorted((tuple(r) for r in spark.read.schema(
+        "image_id string, cluster_id string, is_rep boolean, "
+        "rep_id string, gen int, ib int").parquet(path).collect()), key=repr)
+
+
+def _id_state(spark, path: str) -> dict:
+    """Resolved (cluster_id, is_rep, rep_id) per image."""
+    spark.catalog.refreshByPath(path)
+    return {r["image_id"]: (r["cluster_id"], r["is_rep"], r["rep_id"])
+            for r in (spark.read.parquet(path).groupBy("image_id")
+                      .agg(F.max_by("cluster_id", "gen").alias("cluster_id"),
+                           F.bool_or("is_rep").alias("is_rep"),
+                           F.max("rep_id").alias("rep_id"))
+                      .collect())}
+
+
+def test_compaction_crash_windows_recover(spark, monkeypatch,
+                                          assert_settled):
+    """Compaction commits through the mutation manifest: crashed at its
+    one rename (staged id_index -> live), it leaves the manifest, and
+    recover_add_commit rolls it forward to exactly the rows of an
+    uninterrupted compaction, with no staging dir left.  A second
+    crashed compaction heals inside the next one's prologue."""
+    from gsearch_spark.fs import CheckpointFS
+    from gsearch_spark.operators.pipeline import (ADD_MANIFEST,
+                                                  recover_add_commit)
+    clean = _id_build(spark, "/tmp/gsearch_spark_keyidx_compact_clean")
+    compact_id_index(spark, clean, CFG)
+    want = _id_rows(spark, clean)
+    assert len(want) == 40
+
+    path = _id_build(spark, "/tmp/gsearch_spark_keyidx_crash")
+    base = path.rsplit("/", 1)[0]
+    truth = _id_state(spark, path)
     real_rename = CheckpointFS.rename
 
-    for crash_on_call in (1, 2):
-        calls = {"n": 0}
+    def exploding(self, src, dst):
+        raise RuntimeError("injected crash mid-commit")
 
-        def exploding(self, src, dst):
-            calls["n"] += 1
-            if calls["n"] == crash_on_call:
-                raise RuntimeError("injected crash mid-swap")
-            return real_rename(self, src, dst)
+    monkeypatch.setattr(CheckpointFS, "rename", exploding)
+    with pytest.raises(RuntimeError, match="injected crash"):
+        compact_id_index(spark, path, CFG)
+    monkeypatch.setattr(CheckpointFS, "rename", real_rename)
+    assert os.path.exists(f"{base}/{ADD_MANIFEST}")
+    assert recover_add_commit(spark, base) is True
+    assert _id_rows(spark, path) == want
+    assert _id_state(spark, path) == truth
+    assert not os.path.exists(f"{base}/_add_staging")
+    assert_settled(base)
 
-        monkeypatch.setattr(CheckpointFS, "rename", exploding)
-        try:
-            with pytest.raises(RuntimeError, match="injected crash"):
-                compact_id_index(spark, path, CFG)
-        finally:
-            monkeypatch.setattr(CheckpointFS, "rename", real_rename)
-        fs = CheckpointFS(spark, path)
-        assert recover_table_swap(fs, path) is True
-        assert state() == truth
-        assert not fs.exists(f"{path}__old")
-        assert not fs.exists(f"{path}__compact")
+    # a torn compaction heals implicitly on the next one
+    path = _id_build(spark, "/tmp/gsearch_spark_keyidx_crash")
+    monkeypatch.setattr(CheckpointFS, "rename", exploding)
+    with pytest.raises(RuntimeError, match="injected crash"):
+        compact_id_index(spark, path, CFG)
+    monkeypatch.setattr(CheckpointFS, "rename", real_rename)
+    compact_id_index(spark, path, CFG)
+    assert _id_rows(spark, path) == want
+    assert not os.path.exists(f"{base}/_add_staging")
+    assert_settled(base)
+    for d in (base, clean.rsplit("/", 1)[0]):
+        shutil.rmtree(d, ignore_errors=True)
 
-    # pre-commit garbage: a stale staged dir beside an intact live table
-    shutil.copytree(path, f"{path}__compact")
-    fs = CheckpointFS(spark, path)
-    assert recover_table_swap(fs, path) is True
-    assert not fs.exists(f"{path}__compact")
-    assert state() == truth
 
-    # a torn first-rename window heals implicitly on the next compaction
-    calls = {"n": 0}
-
-    def exploding1(self, src, dst):
-        calls["n"] += 1
-        if calls["n"] == 1:
-            raise RuntimeError("injected crash mid-swap")
-        return real_rename(self, src, dst)
-
-    monkeypatch.setattr(CheckpointFS, "rename", exploding1)
-    try:
-        with pytest.raises(RuntimeError, match="injected crash"):
-            compact_id_index(spark, path, CFG)
-    finally:
-        monkeypatch.setattr(CheckpointFS, "rename", real_rename)
-    compact_id_index(spark, path, CFG)  # self-recovers, then compacts
-    assert state() == truth
+@pytest.mark.parametrize("window", ["staging_garbage", "between_renames",
+                                    "old_only"])
+def test_legacy_swap_dirs_heal(spark, window):
+    """A build torn by the former two-rename table swap (``<table>__compact``
+    staged, live renamed to ``<table>__old``, staged renamed in, old
+    deleted) heals in the next mutation's prologue: garbage beside an
+    intact live table is dropped, and a missing live table comes back
+    from the staged copy, else from the old one."""
+    path = _id_build(spark, "/tmp/gsearch_spark_keyidx_legacy")
+    base = path.rsplit("/", 1)[0]
+    truth = _id_state(spark, path)
+    if window == "staging_garbage":
+        shutil.copytree(path, f"{path}__compact")
+    elif window == "between_renames":
+        shutil.copytree(path, f"{path}__compact")
+        os.rename(path, f"{path}__old")
+    else:
+        os.rename(path, f"{path}__old")
+    compact_id_index(spark, path, CFG)  # its prologue heals, then compacts
+    assert _id_state(spark, path) == truth
+    assert len(_id_rows(spark, path)) == 40
     assert not os.path.exists(f"{path}__old")
     assert not os.path.exists(f"{path}__compact")
     shutil.rmtree(base, ignore_errors=True)

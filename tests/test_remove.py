@@ -357,6 +357,45 @@ def test_remove_commit_crash_rolls_forward(spark, monkeypatch):
     assert _assign(out) == {"c_b": "c_b"}
 
 
+def test_remove_commit_refused_rename_rolls_forward(spark, monkeypatch):
+    """A clusters-partition rename the FS refuses — ``False``, the
+    Hadoop contract's failure signal — fails the remove with its
+    manifest left, instead of dropping the manifest and the staging dir
+    after the live partition was deleted; recover_add_commit then gives
+    the clusters of an uninterrupted remove."""
+    from gsearch_spark.fs import CheckpointFS
+    from gsearch_spark.operators.pipeline import ADD_MANIFEST
+    px1, px2 = _pixels(33), _pixels(34)
+    images = spark.createDataFrame(
+        [_row("r_a", px1, "refused cap"), _row("r_b", px1, "refused cap"),
+         _row("r_c", px2, "other")], IMG_SCHEMA)
+    clean, crash = ("/tmp/gsearch_spark_ckpt_rmr_clean",
+                    "/tmp/gsearch_spark_ckpt_rmr_crash")
+    for ckpt in (clean, crash):
+        shutil.rmtree(ckpt, ignore_errors=True)
+        NearDupPipeline(spark, CFG, ckpt).run(images, resume=False)
+    rm = spark.createDataFrame([("r_a",)], "image_id string")
+    remove_images(spark, CFG, clean, rm)
+
+    real_rename = CheckpointFS.rename
+    refused: "list[str]" = []
+
+    def refusing(self, src, dst):
+        if not refused and "/clusters/pbucket=" in str(src):
+            refused.append(src)
+            return False
+        return real_rename(self, src, dst)
+
+    monkeypatch.setattr(CheckpointFS, "rename", refusing)
+    with pytest.raises(IOError, match="commit rename failed"):
+        remove_images(spark, CFG, crash, rm)
+    monkeypatch.undo()
+    assert refused
+    assert os.path.exists(f"{crash}/{ADD_MANIFEST}")
+    assert recover_add_commit(spark, crash) is True
+    assert _clusters(spark, crash) == _clusters(spark, clean)
+
+
 def test_failed_remove_joins_side_chains(spark, monkeypatch,
                                          assert_settled):
     """cc_roots raising must not leave a side chain writing into
@@ -482,6 +521,99 @@ def test_add_and_request_after_purge_match_rebuild(spark,
                       for r in request(spark, ck, probes, k=3,
                                        max_distance=0.6).collect())
     assert _ans(ckpt) == _ans(truth_ckpt)
+
+
+PURGED = ("exact_groups", "signatures", "bands", "candidate_pairs",
+          "verified_edges", "edge_index", "ck_index", "id_index")
+SIDECARS = ("tombstones", "dead_groups", "rep_remap")
+
+
+@pytest.fixture(scope="module")
+def purge_base(spark):
+    """A build holding all three kinds of removal state, ready to purge:
+    g_a (removed founding rep) with its exact copy g_a2 (promoted), the
+    near-dup g_b (its verified edge re-keys to g_a2) and g_c (a removed
+    singleton: a dead group).  Returns the build dir."""
+    px = _pixels(61)
+    images = spark.createDataFrame(
+        [_row("g_a", px, "red cat"), _row("g_a2", px, "red cat"),
+         _row("g_b", px, "red cat on mat"),
+         _row("g_c", _pixels(62), "unrelated row")], IMG_SCHEMA)
+    ckpt = "/tmp/gsearch_spark_ckpt_purge_base"
+    shutil.rmtree(ckpt, ignore_errors=True)
+    NearDupPipeline(spark, CFG, ckpt).run(images, resume=False)
+    remove_images(spark, CFG, ckpt, spark.createDataFrame(
+        [("g_a",), ("g_c",)], "image_id string"))
+    return ckpt
+
+
+def _purge_snapshot(spark, ckpt) -> dict:
+    """Every purged table's rows, the clusters, which sidecars exist and
+    the id_index lookup of every image ever built."""
+    from gsearch_spark.operators.keyidx import lookup_id_index
+    from gsearch_spark.operators.pipeline import read_layout
+    snap = {name: sorted((tuple(r) for r in
+                          read_layout(spark, ckpt, name).collect()), key=repr)
+            for name in PURGED + ("clusters",)}
+    snap["sidecars"] = [n for n in SIDECARS
+                        if os.path.exists(f"{ckpt}/{n}")]
+    probe = spark.createDataFrame(
+        [(i,) for i in ("g_a", "g_a2", "g_b", "g_c")], "image_id string")
+    snap["lookups"] = sorted(
+        (tuple(r) for r in lookup_id_index(spark, f"{ckpt}/id_index", probe,
+                                           CFG).collect()), key=repr)
+    return snap
+
+
+@pytest.mark.parametrize("window", ["first_table_rename",
+                                    "first_sidecar_delete"])
+def test_purge_crash_rolls_forward(spark, purge_base, window, monkeypatch,
+                                   assert_settled):
+    """Purge commits through one manifest: crashed at its first table
+    rename, or at its first sidecar delete (by then every table rename
+    has landed), it leaves the manifest, and recover_add_commit gives
+    the tables, sidecars and id_index lookups of an uninterrupted purge,
+    with no staging dir left."""
+    from gsearch_spark.fs import CheckpointFS
+    from gsearch_spark.operators.pipeline import ADD_MANIFEST
+    from gsearch_spark.operators.remove import purge_removed
+    clean, crash = (f"{purge_base}_clean", f"{purge_base}_crash_{window}")
+    for ckpt in (clean, crash):
+        shutil.rmtree(ckpt, ignore_errors=True)
+        shutil.copytree(purge_base, ckpt)
+    purge_removed(spark, CFG, clean)
+    want = _purge_snapshot(spark, clean)
+    assert want["sidecars"] == []
+
+    staged_left: "list[list[str]]" = []
+    if window == "first_table_rename":
+        real = CheckpointFS.rename
+
+        def exploding(self, src, dst):
+            if str(src).startswith(f"{crash}/_add_staging/"):
+                raise RuntimeError("injected crash mid-purge-commit")
+            return real(self, src, dst)
+        monkeypatch.setattr(CheckpointFS, "rename", exploding)
+    else:
+        real = CheckpointFS.delete
+
+        def exploding(self, path):
+            if path in {f"{crash}/{n}" for n in SIDECARS}:
+                staged_left.append([n for n in PURGED if os.path.exists(
+                    f"{crash}/_add_staging/{n}")])
+                raise RuntimeError("injected crash mid-purge-commit")
+            return real(self, path)
+        monkeypatch.setattr(CheckpointFS, "delete", exploding)
+    with pytest.raises(RuntimeError, match="injected crash"):
+        purge_removed(spark, CFG, crash)
+    monkeypatch.undo()
+    assert os.path.exists(f"{crash}/{ADD_MANIFEST}")
+    if window == "first_sidecar_delete":
+        assert staged_left and all(left == [] for left in staged_left)
+    assert recover_add_commit(spark, crash) is True
+    assert _purge_snapshot(spark, crash) == want
+    assert not os.path.exists(f"{crash}/_add_staging")
+    assert_settled(crash)
 
 
 def _joins(df) -> int:

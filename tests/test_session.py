@@ -155,6 +155,19 @@ def test_threads_start_only_in_chains():
     assert not offenders, offenders
 
 
+def test_renames_only_in_the_commit():
+    """Source guard: the package has one commit protocol.  Outside
+    fs.py, only the manifest commit's apply (``_apply_add_commit``) and
+    the heal of a swap torn by the former two-rename protocol
+    (``recover_table_swap``) rename or move files, so no second
+    protocol can grow beside the manifest."""
+    offenders = [o for o in _used_outside(
+        {"rename", "move_children"}, "pipeline.py",
+        {"_apply_add_commit", "recover_table_swap"})
+        if not o.startswith("fs.py:")]
+    assert not offenders, offenders
+
+
 def test_stage_counts_come_from_the_materializing_action():
     """Source guard: a stage's row count is taken from the action that
     already materializes it, never from a count job of its own —
@@ -184,9 +197,6 @@ def test_stage_counts_come_from_the_materializing_action():
 IDENTITY_ONLY = {
     "sig_version": "signature/checkpoint-format version",
     "layout_version": "sidecar layout generation",
-    "simhash_bits": "pinned to 64 by __post_init__",
-    "pixel_block": "the SimHash tile size simhash.py implements",
-    "caption_equality": "the normalized caption rule verify implements",
     "shuffle_partitions": "callers size their session from it",
 }
 
