@@ -23,6 +23,11 @@ from dataclasses import dataclass
 RETIRED_FIELDS = ("pair_cap_per_bucket", "verify_broadcast_max_ids",
                   "add_lookup_max_literals", "pixel_block",
                   "caption_equality", "simhash_bits")
+# execution fields: each only picks between plans with identical
+# outputs, so it stays a field (and in parameters.json) but is left out
+# of config_hash — retuning one keeps a build's identity
+EXECUTION_FIELDS = ("shuffle_partitions", "verify_attach",
+                    "cc_reliable_checkpoints", "add_cc_local_max_edges")
 
 
 @dataclass(frozen=True)
@@ -84,11 +89,11 @@ class PipelineConfig:
     # --- verification (BASELINE.json input_hint invariant)
     psnr_min_db: float = 40.0
     # --- execution.  Driver budgets that only pick between equivalent
-    # plans are module constants beside the rule that reads them, not
-    # fields, so retuning one keeps a build's identity: the key-set probe
-    # (operators/keyidx.py INLIST_MAX / BROADCAST_KEYS_MAX) and the
-    # payload attach's broadcast budget (operators/verify.py
-    # BROADCAST_MAX_IDS).  The fields below still hash into it
+    # plans are module constants beside the rule that reads them (the
+    # key-set probe's operators/keyidx.py INLIST_MAX / BROADCAST_KEYS_MAX,
+    # the payload attach's operators/verify.py BROADCAST_MAX_IDS) or
+    # fields named in EXECUTION_FIELDS; neither hashes into the build's
+    # identity
     shuffle_partitions: int = 32
     # verify payload attach: "auto" broadcasts the candidate-id set when
     # the caller's algebraic distinct-id bound fits the broadcast budget
@@ -98,7 +103,8 @@ class PipelineConfig:
     # broadcast the fast path)
     verify_attach: str = "auto"
     # hot-bucket salting: bound the driver-collected hot list; buckets
-    # beyond the cap stay unsalted (star policy still caps their pairs)
+    # beyond the cap stay unsalted (star policy still caps their pairs).
+    # Hashed: it decides the stored bands' salt column
     max_hot_buckets: int = 100_000
     # CC lineage cuts: False = localCheckpoint (fast, executor-local);
     # True = per-iteration Parquet under the checkpoint dir (survives
@@ -209,10 +215,12 @@ class PipelineConfig:
         return cls(**d)
 
     def config_hash(self) -> str:
-        """Stable hash over every signature-affecting field."""
+        """Stable hash over every field that decides a build's outputs
+        (all but :data:`EXECUTION_FIELDS`)."""
+        fields = {k: v for k, v in dataclasses.asdict(self).items()
+                  if k not in EXECUTION_FIELDS}
         return hashlib.sha256(
-            json.dumps(dataclasses.asdict(self), sort_keys=True).encode()
-        ).hexdigest()[:16]
+            json.dumps(fields, sort_keys=True).encode()).hexdigest()[:16]
 
     def _assert_same(self, stored: "PipelineConfig") -> None:
         if stored.config_hash() != self.config_hash():

@@ -29,22 +29,29 @@ from contextlib import contextmanager
 from dataclasses import dataclass
 from typing import Callable
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from gsearch_spark.config import PipelineConfig
 from gsearch_spark.fs import CheckpointFS
-from gsearch_spark.operators.banding import BANDS_SCHEMA, build_bands
+from gsearch_spark.operators.banding import (BANDS_SCHEMA, build_bands,
+                                             explode_all_bands)
 from gsearch_spark.operators.candidates import (PAIRS_SCHEMA, bucket_stats,
-                                                emit_bucket_pairs)
+                                                emit_bucket_pairs,
+                                                probe_pairs_vs_stored)
 from gsearch_spark.operators.cc import connected_components, union_find
-from gsearch_spark.operators.exact import (EXACT_GROUPS_SCHEMA, exact_groups,
-                                           expand_clusters, representatives)
-from gsearch_spark.operators.keyidx import (CK_SCHEMA, EDGE_SCHEMA,
-                                            ID_SCHEMA, key_bucket)
+from gsearch_spark.operators.exact import (EXACT_GROUPS_SCHEMA, content_keys,
+                                           exact_groups, expand_clusters,
+                                           representatives)
+from gsearch_spark.operators.keyidx import (
+    CK_INDEX, CK_SCHEMA, EDGE_INDEX, EDGE_SCHEMA, ID_SCHEMA, key_bucket,
+    lookup_ck_index, probe_keys, stage_id_append, write_ck_index,
+    write_edge_index, write_id_index)
 from gsearch_spark.operators.signatures import (SIGNATURES_SCHEMA,
                                                 compute_signatures)
 from gsearch_spark.operators.suffix import suffix_candidate_pairs
-from gsearch_spark.operators.verify import verified_edges
+from gsearch_spark.operators.verify import (attach_payloads, attach_strategy,
+                                            pair_phashes, prefilter_pairs,
+                                            verified_edges)
 from gsearch_spark.session import local_frame
 
 STAGES = ("exact_groups", "signatures", "bands", "candidate_pairs",
@@ -314,29 +321,53 @@ class NearDupPipeline:
     def _path(self, stage: str) -> str:
         return os.path.join(self.dir, stage)
 
-    def _done(self, stage: str) -> bool:
-        return self.fs.exists(os.path.join(self._path(stage), "_SUCCESS"))
+    @contextmanager
+    def _span(self, name: str, after: "str | None" = None,
+              skipped: bool = False):
+        """Time the body as recorded stage ``name``: the body hands the
+        stage's row count to the yielded ``rows(n)``, and the span is
+        recorded on exit (``after``: see :meth:`_record`).  The timing
+        half of :meth:`_stage`; used alone only where one stage's work
+        yields several outputs or its rows are a driver-side set."""
+        t0, n = time.time(), []
+        yield n.append
+        self._record(name, n[0], t0, skipped, after=after)
 
-    def _stage(self, name: str, resume: bool, write,
-               after: "str | None" = None) -> "tuple[DataFrame, int]":
-        """Resume-or-compute one build stage: a completed checkpoint is
-        reused under ``resume`` (counted by one job — nothing in this
-        run materialized it), otherwise ``write(path, tap)`` produces it
-        — either by writing ``tap(frame)`` itself or by returning the
-        DataFrame to persist as plain Parquet — and its row count is
-        observed on that write.  The checkpoint is read back with its
-        declared layout and recorded; returns it with its row count."""
-        t0 = time.time()
-        path = self._path(name)
-        skipped = resume and self._done(name)
-        if not skipped:
+    def _stage(self, name: str, out, root: "str | None" = None,
+               table: "str | None" = None, after: "str | None" = None,
+               resume: bool = False,
+               read: bool = True) -> "tuple[DataFrame | None, int]":
+        """The one stage-and-record step of the build and every
+        mutation: materialize stage ``name`` with its row count observed
+        on the materializing action (:func:`row_counter`), and record
+        it.  ``out`` is the stage's DataFrame, or a callable run inside
+        the stage's time — ``out()`` returning the DataFrame when no
+        ``root`` is given, else ``out(path, tap)``, which writes
+        ``tap(frame)`` itself or returns the DataFrame to write.
+        Without ``root`` the frame is cut by an eager localCheckpoint;
+        with it, it is written to ``root/table`` (``table`` defaults to
+        ``name``) and, unless ``read`` is False, read back with its
+        declared layout.  Under ``resume`` a completed ``root/table`` is
+        reused, counted by one job (nothing in this run materialized
+        it).  Returns the stage's frame (None when not read back) and
+        its row count."""
+        path = f"{root}/{table or name}"
+        skipped = root is not None and resume and self.fs.exists(
+            f"{path}/_SUCCESS")
+        with self._span(name, after, skipped) as record:
             tap, rows = row_counter()
-            out = write(path, tap)
-            if isinstance(out, DataFrame):
-                tap(out).write.mode("overwrite").parquet(path)
-        df = read_layout(self.spark, self.dir, name)
-        n = df.count() if skipped else rows()
-        return df, self._record(name, n, t0, skipped, after=after)
+            if not skipped and callable(out):
+                out = out(path, tap) if root is not None else out()
+            if root is None:
+                df = tap(out).localCheckpoint()
+            else:
+                if not skipped and out is not None:
+                    tap(out).write.mode("overwrite").parquet(path)
+                df = read_layout(self.spark, root, table or name) \
+                    if read or skipped else None
+            n = df.count() if skipped else rows()
+            record(n)
+        return df, n
 
     def _record(self, stage: str, rows: int, t0: float,
                 skipped: bool = False, after: "str | None" = None) -> int:
@@ -393,14 +424,12 @@ class NearDupPipeline:
             self.cfg.dump_via(self.fs, self.dir)
 
         n_images = images.count()
-        from gsearch_spark.operators.keyidx import (write_ck_index,
-                                                    write_edge_index,
-                                                    write_id_index)
 
         # -- stage 0: exact-duplicate collapse (identity short-circuit,
         #    gsearch src/bin/bindash.rs:139-153) ---------------------------
-        groups, n_groups = self._stage("exact_groups", resume,
-                                       lambda p, tap: exact_groups(images))
+        groups, n_groups = self._stage("exact_groups",
+                                       lambda p, tap: exact_groups(images),
+                                       self.dir, resume=resume)
         if n_groups != n_images:
             raise RuntimeError("exact_groups row count != image count")
         images_rep = representatives(images, groups)
@@ -423,15 +452,16 @@ class NearDupPipeline:
             # (guide §2.6) instead of serializing inside candidate_pairs.
             # Only started when candidate_pairs will actually be computed.
             sfx_future = None
-            if not (resume and self._done("candidate_pairs")):
+            if not (resume and self.fs.exists(
+                    f"{self._path('candidate_pairs')}/_SUCCESS")):
                 sfx_future = spawn(lambda: suffix_candidate_pairs(
                     images_rep).localCheckpoint())
 
             # -- stage 1: signatures (representatives only) ----------------
             sigs, n_sigs = self._stage(
-                "signatures", resume,
+                "signatures",
                 lambda p, tap: compute_signatures(images_rep, self.cfg),
-                after="exact_groups")
+                self.dir, after="exact_groups", resume=resume)
             # sent == received invariant (src/dna/dnasketch.rs:458-464)
             n_reps = nreps_future.result()
             if n_sigs != n_reps:
@@ -440,21 +470,22 @@ class NearDupPipeline:
                     f"{n_reps} (sent/received reconciliation failed)")
 
             # -- stage 2: bands --------------------------------------------
-            bands, _ = self._stage("bands", resume,
+            bands, _ = self._stage("bands",
                                    lambda p, tap: build_bands(sigs,
                                                               self.cfg),
-                                   after="signatures")
+                                   self.dir, after="signatures",
+                                   resume=resume)
 
             # -- stage 3: candidate pairs (LSH buckets ∪ suffix pass) ------
             # min(src) dedup => deterministic winner per pair; the suffix
             # pairs have been computing since stage 1
             pairs, n_pairs = self._stage(
-                "candidate_pairs", resume,
+                "candidate_pairs",
                 lambda p, tap: (emit_bucket_pairs(bands)
                                 .unionByName(sfx_future.result())
                                 .groupBy("a", "b")
                                 .agg(F.min("src").alias("src"))),
-                after="bands")
+                self.dir, after="bands", resume=resume)
             if sfx_future is not None:
                 # no silent caps: surface bucket policy stats in the log.
                 # The stats aggregation is observability-only (nothing
@@ -472,10 +503,10 @@ class NearDupPipeline:
             # the candidate_pairs stage record bounds the pair count, and
             # so the attach's distinct-id count (two ids per pair)
             edges, n_edges = self._stage(
-                "verified_edges", resume,
+                "verified_edges",
                 lambda p, tap: verified_edges(pairs, images_rep, self.cfg,
                                               n_pairs_hint=n_pairs),
-                after="candidate_pairs")
+                self.dir, after="candidate_pairs", resume=resume)
 
             # ck_index depends only on the stage-0 exact_groups checkpoint
             # and edge_index only on the verified_edges checkpoint just
@@ -486,13 +517,13 @@ class NearDupPipeline:
             # per-stage: all 32 task slots are busy there, so the sidecar
             # job just queued and its recorded wall inflated 1.6 s → 3.7 s.)
             spawn(lambda: self._stage(
-                "ck_index", resume,
+                "ck_index",
                 lambda p, tap: write_ck_index(groups, p, self.cfg, tap),
-                after="exact_groups"))
+                self.dir, after="exact_groups", resume=resume))
             spawn(lambda: self._stage(
-                "edge_index", resume,
+                "edge_index",
                 lambda p, tap: write_edge_index(edges, p, self.cfg, tap),
-                after="verified_edges"))
+                self.dir, after="verified_edges", resume=resume))
 
             # -- stage 5: clusters (CC over reps, then expand exact-group
             #    members onto their rep's cluster).  The edge count is
@@ -522,8 +553,8 @@ class NearDupPipeline:
                 (tap(out).write.mode("overwrite").partitionBy("pbucket")
                  .parquet(path))
 
-            clusters, _ = self._stage("clusters", resume, _w_clusters,
-                                      after="verified_edges")
+            clusters, _ = self._stage("clusters", _w_clusters, self.dir,
+                                      after="verified_edges", resume=resume)
 
             # -- stage 6: key-addressed lookup layouts (operators/keyidx.py).
             #    Sidecar tables whose partitioning + in-file sort make the
@@ -534,10 +565,10 @@ class NearDupPipeline:
             #    ck_index and edge_index have been writing on side threads
             #    (guide §2.6) — only the clusters-dependent id_index
             #    remains on the critical path.
-            self._stage("id_index", resume,
+            self._stage("id_index",
                         lambda p, tap: write_id_index(clusters, groups, p,
                                                       self.cfg, tap),
-                        after="clusters")
+                        self.dir, after="clusters", resume=resume)
         gen_path = os.path.join(self.dir, ID_GEN_FILE)
         if not self.fs.exists(gen_path):
             self.fs.write_text(gen_path, "0")
@@ -684,30 +715,51 @@ def stage_clusters_rewrite(pipe: NearDupPipeline, staging: str,
     touched bucket -> whether rows were staged for it (a touched bucket
     left empty — all its clusters merged or removed away — is DELETED
     at commit, not left stale), keyed ``clusters/pbucket=<p>``."""
-    t0 = time.time()
     pb = cluster_pbucket(pipe.cfg)
-    delta_buckets = {r[0] for r in
-                     delta.select(pb.alias("pb")).distinct().collect()}
-    touched = sorted(set(aff_buckets) | delta_buckets)
-    kept = (stored.filter(F.col("pbucket").isin(touched))
-            .join(F.broadcast(aff.select("cluster_id")), "cluster_id",
-                  "left_anti")
-            .select("image_id", "cluster_id"))
-    tap, rows = row_counter()
-    (tap(kept.unionByName(delta.select("image_id", "cluster_id"))
-         .withColumn("pbucket", pb)
-         .repartition(max(len(touched), 1), F.col("pbucket")))
-     .write.mode("overwrite").partitionBy("pbucket")
-     .parquet(f"{staging}/clusters"))
-    pipe._record(f"{prefix}_clusters_rewrite", rows(), t0,
-                 after=f"{prefix}_clusters")
+
+    def write(path: str, tap) -> None:
+        touched = sorted(set(aff_buckets) | {
+            r[0] for r in delta.select(pb.alias("pb")).distinct().collect()})
+        kept = (stored.filter(F.col("pbucket").isin(touched))
+                .join(F.broadcast(aff.select("cluster_id")), "cluster_id",
+                      "left_anti")
+                .select("image_id", "cluster_id"))
+        (tap(kept.unionByName(delta.select("image_id", "cluster_id"))
+             .withColumn("pbucket", pb)
+             .repartition(max(len(touched), 1), F.col("pbucket")))
+         .write.mode("overwrite").partitionBy("pbucket").parquet(path))
+
+    pipe._stage(f"{prefix}_clusters_rewrite", write, staging, "clusters",
+                after=f"{prefix}_clusters", read=False)
     # a partitioned write makes a pbucket= dir exactly for the buckets
-    # it wrote rows to (a remove that kills every cluster in its touched
-    # buckets stages none)
+    # it wrote rows to — every delta row's bucket among them — so the
+    # touched set is those dirs ∪ the affected clusters' buckets (a
+    # remove that kills every cluster in its touched buckets stages none)
     present = {child.rsplit("/pbucket=", 1)[1] for child in
                pipe.fs.list_children(f"{staging}/clusters")
                if "/pbucket=" in child}
-    return {f"{_BUCKET}{p}": str(p) in present for p in touched}
+    return {f"{_BUCKET}{p}": p in present for p in
+            sorted(present | {str(b) for b in aff_buckets}, key=int)}
+
+
+def relabel_min_member(members: DataFrame, key: str, comp: DataFrame,
+                       keep: "tuple[str, ...]" = ()) -> DataFrame:
+    """The add's and the remove's relabel-and-normalize step: route each
+    ``members`` row (``image_id``, ``key``, *``keep``) through the
+    connected components ``comp`` (``image_id`` -> ``cluster_id`` root,
+    over ``key`` values; a key on no edge is its own root), then label
+    every root's members with their minimum ``image_id`` — over the
+    affected slice only, since the rest of the corpus already satisfies
+    cluster_id == min member by induction.  Returns (``image_id``,
+    ``cluster_id``, *``keep``)."""
+    roots = comp.select(F.col("image_id").alias(key),
+                        F.col("cluster_id").alias("root"))
+    relab = (members.join(F.broadcast(roots), key, "left")
+             .select("image_id", F.coalesce("root", key).alias("root"),
+                     *keep))
+    norm = relab.groupBy("root").agg(F.min("image_id").alias("cluster_id"))
+    return (relab.join(F.broadcast(norm), "root")
+            .select("image_id", "cluster_id", *keep))
 
 
 @_writer_locked
@@ -721,650 +773,63 @@ def incremental_add(spark: SparkSession, cfg: PipelineConfig,
     ``src/bin/gsearch.rs:488-505``): it reloads the persisted index and
     parameters, inserts ONLY the new items into the existing HNSW with
     continuing ranks (``src/dna/dnasketch.rs:106-134``, rank continuation
-    ``:405,427-433``) — old nodes are never rebuilt.  Mirrored here:
-
-    * config reloads from the checkpoint and must hash-match (the
-      reference re-sketches new data with the ORIGINAL parameters) —
-      checked by :func:`mutation_prologue`, the start shared with
-      every other mutation, which also rolls a torn commit forward and
-      wipes stale staging;
-    * every stored-metadata probe (id-clash refusal, ck membership,
-      suffix-group rep-ness, endpoint labels) is a PRUNED point lookup
-      into the key-addressed ck_index / id_index layouts
-      (operators/keyidx.py): partition filter from the probe keys'
-      bucket set + IN-list row-group pruning on key-sorted files — the
-      stored corpus' key columns are never scanned, closing the last
-      linear-in-corpus term in the append story (reference anchor: add
-      addresses its persisted index by rank, src/dna/dnasketch.rs:106-134);
-    * exact grouping keys new rows against the stored content keys via
-      that ck_index probe — old payload bytes are never rescanned;
-      a new row whose content matches an existing group becomes a MEMBER
-      of that group's existing representative (rank continuation: a rep
-      keeps its identity even if a lexicographically smaller duplicate
-      arrives later — output labels are normalized below so clusters still
-      equal a from-scratch rebuild's);
-    * only genuinely new representatives are decoded + sketched + banded;
-    * removed images stay removed: the merge-on-read removal sidecars
-      (``remove.read_removal_state``) apply on every add — the ck probe
-      vetoes dead groups, stored-pair probes drop dead group nodes and
-      re-point remapped founding reps, matched groups read their label
-      through the promoted member.  On a build that never saw a remove
-      the sidecars are empty local relations and those joins fold out
-      of the optimized plans, so the add keeps no removal gate;
-    * candidates = new-vs-new (the standard salted bucket self-join over
-      the new slice only) ∪ new-vs-old (bounded probe join against the
-      stored bands, :func:`probe_pairs_vs_stored`) ∪ the suffix pass over
-      ONLY the phash groups a new rep touches;
-    * verify decodes only new-touching pairs, capped per new item
-      (cfg.add_max_candidates_per_item) after the phash prefilter;
-    * clusters update INCREMENTALLY by contraction: the stored clusters
-      checkpoint IS the connected components of all stored edges, so
-      contracting every old component to its label preserves
-      connectivity exactly — CC runs over LABEL-level edges induced by
-      the new verified edges only (O(|new edges|) input, recorded as
-      ``add_cc_edges``), never over the stored edge set (which this
-      path no longer even reads).  Affected clusters = merged labels ∪
-      clusters whose exact-groups received new members; only their
-      member rows are re-read (partition-pruned via the clusters
-      checkpoint's pbucket hive partitioning), re-labelled and
-      min-member-normalized (``add_clusters`` = that delta).  The tail
-      runs on the driver whenever the endpoint prefetch fits
-      ``cfg.add_cc_local_max_edges`` and as DataFrame jobs past it;
-    * commit is manifest-protected: every delta (including the touched
-      clusters partitions, :func:`stage_clusters_rewrite`) is fully
-      staged first, then :func:`write_manifest` writes the commit
-      manifest, then :func:`finish_commit` moves/swaps files by rename.
-      A crash at ANY point either leaves a pre-manifest staging dir
-      (the add never happened; wiped and re-runnable) or a torn
-      post-manifest commit that :func:`recover_add_commit` — the same
-      :func:`finish_commit`, called automatically at the start of the
-      next mutation — rolls FORWARD to completion.  Appends are file
-      renames; clusters swaps only the partitions in the manifest, so
-      per-add clusters IO is O(affected), not O(corpus).
+    ``:405,427-433``) — old nodes are never rebuilt.  Here the config
+    reloads from the checkpoint and must hash-match
+    (:func:`mutation_prologue`), and the add runs as phases inside one
+    :func:`chains` scope — setup probes (:func:`_add_setup`), exact
+    grouping (:func:`_add_exact_groups`), candidates
+    (:func:`_add_candidates`), verify (:func:`_add_verify`), the CC tail
+    (:func:`_driver_tail` / :func:`_frame_tail`, then
+    :func:`_add_clusters`) and the staged commit (:func:`_add_commit`).
+    Stored metadata is only ever read by pruned point lookups into the
+    key-addressed layouts (operators/keyidx.py), never scanned; only
+    genuinely new representatives are decoded and sketched; removed
+    images stay removed (the removal sidecars apply on every add).
 
     Per-add IO and decode cost are O(new); per-stage delta row counts
     land in pipeline_state under ``add_*`` stage names (the O(new)
-    contract is asserted in tests/test_incremental_add.py).  The
-    reference's ``add`` is likewise insert-only into the persisted HNSW
-    with no corpus-sized post-pass (src/dna/dnasketch.rs:106-134) but
-    offers no torn-commit recovery.
+    contract is asserted in tests/test_incremental_add.py).  Clusters
+    equal a from-scratch rebuild over old ∪ new.  The commit is
+    manifest-protected: a crash leaves either pre-manifest staging (the
+    add never happened) or a torn commit that the next mutation's
+    :func:`recover_add_commit` rolls FORWARD.  The reference's ``add``
+    is likewise insert-only with no corpus-sized post-pass
+    (src/dna/dnasketch.rs:106-134) but offers no torn-commit recovery.
 
     Mutation is SINGLE-WRITER: the add runs under
     :func:`add_writer_lock`, taken before reading any state, and
     refuses (:class:`ConcurrentAddError`) while another writer holds
-    it — the manifest commit protocol admits one writer by design.
-    Dead same-host holders self-heal; a stale cross-host lock is broken
-    explicitly with the ``unlock`` subcommand.  Re-entrant under an
-    enclosing :func:`add_writer_lock` (how the CLI and the streaming
+    it.  Dead same-host holders self-heal; a stale cross-host lock is
+    broken explicitly with the ``unlock`` subcommand.  Re-entrant under
+    an enclosing :func:`add_writer_lock` (how the CLI and the streaming
     sink hold one lock across payload-append + add).
 
-    ``all_images`` must be old ∪ new (verify needs both sides' payloads;
-    at scale, back it with a table whose layout supports id lookups —
-    Iceberg bucket pruning — so the payload attach reads only candidate
-    row groups).  Returns the new clusters DataFrame.
+    ``all_images`` must be old ∪ new minus removed rows (verify needs
+    both sides' payloads; at scale, back it with a table whose layout
+    supports id lookups — Iceberg bucket pruning — so the payload attach
+    reads only candidate row groups).  Refused with ValueError: a new
+    id already in the build, and an ``all_images`` that lacks a new row
+    or a payload a candidate pair needs, or still holds a removed row
+    the suffix pass would pair.  Returns the new clusters DataFrame.
     """
-    from pyspark.sql import Window
-    from gsearch_spark.operators.banding import explode_all_bands
-    from gsearch_spark.operators.candidates import (emit_bucket_pairs,
-                                                    probe_pairs_vs_stored)
-    from gsearch_spark.operators.exact import content_keys
-    from gsearch_spark.operators.keyidx import (CK_INDEX, EDGE_INDEX,
-                                                lookup_ck_index,
-                                                lookup_id_index, probe_keys,
-                                                stage_id_append,
-                                                write_ck_index,
-                                                write_edge_index)
-    from gsearch_spark.operators.suffix import suffix_candidate_pairs
-    from gsearch_spark.operators.verify import (attach_payloads,
-                                                attach_strategy,
-                                                prefilter_pairs, verify_pairs)
-
     pipe = NearDupPipeline(spark, cfg, checkpoint_dir)
     staging, new_gen = mutation_prologue(
         pipe, ("ck_index", "id_index", "edge_index"))
-    ck_path = pipe._path("ck_index")
-    id_path = pipe._path("id_index")
-    from gsearch_spark.operators.remove import (count_tombstones,
-                                                drop_dead, pair_fix,
-                                                read_removal_state,
-                                                remap_col)
-
     with chains() as spawn:
-        # the stored-table handles are driver-side FILE-INDEX LISTINGS (the
-        # partitioned sidecars list ~key_buckets dirs each), the removal
-        # state is more FS probes, and the new slice's one-time lineage cut
-        # is a small job — all independent, so the whole setup runs as ONE
-        # concurrent wave (guide §2.6; measured ~4 s serial at bench scale).
-        # One listing per lookup table serves the whole add (the tables
-        # don't change until this add's own commit).  The new-slice cut is
-        # localCheckpoint (NOT persist; the documented plan-cache-over-
-        # rewritten-path pitfall), O(new) bytes, consumed by ~8 downstream
-        # plans.
-        # merge-on-read removal sidecars (operators/remove.py), applied
-        # on every add: without removals they are empty local relations
-        # and the optimizer folds their joins out of each plan below
-        setup = [spawn(lambda n=n: read_layout(spark, checkpoint_dir, n))
-                 for n in ("exact_groups", "bands", "clusters", "ck_index",
-                           "id_index")] + [
-            spawn(lambda: read_removal_state(spark, checkpoint_dir))]
-        new_images, n_new = checkpoint_rows(new_images)
-        (old_groups, old_bands, clusters_stored, ck_idx_df, id_idx_df,
-         (dead_df, remap_df)) = [f.result() for f in setup]
-
-        # three independent probe chains run CONCURRENTLY (guide §2.6): the
-        # union sanity counts, the id-clash refusal lookup and the new
-        # slice's content keys share nothing and are each a couple of small
-        # jobs whose latency would otherwise serialize
-        def _chk_counts():
-            n_old = old_groups.count()
-            # exact_groups is merge-on-read historical state: removed rows
-            # stay until compaction, so the live count subtracts tombstones
-            n_dead = count_tombstones(spark, checkpoint_dir)
-            return n_old, n_dead, all_images.count()
-
-        def _chk_clash():
-            # id-clash refusal via the id-keyed layout: O(new) pruned point
-            # lookup, not a corpus scan of stored image_ids
-            t0 = time.time()
-            clash = lookup_id_index(spark, id_path,
-                                    new_images.select("image_id"), cfg,
-                                    idx_df=id_idx_df)
-            return pipe._record("add_lookup_idclash", clash.count(), t0)
-
-        def _mk_old_keys():
-            # content keys of the new slice, then the ck-membership probe —
-            # a read-only pruned point lookup, safe to overlap the refusal
-            # checks (staging mutation only starts after both validate)
-            nk = content_keys(new_images).localCheckpoint()
-            t0 = time.time()
-            # a fully-removed exact-group's ck row lingers until
-            # compaction; re-added identical content must read as FRESH,
-            # not resurrect the dead group node
-            old_keys, n_keys = checkpoint_rows(drop_dead(  # O(new) rows
-                lookup_ck_index(spark, ck_path, nk.select("ck"), cfg,
-                                idx_df=ck_idx_df), "rep_id", dead_df))
-            pipe._record("add_lookup_ck", n_keys, t0)
-            return nk, old_keys
-
-        def _touched_prefix():
-            # touched phash groups for the suffix pass: the slice is keyed
-            # by the NEW images' phashes — a superset of the new REPS'
-            # phashes (a new non-rep's pixels equal its dup's pixels, hence
-            # its phash), and the suffix tail filters pairs to new-rep
-            # endpoints, so using the superset changes nothing downstream
-            # while letting this chain overlap the setup lookups instead of
-            # waiting for exact grouping.  The slice is a key-set probe
-            # of the payload table (keyidx.probe_keys): a few touched
-            # phashes push down as an IN-list so parquet row-group stats
-            # prune the payload scan (on a phash-sorted / z-ordered
-            # Iceberg table this turns the per-add suffix input read into
-            # O(touched groups) IO).
-            touched_imgs = probe_keys(all_images, "phash",
-                                      new_images.select("phash"))
-            # eager cut — O(touched) keys+caption rows: the slice feeds the
-            # rep-ness lookup's key collect AND the suffix input join, which
-            # otherwise re-scan the corpus metadata once each
-            touched_imgs = (touched_imgs.select("phash", "image_id",
-                                                "caption")
-                            .localCheckpoint())
-            # rep-ness of the touched slice comes from a pruned id_index
-            # point lookup (is_rep flag), not a corpus scan of the stored
-            # group keys; new reps aren't in id_index yet and union in
-            # explicitly
-            t0 = time.time()
-            touched_lk = lookup_id_index(spark, id_path,
-                                         touched_imgs.select("image_id"),
-                                         cfg, idx_df=id_idx_df)
-            # a group whose founding rep was removed has NO live is_rep
-            # row; its promoted surviving member (rep_remap target) stands
-            # in as the group's suffix-pass node so the group isn't
-            # skipped
-            promoted = touched_lk.join(
-                F.broadcast(remap_df.select(F.col("new_rep")
-                                            .alias("image_id"))),
-                "image_id", "left_semi")
-            old_touched_reps, n_reps = checkpoint_rows(
-                touched_lk.filter(F.col("is_rep")).select("image_id")
-                .unionByName(promoted.select("image_id")).distinct())
-            pipe._record("add_lookup_touched_reps", n_reps, t0)
-            return touched_imgs, old_touched_reps
-
-        touched_future = spawn(_touched_prefix)
-        counts_future, clash_future = spawn(_chk_counts), spawn(_chk_clash)
-        nk, old_keys = _mk_old_keys()
-        n_old, n_dead, n_all = counts_future.result()
-        if n_all != n_old - n_dead + n_new:
-            raise ValueError("all_images must be exactly old ∪ new "
-                             "(minus removed rows)")
-        if clash_future.result():
-            raise ValueError("new_images contains ids already in the build")
-
-        def stage(name: str, df: DataFrame,
-                  after: "str | None" = None) -> DataFrame:
-            """Materialize a delta under staging; record rows/secs as add_*
-            (``after``: the logical predecessor's unprefixed name)."""
-            t0 = time.time()
-            tap, rows = row_counter()
-            tap(df).write.mode("overwrite").parquet(f"{staging}/{name}")
-            pipe._record(f"add_{name}", rows(), t0,
-                         after=after and f"add_{after}")
-            return read_layout(spark, staging, name)
-
-        # -- exact grouping of the new slice (no old bytes touched; the
-        #    membership probe was a pruned point lookup into ck_index in
-        #    the parallel setup block above — the stored corpus' key
-        #    columns are never scanned) --------------------------------------
-        matched = (nk.join(F.broadcast(old_keys), "ck")
-                   .select("image_id", "rep_id", "ck"))
-        # same skew-immune form as the full build's exact_groups (a bulk
-        # append can carry a viral bomb too): min-per-ck via groupBy gets
-        # map-side combine, the join-back is AQE-skew-splittable; the
-        # anti-join re-runs per consumer but over the localCheckpointed
-        # keys-only nk — no byte rescan
-        fresh_keys = nk.join(F.broadcast(old_keys.select("ck")), "ck",
-                             "left_anti")
-        fresh_reps = (fresh_keys.groupBy("ck")
-                      .agg(F.min("image_id").alias("rep_id")))
-        fresh = (fresh_keys.join(fresh_reps, "ck")
-                 .select("image_id", "rep_id", "ck"))
-        new_groups = stage("exact_groups", matched.unionByName(fresh))
-
-        # -- sketch only brand-new representatives ---------------------------
-        new_rep_ids = (new_groups
-                       .filter(F.col("image_id") == F.col("rep_id"))
-                       .select("image_id"))
-        to_sketch = new_images.join(new_rep_ids, "image_id", "left_semi")
-
-        # matched reps (old groups gaining members) depend only on the
-        # just-staged exact groups; the driver tail needs them as a driver
-        # list, so the collect runs on a side thread under the whole
-        # sketch/band/verify phase (guide §2.6).
-        mr_expr = (new_groups
-                   .join(new_images.select(F.col("image_id").alias("rep_id")),
-                         "rep_id", "left_anti")
-                   .select("rep_id").distinct())
-        def _mr_collect():
-            mr = sorted(r["rep_id"] for r in mr_expr.collect())
-            rmp = {r["old_rep"]: r["new_rep"] for r in remap_df.collect()}
-            return mr, rmp
-
-        # the spawn gate bounds the COLLECT (mr_list <= n_new rows); past
-        # it the endpoint prefetch below returns None, and so does every add
-        # its own bound sends to the distributed tail
-        mr_future = spawn(_mr_collect) \
-            if n_new <= cfg.add_cc_local_max_edges else None
-
-        # -- candidates: new-vs-new ∪ new-vs-old ∪ touched suffix groups -----
-        # Each branch is cut with an eager localCheckpoint before the union:
-        # the branches build near-identical exchanges over the same staged
-        # inputs (bands keys), and Spark's AQE exchange reuse across union
-        # arms produced mismatched coalesced partitionings inside one
-        # codegen'd join ("Can't zip RDDs with unequal numbers of
-        # partitions", reproduced at 32 cores / 213k rows).  The cut
-        # materializes each (small) pair list independently; localCheckpoint,
-        # not persist — the documented plan-cache-over-rewritten-path
-        # pitfall.  The three branches below (sketch -> banding/probe,
-        # touched-suffix chain, ck_index staging) depend only on
-        # new_groups/to_sketch and run CONCURRENTLY (guide §2.6) — each is
-        # a chain of small jobs, so overlapping them converts serial
-        # per-job latency into one wave; the suffix chain does not need the
-        # new signatures, so it overlaps the decode+sketch stage too.
-        def _probe_old_pairs(new_sigs):
-            # stored bands stay keyed by founding group nodes until purge:
-            # pairs against a DEAD group's node are content that no longer
-            # exists (drop), and pairs against a tombstoned founding whose
-            # group survives re-point at the promoted surviving member so
-            # the verify stage attaches live payloads.  Pairs the
-            # re-pointing merges are deduplicated by the candidate_pairs
-            # stage's groupBy below.
-            return pair_fix(
-                probe_pairs_vs_stored(explode_all_bands(new_sigs, cfg),
-                                      old_bands),
-                dead_df, remap_df, ["src"]).localCheckpoint()
-
-        def _br_touched():
-            touched_imgs, old_touched_reps = touched_future.result()
-            # eager cut before the suffix pass: at bulk append sizes the
-            # rep-ness lookup takes the semi-join fallback and this
-            # subtree's exchanges get reused by both arms of the sfx_new
-            # union below — the documented AQE exchange-reuse zip bug
-            # ("Can't zip RDDs with unequal numbers of partitions",
-            # reproduced at a 10% append)
-            touched_reps = (touched_imgs.join(
-                old_touched_reps.unionByName(new_rep_ids), "image_id",
-                "left_semi").localCheckpoint())
-            # sfx feeds BOTH union arms below — cut it first, or the shared
-            # exchange under the two consumers trips the AQE reuse bug
-            sfx = suffix_candidate_pairs(touched_reps).localCheckpoint()
-            return (sfx.join(new_rep_ids.withColumnRenamed("image_id", "a"),
-                             "a", "left_semi")
-                    .unionByName(
-                        sfx.join(new_rep_ids.withColumnRenamed("image_id",
-                                                               "b"),
-                                 "b", "left_semi"))
-                    .dropDuplicates(["a", "b"])).localCheckpoint()
-
-        sfx_future = spawn(_br_touched)
-        spawn(lambda: write_ck_index(new_groups, f"{staging}/{CK_INDEX}",
-                                     cfg))
-        new_sigs = stage("signatures", compute_signatures(to_sketch, cfg),
-                         after="exact_groups")
-        no_future = spawn(lambda: _probe_old_pairs(new_sigs))
-        new_bands = stage("bands", build_bands(new_sigs, cfg),
-                          after="signatures")
-        nn_pairs = emit_bucket_pairs(new_bands).localCheckpoint()
-        new_pairs = stage("candidate_pairs",
-                          nn_pairs.unionByName(no_future.result())
-                          .unionByName(sfx_future.result())
-                          .groupBy("a", "b").agg(F.min("src").alias("src")),
-                          after="bands")
-
-        # -- verify only new-touching pairs, capped per new item -------------
-        plausible = prefilter_pairs(new_pairs, all_images,
-                                    cfg.prefilter_max_phash_hamming,
-                                    cfg.prefilter_max_phash_hamming_phash_src)
-        flag_a = new_rep_ids.select(F.col("image_id").alias("a"),
-                                    F.lit(True).alias("a_new"))
-        keyed = (plausible
-                 .join(flag_a, "a", "left")
-                 .withColumn("key",
-                             F.when(F.coalesce("a_new", F.lit(False)),
-                                    F.col("a")).otherwise(F.col("b")))
-                 .withColumn("other",
-                             F.when(F.coalesce("a_new", F.lit(False)),
-                                    F.col("b")).otherwise(F.col("a"))))
-        w_cap = Window.partitionBy("key").orderBy("other")
-        # eager cut: O(new x cap) keys-only rows.  The capped-pair subtree
-        # (meta joins + window) otherwise evaluates twice — once as the
-        # candidate-id semi build side, once as the pair probe side
-        # (guide §2.4: duplicated subtrees in the plan)
-        capped, n_cap = checkpoint_rows(
-            keyed.withColumn("rn", F.row_number().over(w_cap))
-            .filter(F.col("rn") <= cfg.add_max_candidates_per_item)
-            .select("a", "b", "src"))
-        # materialize_slim: the candidate payload slice is O(new x cap) ids
-        # out of the whole corpus — one eager cut replaces TWO full payload
-        # scans in the pair-attach plan (guide §8: move heavy bytes once).
-        # Every capped pair has a new endpoint, so distinct candidate ids
-        # <= 2 x new x cap bounds the attach strategy.
-        attached = attach_payloads(
-            capped, all_images,
-            strategy=attach_strategy(
-                cfg, 2 * n_new * cfg.add_max_candidates_per_item),
-            materialize_slim=True)
-
-        # PREFETCH the endpoint-label lookup under the verify stage (guide
-        # §2.6): every verified edge endpoint is an endpoint of `capped`
-        # (edges = verify(capped) filtered), and the matched reps' promoted
-        # members are known from the mr collect — so the pruned id_index
-        # lookup the driver tail needs can run NOW, off the critical path,
-        # on the (slightly larger) capped-endpoint superset.  The side
-        # thread self-gates on the driver budget — the add tail's ONE gate:
-        # the verified edges are a subset of `capped`, so
-        # 2·|capped| + n_new bounds every set the driver tail collects; past
-        # it the prefetch returns None and the add takes the distributed
-        # tail.  Probing a superset only ADDS rows for ids the tail then
-        # filters out — labels for non-edge endpoints are never read.
-        def _ep_prefetch():
-            if mr_future is None:
-                return None
-            mr_l, rmp = mr_future.result()
-            if (2 * n_cap + n_new) > cfg.add_cc_local_max_edges:
-                return None  # collect would blow the driver budget
-            lreps = sorted({rmp.get(r, r) for r in mr_l})
-            cap_ids = (capped.select(F.col("a").alias("image_id"))
-                       .unionByName(capped.select(F.col("b")
-                                                  .alias("image_id")))
-                       .distinct())
-            probe = cap_ids
-            if lreps:
-                probe = probe.unionByName(local_frame(
-                    spark, [(i,) for i in lreps],
-                    "image_id string")).distinct()
-            rows = lookup_id_index(spark, id_path, probe, cfg,
-                                   idx_df=id_idx_df).collect()
-            return mr_l, rmp, rows
-
-        ep_future = spawn(_ep_prefetch)
-        new_edges = stage("verified_edges",
-                          verify_pairs(attached, cfg).filter(F.col("dup"))
-                          .select("a", "b", "src", "psnr", "caption_eq"),
-                          after="candidate_pairs")
-
-        # -- INCREMENTAL clusters: CC by contraction ------------------------
-        # Stored clusters are exactly CC(stored edges), so contracting each
-        # old component to its label preserves connectivity when the new
-        # edges arrive: CC input is the label-level image of the NEW edges
-        # only — O(|new edges|), independent of the stored edge count (which
-        # is never read).  Endpoint labels come from a pruned id_index point
-        # lookup (partition filter + IN-list row-group pruning) — neither
-        # the stored clusters table nor any other corpus-sized relation is
-        # scanned on this path.
-        def _c_edge_for(ep_info):
-            # dedup-graph edge delta for the remove path's split
-            # recomputation: endpoints translated to their FOUNDING group
-            # nodes (old endpoints via the ep_info point lookup, new reps
-            # are their own founding node), canonical a < b, intra-group
-            # self-loops dropped
-            ef_a = ep_info.select(F.col("image_id").alias("a"),
-                                  F.col("rep_id").alias("fa"))
-            ef_b = ep_info.select(F.col("image_id").alias("b"),
-                                  F.col("rep_id").alias("fb"))
-            fedges = (new_edges.select("a", "b")
-                      .join(F.broadcast(ef_a), "a", "left")
-                      .join(F.broadcast(ef_b), "b", "left")
-                      .select(F.coalesce("fa", F.col("a")).alias("na"),
-                              F.coalesce("fb", F.col("b")).alias("nb"))
-                      .filter(F.col("na") != F.col("nb"))
-                      .select(F.least("na", "nb").alias("a"),
-                              F.greatest("na", "nb").alias("b"))
-                      .distinct())
-            write_edge_index(fedges, f"{staging}/{EDGE_INDEX}", cfg)
-
-        # DRIVER tail (guide §2.6 taken to its limit): the whole labels ->
-        # contracted-CC -> affected-set algebra operates on sets bounded by
-        # O(new edges + new rows) — the SAME magnitude the union-find fast
-        # path has always collected — yet the DataFrame form pays ~5 small
-        # jobs of latency (ep_info cut, labels cut, label_edges cut,
-        # affected cut and collect).  Whenever the endpoint
-        # prefetch came back (its bound is the driver budget), the
-        # prefetched rows, the matched reps and the staged edge list are on
-        # the driver and plain dict/set algebra replaces the join chain —
-        # provably the same maps: get(x, x) IS coalesce over a left join,
-        # the set comprehension IS the distinct union.  Bulk adds past the
-        # bound take the distributed DataFrame tail below.
-        t0 = time.time()
+        a, nk, old_keys, touched = _add_setup(pipe, spawn, staging,
+                                              new_images, all_images)
+        new_groups, new_reps, matched_reps, mr_future = _add_exact_groups(
+            a, nk, old_keys)
+        new_pairs, n_pairs = _add_candidates(a, new_groups, new_reps,
+                                             touched)
+        new_edges, ep_future = _add_verify(a, new_pairs, n_pairs, new_reps,
+                                           mr_future)
         prefetch = ep_future.result()
-        if prefetch is not None:
-            mr_list, remap, super_rows = prefetch
-            # a matched group's founding rep may be tombstoned (group
-            # alive): its own id_index label is a stale null-or-old row, so
-            # the LABEL is read through the promoted surviving member
-            # (lrep), while group identity stays the founding node
-            mr_pairs = [(r, remap.get(r, r)) for r in mr_list]
-            edge_rows = [(r["a"], r["b"]) for r in
-                         new_edges.select("a", "b").collect()]
-            ep_ids = ({a for a, _ in edge_rows} | {b for _, b in edge_rows}
-                      | {l for _, l in mr_pairs})
-            # prefetched superset (capped endpoints ∪ lreps) ⊇ ep_ids:
-            # restricting the collected rows IS the direct lookup
-            ep_rows = [r for r in super_rows if r["image_id"] in ep_ids]
-            ep_info = local_frame(
-                spark,
-                [(r["image_id"], r["cluster_id"], r["is_rep"], r["rep_id"])
-                 for r in ep_rows],
-                "image_id string, cluster_id string, "
-                "is_rep boolean, rep_id string")
-            spawn(lambda: _c_edge_for(ep_info))
-            # defensive None-guard: a NULL cluster_id (a "stale null-or-old
-            # row") must behave like an ABSENT label — the DataFrame path's
-            # coalesce(label, id) rescues it, so the dict must not store
-            # None (get(x, x) then rescues identically, and a None could
-            # never equi-join in the stored-label set either).  ep_info
-            # keeps the full row: its rep_id still serves the edge delta.
-            labels_live = {r["image_id"]: r["cluster_id"] for r in ep_rows
-                           if r["cluster_id"] is not None}
-            labels_map = dict(labels_live)
-            for rep, lrep in mr_pairs:
-                if lrep in labels_live:  # inner-join semantics
-                    labels_map[rep] = labels_live[lrep]
-            labels = local_frame(spark, sorted(labels_map.items()),
-                                 "image_id string, label string")
-            pipe._record("add_lookup_labels", len(labels_map), t0,
-                         after="add_verified_edges")
-            t0 = time.time()
-            le_set = set()
-            for a, b in edge_rows:
-                la = labels_map.get(a, a)
-                lb = labels_map.get(b, b)
-                if la != lb:
-                    le_set.add((la, lb))
-            pipe._record("add_cc_edges", len(le_set), t0,
-                         after="add_verified_edges")
-            mapping = union_find(sorted(le_set))
-            rep_cc = local_frame(spark, sorted(mapping.items()),
-                                 "image_id string, cluster_id string")
-            # affected clusters: merged old labels ∪ clusters whose
-            # exact-groups gained members (their min MEMBER id — the label
-            # under the from-scratch normalization contract — may change)
-            t0 = time.time()
-            stored_label_set = set(labels_map.values())
-            aff_set = {l for l in mapping if l in stored_label_set}
-            aff_set |= {labels_map[r] for r in mr_list if r in labels_map}
-            aff_cl = local_frame(spark, [(l,) for l in sorted(aff_set)],
-                                 "cluster_id string")
-            # bucket ids via the SAME Spark hash expression the layout uses
-            # (xxhash64 is not reimplemented driver-side) — one LocalRelation
-            # job over O(affected) rows
-            aff_buckets = sorted(
-                {r["pb"] for r in
-                 aff_cl.select(cluster_pbucket(cfg).alias("pb")).collect()})
-        else:
-            matched_reps = mr_expr  # old reps gaining members
-            # a matched group's founding rep may be tombstoned (group
-            # alive): its label is read through the promoted surviving
-            # member
-            endpoint_ids = (new_edges.select(F.col("a").alias("image_id"))
-                            .unionByName(new_edges.select(F.col("b")
-                                                          .alias("image_id")))
-                            .unionByName(remap_col(matched_reps, "rep_id",
-                                                   remap_df)
-                                         .select(F.col("rep_id")
-                                                 .alias("image_id")))
-                            .distinct())
-            # endpoint labels via the id-keyed layout: pruned point lookup,
-            # O(new edges + matched reps) rows read.  The same lookup also
-            # resolves each old endpoint's FOUNDING group node (rep_id) for
-            # the edge_index delta.
-            ep_info = (lookup_id_index(spark, id_path, endpoint_ids, cfg,
-                                       idx_df=id_idx_df)
-                       .localCheckpoint())  # O(new edges + matched reps)
-            # the edge_index delta needs only ep_info + the staged
-            # new_edges — its staging write overlaps the labels->CC->delta
-            # chain on a side thread (guide §2.6)
-            spawn(lambda: _c_edge_for(ep_info))
-            labels_live = ep_info.select("image_id",
-                                         F.col("cluster_id").alias("label"))
-            # remapped founding reps resolve their label via their
-            # promoted member
-            promoted = (matched_reps
-                        .join(F.broadcast(remap_df.withColumnRenamed(
-                            "old_rep", "rep_id")), "rep_id")
-                        .join(labels_live.withColumnRenamed("image_id",
-                                                            "new_rep"),
-                              "new_rep")
-                        .select(F.col("rep_id").alias("image_id"), "label"))
-            # cut: five plans below read the labels
-            labels, n_labels = checkpoint_rows(
-                labels_live.unionByName(promoted))
-            pipe._record("add_lookup_labels", n_labels, t0,
-                         after="add_verified_edges")
-            t0 = time.time()
-            lab_a = labels.select(F.col("image_id").alias("a"),
-                                  F.col("label").alias("la"))
-            lab_b = labels.select(F.col("image_id").alias("b"),
-                                  F.col("label").alias("lb"))
-            label_edges, n_label_edges = checkpoint_rows(
-                new_edges.select("a", "b")
-                .join(F.broadcast(lab_a), "a", "left")
-                .join(F.broadcast(lab_b), "b", "left")
-                .select(F.coalesce("la", F.col("a")).alias("a"),
-                        F.coalesce("lb", F.col("b")).alias("b"))
-                .filter(F.col("a") != F.col("b"))
-                .distinct())
-            pipe._record("add_cc_edges", n_label_edges, t0,
-                         after="add_verified_edges")
-            rep_cc = cc_roots(label_edges, n_label_edges, cfg)
-            # affected clusters: merged old labels ∪ clusters whose
-            # exact-groups gained members
-            t0 = time.time()
-            stored_labels = labels.select("label").distinct()
-            matched_rep_labels = (matched_reps
-                                  .join(labels.withColumnRenamed("image_id",
-                                                                 "rep_id"),
-                                        "rep_id")
-                                  .select("label"))
-            aff = (rep_cc.select(F.col("image_id").alias("label"))
-                   .join(stored_labels, "label", "left_semi")
-                   .unionByName(matched_rep_labels)
-                   .distinct().localCheckpoint())
-            aff_buckets = sorted(r[0] for r in
-                                 aff.select(cluster_pbucket(cfg, "label"))
-                                 .distinct().collect())
-            aff_cl = aff.withColumnRenamed("label", "cluster_id")
-        # member rows of affected clusters ONLY, read under pbucket pruning
-        aff_members = (clusters_stored
-                       .filter(F.col("pbucket").isin(aff_buckets))
-                       .join(F.broadcast(aff_cl), "cluster_id")
-                       .select("image_id", "cluster_id"))
-        Rm = rep_cc.select(F.col("image_id").alias("cluster_id"),
-                           F.col("cluster_id").alias("root"))
-        # is_rep rides along so the id_index delta rows keep the flag's
-        # bool_or-across-generations contract: re-labelled OLD members append
-        # is_rep=false (their first-appearance row already carries the truth,
-        # and rep-ness is immutable); NEW members carry their actual flag
-        relab_old = (aff_members.join(F.broadcast(Rm), "cluster_id", "left")
-                     .select("image_id",
-                             F.coalesce("root", "cluster_id").alias("root"),
-                             F.lit(False).alias("is_rep"),
-                             F.lit(None).cast("string").alias("rep_id")))
-        # every NEW member routes through its rep's label to the merged root
-        rep_lab = (new_groups.select("image_id", "rep_id",
-                                     (F.col("image_id") == F.col("rep_id"))
-                                     .alias("is_rep"))
-                   .join(F.broadcast(labels.withColumnRenamed("image_id",
-                                                              "rep_id")),
-                         "rep_id", "left")
-                   .select("image_id",
-                           F.coalesce("label", F.col("rep_id"))
-                           .alias("cluster_id"), "is_rep", "rep_id"))
-        relab_new = (rep_lab.join(F.broadcast(Rm), "cluster_id", "left")
-                     .select("image_id",
-                             F.coalesce("root", "cluster_id").alias("root"),
-                             "is_rep", "rep_id"))
-        # min-member normalization over the affected slice only (the rest of
-        # the corpus already satisfies cluster_id == min member by induction)
-        members = relab_old.unionByName(relab_new)
-        norm = members.groupBy("root").agg(F.min("image_id")
-                                           .alias("cluster_id"))
-        delta, n_delta = checkpoint_rows(
-            members.join(F.broadcast(norm), "root")
-            .select("image_id", "cluster_id", "is_rep", "rep_id"))
-        pipe._record("add_clusters", n_delta, t0, after="add_cc_edges")
-
-        # -- stage the rewritten clusters partitions (touched buckets only)
-        #    and the id_index delta — the ck_index delta was staged in the
-        #    parallel candidate block and the edge_index delta has been
-        #    staging on a side thread since ep_info was cut.  The re-labelled
-        #    and new member rows stage at the next id_index generation (LSM
-        #    append, latest-gen-wins — no stored index rows are read or
-        #    rewritten) ---------------------------------------------------
-        t0 = time.time()
-        id_tap, id_rows = row_counter()
-        spawn(lambda: stage_id_append(delta, new_gen, staging, cfg, id_tap))
-        swap = stage_clusters_rewrite(pipe, staging, clusters_stored, aff_cl,
-                                      aff_buckets, delta, "add")
-    pipe._record("add_index_delta", id_rows(), t0, after="add_clusters")
+        labels, comp, aff, aff_buckets = (
+            _driver_tail(a, new_edges, prefetch) if prefetch is not None
+            else _frame_tail(a, new_edges, matched_reps))
+        delta = _add_clusters(a, new_groups, labels, comp, aff, aff_buckets)
+        swap = _add_commit(a, new_gen, delta, aff, aff_buckets)
     finish_commit(spark, pipe.fs, checkpoint_dir, write_manifest(
         pipe, staging, new_gen, swap,
         ["exact_groups", "signatures", "bands", "candidate_pairs",
@@ -1372,6 +837,522 @@ def incremental_add(spark: SparkSession, cfg: PipelineConfig,
         ["ck_index", "id_index", "edge_index"]), pipe._flush_state)
     return (read_layout(spark, checkpoint_dir, "clusters")
             .select("image_id", "cluster_id"))
+
+
+_UNION_ERROR = "all_images must be exactly old ∪ new (minus removed rows)"
+
+
+@dataclass
+class _Add:
+    """What the add's phases share: the pipeline, the :func:`chains`
+    scope's ``spawn``, the staging dir, the cut new slice and its size,
+    the caller's payload table, and the stored tables and removal state
+    the setup opened — one file listing each serves the whole add (the
+    tables don't change until the add's own commit)."""
+    pipe: NearDupPipeline
+    spark: SparkSession
+    cfg: PipelineConfig
+    spawn: Callable
+    staging: str
+    new_images: DataFrame
+    n_new: int
+    all_images: DataFrame
+    bands: DataFrame
+    clusters: DataFrame
+    ck_idx: DataFrame
+    id_idx: DataFrame
+    dead: DataFrame
+    remap: DataFrame
+
+    def lookup_ids(self, ids: DataFrame) -> DataFrame:
+        """Pruned id_index point lookup of ``ids`` (image_id)."""
+        from gsearch_spark.operators.keyidx import lookup_id_index
+        return lookup_id_index(self.spark, self.pipe._path("id_index"), ids,
+                               self.cfg, idx_df=self.id_idx)
+
+
+def _add_setup(pipe: NearDupPipeline, spawn, staging: str,
+               new_images: DataFrame, all_images: DataFrame):
+    """Setup probes.  The stored-table handles are driver-side FILE-INDEX
+    LISTINGS (the partitioned sidecars list ~key_buckets dirs each), the
+    removal state is more FS probes, and the new slice's one-time
+    lineage cut is a small job — all independent, so they run as ONE
+    concurrent wave (guide §2.6; measured ~4 s serial at bench scale).
+    The cut is localCheckpoint (NOT persist; the documented
+    plan-cache-over-rewritten-path pitfall), O(new) bytes, consumed by
+    ~8 downstream plans.  The merge-on-read removal sidecars
+    (operators/remove.py) apply on every add: without removals they are
+    empty local relations and the optimizer folds their joins out.
+
+    Then three independent probe chains run CONCURRENTLY: the touched
+    prefix (:func:`_touched_prefix`, which also checks the union), the
+    id-clash refusal and the new slice's content keys with their ck
+    membership probe.  Every stored-metadata probe is a PRUNED point
+    lookup into ck_index / id_index (partition filter from the probe
+    keys' bucket set + IN-list row-group pruning on key-sorted files —
+    the add addresses its persisted index by key, as the reference's
+    does by rank, src/dna/dnasketch.rs:106-134).  Returns the add's
+    context, the new slice's content keys, their live stored groups and
+    the touched-prefix future."""
+    from gsearch_spark.operators.remove import drop_dead, read_removal_state
+    spark, cfg = pipe.spark, pipe.cfg
+    opened = [spawn(lambda n=n: read_layout(spark, pipe.dir, n))
+              for n in ("bands", "clusters", "ck_index", "id_index")] + [
+        spawn(lambda: read_removal_state(spark, pipe.dir))]
+    new_images, n_new = checkpoint_rows(new_images)
+    a = _Add(pipe, spark, cfg, spawn, staging, new_images, n_new,
+             all_images, *[f.result() for f in opened[:4]],
+             *opened[4].result())
+    touched = spawn(lambda: _touched_prefix(a))
+    # id-clash refusal: O(new) pruned point lookup, not a corpus scan
+    clash = spawn(lambda: pipe._stage(
+        "add_lookup_idclash",
+        lambda: a.lookup_ids(new_images.select("image_id")))[1])
+    # the ck-membership probe is read-only, safe to overlap the refusal
+    # checks (staging mutation only starts after they validate).  A
+    # fully-removed exact-group's ck row lingers until compaction;
+    # re-added identical content must read as FRESH, not resurrect the
+    # dead group node
+    nk = content_keys(new_images).localCheckpoint()
+    old_keys, _ = pipe._stage("add_lookup_ck", lambda: drop_dead(
+        lookup_ck_index(spark, pipe._path("ck_index"), nk.select("ck"), cfg,
+                        idx_df=a.ck_idx), "rep_id", a.dead))
+    if clash.result():
+        raise ValueError("new_images contains ids already in the build")
+    return a, nk, old_keys, touched
+
+
+def _touched_prefix(a: _Add) -> "tuple[DataFrame, DataFrame]":
+    """Touched phash groups for the suffix pass.  The slice is keyed by
+    the NEW images' phashes — a superset of the new REPS' phashes (a new
+    non-rep's pixels equal its dup's pixels, hence its phash), and the
+    suffix tail filters pairs to new-rep endpoints, so the superset
+    changes nothing downstream while this chain overlaps the setup
+    lookups instead of waiting for exact grouping.  The slice is a
+    key-set probe of the payload table (keyidx.probe_keys): a few
+    touched phashes push down as an IN-list so parquet row-group stats
+    prune the payload scan.  Its eager cut (O(touched) keys+caption
+    rows) feeds the union check, the rep-ness lookup and the suffix
+    input join.
+
+    The union check runs here, over rows the add reads anyway: the
+    slice is every ``all_images`` row under a new row's phash, so it
+    must hold each new row exactly once, and no tombstoned row (the
+    suffix pass would pair it).  Rep-ness of the touched slice comes
+    from a pruned id_index point lookup (is_rep flag); a group whose
+    founding rep was removed has NO live is_rep row, so its promoted
+    surviving member (rep_remap target) stands in as the group's
+    suffix-pass node.  Returns the slice and its stored reps
+    (``add_lookup_touched_reps``)."""
+    from gsearch_spark.operators.remove import read_tombstones
+    touched = (probe_keys(a.all_images, "phash",
+                          a.new_images.select("phash"))
+               .select("phash", "image_id", "caption").localCheckpoint())
+    tomb = read_tombstones(a.spark, a.pipe.dir).select(
+        "image_id", F.lit(True).alias("dead"))
+    n_new, n_dead = (
+        touched.select("image_id")
+        .join(a.new_images.select("image_id", F.lit(True).alias("new")),
+              "image_id", "left")
+        .join(tomb, "image_id", "left")
+        .agg(F.count("new"), F.count("dead")).collect()[0])
+    if n_new != a.n_new or n_dead:
+        raise ValueError(f"{_UNION_ERROR}: {a.n_new} new rows, {n_new} "
+                         f"found in it; {n_dead} removed rows in it")
+
+    def stored_reps() -> DataFrame:
+        lk = a.lookup_ids(touched.select("image_id"))
+        promoted = lk.join(F.broadcast(a.remap.select(
+            F.col("new_rep").alias("image_id"))), "image_id", "left_semi")
+        return (lk.filter(F.col("is_rep")).select("image_id")
+                .unionByName(promoted.select("image_id")).distinct())
+
+    return touched, a.pipe._stage("add_lookup_touched_reps",
+                                  stored_reps)[0]
+
+
+def _add_exact_groups(a: _Add, nk: DataFrame, old_keys: DataFrame):
+    """Exact grouping of the new slice against the stored content keys
+    (no old bytes touched).  A new row whose content matches a live
+    stored group becomes a MEMBER of that group's existing
+    representative (rank continuation: a rep keeps its identity even if
+    a lexicographically smaller duplicate arrives later — the CC tail
+    min-member-normalizes labels so clusters still equal a rebuild's).
+    The same skew-immune form as the build's exact_groups (a bulk append
+    can carry a viral bomb too): min-per-ck via groupBy gets map-side
+    combine, the join-back is AQE-skew-splittable.  Stages
+    ``add_exact_groups``; returns it, its new reps (the only rows to
+    sketch), the matched stored reps (old groups gaining members) and
+    the future of their driver collect — spawned under the whole
+    sketch/band/verify phase, and only when its ``n_new`` rows fit the
+    driver budget (past it every tail is the distributed one)."""
+    matched = (nk.join(F.broadcast(old_keys), "ck")
+               .select("image_id", "rep_id", "ck"))
+    fresh_keys = nk.join(F.broadcast(old_keys.select("ck")), "ck",
+                         "left_anti")
+    fresh_reps = (fresh_keys.groupBy("ck")
+                  .agg(F.min("image_id").alias("rep_id")))
+    fresh = (fresh_keys.join(fresh_reps, "ck")
+             .select("image_id", "rep_id", "ck"))
+    new_groups, _ = a.pipe._stage("add_exact_groups",
+                                  matched.unionByName(fresh), a.staging,
+                                  "exact_groups")
+    new_reps = (new_groups.filter(F.col("image_id") == F.col("rep_id"))
+                .select("image_id"))
+    matched_reps = (new_groups
+                    .join(a.new_images.select(F.col("image_id")
+                                              .alias("rep_id")),
+                          "rep_id", "left_anti")
+                    .select("rep_id").distinct())
+    mr_future = a.spawn(lambda: (
+        sorted(r["rep_id"] for r in matched_reps.collect()),
+        {r["old_rep"]: r["new_rep"] for r in a.remap.collect()})) \
+        if a.n_new <= a.cfg.add_cc_local_max_edges else None
+    return new_groups, new_reps, matched_reps, mr_future
+
+
+def _add_candidates(a: _Add, new_groups: DataFrame, new_reps: DataFrame,
+                    touched) -> "tuple[DataFrame, int]":
+    """Candidates = new-vs-new (the salted bucket self-join over the new
+    slice only) ∪ new-vs-old (bounded probe join against the stored
+    bands, :func:`probe_pairs_vs_stored`) ∪ the suffix pass over ONLY
+    the phash groups a new rep touches.  The touched-suffix chain and
+    the ck_index delta depend only on the staged groups and run
+    CONCURRENTLY with the sketch -> band chain (guide §2.6); the suffix
+    chain does not need the new signatures, so it overlaps the
+    decode+sketch stage too.  Each branch is cut with an eager
+    localCheckpoint before the union: the branches build near-identical
+    exchanges over the same staged inputs, and Spark's AQE exchange
+    reuse across union arms produced mismatched coalesced partitionings
+    inside one codegen'd join ("Can't zip RDDs with unequal numbers of
+    partitions", reproduced at 32 cores / 213k rows).  Stages
+    ``add_signatures``, ``add_bands`` and ``add_candidate_pairs``
+    (deduplicated by min(src) per pair); returns the last and its
+    rows."""
+    from gsearch_spark.operators.remove import pair_fix
+    pipe, cfg, staging = a.pipe, a.cfg, a.staging
+    sfx = a.spawn(lambda: _touched_suffix_pairs(*touched.result(),
+                                                new_reps))
+    a.spawn(lambda: write_ck_index(new_groups, f"{staging}/{CK_INDEX}",
+                                   cfg))
+    to_sketch = a.new_images.join(new_reps, "image_id", "left_semi")
+    new_sigs, _ = pipe._stage("add_signatures",
+                              compute_signatures(to_sketch, cfg), staging,
+                              "signatures", after="add_exact_groups")
+    # stored bands stay keyed by founding group nodes until purge: pairs
+    # against a DEAD group's node are content that no longer exists
+    # (drop), and pairs against a tombstoned founding whose group
+    # survives re-point at the promoted surviving member so verify
+    # attaches live payloads
+    vs_old = a.spawn(lambda: pair_fix(
+        probe_pairs_vs_stored(explode_all_bands(new_sigs, cfg), a.bands),
+        a.dead, a.remap, ["src"]).localCheckpoint())
+    new_bands, _ = pipe._stage("add_bands", build_bands(new_sigs, cfg),
+                               staging, "bands", after="add_signatures")
+    vs_new = emit_bucket_pairs(new_bands).localCheckpoint()
+    return pipe._stage("add_candidate_pairs",
+                       vs_new.unionByName(vs_old.result())
+                       .unionByName(sfx.result())
+                       .groupBy("a", "b").agg(F.min("src").alias("src")),
+                       staging, "candidate_pairs", after="add_bands")
+
+
+def _touched_suffix_pairs(touched: DataFrame, stored_reps: DataFrame,
+                          new_reps: DataFrame) -> DataFrame:
+    """Suffix-pass pairs among the touched groups' reps with a new-rep
+    endpoint.  Both cuts dodge the AQE exchange-reuse zip bug: at bulk
+    append sizes the rep-ness lookup takes the semi-join fallback and
+    the reps subtree's exchanges get reused by both union arms
+    (reproduced at a 10% append), and ``sfx`` feeds both arms."""
+    reps = (touched.join(stored_reps.unionByName(new_reps), "image_id",
+                         "left_semi").localCheckpoint())
+    sfx = suffix_candidate_pairs(reps).localCheckpoint()
+    return (sfx.join(new_reps.withColumnRenamed("image_id", "a"), "a",
+                     "left_semi")
+            .unionByName(sfx.join(new_reps.withColumnRenamed("image_id",
+                                                             "b"),
+                                  "b", "left_semi"))
+            .dropDuplicates(["a", "b"])).localCheckpoint()
+
+
+def _add_verify(a: _Add, new_pairs: DataFrame, n_pairs: int,
+                new_reps: DataFrame, mr_future):
+    """Verify decodes only new-touching pairs, capped per new item
+    (cfg.add_max_candidates_per_item) after the phash prefilter.  The
+    prefilter's metadata join is observed on the capped cut: every
+    candidate pair must keep both endpoints there — its inner join would
+    silently drop a pair whose payload ``all_images`` lacks.  The capped
+    pairs are an eager cut (O(new x cap) keys-only rows), since the
+    subtree otherwise evaluates twice, as the attach's id set and as its
+    pair side (guide §2.4); the attach materializes the candidate
+    payload slice once (guide §8: move heavy bytes once), its strategy
+    bounded by 2 x new x cap distinct ids.  The endpoint-label prefetch
+    (:func:`_ep_prefetch`) runs under the verify stage.  Stages
+    ``add_verified_edges``; returns it and the prefetch future."""
+    # imported per call: tests substitute a failing verify_pairs
+    from gsearch_spark.operators.verify import verify_pairs
+    cfg = a.cfg
+    tap, joined = row_counter()
+    plausible = prefilter_pairs(tap(pair_phashes(new_pairs, a.all_images)),
+                                cfg.prefilter_max_phash_hamming,
+                                cfg.prefilter_max_phash_hamming_phash_src)
+    a_new = F.coalesce("a_new", F.lit(False))
+    keyed = (plausible
+             .join(new_reps.select(F.col("image_id").alias("a"),
+                                   F.lit(True).alias("a_new")), "a", "left")
+             .withColumn("key", F.when(a_new, F.col("a"))
+                         .otherwise(F.col("b")))
+             .withColumn("other", F.when(a_new, F.col("b"))
+                         .otherwise(F.col("a"))))
+    capped, n_cap = checkpoint_rows(
+        keyed.withColumn("rn", F.row_number().over(
+            Window.partitionBy("key").orderBy("other")))
+        .filter(F.col("rn") <= cfg.add_max_candidates_per_item)
+        .select("a", "b", "src"))
+    n_joined = joined()
+    if n_joined != n_pairs:
+        raise ValueError(f"{_UNION_ERROR}: {n_pairs} candidate pairs, "
+                         f"{n_joined} with both payloads")
+    attached = attach_payloads(
+        capped, a.all_images,
+        strategy=attach_strategy(
+            cfg, 2 * a.n_new * cfg.add_max_candidates_per_item),
+        materialize_slim=True)
+    ep_future = a.spawn(lambda: _ep_prefetch(a, capped, n_cap, mr_future))
+    new_edges, _ = a.pipe._stage(
+        "add_verified_edges",
+        verify_pairs(attached, cfg).filter(F.col("dup"))
+        .select("a", "b", "src", "psnr", "caption_eq"),
+        a.staging, "verified_edges", after="add_candidate_pairs")
+    return new_edges, ep_future
+
+
+def _ep_prefetch(a: _Add, capped: DataFrame, n_cap: int, mr_future):
+    """PREFETCH the driver tail's endpoint-label lookup under the verify
+    stage (guide §2.6): every verified edge endpoint is an endpoint of
+    ``capped`` (edges = verify(capped) filtered), and the matched reps'
+    promoted members are known from their collect — so the pruned
+    id_index lookup can run now, off the critical path, on the
+    (slightly larger) capped-endpoint superset.  This is the add tail's
+    ONE gate: 2·|capped| + n_new bounds every set the driver tail
+    collects, and past ``cfg.add_cc_local_max_edges`` it returns None
+    and the add takes the distributed tail.  Probing a superset only
+    ADDS rows for ids the tail then filters out."""
+    if mr_future is None:
+        return None
+    mr_list, remap = mr_future.result()
+    if (2 * n_cap + a.n_new) > a.cfg.add_cc_local_max_edges:
+        return None  # collect would blow the driver budget
+    lreps = sorted({remap.get(r, r) for r in mr_list})
+    probe = (capped.select(F.col("a").alias("image_id"))
+             .unionByName(capped.select(F.col("b").alias("image_id")))
+             .distinct())
+    if lreps:
+        probe = probe.unionByName(local_frame(
+            a.spark, [(i,) for i in lreps], "image_id string")).distinct()
+    from gsearch_spark.operators.keyidx import lookup_id_index
+    rows = lookup_id_index(a.spark, a.pipe._path("id_index"), probe, a.cfg,
+                           idx_df=a.id_idx).collect()
+    return mr_list, remap, rows
+
+
+def _stage_edge_delta(a: _Add, new_edges: DataFrame,
+                      ep_info: DataFrame) -> None:
+    """Stage the dedup graph's edge delta for the remove path's split
+    recomputation: endpoints translated to their FOUNDING group nodes
+    (old endpoints via the ``ep_info`` point lookup, new reps are their
+    own founding node), canonical a < b, intra-group self-loops
+    dropped.  Runs on a side thread, overlapping the labels -> CC ->
+    delta chain."""
+    founding = ep_info.select("image_id", "rep_id")
+    fedges = (new_edges.select("a", "b")
+              .join(F.broadcast(founding.toDF("a", "fa")), "a", "left")
+              .join(F.broadcast(founding.toDF("b", "fb")), "b", "left")
+              .select(F.coalesce("fa", F.col("a")).alias("na"),
+                      F.coalesce("fb", F.col("b")).alias("nb"))
+              .filter(F.col("na") != F.col("nb"))
+              .select(F.least("na", "nb").alias("a"),
+                      F.greatest("na", "nb").alias("b"))
+              .distinct())
+    write_edge_index(fedges, f"{a.staging}/{EDGE_INDEX}", a.cfg)
+
+
+# -- the CC tail: clusters update INCREMENTALLY by contraction.  The
+# stored clusters checkpoint IS the connected components of all stored
+# edges, so contracting every old component to its label preserves
+# connectivity exactly: CC runs over the LABEL-level image of the new
+# verified edges only (O(|new edges|), recorded as add_cc_edges), never
+# over the stored edge set, which the add does not even read.  Endpoint
+# labels come from a pruned id_index point lookup.  Affected clusters =
+# merged stored labels ∪ clusters whose exact groups gained members
+# (their min MEMBER id — the label under the rebuild-normalization
+# contract — may change).  Both tails return the same four things:
+# labels (image_id -> label), the label-graph components, the affected
+# labels (cluster_id) and their pbuckets.
+
+def _driver_tail(a: _Add, new_edges: DataFrame, prefetch):
+    """DRIVER tail (guide §2.6 taken to its limit), taken whenever the
+    endpoint prefetch came back: the labels -> contracted-CC ->
+    affected-set algebra works on sets bounded by O(new edges + new
+    rows) — the magnitude the union-find fast path always collected —
+    yet the DataFrame form pays ~5 small jobs of latency.  The
+    prefetched rows, the matched reps and the staged edge list are on
+    the driver, and plain dict/set algebra replaces the join chain —
+    provably the same maps: get(x, x) IS coalesce over a left join, the
+    set comprehension IS the distinct union."""
+    mr_list, remap, super_rows = prefetch
+    # a matched group's founding rep may be tombstoned (group alive):
+    # its own id_index label is a stale null-or-old row, so the LABEL is
+    # read through the promoted surviving member (lrep), while group
+    # identity stays the founding node
+    mr_pairs = [(r, remap.get(r, r)) for r in mr_list]
+    with a.pipe._span("add_lookup_labels",
+                      after="add_verified_edges") as rows:
+        edge_rows = [(r["a"], r["b"]) for r in
+                     new_edges.select("a", "b").collect()]
+        ep_ids = ({x for x, _ in edge_rows} | {y for _, y in edge_rows}
+                  | {lrep for _, lrep in mr_pairs})
+        # prefetched superset (capped endpoints ∪ lreps) ⊇ ep_ids:
+        # restricting the collected rows IS the direct lookup
+        ep_rows = [r for r in super_rows if r["image_id"] in ep_ids]
+        ep_info = local_frame(a.spark, ep_rows, "image_id string, "
+                              "cluster_id string, is_rep boolean, "
+                              "rep_id string")
+        a.spawn(lambda: _stage_edge_delta(a, new_edges, ep_info))
+        # a NULL cluster_id (a "stale null-or-old row") must behave like
+        # an ABSENT label, as coalesce(label, id) treats it in the
+        # distributed tail
+        labels_live = {r["image_id"]: r["cluster_id"] for r in ep_rows
+                       if r["cluster_id"] is not None}
+        labels_map = dict(labels_live)
+        for rep, lrep in mr_pairs:
+            if lrep in labels_live:  # inner-join semantics
+                labels_map[rep] = labels_live[lrep]
+        rows(len(labels_map))
+    with a.pipe._span("add_cc_edges", after="add_verified_edges") as rows:
+        le_set = {(lx, ly) for lx, ly in
+                  ((labels_map.get(x, x), labels_map.get(y, y))
+                   for x, y in edge_rows) if lx != ly}
+        rows(len(le_set))
+    mapping = union_find(sorted(le_set))
+    stored_labels = set(labels_map.values())
+    aff_set = {lab for lab in mapping if lab in stored_labels}
+    aff_set |= {labels_map[r] for r in mr_list if r in labels_map}
+    aff = local_frame(a.spark, [(lab,) for lab in sorted(aff_set)],
+                      "cluster_id string")
+    # bucket ids via the SAME Spark hash expression the layout uses
+    # (xxhash64 is not reimplemented driver-side); a projection of a
+    # local relation folds into it and runs no job
+    buckets = sorted({r["pb"] for r in
+                      aff.select(cluster_pbucket(a.cfg).alias("pb"))
+                      .collect()})
+    return (local_frame(a.spark, sorted(labels_map.items()),
+                        "image_id string, label string"),
+            local_frame(a.spark, sorted(mapping.items()),
+                        "image_id string, cluster_id string"),
+            aff, buckets)
+
+
+def _frame_tail(a: _Add, new_edges: DataFrame, matched_reps: DataFrame):
+    """DISTRIBUTED tail, for adds past the driver budget: the same
+    algebra as :func:`_driver_tail` as DataFrame jobs, with the CC on
+    :func:`cc_roots`."""
+    from gsearch_spark.operators.remove import remap_col
+
+    def labels() -> DataFrame:
+        # endpoint labels and founding nodes: pruned point lookup,
+        # O(new edges + matched reps) rows; a matched group's founding
+        # rep may be tombstoned (group alive), so its label is read
+        # through the promoted surviving member
+        ep_info = a.lookup_ids(
+            new_edges.select(F.col("a").alias("image_id"))
+            .unionByName(new_edges.select(F.col("b").alias("image_id")))
+            .unionByName(remap_col(matched_reps, "rep_id", a.remap)
+                         .select(F.col("rep_id").alias("image_id")))
+            .distinct()).localCheckpoint()
+        a.spawn(lambda: _stage_edge_delta(a, new_edges, ep_info))
+        live = ep_info.select("image_id", F.col("cluster_id").alias("label"))
+        promoted = (matched_reps
+                    .join(F.broadcast(a.remap.withColumnRenamed(
+                        "old_rep", "rep_id")), "rep_id")
+                    .join(live.withColumnRenamed("image_id", "new_rep"),
+                          "new_rep")
+                    .select(F.col("rep_id").alias("image_id"), "label"))
+        return live.unionByName(promoted)
+
+    labels, _ = a.pipe._stage("add_lookup_labels", labels,
+                              after="add_verified_edges")
+    label_edges, n_label_edges = a.pipe._stage(
+        "add_cc_edges",
+        new_edges.select("a", "b")
+        .join(F.broadcast(labels.toDF("a", "la")), "a", "left")
+        .join(F.broadcast(labels.toDF("b", "lb")), "b", "left")
+        .select(F.coalesce("la", F.col("a")).alias("a"),
+                F.coalesce("lb", F.col("b")).alias("b"))
+        .filter(F.col("a") != F.col("b"))
+        .distinct(), after="add_verified_edges")
+    comp = cc_roots(label_edges, n_label_edges, a.cfg)
+    aff = (comp.select(F.col("image_id").alias("label"))
+           .join(labels.select("label").distinct(), "label", "left_semi")
+           .unionByName(matched_reps
+                        .join(labels.withColumnRenamed("image_id",
+                                                       "rep_id"), "rep_id")
+                        .select("label"))
+           .distinct().localCheckpoint())
+    buckets = sorted(r[0] for r in aff.select(cluster_pbucket(a.cfg,
+                                                              "label"))
+                     .distinct().collect())
+    return labels, comp, aff.withColumnRenamed("label", "cluster_id"), buckets
+
+
+def _add_clusters(a: _Add, new_groups: DataFrame, labels: DataFrame,
+                  comp: DataFrame, aff: DataFrame,
+                  aff_buckets: "list[int]") -> DataFrame:
+    """The clusters delta (``add_clusters``): the affected clusters'
+    member rows, read under pbucket pruning, and every new member routed
+    through its rep's label, relabelled through the label-graph
+    components and min-member-normalized (:func:`relabel_min_member`).
+    ``is_rep`` rides along so the id_index delta keeps the flag's
+    bool_or-across-generations contract: re-labelled OLD members append
+    is_rep=false (their first-appearance row already carries the truth,
+    and rep-ness is immutable); NEW members carry their actual flag."""
+    def delta() -> DataFrame:
+        old = (a.clusters.filter(F.col("pbucket").isin(aff_buckets))
+               .join(F.broadcast(aff), "cluster_id")
+               .select("image_id", "cluster_id",
+                       F.lit(False).alias("is_rep"),
+                       F.lit(None).cast("string").alias("rep_id")))
+        new = (new_groups.select("image_id", "rep_id",
+                                 (F.col("image_id") == F.col("rep_id"))
+                                 .alias("is_rep"))
+               .join(F.broadcast(labels.withColumnRenamed("image_id",
+                                                          "rep_id")),
+                     "rep_id", "left")
+               .select("image_id",
+                       F.coalesce("label", F.col("rep_id"))
+                       .alias("cluster_id"), "is_rep", "rep_id"))
+        return relabel_min_member(old.unionByName(new), "cluster_id", comp,
+                                  ("is_rep", "rep_id"))
+
+    return a.pipe._stage("add_clusters", delta, after="add_cc_edges")[0]
+
+
+def _add_commit(a: _Add, new_gen: int, delta: DataFrame, aff: DataFrame,
+                aff_buckets: "list[int]") -> "dict[str, bool]":
+    """Stage the rewritten clusters partitions (touched buckets only,
+    :func:`stage_clusters_rewrite`) and, concurrently, the id_index
+    delta at the next generation (LSM append, latest-gen-wins — no
+    stored index rows are read or rewritten; ``add_index_delta``).  The
+    ck_index delta was staged in the candidates phase and the edge_index
+    delta on a side thread of the tail.  Returns the manifest's swap
+    map."""
+    a.spawn(lambda: a.pipe._stage(
+        "add_index_delta",
+        lambda p, tap: stage_id_append(delta, new_gen, a.staging, a.cfg,
+                                       tap),
+        a.staging, "id_index", after="add_clusters", read=False))
+    return stage_clusters_rewrite(a.pipe, a.staging, a.clusters, aff,
+                                  aff_buckets, delta, "add")
 
 
 def _apply_add_commit(fs: CheckpointFS, root: str, manifest: dict) -> None:

@@ -54,7 +54,6 @@ rebuild over the surviving images — including label renames and splits.
 
 from __future__ import annotations
 
-import time
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
@@ -68,6 +67,7 @@ from gsearch_spark.operators.pipeline import (NearDupPipeline, _writer_locked,
                                               finish_commit,
                                               mutation_prologue,
                                               read_layout,
+                                              relabel_min_member,
                                               stage_clusters_rewrite,
                                               write_manifest)
 from gsearch_spark.session import local_frame
@@ -129,18 +129,10 @@ def read_removal_state(spark: SparkSession,
             read_rep_remap(spark, checkpoint_dir))
 
 
-def count_tombstones(spark: SparkSession, checkpoint_dir: str) -> int:
-    """Removed images so far.  An absent sidecar answers 0 without a
-    job: a count of an empty local relation still runs one."""
-    if not has_removals(spark, checkpoint_dir):
-        return 0
-    return read_tombstones(spark, checkpoint_dir).count()
-
-
 def has_removals(spark: SparkSession, checkpoint_dir: str) -> bool:
     """Whether any remove has run since the last purge — purge's
-    nothing-to-purge check and :func:`count_tombstones`' job-free zero.
-    Readers never branch on it; they apply :func:`read_removal_state`."""
+    nothing-to-purge check.  Readers never branch on it; they apply
+    :func:`read_removal_state`."""
     from gsearch_spark.fs import CheckpointFS
     path = f"{checkpoint_dir}/{TOMBSTONES}"
     return CheckpointFS(spark, path).exists(path)
@@ -194,180 +186,175 @@ def remove_images(spark: SparkSession, cfg: PipelineConfig,
     (operators/pipeline.py): ``mutation_prologue``, the touched-bucket
     ``stage_clusters_rewrite`` and the manifest commit
     (``write_manifest`` + ``finish_commit``, crash-roll-forward-
-    recoverable)."""
+    recoverable).  Its phases run inside one ``chains()`` scope: resolve
+    and refuse (:func:`_rm_resolve`) -> affected members
+    (:func:`_rm_members`) -> connectivity (:func:`_rm_connectivity`) ->
+    stage and commit; the tombstones and the dead-group / rep-remap
+    sidecars stage on side threads as soon as their inputs are cut."""
     pipe = NearDupPipeline(spark, cfg, checkpoint_dir)
     staging, new_gen = mutation_prologue(pipe, ("id_index", "edge_index"))
-    id_path = pipe._path("id_index")
-    edge_path = pipe._path("edge_index")
-    id_idx_df = read_layout(spark, checkpoint_dir, "id_index")
-    clusters_stored = read_layout(spark, checkpoint_dir, "clusters")
-
+    id_idx = read_layout(spark, checkpoint_dir, "id_index")
+    clusters = read_layout(spark, checkpoint_dir, "clusters")
     rm, n_rm = checkpoint_rows(remove_ids.select("image_id").distinct())
     if n_rm == 0:
-        return clusters_stored.select("image_id", "cluster_id")
-
-    # -- resolve + refuse: every id must exist and not be removed
-    #    already.  The two refusal probes are independent small jobs and
-    #    run concurrently (guide §2.6)
-    def _lk_info():
-        t0 = time.time()
-        info, n_info = checkpoint_rows(lookup_id_index(
-            spark, id_path, rm, cfg, idx_df=id_idx_df))
-        return info, pipe._record("rm_lookup_ids", n_info, t0)
-
-    def _chk_already():
-        already = rm.join(read_tombstones(spark, checkpoint_dir),
-                          "image_id", "left_semi")
-        return None if already.isEmpty() else \
-            [r[0] for r in already.limit(5).collect()]
-
+        return clusters.select("image_id", "cluster_id")
     with chains() as spawn:
-        lk_future = spawn(_lk_info)
-        already_ids = _chk_already()
-        info, n_info = lk_future.result()
-        if n_info != n_rm:
-            missing = rm.join(info.select("image_id"), "image_id", "left_anti")
-            raise ValueError(
-                "remove_images: unknown image_ids (not in this build), e.g. "
-                f"{[r[0] for r in missing.limit(5).collect()]}")
-        if already_ids is not None:
-            raise ValueError(
-                "remove_images: ids already removed, e.g. "
-                f"{already_ids}")
-
-        # tombstone staging needs only the (already-checkpointed) rm list
-        # and the next generation number — start it NOW on a side thread so
-        # it overlaps the whole members/CC/delta chain below (guide §2.6)
-        def _st_tomb():
-            (rm.withColumn("gen", F.lit(new_gen))
-             .withColumn("tb", key_bucket("image_id", cfg.key_buckets))
-             .repartition(1)
-             .write.mode("overwrite").partitionBy("tb")
-             .parquet(f"{staging}/{TOMBSTONES}"))
-
-        spawn(_st_tomb)
-
-        # -- affected clusters: members read under pbucket pruning ----------
-        t0 = time.time()
-        aff = info.select("cluster_id").distinct().localCheckpoint()
-        aff_buckets = sorted(r[0] for r in aff.select(cluster_pbucket(cfg))
-                             .distinct().collect())
-        members = (clusters_stored
-                   .filter(F.col("pbucket").isin(aff_buckets))
-                   .join(F.broadcast(aff), "cluster_id")
-                   .select("image_id", "cluster_id").localCheckpoint())
-        # founding group node of every affected member: pruned point lookup,
-        # O(affected members) — never a scan of exact_groups
-        minfo = (lookup_id_index(spark, id_path, members.select("image_id"),
-                                 cfg, idx_df=id_idx_df)
-                 .select("image_id", "rep_id"))
-        mem, n_mem = checkpoint_rows(members.join(minfo, "image_id"))
-        pipe._record("rm_members", n_mem, t0, after="rm_lookup_ids")
-
-        # PREFETCH the dedup-graph edge read (guide §2.6): the surviving
-        # nodes are a subset of ALL affected founding nodes, which are known
-        # the moment mem lands — so the pruned edge_index lookup runs on a
-        # side thread over the affected-node superset, overlapping the
-        # survivor cut and the sidecar chain; the CC step below restricts
-        # to edges with BOTH endpoints surviving, which is exactly
-        # lookup(surviving nodes) since surviving ⊆ affected.
-        def _edges_prefetch():
-            all_nodes = (mem.select(F.col("rep_id").alias("a")).distinct()
-                         .localCheckpoint())
-            return lookup_edges_among(spark, edge_path, all_nodes,
-                                      cfg).localCheckpoint()
-
-        edges_future = spawn(_edges_prefetch)
-
+        info = _rm_resolve(pipe, spawn, rm, n_rm, id_idx)
+        spawn(lambda: _stage_tombstones(pipe, staging, rm, new_gen))
+        aff, aff_buckets, mem = _rm_members(pipe, info, clusters, id_idx)
+        edges_future = spawn(lambda: _edges_among(pipe, mem))
         surv = mem.join(rm, "image_id", "left_anti").localCheckpoint()
         # cut once: surv_groups serves the sidecar chain's anti-join AND
-        # both broadcast build sides of the CC edge restriction below —
+        # both broadcast build sides of the CC edge restriction —
         # lazy, the distinct would recompute per consumer (3x)
         surv_groups = surv.select("rep_id").distinct().localCheckpoint()
-
-        # the dead-group / rep-remap sidecar chain consumes only mem + surv
-        # (both checkpointed) — nothing from the CC recompute — so the whole
-        # chain INCLUDING its staging writes runs on a side thread under the
-        # edge-lookup/CC/delta work below (guide §2.6)
-        def _st_sidecars():
-            gone_groups = (mem.join(rm, "image_id", "left_semi")
-                           .select("rep_id").distinct()
-                           .join(surv_groups, "rep_id", "left_anti")
-                           .localCheckpoint())
-            # remap refresh: every surviving group whose FOUNDING rep is not
-            # among the survivors points at its minimum surviving member
-            # (also re-points groups remapped by earlier batches whose
-            # target just died — the recompute is total over the affected
-            # slice)
-            founders_alive = (surv.filter(F.col("image_id") == F.col("rep_id"))
-                              .select("rep_id"))
-            remap_delta = (surv.groupBy("rep_id")
-                           .agg(F.min("image_id").alias("new_rep"))
-                           .join(founders_alive, "rep_id", "left_anti")
-                           .select(F.col("rep_id").alias("old_rep"),
-                                   "new_rep"))
-            if not gone_groups.isEmpty():
-                (gone_groups.withColumn("gen", F.lit(new_gen)).repartition(1)
-                 .write.mode("overwrite").parquet(f"{staging}/{DEAD_GROUPS}"))
-            if not remap_delta.isEmpty():
-                (remap_delta.withColumn("gen", F.lit(new_gen)).repartition(1)
-                 .write.mode("overwrite").parquet(f"{staging}/{REP_REMAP}"))
-
-        spawn(_st_sidecars)
-
-        # -- connectivity: CC over surviving group nodes ---------------------
-        # (a dying group's edges vanish — only then can a cluster split; the
-        # edge read was prefetched over the affected-node superset above and
-        # is restricted here to both-endpoints-surviving — identical to
-        # looking up the surviving nodes directly)
-        t0 = time.time()
-        e_sup = edges_future.result()
-        sn_a = surv_groups.withColumnRenamed("rep_id", "a")
-        sn_b = surv_groups.withColumnRenamed("rep_id", "b")
-        edges, n_edges = checkpoint_rows(
-            e_sup.join(F.broadcast(sn_a), "a", "left_semi")
-            .join(F.broadcast(sn_b), "b", "left_semi"))
-        pipe._record("rm_cc_edges", n_edges, t0, after="rm_members")
-        roots_df = cc_roots(edges, n_edges, cfg).select(
-            F.col("image_id").alias("rep_id"),
-            F.col("cluster_id").alias("root"))
-        t0 = time.time()
-        relab = (surv.select("image_id", "rep_id")
-                 .join(F.broadcast(roots_df), "rep_id", "left")
-                 .withColumn("root", F.coalesce("root", "rep_id")))
-        norm = relab.groupBy("root").agg(F.min("image_id").alias("cluster_id"))
-        delta, n_delta = checkpoint_rows(
-            relab.join(F.broadcast(norm), "root")
-            .select("image_id", "cluster_id"))
-        pipe._record("rm_clusters", n_delta, t0, after="rm_cc_edges")
-
-        # -- stage the remaining deltas, then the shared manifest commit.
-        #    Tombstones and the dead-group/remap sidecars have been staging
-        #    on side threads since their inputs were cut; the clusters
-        #    rewrite and id_index delta run CONCURRENTLY here (guide §2.6)
-        def _st_id():
-            # id_index delta: survivors at their new label; removed ids at
-            # a NULL label (the dead marker — membership/tombstone-ness
-            # lives in the tombstones table, label resolution of a removed
-            # id is null)
-            null_s = F.lit(None).cast("string")
-            id_delta = (delta
-                        .withColumn("is_rep", F.lit(False))
-                        .withColumn("rep_id", null_s)
-                        .unionByName(rm.select("image_id",
-                                               null_s.alias("cluster_id"),
-                                               F.lit(False).alias("is_rep"),
-                                               null_s.alias("rep_id"))))
-            stage_id_append(id_delta, new_gen, staging, cfg)
-
-        spawn(_st_id)
-        swap = stage_clusters_rewrite(pipe, staging, clusters_stored, aff,
+        spawn(lambda: _stage_sidecars(staging, rm, mem, surv, surv_groups,
+                                      new_gen))
+        delta = _rm_connectivity(pipe, edges_future, surv, surv_groups)
+        # id_index delta: survivors at their new label; removed ids at a
+        # NULL label (the dead marker — tombstone-ness lives in the
+        # tombstones table, label resolution of a removed id is null)
+        null_s = F.lit(None).cast("string")
+        spawn(lambda: stage_id_append(
+            delta.select("image_id", "cluster_id",
+                         F.lit(False).alias("is_rep"),
+                         null_s.alias("rep_id"))
+            .unionByName(rm.select("image_id", null_s.alias("cluster_id"),
+                                   F.lit(False).alias("is_rep"),
+                                   null_s.alias("rep_id"))),
+            new_gen, staging, cfg))
+        swap = stage_clusters_rewrite(pipe, staging, clusters, aff,
                                       aff_buckets, delta, "rm")
     finish_commit(spark, pipe.fs, checkpoint_dir, write_manifest(
         pipe, staging, new_gen, swap, [DEAD_GROUPS, REP_REMAP],
         ["id_index", TOMBSTONES]), pipe._flush_state)
     return (read_layout(spark, checkpoint_dir, "clusters")
             .select("image_id", "cluster_id"))
+
+
+def _rm_resolve(pipe: NearDupPipeline, spawn, rm: DataFrame, n_rm: int,
+                id_idx: DataFrame) -> DataFrame:
+    """Resolve and refuse: every id must exist (``rm_lookup_ids``, a
+    pruned id_index point lookup) and not be removed already; the two
+    refusal probes are independent small jobs and run concurrently
+    (guide §2.6).  Returns the ids' id_index rows."""
+    spark, cfg = pipe.spark, pipe.cfg
+    lookup = spawn(lambda: pipe._stage("rm_lookup_ids", lambda: (
+        lookup_id_index(spark, pipe._path("id_index"), rm, cfg,
+                        idx_df=id_idx))))
+    already = rm.join(read_tombstones(spark, pipe.dir), "image_id",
+                      "left_semi")
+    already_ids = None if already.isEmpty() else \
+        [r[0] for r in already.limit(5).collect()]
+    info, n_info = lookup.result()
+    if n_info != n_rm:
+        missing = rm.join(info.select("image_id"), "image_id", "left_anti")
+        raise ValueError(
+            "remove_images: unknown image_ids (not in this build), e.g. "
+            f"{[r[0] for r in missing.limit(5).collect()]}")
+    if already_ids is not None:
+        raise ValueError(
+            f"remove_images: ids already removed, e.g. {already_ids}")
+    return info
+
+
+def _stage_tombstones(pipe: NearDupPipeline, staging: str, rm: DataFrame,
+                      gen: int) -> None:
+    """Stage the tombstones: needs only the checkpointed ids and the next
+    generation, so it overlaps the whole members/CC/delta chain."""
+    (rm.withColumn("gen", F.lit(gen))
+     .withColumn("tb", key_bucket("image_id", pipe.cfg.key_buckets))
+     .repartition(1)
+     .write.mode("overwrite").partitionBy("tb")
+     .parquet(f"{staging}/{TOMBSTONES}"))
+
+
+def _rm_members(pipe: NearDupPipeline, info: DataFrame,
+                clusters: DataFrame, id_idx: DataFrame):
+    """Affected members (``rm_members``): every member of a cluster that
+    holds a removed id, read under pbucket pruning, with its founding
+    group node from a pruned id_index point lookup — O(affected
+    members), never a scan of exact_groups.  Returns the affected
+    labels, their buckets and the members."""
+    cfg = pipe.cfg
+    with pipe._span("rm_members", after="rm_lookup_ids") as rows:
+        aff = info.select("cluster_id").distinct().localCheckpoint()
+        aff_buckets = sorted(r[0] for r in aff.select(cluster_pbucket(cfg))
+                             .distinct().collect())
+        members = (clusters.filter(F.col("pbucket").isin(aff_buckets))
+                   .join(F.broadcast(aff), "cluster_id")
+                   .select("image_id", "cluster_id").localCheckpoint())
+        minfo = (lookup_id_index(pipe.spark, pipe._path("id_index"),
+                                 members.select("image_id"), cfg,
+                                 idx_df=id_idx)
+                 .select("image_id", "rep_id"))
+        mem, n_mem = checkpoint_rows(members.join(minfo, "image_id"))
+        rows(n_mem)
+    return aff, aff_buckets, mem
+
+
+def _edges_among(pipe: NearDupPipeline, mem: DataFrame) -> DataFrame:
+    """PREFETCH the dedup-graph edge read (guide §2.6): the surviving
+    nodes are a subset of ALL affected founding nodes, known the moment
+    the members land — so the pruned edge_index lookup runs on a side
+    thread over the affected-node superset, overlapping the survivor
+    cut and the sidecar chain; the connectivity phase restricts it to
+    edges with BOTH endpoints surviving, which is exactly a lookup of
+    the surviving nodes."""
+    nodes = mem.select(F.col("rep_id").alias("a")).distinct() \
+        .localCheckpoint()
+    return lookup_edges_among(pipe.spark, pipe._path("edge_index"), nodes,
+                              pipe.cfg).localCheckpoint()
+
+
+def _stage_sidecars(staging: str, rm: DataFrame, mem: DataFrame,
+                    surv: DataFrame, surv_groups: DataFrame,
+                    gen: int) -> None:
+    """Stage the dead-group and rep-remap deltas.  Consumes only the
+    checkpointed members and survivors — nothing from the CC recompute
+    — so the whole chain, writes included, runs on a side thread under
+    the connectivity phase.  The remap refresh points every surviving
+    group whose FOUNDING rep is not among the survivors at its minimum
+    surviving member (also re-pointing groups remapped by earlier
+    batches whose target just died — the recompute is total over the
+    affected slice)."""
+    gone_groups = (mem.join(rm, "image_id", "left_semi")
+                   .select("rep_id").distinct()
+                   .join(surv_groups, "rep_id", "left_anti")
+                   .localCheckpoint())
+    founders_alive = (surv.filter(F.col("image_id") == F.col("rep_id"))
+                      .select("rep_id"))
+    remap_delta = (surv.groupBy("rep_id")
+                   .agg(F.min("image_id").alias("new_rep"))
+                   .join(founders_alive, "rep_id", "left_anti")
+                   .select(F.col("rep_id").alias("old_rep"), "new_rep"))
+    for name, df in ((DEAD_GROUPS, gone_groups), (REP_REMAP, remap_delta)):
+        if not df.isEmpty():
+            (df.withColumn("gen", F.lit(gen)).repartition(1)
+             .write.mode("overwrite").parquet(f"{staging}/{name}"))
+
+
+def _rm_connectivity(pipe: NearDupPipeline, edges_future,
+                     surv: DataFrame, surv_groups: DataFrame) -> DataFrame:
+    """Connectivity: CC over the surviving group nodes (a dying group's
+    edges vanish — only then can a cluster split).  The prefetched edge
+    read is restricted to both-endpoints-surviving (``rm_cc_edges``),
+    then every survivor is relabelled and min-member-normalized
+    (``rm_clusters``).  Returns that clusters delta."""
+    def edges() -> DataFrame:
+        return (edges_future.result()
+                .join(F.broadcast(surv_groups.withColumnRenamed("rep_id",
+                                                                "a")),
+                      "a", "left_semi")
+                .join(F.broadcast(surv_groups.withColumnRenamed("rep_id",
+                                                                "b")),
+                      "b", "left_semi"))
+
+    edges, n_edges = pipe._stage("rm_cc_edges", edges, after="rm_members")
+    comp = cc_roots(edges, n_edges, pipe.cfg)
+    return pipe._stage("rm_clusters", lambda: relabel_min_member(
+        surv.select("image_id", "rep_id"), "rep_id", comp),
+        after="rm_cc_edges")[0]
 
 
 # ----------------------------------------------------------------- purge
@@ -401,11 +388,11 @@ def purge_removed(spark: SparkSession, cfg: PipelineConfig,
     if not has_removals(spark, checkpoint_dir):
         return {"tombstones_purged": 0, "dead_groups_purged": 0,
                 "reps_rekeyed": 0}
-    T, n_t = checkpoint_rows(
-        read_tombstones(spark, checkpoint_dir).select("image_id"))
     dead, remap = read_removal_state(spark, checkpoint_dir)
-    D, n_d = checkpoint_rows(dead)
-    R, n_r = checkpoint_rows(remap)
+    T, n_t = pipe._stage("purge_tombstones", read_tombstones(
+        spark, checkpoint_dir).select("image_id"))
+    D, n_d = pipe._stage("purge_dead_groups", dead)
+    R, n_r = pipe._stage("purge_rep_remap", remap)
 
     def read(name: str) -> DataFrame:
         return read_layout(spark, checkpoint_dir, name)
@@ -414,20 +401,19 @@ def purge_removed(spark: SparkSession, cfg: PipelineConfig,
     swap: "dict[str, bool]" = {}
 
     def stage(name: str, df: DataFrame,
-              keyed: "tuple[str, str] | None" = None) -> None:
+              keyed: "tuple[str, str] | None" = None) -> DataFrame:
         """Stage ``df`` as ``name``'s replacement — flat, or as a
         key-addressed layout on ``keyed = (key_col, part_col)``."""
         swap[name] = True
-        if keyed:
-            write_keyed(df, *keyed, f"{staging}/{name}", cfg)
-        else:
-            df.write.mode("overwrite").parquet(f"{staging}/{name}")
+        return pipe._stage(
+            f"purge_{name}", (lambda p, tap: write_keyed(
+                df, *keyed, p, cfg, tap)) if keyed else df,
+            staging, name, read=name == "exact_groups")[0]
 
     # member-level table: drop tombstoned rows, re-key group reps
-    eg = read("exact_groups")
-    stage("exact_groups",
-          remap_col(eg.join(F.broadcast(T), "image_id", "left_anti"),
-                    "rep_id", R))
+    eg = stage("exact_groups", remap_col(
+        read("exact_groups").join(F.broadcast(T), "image_id", "left_anti"),
+        "rep_id", R))
     # rep-keyed tables: dead groups vanish, remapped reps re-key
     # (the promoted member is byte-and-caption identical, so the
     # signature/band/sketch VALUES are already its own)
@@ -449,17 +435,17 @@ def purge_removed(spark: SparkSession, cfg: PipelineConfig,
     # clusters and the staged purged groups (restores is_rep on promoted
     # reps; the generation counter stays, so future mutations' deltas
     # still win lookups)
-    flags = read_layout(spark, staging, "exact_groups").select(
-        "image_id", (F.col("image_id") == F.col("rep_id"))
-        .alias("is_rep"), "rep_id")
-    idx = (read("clusters").select("image_id", "cluster_id")
-           .join(flags, "image_id").withColumn("gen", F.lit(0)))
-    stage("id_index", idx, ("image_id", "ib"))
+    flags = eg.select("image_id", (F.col("image_id") == F.col("rep_id"))
+                      .alias("is_rep"), "rep_id")
+    stage("id_index", read("clusters").select("image_id", "cluster_id")
+          .join(flags, "image_id").withColumn("gen", F.lit(0)),
+          ("image_id", "ib"))
     # the sidecars have no replacement, so the commit deletes them after
     # every table rename: until then readers stay correct under
     # merge-on-read; after, the sidecars read as empty and fold away
     swap.update(dict.fromkeys((TOMBSTONES, DEAD_GROUPS, REP_REMAP), False))
     finish_commit(spark, pipe.fs, checkpoint_dir,
-                  write_manifest(pipe, staging, gen - 1, swap, [], []))
+                  write_manifest(pipe, staging, gen - 1, swap, [], []),
+                  pipe._flush_state)
     return {"tombstones_purged": n_t, "dead_groups_purged": n_d,
             "reps_rekeyed": n_r}

@@ -40,10 +40,24 @@ VERIFIED_SCHEMA = ("a string, b string, src string, psnr double, "
                    "caption_eq boolean, dup boolean")
 
 
-def prefilter_pairs(pairs: DataFrame, images: DataFrame,
+def pair_phashes(pairs: DataFrame, images: DataFrame) -> DataFrame:
+    """``pairs`` (a, b, src) with both endpoints' ``phash_a`` /
+    ``phash_b`` from ``images`` — the prefilter's metadata join.  The
+    joins are inner: a pair with an endpoint missing from ``images``
+    drops out here, before any cap or verdict sees it."""
+    meta = images.select("image_id", "phash")
+    pa_ = meta.select(F.col("image_id").alias("a"),
+                      F.col("phash").alias("phash_a"))
+    pb = meta.select(F.col("image_id").alias("b"),
+                     F.col("phash").alias("phash_b"))
+    return pairs.join(pa_, "a").join(pb, "b")
+
+
+def prefilter_pairs(with_phashes: DataFrame,
                     max_phash_hamming: int = 20,
                     max_phash_hamming_phash_src: int = 8) -> DataFrame:
-    """Phase-1 verify: JVM metadata prefilter, no bytes, no Python.
+    """Phase-1 verify: JVM metadata prefilter, no bytes, no Python, over
+    the pairs :func:`pair_phashes` joined their endpoints' phash onto.
 
     A candidate pair can only satisfy the PSNR >= 40 dB invariant when
     the images are visually near-identical, which bounds their phash
@@ -64,15 +78,10 @@ def prefilter_pairs(pairs: DataFrame, images: DataFrame,
     loose bound stays for caption/minhash/simhash sources, whose true
     pairs (pixel perturbations) can move phash further.
     """
-    meta = images.select("image_id", "phash")
-    pa_ = meta.select(F.col("image_id").alias("a"),
-                      F.col("phash").alias("phash_a"))
-    pb = meta.select(F.col("image_id").alias("b"),
-                     F.col("phash").alias("phash_b"))
     bound = F.when(F.col("src") == "phash",
                    F.lit(max_phash_hamming_phash_src)) \
              .otherwise(F.lit(max_phash_hamming))
-    return (pairs.join(pa_, "a").join(pb, "b")
+    return (with_phashes
             .filter(F.bit_count(
                 F.col("phash_a").bitwiseXOR(F.col("phash_b"))) <= bound)
             .select("a", "b", "src"))
@@ -248,7 +257,7 @@ def verified_edges(pairs: DataFrame, images: DataFrame,
     count (the pipeline already holds the candidate_pairs stage record).
     Distinct candidate ids never exceed two per pair, so ``2 x hint``
     is the attach rule's bound; without a hint the attach shuffles."""
-    plausible = prefilter_pairs(pairs, images,
+    plausible = prefilter_pairs(pair_phashes(pairs, images),
                                 cfg.prefilter_max_phash_hamming,
                                 cfg.prefilter_max_phash_hamming_phash_src
                                 ).localCheckpoint()

@@ -150,6 +150,29 @@ def test_partitioning_invariance(spark, small_fixture_dir, clusters_df):
     assert got == base
 
 
+def test_build_cc_gate_sides_agree(spark, small_fixture_dir, clusters_df,
+                                   monkeypatch):
+    """The build's ``cc_roots`` gate forced to its distributed side
+    (``add_cc_local_max_edges=0``): the star CC runs, and its clusters
+    equal the default build's driver union-find clusters."""
+    import dataclasses
+    from gsearch_spark.operators import pipeline
+    clusters, _ = clusters_df
+    calls = []
+    real = pipeline.connected_components
+    monkeypatch.setattr(pipeline, "connected_components",
+                        lambda *a, **k: calls.append(a) or real(*a, **k))
+    ckpt = CKPT + "_dist_cc"
+    shutil.rmtree(ckpt, ignore_errors=True)
+    images = spark.read.parquet(f"{small_fixture_dir}/images.parquet")
+    got = NearDupPipeline(
+        spark, dataclasses.replace(CFG, add_cc_local_max_edges=0),
+        ckpt).run(images, resume=False)
+    assert len(calls) == 1
+    assert ({r["image_id"]: r["cluster_id"] for r in got.collect()}
+            == {r["image_id"]: r["cluster_id"] for r in clusters.collect()})
+
+
 def test_attach_strategies_identical(spark, small_fixture_dir):
     """broadcast and shuffle-hash semi joins in attach_payloads are
     interchangeable: identical attached rows."""

@@ -623,29 +623,14 @@ def _joins(df) -> int:
                if line.lstrip(" :+-").startswith("Join "))
 
 
-def _jobs_under(spark, group: str, fn):
-    """(fn(), number of Spark jobs it ran under job group ``group``)."""
-    sc = spark.sparkContext
-    sc.setJobGroup(group, group)
-    try:
-        out = fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    sc._jsc.sc().listenerBus().waitUntilEmpty()
-    return out, len(sc.statusTracker().getJobIdsForGroup(group))
-
-
 def test_removal_sidecars_fold_out_until_a_remove(spark):
     """The removal state is applied unconditionally, as data.  On a
     build without removal sidecars they read as empty local relations,
     and the optimizer folds every join they feed: the add's re-pointed
     stored-pair probe keeps no join at all, the request keeps only its
-    own, and ``count_tombstones`` runs no job.  After one remove the
-    sidecar joins are in both plans."""
+    own.  After one remove the sidecar joins are in both plans."""
     from gsearch_spark.operators.pipeline import read_layout
-    from gsearch_spark.operators.remove import (count_tombstones, pair_fix,
-                                                read_removal_state)
+    from gsearch_spark.operators.remove import pair_fix, read_removal_state
     from gsearch_spark.operators.request import request
     px = _pixels(51)
     images = spark.createDataFrame(
@@ -665,9 +650,6 @@ def test_removal_sidecars_fold_out_until_a_remove(spark):
 
     n_stored, n_request = plan_joins()
     assert n_stored == 0
-    n, jobs = _jobs_under(spark, "rm_fold_count",
-                          lambda: count_tombstones(spark, ckpt))
-    assert (n, jobs) == (0, 0)
 
     remove_images(spark, CFG, ckpt, spark.createDataFrame(
         [("z_a",), ("z_c",)], "image_id string"))
@@ -680,9 +662,6 @@ def test_removal_sidecars_fold_out_until_a_remove(spark):
     # dead-target anti join + answer remap join on the request; two
     # dead anti joins + two remap joins on the stored pairs
     assert plan_joins() == (4, n_request + 2)
-    n, jobs = _jobs_under(spark, "rm_fold_count_after",
-                          lambda: count_tombstones(spark, ckpt))
-    assert n == 2 and jobs > 0
 
 
 @pytest.mark.parametrize("tail", ["driver", "distributed"])
@@ -717,3 +696,81 @@ def test_add_of_remapped_group_matches_rebuild(spark, tail):
     assert want == {"r_a2": "r_a2", "r_a3": "r_a2", "r_d": "r_a2",
                     "r_c": "r_c"}
     assert got == want
+
+
+def test_add_refuses_union_missing_a_candidate_payload(spark):
+    """``all_images`` without the stored row a new near-dup pairs with:
+    the prefilter's inner metadata join would drop that candidate pair
+    before any cap or verdict saw it, so the add must refuse instead of
+    leaving the new row a singleton."""
+    px = _pixels(71)
+    base = spark.createDataFrame(
+        [_row("u_a", px, "a cat"), _row("u_b", _pixels(72), "other row")],
+        IMG_SCHEMA)
+    new = spark.createDataFrame([_row("u_n", px, "a cat on a mat")],
+                                IMG_SCHEMA)
+    ckpt = "/tmp/gsearch_spark_ckpt_union_payload"
+    shutil.rmtree(ckpt, ignore_errors=True)
+    NearDupPipeline(spark, CFG, ckpt).run(base, resume=False)
+    lacking = base.filter(F.col("image_id") != "u_a").unionByName(new)
+    with pytest.raises(ValueError, match="old ∪ new"):
+        incremental_add(spark, CFG, ckpt, new, lacking)
+    assert _assign(incremental_add(spark, CFG, ckpt, new,
+                                   base.unionByName(new))) == \
+        {"u_a": "u_a", "u_b": "u_b", "u_n": "u_a"}
+
+
+def test_add_refuses_union_holding_a_removed_row(spark):
+    """``all_images`` that still holds a removed row: the suffix pass
+    over the new rows' phash groups would pair both new rows with it
+    (the id_index still reads it as a rep) and merge them, which a
+    rebuild over the survivors does not — so the add must refuse."""
+    px = _pixels(81)
+    base = spark.createDataFrame(
+        [_row("v_r", px, "a dog"), _row("v_b", _pixels(82), "other row")],
+        IMG_SCHEMA)
+    new = spark.createDataFrame(
+        [_row("v_n1", px, "a dog on a sofa"),
+         _row("v_n2", px, "a dog in the park")], IMG_SCHEMA)
+    ckpt = "/tmp/gsearch_spark_ckpt_union_removed"
+    shutil.rmtree(ckpt, ignore_errors=True)
+    NearDupPipeline(spark, CFG, ckpt).run(base, resume=False)
+    remove_images(spark, CFG, ckpt, spark.createDataFrame(
+        [("v_r",)], "image_id string"))
+    with pytest.raises(ValueError, match="old ∪ new"):
+        incremental_add(spark, CFG, ckpt, new, base.unionByName(new))
+    surv = base.filter(F.col("image_id") != "v_r").unionByName(new)
+    got = _assign(incremental_add(spark, CFG, ckpt, new, surv))
+    assert got == _rebuild(spark, surv, f"{ckpt}_truth")
+    assert got["v_n1"] != got["v_n2"]
+
+
+@pytest.mark.parametrize("field, value", [
+    ("shuffle_partitions", 7), ("verify_attach", "shuffle"),
+    ("cc_reliable_checkpoints", True), ("add_cc_local_max_edges", 0)])
+def test_execution_field_keeps_a_stored_build_mutable(spark, field, value):
+    """An execution field only picks between plans with identical
+    outputs, so a stored build accepts an add, a remove and a request
+    under a config with it retuned — and answers as under the build's
+    own config."""
+    import dataclasses
+    from gsearch_spark.operators.request import request
+    cfg = dataclasses.replace(CFG, **{field: value})
+    px = _pixels(91)
+    base = spark.createDataFrame(
+        [_row("x_a", px, "red kite"), _row("x_b", _pixels(92), "other")],
+        IMG_SCHEMA)
+    new = spark.createDataFrame([_row("x_n", px, "red kite")], IMG_SCHEMA)
+    ckpt = f"/tmp/gsearch_spark_ckpt_exec_{field}"
+    shutil.rmtree(ckpt, ignore_errors=True)
+    NearDupPipeline(spark, CFG, ckpt).run(base, resume=False)
+    assert _assign(incremental_add(spark, cfg, ckpt, new,
+                                   base.unionByName(new))) == \
+        {"x_a": "x_a", "x_b": "x_b", "x_n": "x_a"}
+    assert _assign(remove_images(spark, cfg, ckpt, spark.createDataFrame(
+        [("x_a",)], "image_id string"))) == {"x_b": "x_b", "x_n": "x_n"}
+    probe = new.select(F.lit("q").alias("image_id"), "bytes", "caption",
+                       "phash")
+    targets = {r["target_id"] for r in
+               request(spark, ckpt, probe, cfg=cfg).collect()}
+    assert "x_n" in targets and "x_a" not in targets

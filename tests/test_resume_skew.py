@@ -76,6 +76,28 @@ def test_retired_config_keys_keep_build_identity(spark, tmp_path):
     CFG.assert_matches_via(fs, ckpt)
 
 
+def test_execution_fields_keep_build_identity(spark, tmp_path):
+    """The execution fields only pick between plans with identical
+    outputs: a parameters.json with each retuned still matches today's
+    default and reloads with the stored values (a ``--bucketed`` build
+    keeps its ``verify_attach="shuffle"``), while the fields that decide
+    the stored bands' salt column still refuse."""
+    from gsearch_spark.config import EXECUTION_FIELDS
+    from gsearch_spark.fs import CheckpointFS
+    tuned = {"shuffle_partitions": 7, "verify_attach": "shuffle",
+             "cc_reliable_checkpoints": True, "add_cc_local_max_edges": 0}
+    assert set(tuned) == set(EXECUTION_FIELDS)
+    ckpt = _stored_params(tmp_path, **tuned)
+    fs = CheckpointFS(spark, ckpt)
+    stored = PipelineConfig.reload_via(fs, ckpt)
+    assert {k: getattr(stored, k) for k in tuned} == tuned
+    CFG.assert_matches_via(fs, ckpt)
+    for field in ("max_hot_buckets", "hot_stats_sample_mod"):
+        ckpt = _stored_params(tmp_path, **{field: 2})
+        with pytest.raises(ValueError, match="different pipeline config"):
+            CFG.assert_matches_via(fs, ckpt)
+
+
 def test_unknown_config_key_still_refuses(spark, tmp_path):
     """Only the retired keys are forgiven: any other key the dataclass
     does not know still fails the load."""
@@ -136,3 +158,37 @@ def test_skew_cluster_stays_connected(spark, skew_fixture_dir):
     assign = _assign(clusters)
     skew_clusters = {assign[i] for i in skew_ids}
     assert len(skew_clusters) == 1, f"skew split into {len(skew_clusters)}"
+
+
+@pytest.mark.parametrize("n_hot", [0, 2, 3],
+                         ids=["no_hot_bucket", "cap_not_hit", "cap_hit"])
+def test_salt_hot_buckets_cap_sides(spark, caplog, n_hot):
+    """``max_hot_buckets`` at a tiny cap of 2, on each side: buckets
+    above ``hot_threshold`` are salted while they fit the cap; past it
+    only the hottest are, the tail stays unsalted with a warning logged,
+    and the star policy still bounds the tail's pairs at 2m - 3."""
+    import logging
+    from gsearch_spark.operators import banding
+    from gsearch_spark.operators.candidates import ALL_PAIRS_MAX
+    cap = 2
+    # hot bucket h holds 40 + h rows, so the hottest has the highest h;
+    # three cold buckets of 3 rows stay under the threshold
+    rows = [(1, 100 + h, f"h{h}_{i:03d}") for h in range(n_hot)
+            for i in range(40 + h)]
+    rows += [(1, 200 + c, f"c{c}_{i}") for c in range(3) for i in range(3)]
+    bands = spark.createDataFrame(
+        rows, "band_id int, band_hash bigint, image_id string")
+    with caplog.at_level(logging.WARNING, logger=banding.__name__):
+        out = banding.salt_hot_buckets(bands, hot_threshold=8, max_salts=4,
+                                       max_hot_buckets=cap)
+    salts: "dict[int, set]" = {}
+    for r in out.collect():
+        salts.setdefault(r["band_hash"], set()).add(r["salt"])
+    assert {h for h, s in salts.items() if s != {0}} == \
+        {100 + h for h in range(max(0, n_hot - cap), n_hot)}
+    assert ("more than 2 hot buckets" in caplog.text) == (n_hot > cap)
+    if n_hot > cap:
+        tail = out.filter(F.col("band_hash") == 100)
+        m = tail.count()
+        assert m > ALL_PAIRS_MAX
+        assert emit_bucket_pairs(tail).count() == 2 * m - 3

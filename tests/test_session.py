@@ -8,15 +8,18 @@ rows into a DataFrame.
 it the only way: a source walk finds no other ``createDataFrame`` call
 in the package, and a build, an add and a remove run with no stage whose
 operation graph holds a ``PythonRDD`` node.  The same source walk keeps
-the package's thread starts inside ``pipeline.chains``, and another
-finds every ``PipelineConfig`` field read by the package."""
+the package's thread starts inside ``pipeline.chains``, another finds
+every hashed ``PipelineConfig`` field read by the package, and a token
+count keeps every function of the mutation modules short."""
 
 from __future__ import annotations
 
 import ast
 import dataclasses
+import io
 import pathlib
 import shutil
+import tokenize
 
 import pytest
 from py4j.protocol import Py4JJavaError
@@ -190,28 +193,59 @@ def test_stage_counts_come_from_the_materializing_action():
     assert not offenders, offenders
 
 
-# PipelineConfig fields no package code reads: each pins into the
+def test_mutation_functions_stay_short():
+    """Source guard: no function or method in operators/pipeline.py or
+    operators/remove.py exceeds 100 source lines, counted by the rule the
+    change log uses (blank, comment and docstring lines excluded) — the
+    add and the remove stay drivers over phase functions."""
+    skip = {tokenize.COMMENT, tokenize.NL, tokenize.NEWLINE,
+            tokenize.INDENT, tokenize.DEDENT, tokenize.ENDMARKER}
+    root = pathlib.Path(gsearch_spark.__file__).parent / "operators"
+    long = []
+    for name in ("pipeline.py", "remove.py"):
+        src = (root / name).read_text()
+        tree = ast.parse(src)
+        docs = {line for node in ast.walk(tree)
+                if isinstance(node, (ast.Module, ast.ClassDef,
+                                     ast.FunctionDef))
+                and ast.get_docstring(node, clean=False) is not None
+                for line in range(node.body[0].lineno,
+                                  node.body[0].end_lineno + 1)}
+        code = {line for tok in tokenize.generate_tokens(
+                    io.StringIO(src).readline) if tok.type not in skip
+                for line in range(tok.start[0], tok.end[0] + 1)} - docs
+        long += [f"{name}:{node.name} {n}" for node in ast.walk(tree)
+                 if isinstance(node, ast.FunctionDef)
+                 for n in [sum(node.lineno <= line <= node.end_lineno
+                               for line in code)] if n > 100]
+    assert not long, long
+
+
+# Hashed PipelineConfig fields no package code reads: each pins into the
 # build's identity (parameters.json) a format or a semantic that the
 # code implements without consulting the field.  Exact: a field leaves
-# this map the moment code reads it.
+# this map the moment code reads it.  (An execution field hashes into
+# no identity; ``shuffle_partitions`` is one callers size their session
+# from.)
 IDENTITY_ONLY = {
     "sig_version": "signature/checkpoint-format version",
     "layout_version": "sidecar layout generation",
-    "shuffle_partitions": "callers size their session from it",
 }
 
 
 def test_every_config_field_is_read():
-    """Source guard: a PipelineConfig field hashes into every build's
-    identity, so one that no code outside config.py reads (as
+    """Source guard: a hashed PipelineConfig field is part of every
+    build's identity, so one that no code outside config.py reads (as
     ``<obj>.<field>``) is a dead knob — it promises behaviour nothing
     implements, and changing it still refuses the stored build."""
+    from gsearch_spark.config import EXECUTION_FIELDS
     root = pathlib.Path(gsearch_spark.__file__).parent
     read = {node.attr
             for path in root.rglob("*.py") if path.name != "config.py"
             for node in ast.walk(ast.parse(path.read_text()))
             if isinstance(node, ast.Attribute)}
-    unread = {f.name for f in dataclasses.fields(PipelineConfig)} - read
+    unread = {f.name for f in dataclasses.fields(PipelineConfig)
+              if f.name not in EXECUTION_FIELDS} - read
     assert unread == set(IDENTITY_ONLY), sorted(unread ^ set(IDENTITY_ONLY))
 
 
