@@ -716,14 +716,14 @@ def stage_clusters_rewrite(pipe: NearDupPipeline, staging: str,
     left empty — all its clusters merged or removed away — is DELETED
     at commit, not left stale), keyed ``clusters/pbucket=<p>``."""
     pb = cluster_pbucket(pipe.cfg)
+    touched = sorted(set(aff_buckets) | {
+        r[0] for r in delta.select(pb.alias("pb")).distinct().collect()})
+    kept = (stored.filter(F.col("pbucket").isin(touched))
+            .join(F.broadcast(aff.select("cluster_id")), "cluster_id",
+                  "left_anti")
+            .select("image_id", "cluster_id"))
 
     def write(path: str, tap) -> None:
-        touched = sorted(set(aff_buckets) | {
-            r[0] for r in delta.select(pb.alias("pb")).distinct().collect()})
-        kept = (stored.filter(F.col("pbucket").isin(touched))
-                .join(F.broadcast(aff.select("cluster_id")), "cluster_id",
-                      "left_anti")
-                .select("image_id", "cluster_id"))
         (tap(kept.unionByName(delta.select("image_id", "cluster_id"))
              .withColumn("pbucket", pb)
              .repartition(max(len(touched), 1), F.col("pbucket")))
@@ -732,14 +732,12 @@ def stage_clusters_rewrite(pipe: NearDupPipeline, staging: str,
     pipe._stage(f"{prefix}_clusters_rewrite", write, staging, "clusters",
                 after=f"{prefix}_clusters", read=False)
     # a partitioned write makes a pbucket= dir exactly for the buckets
-    # it wrote rows to — every delta row's bucket among them — so the
-    # touched set is those dirs ∪ the affected clusters' buckets (a
-    # remove that kills every cluster in its touched buckets stages none)
+    # it wrote rows to (a remove that kills every cluster in its touched
+    # buckets stages none)
     present = {child.rsplit("/pbucket=", 1)[1] for child in
                pipe.fs.list_children(f"{staging}/clusters")
                if "/pbucket=" in child}
-    return {f"{_BUCKET}{p}": p in present for p in
-            sorted(present | {str(b) for b in aff_buckets}, key=int)}
+    return {f"{_BUCKET}{p}": str(p) in present for p in touched}
 
 
 def relabel_min_member(members: DataFrame, key: str, comp: DataFrame,
@@ -807,10 +805,15 @@ def incremental_add(spark: SparkSession, cfg: PipelineConfig,
     ``all_images`` must be old ∪ new minus removed rows (verify needs
     both sides' payloads; at scale, back it with a table whose layout
     supports id lookups — Iceberg bucket pruning — so the payload attach
-    reads only candidate row groups).  Refused with ValueError: a new
-    id already in the build, and an ``all_images`` that lacks a new row
-    or a payload a candidate pair needs, or still holds a removed row
-    the suffix pass would pair.  Returns the new clusters DataFrame.
+    reads only candidate row groups).  Refused with ValueError, before
+    anything is staged: a new id already in the build, an
+    ``all_images`` that lacks a new row or still holds a removed row
+    under a new row's phash; and, once the candidates are known, one
+    that lacks a payload a candidate pair needs.  Only rows the add
+    reads are checked: a stored rep missing from ``all_images`` that
+    only the suffix pass would pair with a new row (a hot phash group
+    whose stored-band probe heads hold other reps) goes unseen, and the
+    add then misses that pair.  Returns the new clusters DataFrame.
     """
     pipe = NearDupPipeline(spark, cfg, checkpoint_dir)
     staging, new_gen = mutation_prologue(
@@ -885,15 +888,16 @@ def _add_setup(pipe: NearDupPipeline, spawn, staging: str,
     empty local relations and the optimizer folds their joins out.
 
     Then three independent probe chains run CONCURRENTLY: the touched
-    prefix (:func:`_touched_prefix`, which also checks the union), the
-    id-clash refusal and the new slice's content keys with their ck
-    membership probe.  Every stored-metadata probe is a PRUNED point
+    prefix (:func:`_touched_prefix`, which also checks the union, then
+    :func:`_touched_reps`), the id-clash refusal and the new slice's
+    content keys with their ck membership probe; both refusals are
+    awaited here, before anything is staged.  Every stored-metadata probe is a PRUNED point
     lookup into ck_index / id_index (partition filter from the probe
     keys' bucket set + IN-list row-group pruning on key-sorted files —
     the add addresses its persisted index by key, as the reference's
     does by rank, src/dna/dnasketch.rs:106-134).  Returns the add's
     context, the new slice's content keys, their live stored groups and
-    the touched-prefix future."""
+    the future of the touched slice and its stored reps."""
     from gsearch_spark.operators.remove import drop_dead, read_removal_state
     spark, cfg = pipe.spark, pipe.cfg
     opened = [spawn(lambda n=n: read_layout(spark, pipe.dir, n))
@@ -904,6 +908,7 @@ def _add_setup(pipe: NearDupPipeline, spawn, staging: str,
              all_images, *[f.result() for f in opened[:4]],
              *opened[4].result())
     touched = spawn(lambda: _touched_prefix(a))
+    reps = spawn(lambda: _touched_reps(a, touched.result()))
     # id-clash refusal: O(new) pruned point lookup, not a corpus scan
     clash = spawn(lambda: pipe._stage(
         "add_lookup_idclash",
@@ -919,10 +924,11 @@ def _add_setup(pipe: NearDupPipeline, spawn, staging: str,
                         idx_df=a.ck_idx), "rep_id", a.dead))
     if clash.result():
         raise ValueError("new_images contains ids already in the build")
-    return a, nk, old_keys, touched
+    touched.result()
+    return a, nk, old_keys, reps
 
 
-def _touched_prefix(a: _Add) -> "tuple[DataFrame, DataFrame]":
+def _touched_prefix(a: _Add) -> DataFrame:
     """Touched phash groups for the suffix pass.  The slice is keyed by
     the NEW images' phashes — a superset of the new REPS' phashes (a new
     non-rep's pixels equal its dup's pixels, hence its phash), and the
@@ -938,12 +944,7 @@ def _touched_prefix(a: _Add) -> "tuple[DataFrame, DataFrame]":
     The union check runs here, over rows the add reads anyway: the
     slice is every ``all_images`` row under a new row's phash, so it
     must hold each new row exactly once, and no tombstoned row (the
-    suffix pass would pair it).  Rep-ness of the touched slice comes
-    from a pruned id_index point lookup (is_rep flag); a group whose
-    founding rep was removed has NO live is_rep row, so its promoted
-    surviving member (rep_remap target) stands in as the group's
-    suffix-pass node.  Returns the slice and its stored reps
-    (``add_lookup_touched_reps``)."""
+    suffix pass would pair it).  Returns the slice."""
     from gsearch_spark.operators.remove import read_tombstones
     touched = (probe_keys(a.all_images, "phash",
                           a.new_images.select("phash"))
@@ -959,7 +960,16 @@ def _touched_prefix(a: _Add) -> "tuple[DataFrame, DataFrame]":
     if n_new != a.n_new or n_dead:
         raise ValueError(f"{_UNION_ERROR}: {a.n_new} new rows, {n_new} "
                          f"found in it; {n_dead} removed rows in it")
+    return touched
 
+
+def _touched_reps(a: _Add, touched: DataFrame
+                  ) -> "tuple[DataFrame, DataFrame]":
+    """Rep-ness of the touched slice, from a pruned id_index point
+    lookup (is_rep flag); a group whose founding rep was removed has NO
+    live is_rep row, so its promoted surviving member (rep_remap target)
+    stands in as the group's suffix-pass node.  Returns the slice and
+    its stored reps (``add_lookup_touched_reps``)."""
     def stored_reps() -> DataFrame:
         lk = a.lookup_ids(touched.select("image_id"))
         promoted = lk.join(F.broadcast(a.remap.select(
@@ -1079,9 +1089,11 @@ def _add_verify(a: _Add, new_pairs: DataFrame, n_pairs: int,
                 new_reps: DataFrame, mr_future):
     """Verify decodes only new-touching pairs, capped per new item
     (cfg.add_max_candidates_per_item) after the phash prefilter.  The
-    prefilter's metadata join is observed on the capped cut: every
-    candidate pair must keep both endpoints there — its inner join would
-    silently drop a pair whose payload ``all_images`` lacks.  The capped
+    prefilter's metadata join is cut by its own eager checkpoint, which
+    counts it in the job's result stage (a count in a map stage can
+    double on a stage retry): every candidate pair must keep both
+    endpoints there — its inner join would silently drop a pair whose
+    payload ``all_images`` lacks.  The capped
     pairs are an eager cut (O(new x cap) keys-only rows), since the
     subtree otherwise evaluates twice, as the attach's id set and as its
     pair side (guide §2.4); the attach materializes the candidate
@@ -1092,9 +1104,12 @@ def _add_verify(a: _Add, new_pairs: DataFrame, n_pairs: int,
     # imported per call: tests substitute a failing verify_pairs
     from gsearch_spark.operators.verify import verify_pairs
     cfg = a.cfg
-    tap, joined = row_counter()
-    plausible = prefilter_pairs(tap(pair_phashes(new_pairs, a.all_images)),
-                                cfg.prefilter_max_phash_hamming,
+    with_ph, n_joined = checkpoint_rows(pair_phashes(new_pairs,
+                                                     a.all_images))
+    if n_joined != n_pairs:
+        raise ValueError(f"{_UNION_ERROR}: {n_pairs} candidate pairs, "
+                         f"{n_joined} with both payloads")
+    plausible = prefilter_pairs(with_ph, cfg.prefilter_max_phash_hamming,
                                 cfg.prefilter_max_phash_hamming_phash_src)
     a_new = F.coalesce("a_new", F.lit(False))
     keyed = (plausible
@@ -1109,10 +1124,6 @@ def _add_verify(a: _Add, new_pairs: DataFrame, n_pairs: int,
             Window.partitionBy("key").orderBy("other")))
         .filter(F.col("rn") <= cfg.add_max_candidates_per_item)
         .select("a", "b", "src"))
-    n_joined = joined()
-    if n_joined != n_pairs:
-        raise ValueError(f"{_UNION_ERROR}: {n_pairs} candidate pairs, "
-                         f"{n_joined} with both payloads")
     attached = attach_payloads(
         capped, a.all_images,
         strategy=attach_strategy(

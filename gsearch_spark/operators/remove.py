@@ -388,64 +388,57 @@ def purge_removed(spark: SparkSession, cfg: PipelineConfig,
     if not has_removals(spark, checkpoint_dir):
         return {"tombstones_purged": 0, "dead_groups_purged": 0,
                 "reps_rekeyed": 0}
+    T, n_t = checkpoint_rows(
+        read_tombstones(spark, checkpoint_dir).select("image_id"))
     dead, remap = read_removal_state(spark, checkpoint_dir)
-    T, n_t = pipe._stage("purge_tombstones", read_tombstones(
-        spark, checkpoint_dir).select("image_id"))
-    D, n_d = pipe._stage("purge_dead_groups", dead)
-    R, n_r = pipe._stage("purge_rep_remap", remap)
+    D, n_d = checkpoint_rows(dead)
+    R, n_r = checkpoint_rows(remap)
 
     def read(name: str) -> DataFrame:
         return read_layout(spark, checkpoint_dir, name)
 
-    # table -> whether a replacement is staged (the manifest's map)
-    swap: "dict[str, bool]" = {}
-
-    def stage(name: str, df: DataFrame,
-              keyed: "tuple[str, str] | None" = None) -> DataFrame:
-        """Stage ``df`` as ``name``'s replacement — flat, or as a
-        key-addressed layout on ``keyed = (key_col, part_col)``."""
-        swap[name] = True
-        return pipe._stage(
-            f"purge_{name}", (lambda p, tap: write_keyed(
-                df, *keyed, p, cfg, tap)) if keyed else df,
-            staging, name, read=name == "exact_groups")[0]
-
     # member-level table: drop tombstoned rows, re-key group reps
-    eg = stage("exact_groups", remap_col(
+    eg, _ = pipe._stage("purge_exact_groups", remap_col(
         read("exact_groups").join(F.broadcast(T), "image_id", "left_anti"),
-        "rep_id", R))
+        "rep_id", R), staging, "exact_groups")
     # rep-keyed tables: dead groups vanish, remapped reps re-key
     # (the promoted member is byte-and-caption identical, so the
     # signature/band/sketch VALUES are already its own)
-    for name in ("signatures", "bands"):
-        stage(name, remap_col(drop_dead(read(name), "image_id", D),
-                              "image_id", R))
-    stage("candidate_pairs", pair_fix(read("candidate_pairs"), D, R,
-                                      ["src"]))
     ve = read("verified_edges")
-    stage("verified_edges",
-          pair_fix(ve, D, R, [c for c in ve.columns if c not in ("a", "b")]))
-    stage("edge_index",
-          pair_fix(read("edge_index").select("a", "b"), D, R, []),
-          ("a", "eb"))
-    stage("ck_index",
-          remap_col(drop_dead(read("ck_index"), "rep_id", D), "rep_id",
-                    R).select("ck", "rep_id"), ("ck", "kb"))
+    flat = {name: remap_col(drop_dead(read(name), "image_id", D),
+                            "image_id", R)
+            for name in ("signatures", "bands")}
+    flat["candidate_pairs"] = pair_fix(read("candidate_pairs"), D, R,
+                                       ["src"])
+    flat["verified_edges"] = pair_fix(ve, D, R, ve.columns[2:])
     # id_index: rebuild one gen-0 row per surviving image from the
     # clusters and the staged purged groups (restores is_rep on promoted
     # reps; the generation counter stays, so future mutations' deltas
     # still win lookups)
     flags = eg.select("image_id", (F.col("image_id") == F.col("rep_id"))
                       .alias("is_rep"), "rep_id")
-    stage("id_index", read("clusters").select("image_id", "cluster_id")
-          .join(flags, "image_id").withColumn("gen", F.lit(0)),
-          ("image_id", "ib"))
+    # key-addressed layouts: table -> (frame, key_col, part_col)
+    keyed = {
+        "edge_index": (pair_fix(read("edge_index").select("a", "b"), D, R,
+                                []), "a", "eb"),
+        "ck_index": (remap_col(drop_dead(read("ck_index"), "rep_id", D),
+                               "rep_id", R).select("ck", "rep_id"),
+                     "ck", "kb"),
+        "id_index": (read("clusters").select("image_id", "cluster_id")
+                     .join(flags, "image_id").withColumn("gen", F.lit(0)),
+                     "image_id", "ib")}
+    for name, df in flat.items():
+        pipe._stage(f"purge_{name}", df, staging, name, read=False)
+    for name, (df, key, part) in keyed.items():
+        pipe._stage(f"purge_{name}", lambda p, tap, df=df, k=key, c=part:
+                    write_keyed(df, k, c, p, cfg, tap), staging, name,
+                    read=False)
     # the sidecars have no replacement, so the commit deletes them after
     # every table rename: until then readers stay correct under
     # merge-on-read; after, the sidecars read as empty and fold away
+    swap = dict.fromkeys(["exact_groups", *flat, *keyed], True)
     swap.update(dict.fromkeys((TOMBSTONES, DEAD_GROUPS, REP_REMAP), False))
     finish_commit(spark, pipe.fs, checkpoint_dir,
-                  write_manifest(pipe, staging, gen - 1, swap, [], []),
-                  pipe._flush_state)
+                  write_manifest(pipe, staging, gen - 1, swap, [], []))
     return {"tombstones_purged": n_t, "dead_groups_purged": n_d,
             "reps_rekeyed": n_r}

@@ -224,29 +224,36 @@ def test_mutation_functions_stay_short():
 # Hashed PipelineConfig fields no package code reads: each pins into the
 # build's identity (parameters.json) a format or a semantic that the
 # code implements without consulting the field.  Exact: a field leaves
-# this map the moment code reads it.  (An execution field hashes into
-# no identity; ``shuffle_partitions`` is one callers size their session
-# from.)
+# this map the moment code reads it.
 IDENTITY_ONLY = {
     "sig_version": "signature/checkpoint-format version",
     "layout_version": "sidecar layout generation",
 }
+# Execution fields (config.EXECUTION_FIELDS, in no identity) no package
+# code reads.  Exact, like IDENTITY_ONLY: every other execution field
+# must still be read somewhere.
+UNREAD_EXECUTION = {
+    "shuffle_partitions": "callers size their session from it",
+}
 
 
 def test_every_config_field_is_read():
-    """Source guard: a hashed PipelineConfig field is part of every
-    build's identity, so one that no code outside config.py reads (as
-    ``<obj>.<field>``) is a dead knob — it promises behaviour nothing
-    implements, and changing it still refuses the stored build."""
+    """Source guard: a PipelineConfig field that no code outside
+    config.py reads (as ``<obj>.<field>``) is a dead knob — it promises
+    behaviour nothing implements, and a hashed one still refuses the
+    stored build when changed.  The only unread fields are the exact
+    maps above."""
     from gsearch_spark.config import EXECUTION_FIELDS
+    assert set(UNREAD_EXECUTION) <= set(EXECUTION_FIELDS)
+    assert not set(IDENTITY_ONLY) & set(EXECUTION_FIELDS)
     root = pathlib.Path(gsearch_spark.__file__).parent
     read = {node.attr
             for path in root.rglob("*.py") if path.name != "config.py"
             for node in ast.walk(ast.parse(path.read_text()))
             if isinstance(node, ast.Attribute)}
-    unread = {f.name for f in dataclasses.fields(PipelineConfig)
-              if f.name not in EXECUTION_FIELDS} - read
-    assert unread == set(IDENTITY_ONLY), sorted(unread ^ set(IDENTITY_ONLY))
+    unread = {f.name for f in dataclasses.fields(PipelineConfig)} - read
+    expected = set(IDENTITY_ONLY) | set(UNREAD_EXECUTION)
+    assert unread == expected, sorted(unread ^ expected)
 
 
 def test_scan_floor_follows_default_parallelism(spark):
