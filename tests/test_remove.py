@@ -739,6 +739,8 @@ def test_add_refuses_union_holding_a_removed_row(spark):
         [("v_r",)], "image_id string"))
     with pytest.raises(ValueError, match="old ∪ new"):
         incremental_add(spark, CFG, ckpt, new, base.unionByName(new))
+    # refused in the setup phase, before any table was staged
+    assert not os.path.exists(f"{ckpt}/_add_staging/exact_groups")
     surv = base.filter(F.col("image_id") != "v_r").unionByName(new)
     got = _assign(incremental_add(spark, CFG, ckpt, new, surv))
     assert got == _rebuild(spark, surv, f"{ckpt}_truth")
