@@ -891,13 +891,14 @@ def _add_setup(pipe: NearDupPipeline, spawn, staging: str,
     prefix (:func:`_touched_prefix`, which also checks the union, then
     :func:`_touched_reps`), the id-clash refusal and the new slice's
     content keys with their ck membership probe; both refusals are
-    awaited here, before anything is staged.  Every stored-metadata probe is a PRUNED point
-    lookup into ck_index / id_index (partition filter from the probe
-    keys' bucket set + IN-list row-group pruning on key-sorted files —
-    the add addresses its persisted index by key, as the reference's
-    does by rank, src/dna/dnasketch.rs:106-134).  Returns the add's
-    context, the new slice's content keys, their live stored groups and
-    the future of the touched slice and its stored reps."""
+    awaited here, before anything is staged.  Every stored-metadata
+    probe is a PRUNED point lookup into ck_index / id_index (partition
+    filter from the probe keys' bucket set + IN-list row-group pruning
+    on key-sorted files — the add addresses its persisted index by key,
+    as the reference's does by rank, src/dna/dnasketch.rs:106-134).
+    Returns the add's context, the new slice's content keys, their live
+    stored groups and the future of the touched slice and its stored
+    reps."""
     from gsearch_spark.operators.remove import drop_dead, read_removal_state
     spark, cfg = pipe.spark, pipe.cfg
     opened = [spawn(lambda n=n: read_layout(spark, pipe.dir, n))
@@ -1093,12 +1094,12 @@ def _add_verify(a: _Add, new_pairs: DataFrame, n_pairs: int,
     counts it in the job's result stage (a count in a map stage can
     double on a stage retry): every candidate pair must keep both
     endpoints there — its inner join would silently drop a pair whose
-    payload ``all_images`` lacks.  The capped
-    pairs are an eager cut (O(new x cap) keys-only rows), since the
-    subtree otherwise evaluates twice, as the attach's id set and as its
-    pair side (guide §2.4); the attach materializes the candidate
-    payload slice once (guide §8: move heavy bytes once), its strategy
-    bounded by 2 x new x cap distinct ids.  The endpoint-label prefetch
+    payload ``all_images`` lacks.  The capped pairs are an eager cut
+    (O(new x cap) keys-only rows), since the subtree otherwise evaluates
+    twice, as the attach's id set and as its pair side (guide §2.4);
+    the attach materializes the candidate payload slice once (guide §8:
+    move heavy bytes once), its strategy bounded by 2 x new x cap
+    distinct ids.  The endpoint-label prefetch
     (:func:`_ep_prefetch`) runs under the verify stage.  Stages
     ``add_verified_edges``; returns it and the prefetch future."""
     # imported per call: tests substitute a failing verify_pairs
